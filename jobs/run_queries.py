@@ -106,10 +106,17 @@ def main() -> None:
             df, _, exp = search_expanded(_engine(), text, fbp, args.k)
             expansions[qid] = exp or ""
             rows = [] if df is None else [r.asDict() for r in df.collect()]
-        elif args.pruned and args.model == BM25 and "#" not in text:
-            rows = [r.asDict() for r in bm25_topk_pruned(pidx, toks, args.k).collect()]
         else:
-            rows = [r.asDict() for r in _engine().search(text, args.k).collect()]
+            # the pruned planner returns None when the driver cannot read the
+            # index; the engine then runs the exact plan
+            df = (
+                bm25_topk_pruned(pidx, toks, args.k)
+                if args.pruned and args.model == BM25 and "#" not in text
+                else None
+            )
+            if df is None:
+                df = _engine().search(text, args.k)
+            rows = [r.asDict() for r in df.collect()]
         return qid, trec_lines(qid, rows), round(time.time() - tq, 3)
 
     t_all = time.time()

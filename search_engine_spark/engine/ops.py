@@ -86,7 +86,8 @@ class EvalContext:
         self.cached_frames.clear()
 
     def prefetch_terms(self, pairs: set[tuple[str, str]]) -> None:
-        """One tiny filtered scan of term_stats for all leaf terms of a query."""
+        """(df, ctf) of every leaf term of a query: one tiny filtered scan of
+        term_stats, or the packed index's driver-side read (no Spark job)."""
         missing = [p for p in pairs if p not in self._stats]
         if not missing:
             return
@@ -95,6 +96,14 @@ class EvalContext:
         by_field: dict = {}
         for t, f in missing:
             by_field.setdefault(f, []).append(t)
+        reads = getattr(self.index, "reads", None)
+        if reads is not None:
+            # packed index: the driver's cached pyarrow read, no Spark job
+            for f, ts in by_field.items():
+                found = reads.term_stats(ts, f)
+                for t in ts:
+                    self._stats[(t, f)] = found.get(t, (0, 0))
+            return
         cond = reduce(
             lambda a, b: a | b,
             [

@@ -1,4 +1,5 @@
-"""Block-max pruned BM25 top-k over the packed index (SURVEY.md §4.2).
+"""Block-max pruned top-k over the packed index (SURVEY.md §4.2): BM25 #SUM
+and Indri #AND / #WAND / #WSUM over plain terms.
 
 The reference has NO query-time pruning (its `#WAND` is Indri's weighted-AND,
 not Broder's algorithm; the top-100 cut happens at output —
@@ -7,42 +8,47 @@ optimization, with an exact fallback and identity tests: the pruned result is
 bit-identical to the exact plan's.
 
 Spark-friendly two-phase block-max/MaxScore variant (the classic cursor-based
-BMW is doc-at-a-time and doesn't distribute):
+BMW is doc-at-a-time and doesn't distribute), planned on the driver:
 
-  0. The DRIVER reads the query terms' tiny block METADATA directly with
-     pyarrow (manifest-listed packed files, predicate-pushed on term — no
-     Spark job: at 10^12-file scale this is df/block_size rows per term,
-     MBs, and the executors never see it). Per block, an upper bound on any
-     BM25 contribution in it:
+  0. The driver reads the query terms' term stats and tiny block METADATA
+     with pyarrow (``PackedIndex.reads``: cached per index, predicate-pushed
+     on term — no Spark job; at 10^12-file scale this is df/block_size rows
+     per term). Per block, an upper bound on any contribution in it, e.g.
+     for BM25
          ub = idf(df) · max_tf / (max_tf + k1·((1−b) + b·min_doclen/avgdl))
      valid because tfW is increasing in tf and decreasing in doclen.
   1. Docid space is cut into the ranges induced by all block boundaries
-     (blocks are docid-contiguous). For each range R:
-         UB(R) = Σ_t max(ub of t's blocks overlapping R)
-     — an upper bound on ANY doc's total score inside R.
-  2. Seed phase, ALSO on the driver: decode the few highest-UB ranges'
-     blocks with the same numpy codec the executors use and score them
-     (float32 per-term, summed in double) ⇒ θ ≈ k-th best seed score.
-     θ is deflated by (1 − 2⁻³⁰) so driver/executor summation-order ulps
-     can never make it exceed the Spark-computed k-th score: a smaller θ
-     only keeps extra survivors, never prunes a true top-k doc. Seed cost
-     is O(k) postings — a handful of 128-posting blocks read row-group-
-     pruned from parquet, no cluster round-trip.
-  3. Survivors = ranges with UB(R) ≥ θ (the seed ranges are re-scanned so
-     the final scores come from the one canonical Spark expression chain).
-     ONE distributed job scores them, then the §2.6 top-k. Any doc outside
-     survivors has total score ≤ UB(R) < θ ≤ (true k-th score) — provably
-     outside the top-k; ties are guarded because pruning drops only
-     UB strictly below θ.
+     (blocks are docid-contiguous). For each range R, UB(R) combines, per
+     term, the max ub of the term's blocks overlapping R — an upper bound
+     on ANY doc's total score inside R. ``range_bounds`` maps every block
+     to its span of range indices with one sort, so planning costs
+     O(B log B + block/range overlaps), not O(ranges × blocks).
+  2. Seed: decode the few highest-UB ranges' blocks with the numpy codec
+     and score them (numpy mirror of the score expressions) ⇒ θ ≈ k-th best
+     seed score. θ is deflated by (1 − 2⁻³⁰) so numpy/JVM ulps can never
+     make it exceed the true k-th score: a smaller θ only keeps extra
+     survivors, never prunes a true top-k doc.
+  3. Survivors = seed ranges ∪ ranges with UB(R) ≥ θ. Any doc outside them
+     has total score ≤ UB(R) < θ ≤ (true k-th score) — provably outside the
+     top-k; ties are guarded because pruning drops only UB strictly below θ.
+     Block metadata gives the exact posting count of the surviving blocks:
+       - at most ``_POSTS_PER_TASK`` (one scan task's worth): the driver
+         decodes them, pivots to (docid, tf_1..tf_n, doclen) and hands that
+         to Spark as a local relation. The score.py expressions are
+         projected over it in child order — Spark folds that projection on
+         the driver JVM, so the floats come from the same expression code
+         and the same StrictMath log/pow — and ``topk.rank_local`` cuts at
+         the k-th score and resolves ext ids with a pyarrow docid IN read
+         of doc_ids. No Spark job runs.
+       - above it: ONE distributed job scans the surviving blocks, scores
+         them with the same expressions, then the §2.6 top-k.
+     Either way the output scores come from the Spark expressions, never
+     from the numpy seed, so the result is bitwise the exact plan's.
 
-Against the exact plan this is the SAME single Spark job minus the skipped
-blocks plus ~ms of driver I/O — wall-time strictly improves with the skip
-ratio (the r03 two-phase version paid 2 extra Spark jobs and lost at small
-scale despite skipping 76% of blocks; tools/bench_pruning.py records both).
-
-Fallback: if the driver-side read is unavailable (exotic layout, tombstone
-set too large to pin on the driver, or SPARK_GRAFT_PRUNE_SPARK_SEED=1) the
-seed phase runs as a Spark job exactly like r03 — same outputs, one more job.
+Fallback: when the driver cannot read the index (an unreadable file, or a
+tombstone set past ``SPARK_GRAFT_PRUNE_DRIVER_TOMBSTONE_MAX``) or an Indri
+shape is outside the pruned contract, the planners return None, record the
+reason in ``PruneStats.fallback``, and the caller runs the exact plan.
 
 float32 guard: exact per-term scores are float32-rounded (QryopSlScore
 contract). float32 rounding can exceed the double upper bound by ≤ 1 ulp;
@@ -54,25 +60,35 @@ from __future__ import annotations
 import math
 import os
 from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
-from pyspark.sql import DataFrame, functions as F
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, functions as F
 
 from search_engine_spark.config import BM25Params, IndriParams
-from search_engine_spark.engine.topk import rank_topk
-from search_engine_spark.index.persist import META_COLS, PackedIndex, _side_manifest
+from search_engine_spark.engine import score as score_mod
+from search_engine_spark.engine.topk import _enumerate_ranks, rank_local, rank_topk
+from search_engine_spark.index.persist import PackedIndex
 
 _F32_GUARD = 1.0 + 2.0**-20
-# driver-side theta deflation: seed scores are summed in a (possibly)
-# different order than the executors sum them; 2^-30 relative slack dwarfs
-# any ulp drift from reordering a handful of float32 addends in double
+# driver-side theta deflation: seed scores are summed in numpy, the final
+# scores in the JVM; 2^-30 relative slack dwarfs any ulp drift between them
 _THETA_SLACK = 1.0 - 2.0**-30
 # past this many tombstones the driver stops pinning the delete set in its
-# own memory and the seed phase falls back to the Spark job (which applies
-# the same anti-join the exact plan uses)
+# own memory and the query runs the exact plan (which applies the same
+# anti-join the Spark scans use)
 _DRIVER_TOMBSTONE_MAX = int(
     os.environ.get("SPARK_GRAFT_PRUNE_DRIVER_TOMBSTONE_MAX", 5_000_000)
 )
+# one scan task's worth of postings: sizes the surviving-block scan's task
+# count, and a survivor set at most this big is scored on the driver
+_POSTS_PER_TASK = 250_000
+# past this many surviving blocks an IN-list predicate stops being a
+# predicate — the keys ship as a broadcast-joined table instead
+_KEYS_PRED_MAX = 100_000
+# the errors a failed driver-side read raises (pyarrow I/O and decode)
+DRIVER_READ_ERRORS = (OSError, pa.ArrowException)
 
 
 @dataclass
@@ -81,195 +97,361 @@ class PruneStats:
     n_blocks_scanned: int = 0
     n_ranges_total: int = 0
     n_ranges_scanned: int = 0
+    n_postings_scored: int = 0
     theta: float = 0.0
-    seed_mode: str = ""  # "driver" | "spark"
     n_seed_blocks: int = 0
+    # where the final scores came from: "driver" (a local relation, no
+    # Spark job) or "spark" (one scan job over the surviving blocks)
+    score_mode: str = ""
+    fallback: str = ""  # why the planner returned None (exact plan runs)
 
 
 def _idf(n_docs: int, df: int) -> float:
     return max(0.0, math.log((n_docs - df + 0.5) / (df + 0.5)))
 
 
-def _block_ub(max_tf: int, min_doclen: int, idf: float, avgdl: float, p: BM25Params) -> float:
+# --------------------------------------------------------------------------
+# range upper bounds
+# --------------------------------------------------------------------------
+
+
+@dataclass
+class RangeBounds:
+    """Docid ranges cut at every block boundary, and per range the inputs of
+    its upper bound. Ranges tile [min block docid, max block docid]."""
+
+    starts: np.ndarray  # [R] first docid of each range
+    ends: np.ndarray  # [R] last docid of each range (inclusive)
+    best: np.ndarray  # [R, T] max block ub per term over overlapping blocks (0 if none)
+    min_doclen: np.ndarray  # [R] min block min_doclen over all overlapping blocks
+    covered: np.ndarray  # [R] some block overlaps the range
+    first: np.ndarray  # [B] first range index each block overlaps
+    last: np.ndarray  # [B] one past the last range index it overlaps
+    # blocks overlapping range r: range_blocks[range_ptr[r]:range_ptr[r + 1]]
+    range_ptr: np.ndarray
+    range_blocks: np.ndarray
+
+    def blocks_in(self, ranges: np.ndarray) -> np.ndarray:
+        """Mask over blocks: those overlapping any range of the [R] mask."""
+        cs = np.concatenate([[0], np.cumsum(ranges, dtype=np.int64)])
+        return cs[self.last] - cs[self.first] > 0
+
+    def range_of(self, docids: np.ndarray) -> np.ndarray:
+        """Range index of each docid (each lies inside some block)."""
+        return np.searchsorted(self.starts, docids, side="right") - 1
+
+
+def range_bounds(
+    lo: np.ndarray,
+    hi: np.ndarray,
+    term: np.ndarray,
+    ub: np.ndarray,
+    n_terms: int,
+    min_doclen: np.ndarray,
+) -> RangeBounds:
+    """Per-range bound inputs by a sweep: every block [lo, hi] covers the
+    contiguous range indices [first, last) found by binary search in the
+    sorted cuts, and per-term maxima reduce over the (block, range) pairs.
+    Blocks of one term may overlap (salted terms)."""
+    lo = np.asarray(lo, dtype=np.int64)
+    hi = np.asarray(hi, dtype=np.int64)
+    cuts = np.unique(np.concatenate([lo, hi + 1]))
+    n_ranges = max(len(cuts) - 1, 0)
+    first = np.searchsorted(cuts, lo)
+    last = np.searchsorted(cuts, hi + 1)
+    span = last - first
+    pair_block = np.repeat(np.arange(len(lo)), span)
+    pair_range = (
+        np.arange(len(pair_block)) - np.repeat(np.cumsum(span) - span, span)
+        + first[pair_block]
+    )
+    best = np.zeros((n_ranges, n_terms), dtype=np.float64)
+    np.maximum.at(best, (pair_range, term[pair_block]), ub[pair_block])
+    min_dl = np.full(n_ranges, np.iinfo(np.int64).max, dtype=np.int64)
+    np.minimum.at(min_dl, pair_range, np.asarray(min_doclen)[pair_block])
+    covered = np.zeros(n_ranges, dtype=bool)
+    covered[pair_range] = True
+    by_range = np.argsort(pair_range, kind="stable")
+    ptr = np.searchsorted(pair_range[by_range], np.arange(n_ranges + 1))
+    return RangeBounds(
+        cuts[:-1], cuts[1:] - 1, best, min_dl, covered, first, last,
+        ptr, pair_block[by_range],
+    )
+
+
+# --------------------------------------------------------------------------
+# the shared planner
+# --------------------------------------------------------------------------
+
+
+class _Query:
+    """One pruned query's driver-side state: its terms' blocks (one entry
+    per block in each array) and the blocks decoded so far (each block is
+    read and decoded at most once)."""
+
+    def __init__(self, pidx: PackedIndex, terms: list[str], fld: str, metas: list[dict]):
+        self.pidx, self.terms, self.fld = pidx, terms, fld
+        self.term = np.concatenate(
+            [np.full(len(m["n"]), i, dtype=np.int64) for i, m in enumerate(metas)]
+        )
+        cols = {c: np.concatenate([m[c] for m in metas]) for c in metas[0]}
+        self.salt, self.block_id, self.n = cols["salt"], cols["block_id"], cols["n"]
+        self.lo, self.hi = cols["min_docid"], cols["max_docid"]
+        self.max_tf, self.min_doclen = cols["max_tf"], cols["min_doclen"]
+        self.tombs = pidx.reads.tombstones()
+        self._decoded: dict[int, tuple] = {}
+
+    def read(self, blocks: np.ndarray) -> list[tuple]:
+        """(term index, docids, tfs, doclens) of each given block, decoded
+        on the driver with the executors' codec, tombstoned docids dropped."""
+        import pyarrow.compute as pc
+
+        from search_engine_spark.index.codec import decode_block
+
+        todo = {int(i) for i in blocks if int(i) not in self._decoded}
+        if todo:
+            want = {
+                (self.terms[self.term[i]], int(self.salt[i]), int(self.block_id[i])): i
+                for i in todo
+            }
+            tbl = self.pidx.reads.dataset("packed").to_table(
+                columns=["term", "salt", "block_id", "n", "docids", "tfs", "doclens"],
+                filter=(
+                    (pc.field("field") == self.fld)
+                    & pc.field("term").isin(sorted({t for t, _, _ in want}))
+                    & pc.field("block_id").isin(sorted({b for _, _, b in want}))
+                ),
+            )
+            cols = tbl.to_pydict()
+            for term, salt, bid, n, db, tb, lb in zip(
+                cols["term"], cols["salt"], cols["block_id"], cols["n"],
+                cols["docids"], cols["tfs"], cols["doclens"],
+            ):
+                i = want.get((term, salt, bid))
+                if i is None:
+                    continue  # same block_id under another (term, salt)
+                d, t, L = decode_block({"n": n, "docids": db, "tfs": tb, "doclens": lb})
+                if self.tombs is not None:
+                    live = ~np.isin(d, self.tombs, assume_unique=True)
+                    d, t, L = d[live], t[live], L[live]
+                self._decoded[i] = (int(self.term[i]), d, t, L)
+            if len(self._decoded.keys() & todo) != len(todo):
+                raise OSError("packed blocks listed in the metadata are missing")
+        return [self._decoded[int(i)] for i in blocks]
+
+    def pivot(self, blocks: np.ndarray, keep=None) -> "_Pivot":
+        """Docs of the given blocks as (docid, tf per term, doclen); with
+        ``keep(docids) -> mask``, only the docids it keeps."""
+        parts = self.read(blocks)
+        if keep is not None:
+            masks = [keep(d) for _, d, _, _ in parts]
+            parts = [(t, d[m], f[m], L[m]) for (t, d, f, L), m in zip(parts, masks)]
+        return _Pivot(parts, len(self.terms))
+
+
+class _Pivot:
+    """Per doc: docid, tf per term (``present`` marks the terms it has), doclen."""
+
+    def __init__(self, parts: list[tuple], n_terms: int):
+        self.docid = np.unique(
+            np.concatenate([d for _, d, _, _ in parts] or [np.zeros(0, np.int64)])
+        )
+        self.tf = np.zeros((n_terms, len(self.docid)), dtype=np.int64)
+        self.present = np.zeros((n_terms, len(self.docid)), dtype=bool)
+        self.doclen = np.zeros(len(self.docid), dtype=np.int64)
+        for t, d, f, L in parts:
+            ix = np.searchsorted(self.docid, d)
+            self.tf[t, ix] = f
+            self.present[t, ix] = True
+            self.doclen[ix] = L
+
+    def table(self) -> pa.Table:
+        """Arrow (docid, _tf0.._tf{n-1} nullable int, doclen) — the shape of
+        the Spark path's per-doc pivot."""
+        cols = {"docid": pa.array(self.docid, pa.int64())}
+        for i in range(len(self.tf)):
+            cols[f"_tf{i}"] = pa.array(
+                self.tf[i].astype(np.int32), pa.int32(), mask=~self.present[i]
+            )
+        cols["doclen"] = pa.array(self.doclen, pa.int64())
+        return pa.table(cols)
+
+
+def _seed_theta(
+    q: _Query, rb: RangeBounds, range_ub: np.ndarray, k: int, seed_scores, st: PruneStats
+) -> np.ndarray:
+    """Seed walk: decode the best ranges by UB until the seed is guaranteed
+    to contain >= k distinct docids, score them with ``seed_scores(pivot)``
+    and set θ. Returns the [R] mask of seed ranges.
+
+    A single term's postings are distinct docs, so unique blocks are counted
+    per term and the walk stops once one term's covered postings reach the
+    target (counting across terms under-seeds: 100 postings of 3 terms can
+    be ~40 docs, leaving θ at -inf and the prune phase vacuous)."""
+    n_ranges = len(rb.starts)
+    order = np.argsort(-range_ub, kind="stable")
+    counted = np.zeros(len(q.n), dtype=bool)
+    term_posts = np.zeros(len(q.terms), dtype=np.int64)
+    # seed target: 2k postings of one term, floored at ~2 blocks — a seed at
+    # exactly k docs leaves θ at the k-th best of a BARELY sufficient sample;
+    # doubling it tightens θ for a couple of extra blocks
+    seed_target = max(2 * k, 2 * int(q.n.max(initial=0)))
+    pos = 0
+
+    def take_ranges(min_ranges: int, until_k_posts: bool = False) -> list[int]:
+        nonlocal pos
+        batch: list[int] = []
+        while pos < n_ranges and (
+            len(batch) < min_ranges
+            or (until_k_posts and term_posts.max(initial=0) < seed_target)
+        ):
+            i = int(order[pos])
+            pos += 1
+            batch.append(i)
+            bs = rb.range_blocks[rb.range_ptr[i]:rb.range_ptr[i + 1]]
+            new = bs[~counted[bs]]
+            counted[new] = True
+            np.add.at(term_posts, q.term[new], q.n[new])
+        return batch
+
+    # minimum 4 ranges: with a small k a single range can satisfy the
+    # posting count yet hold only weak docs, leaving θ loose
+    seed = take_ranges(4, until_k_posts=True)
+    in_seed = np.zeros(n_ranges, dtype=bool)
+    while True:
+        in_seed[seed] = True
+        blocks = np.flatnonzero(rb.blocks_in(in_seed))
+        tot = seed_scores(q.pivot(blocks, lambda d: in_seed[rb.range_of(d)]))
+        if len(tot) >= k or pos >= n_ranges:
+            break
+        # block splits can leave the covered ranges short of k docs: extend
+        # in doubling batches (UB order, θ only tightens)
+        seed.extend(take_ranges(max(16, len(seed))))
+    if len(tot) >= k:
+        st.theta = float(np.partition(tot, len(tot) - k)[len(tot) - k]) * _THETA_SLACK
+    else:
+        st.theta = -math.inf
+    st.n_seed_blocks = len(blocks)
+    return in_seed
+
+
+def _pruned_topk(
+    pidx: PackedIndex,
+    terms: list[str],
+    fld: str,
+    k: int,
+    st: PruneStats,
+    block_ub,
+    range_ub,
+    seed_scores,
+    pivot_score: Column,
+    spark_scores,
+) -> DataFrame:
+    """The flow shared by both models, given the model's pieces:
+    ``block_ub(q)`` -> [B] per-block bounds, ``range_ub(rb)`` -> [R] range
+    bounds, ``seed_scores(pivot)`` -> numpy seed scores, ``pivot_score`` the
+    score column over a (docid, _tf{i}, doclen) pivot, and
+    ``spark_scores(posts)`` the Spark (docid, score) plan over scanned
+    postings."""
+    metas = pidx.reads.block_meta(terms, fld)
+    q = _Query(pidx, terms, fld, metas)
+    st.n_blocks_total = len(q.n)
+    rb = range_bounds(q.lo, q.hi, q.term, block_ub(q), len(terms), q.min_doclen)
+    ub = range_ub(rb)
+    st.n_ranges_total = len(ub)
+    in_seed = _seed_theta(q, rb, ub, k, seed_scores, st)
+
+    # prune only UB < θ (strict): a doc scoring exactly θ could still beat
+    # the seed's k-th entry on the asc-ext-id tie-break, so it is scored
+    chosen = in_seed | (ub >= st.theta)
+    blocks = np.flatnonzero(rb.blocks_in(chosen))
+    st.n_ranges_scanned = int(chosen.sum())
+    st.n_blocks_scanned = len(blocks)
+    st.n_postings_scored = int(q.n[blocks].sum())
+    # the surviving blocks are scored whole: a block straddling a pruned
+    # range contributes PARTIAL scores for that range's docs — harmless,
+    # because partial ≤ total ≤ UB(range) < θ ≤ (final k-th score)
+    spark = pidx.spark
+    to_ext = _ext_id_type(pidx)
+    if st.n_postings_scored <= _POSTS_PER_TASK and to_ext is not None:
+        st.score_mode = "driver"
+        piv = q.pivot(blocks)
+        rows = (
+            spark.createDataFrame(piv.table())
+            .select("docid", pivot_score.alias("score"))
+            .collect()
+        )
+
+        def ext_ids(docids: list[int]) -> dict:
+            got = pidx.reads.ext_ids(docids)
+            if len(got) != len(docids):
+                raise OSError("doc_ids has no row for a scored docid")
+            return {d: to_ext(e) for d, e in got.items()}
+
+        return rank_local(
+            spark,
+            np.fromiter((r[0] for r in rows), np.int64, len(rows)),
+            np.fromiter((r[1] for r in rows), np.float64, len(rows)),
+            k, ext_ids,
+        )
+
+    st.score_mode = "spark"
+    keys = [
+        (terms[q.term[i]], fld, int(q.salt[i]), int(q.block_id[i])) for i in blocks
+    ]
+    n_tasks = min(
+        spark.sparkContext.defaultParallelism,
+        # floor of 8: below it the saved python-worker roundtrips cost more
+        # than they save — a single task serializes every file-footer probe
+        max(8, -(-st.n_postings_scored // max(_POSTS_PER_TASK, 1))),
+    )
+    pairs = [(t, fld) for t in terms]
+    if len(keys) <= _KEYS_PRED_MAX:
+        posts = pidx.postings_for(pairs, block_keys=keys, coalesce_to=n_tasks)
+    else:
+        bf = spark.createDataFrame(
+            keys, "term string, field string, salt int, block_id int"
+        )
+        posts = pidx.postings_for(pairs, block_filter=bf, coalesce_to=n_tasks)
+    return rank_topk(spark_scores(posts), pidx.doc_ids, k, n_docs=pidx.corpus.n_docs)
+
+
+def _ext_id_type(pidx: PackedIndex):
+    """How the Spark plan's ``doc_ids`` types ext ids, which decides their
+    tie-break order: int for an integral column (9 sorts before 10), str for
+    a string one. None for any other type: the driver cannot mirror its
+    order, so the survivors are scored by the Spark job instead."""
+    name = pidx.doc_ids.schema["ext_docid"].dataType.typeName()
+    if name in ("long", "integer", "short", "byte"):
+        return int
+    return str if name == "string" else None
+
+
+def _tombstones_fit(pidx: PackedIndex, st: PruneStats) -> bool:
+    if pidx.n_deleted <= _DRIVER_TOMBSTONE_MAX:
+        return True
+    st.fallback = (
+        f"{pidx.n_deleted} tombstones exceed the driver gate ({_DRIVER_TOMBSTONE_MAX})"
+    )
+    return False
+
+
+# --------------------------------------------------------------------------
+# BM25 #SUM
+# --------------------------------------------------------------------------
+
+
+def _bm25_block_ub(max_tf, min_doclen, idf, avgdl: float, p: BM25Params):
     tfw = max_tf / (max_tf + p.k1 * ((1.0 - p.b) + p.b * min_doclen / avgdl))
     return idf * tfw * _F32_GUARD
 
 
-# --------------------------------------------------------------------------
-# driver-side reads (pyarrow; no Spark jobs)
-# --------------------------------------------------------------------------
-
-def _packed_dataset(pidx: PackedIndex):
-    """pyarrow dataset over the packed table: manifest-listed files when the
-    side manifest exists (uncommitted orphans stay invisible — the same
-    contract read_packed gives Spark), hive discovery for the legacy
-    bucket=<b>/ layout. Cached on the PackedIndex — the dataset object holds
-    parsed footers, so repeated queries skip rediscovery (the index dir is
-    immutable between lifecycle commits, which build a NEW PackedIndex)."""
-    cached = getattr(pidx, "_pa_dataset", None)
-    if cached is not None:
-        return cached
-    import pyarrow.dataset as pads
-
-    pk = os.path.join(pidx.dir, "packed")
-    man = _side_manifest(pk)
-    if man is not None:
-        files = [os.path.join(pk, n) for n in man["files"]]
-        dset = pads.dataset(files, format="parquet") if files else None
-    else:
-        dset = pads.dataset(pk, format="parquet", partitioning="hive")
-    pidx._pa_dataset = dset
-    return dset
-
-
-def _term_stats_driver(pidx: PackedIndex, terms: list[str], fld: str) -> dict:
-    """term -> (df, ctf) read straight from the term_stats parquet (filter
-    pushed to row groups; the per-query slice is a handful of rows)."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-
-    cache = getattr(pidx, "_ts_cache", None)
-    if cache is None:
-        cache = pidx._ts_cache = {}
-    missing = [t for t in terms if (t, fld) not in cache]
-    if missing:
-        d = getattr(pidx, "_pa_term_stats", None)
-        if d is None:
-            d = pads.dataset(
-                os.path.join(pidx.dir, "term_stats"), format="parquet"
-            )
-            pidx._pa_term_stats = d
-        t = d.to_table(
-            columns=["term", "df", "ctf"],
-            filter=(pc.field("field") == fld) & pc.field("term").isin(missing),
-        )
-        found = dict.fromkeys(missing)
-        for term, df_, ctf in zip(
-            t["term"].to_pylist(), t["df"].to_pylist(), t["ctf"].to_pylist()
-        ):
-            found[term] = (df_, ctf)
-        for term, v in found.items():
-            cache[(term, fld)] = v  # None = known-absent, cached too
-    return {
-        t: cache[(t, fld)] for t in terms if cache.get((t, fld)) is not None
-    }
-
-
-def _tombstones_driver(pidx: PackedIndex) -> np.ndarray | None:
-    """Sorted tombstoned docids, or None when none exist. Raises to trigger
-    the Spark-seed fallback when the set is too large to pin driver-side."""
-    if pidx.tombstones is None:
-        return None
-    if pidx.n_deleted > _DRIVER_TOMBSTONE_MAX:
-        raise MemoryError("tombstone set exceeds driver seed gate")
-    import pyarrow.dataset as pads
-
-    d = pads.dataset(os.path.join(pidx.dir, "tombstones"), format="parquet")
-    return np.sort(d.to_table(columns=["docid"])["docid"].to_numpy())
-
-
-def _meta_driver(pidx, dset, live_terms: list[str], fld: str) -> list[dict]:
-    """Per-term block metadata, cached on the PackedIndex — the in-memory
-    posting-list headers every serving engine keeps warm (a term's metadata
-    is df/block_size rows; the cache is bounded by the queried vocabulary
-    and dropped with the PackedIndex on every lifecycle commit)."""
-    import pyarrow.compute as pc
-
-    cache = getattr(pidx, "_meta_cache", None)
-    if cache is None:
-        cache = pidx._meta_cache = {}
-    missing = [t for t in live_terms if (t, fld) not in cache]
-    if missing:
-        t = dset.to_table(
-            columns=META_COLS,
-            filter=(pc.field("field") == fld) & pc.field("term").isin(missing),
-        )
-        fetched: dict[tuple, list] = {(m, fld): [] for m in missing}
-        for r in t.to_pylist():
-            fetched[(r["term"], fld)].append(r)
-        cache.update(fetched)
-    return [r for t in live_terms for r in cache[(t, fld)]]
-
-
-def _seed_scores_driver(
-    dset,
-    keys: set,
-    fld: str,
-    idf: dict,
-    avgdl: float,
-    p: BM25Params,
-    seed_ranges: list[tuple[int, int]],
-    tombs: np.ndarray | None,
-) -> np.ndarray:
-    """Decode the seed blocks on the driver and return the per-doc BM25
-    sums for every doc inside the seed ranges — the executors' arithmetic
-    exactly (numpy mirror of engine.score.bm25_score: per-term float32
-    round-trip, summed in double), modulo addend order (absorbed by
-    _THETA_SLACK). Returns just the score vector: the seed only exists to
-    produce θ; the final distributed job re-scores these ranges through the
-    canonical Spark expressions so the OUTPUT never depends on this code."""
-    import pyarrow.compute as pc
-
-    from search_engine_spark.index.codec import decode_block
-
-    terms = sorted({t for t, _, _ in keys})
-    bids = sorted({b for _, _, b in keys})
-    tbl = dset.to_table(
-        columns=["term", "salt", "block_id", "n", "docids", "tfs", "doclens"],
-        filter=(
-            (pc.field("field") == fld)
-            & pc.field("term").isin(terms)
-            & pc.field("block_id").isin(bids)
-        ),
-    )
-    rng = sorted(seed_ranges)
-    starts = np.array([lo for lo, _ in rng], dtype=np.int64)
-    ends = np.array([hi for _, hi in rng], dtype=np.int64)
-    userw = (p.k3 + 1.0) * 1.0 / (p.k3 + 1.0)  # qtf=1 (QryopSlScore:122)
-    cols = tbl.to_pydict()
-    all_d, all_s = [], []
-    for term, salt, bid, n, db, tb, lb in zip(
-        cols["term"], cols["salt"], cols["block_id"], cols["n"],
-        cols["docids"], cols["tfs"], cols["doclens"],
-    ):
-        if (term, salt, bid) not in keys:
-            continue  # same block_id under another (term, salt) — not seed
-        d, t, L = decode_block({"n": n, "docids": db, "tfs": tb, "doclens": lb})
-        j = np.searchsorted(starts, d, side="right") - 1
-        m = (j >= 0) & (d <= ends[np.clip(j, 0, len(ends) - 1)])
-        if tombs is not None and tombs.size:
-            ti = np.searchsorted(tombs, d)
-            m &= ~((ti < tombs.size) & (tombs[np.clip(ti, 0, tombs.size - 1)] == d))
-        if not m.any():
-            continue
-        d = d[m]
-        tf = t[m].astype(np.float64)
-        dl = L[m].astype(np.float64)
-        tfw = tf / (tf + p.k1 * ((1.0 - p.b) + p.b * dl / avgdl))
-        s = (idf[term] * tfw * userw).astype(np.float32).astype(np.float64)
-        all_d.append(d)
-        all_s.append(s)
-    if not all_d:
-        return np.array([], dtype=np.float64)
-    dd = np.concatenate(all_d)
-    ss = np.concatenate(all_s)
-    uid, inv = np.unique(dd, return_inverse=True)
-    tot = np.zeros(len(uid), dtype=np.float64)
-    np.add.at(tot, inv, ss)
+def bm25_range_ub(rb: RangeBounds) -> np.ndarray:
+    """UB(R) = Σ_t max ub of t's blocks overlapping R, summed in term order."""
+    tot = np.zeros(len(rb.starts))
+    for j in range(rb.best.shape[1]):
+        tot += rb.best[:, j]
     return tot
-
-
-def _coalesce(idxs: list[int], ranges: list[tuple[int, int]]) -> list[tuple[int, int]]:
-    """Merge adjacent docid ranges so the pushed filter stays a short OR
-    chain even when thousands of ranges survive."""
-    spans = sorted(ranges[i] for i in idxs)
-    out = [list(spans[0])]
-    for lo, hi in spans[1:]:
-        if lo <= out[-1][1] + 1:
-            out[-1][1] = max(out[-1][1], hi)
-        else:
-            out.append([lo, hi])
-    return [(lo, hi) for lo, hi in out]
 
 
 def bm25_topk_pruned(
@@ -279,272 +461,74 @@ def bm25_topk_pruned(
     fld: str = "body",
     p: BM25Params | None = None,
     stats: PruneStats | None = None,
-) -> DataFrame:
+) -> DataFrame | None:
     """Exact BM25 #SUM top-k using block-max pruning. Returns the same
-    (rank, docid, ext_docid, score) frame as the unpruned plan."""
+    (rank, docid, ext_docid, score) frame as the unpruned plan, or None when
+    the driver cannot read the index (the caller runs the exact plan)."""
     p = p or BM25Params()
     st = stats if stats is not None else PruneStats()
-    spark = pidx.spark
     n_docs = pidx.corpus.n_docs
     avgdl = pidx.corpus.avgdl(fld)
+    try:
+        if not _tombstones_fit(pidx, st):
+            return None
+        trows = pidx.reads.term_stats(terms, fld)
+        live = [t for t in dict.fromkeys(terms) if t in trows]
+        if not live:
+            # all-stopword or absent-term query: the exact plan's empty
+            # top-k (the TREC sink then emits its dummy row)
+            st.score_mode = "driver"
+            return _enumerate_ranks(pidx.spark, [])
+        idf = np.array([_idf(n_docs, trows[t][0]) for t in live])
+        userw = (p.k3 + 1.0) * 1.0 / (p.k3 + 1.0)  # qtf=1 (QryopSlScore:122)
 
-    want_driver = os.environ.get("SPARK_GRAFT_PRUNE_SPARK_SEED") != "1"
-    dset = None
-    if want_driver:
-        try:
-            dset = _packed_dataset(pidx)
-        except Exception:
-            dset = None
+        def block_ub(q: _Query) -> np.ndarray:
+            return _bm25_block_ub(q.max_tf, q.min_doclen, idf[q.term], avgdl, p)
 
-    pairs = [(t, fld) for t in dict.fromkeys(terms)]
-    qterms = [t for t, _ in pairs]
-    trows: dict | None = None
-    if dset is not None:
-        try:
-            trows = _term_stats_driver(pidx, qterms, fld)
-        except Exception:
-            trows = None
-    if trows is None:
-        trows = (
-            {
-                r["term"]: (r["df"], r["ctf"])
-                for r in pidx.term_stats.where(pidx._stats_cond(pairs)).collect()
-            }
-            if pairs
-            else {}
-        )
-    live_terms = [t for t in qterms if t in trows]
-    if not live_terms:
-        # all-stopword or absent-term query: same empty top-k the exact
-        # plan produces (the TREC sink then emits its dummy row)
-        return rank_topk(
-            spark.createDataFrame([], "docid long, score double"),
-            pidx.doc_ids, k, n_docs=n_docs,
-        )
+        def seed_scores(piv: _Pivot) -> np.ndarray:
+            # engine.score.bm25_score's arithmetic: per-term float32
+            # round-trip, summed in double
+            tot = np.zeros(len(piv.docid))
+            dl = piv.doclen.astype(np.float64)
+            for i in range(len(live)):
+                tf = piv.tf[i].astype(np.float64)
+                tfw = tf / (tf + p.k1 * ((1.0 - p.b) + p.b * dl / avgdl))
+                s = (idf[i] * tfw * userw).astype(np.float32).astype(np.float64)
+                tot += np.where(piv.present[i], s, 0.0)
+            return tot
 
-    # ---- 0. block metadata (driver-side; tiny, column-pruned) ------------
-    meta = None
-    if dset is not None:
-        try:
-            meta = _meta_driver(pidx, dset, live_terms, fld)
-        except Exception:
-            meta = None
-    if meta is None:
-        meta = [
-            r.asDict()
-            for r in pidx.blocks_meta([(t, fld) for t in live_terms]).collect()
-        ]
-    st.n_blocks_total = len(meta)
-    idf_by_term = {t: _idf(n_docs, trows[t][0]) for t in live_terms}
-    blocks: dict[str, list] = {t: [] for t in live_terms}
-    for r in meta:
-        ub = _block_ub(
-            r["max_tf"], r["min_doclen"], idf_by_term[r["term"]], avgdl, p
-        )
-        blocks[r["term"]].append(
-            (r["min_docid"], r["max_docid"], r["salt"], r["block_id"], ub)
+        # SumNode's sum, in child order (a missing child adds nothing)
+        pivot_score = reduce(
+            lambda acc, i: acc + F.coalesce(
+                score_mod.bm25_score(
+                    n_docs=n_docs, df=trows[live[i]][0], avgdl=avgdl, p=p,
+                    tf=F.col(f"_tf{i}"), doclen=F.col("doclen"),
+                ),
+                F.lit(0.0),
+            ),
+            range(len(live)),
+            F.lit(0.0),
         )
 
-    # ---- 1. docid ranges from the union of block boundaries --------------
-    cuts = sorted(
-        {b[0] for bl in blocks.values() for b in bl}
-        | {b[1] + 1 for bl in blocks.values() for b in bl}
-    )
-    ranges = list(zip(cuts[:-1], [c - 1 for c in cuts[1:]]))  # inclusive
-    st.n_ranges_total = len(ranges)
-
-    range_ub = []
-    per_range_blocks: list[list] = []
-    for lo, hi in ranges:
-        tot = 0.0
-        rb = []
-        for t in live_terms:
-            best = 0.0
-            for b in blocks[t]:
-                if b[0] <= hi and b[1] >= lo:
-                    best = max(best, b[4])
-                    rb.append((t, b[2], b[3]))
-            tot += best
-        range_ub.append(tot)
-        per_range_blocks.append(rb)
-
-    # ---- 2. seed phase: best ranges by UB until the seed is guaranteed to
-    # contain >= k distinct docids. A single term's postings are distinct
-    # docs, so we count UNIQUE blocks per term and stop once one term's
-    # covered postings reach k (counting across terms under-seeds: 100
-    # postings of 3 terms can be ~40 docs, leaving theta at -inf and the
-    # prune phase vacuous — the r03 13/13-blocks-scanned failure mode).
-    order = sorted(range(len(ranges)), key=lambda i: -range_ub[i])
-    block_n = {
-        (r["term"], r["salt"], r["block_id"]): r["n"] for r in meta
-    }
-    term_posts: dict[str, int] = {}
-    counted: set = set()
-    pos = 0
-
-    def take_ranges(min_ranges: int, until_k_posts: bool = False) -> list[int]:
-        """Next ranges in UB order: at least min_ranges, and (seed call)
-        extending until one term's unique-block posting count reaches k."""
-        nonlocal pos
-        batch: list[int] = []
-        while pos < len(order) and (
-            len(batch) < min_ranges or (until_k_posts and not counted_enough())
-        ):
-            i = order[pos]
-            pos += 1
-            batch.append(i)
-            for key in per_range_blocks[i]:
-                if key not in counted:
-                    counted.add(key)
-                    term_posts[key[0]] = term_posts.get(key[0], 0) + block_n[key]
-        return batch
-
-    # seed target: 2k postings of one term, floored at ~2 blocks — a seed at
-    # exactly k docs leaves theta at the k-th best of a BARELY sufficient
-    # sample; doubling the sample tightens theta for the cost of a couple of
-    # extra blocks, typically halving the survivor set
-    seed_target = max(2 * k, 2 * max(block_n.values()))
-
-    def counted_enough() -> bool:
-        return bool(term_posts) and max(term_posts.values()) >= seed_target
-
-    # past this many surviving blocks an IN-list predicate stops being a
-    # predicate — ship the keys as a broadcast-joined table instead
-    _KEYS_PRED_MAX = 100_000
-
-    # planner-sized scan stage: block metadata gives the EXACT posting count
-    # the filtered scan will decode, so size its task count to the work
-    # (~250k postings per task) instead of the file-split count — pruning's
-    # task-count win made explicit at any scale
-    _POSTS_PER_TASK = 250_000
-
-    def score_ranges(idxs: list[int], range_filter: bool = True) -> DataFrame:
-        """Score every posting of the blocks overlapping ``idxs``' ranges.
-        ``range_filter=False`` skips the docid-range mask: blocks straddling
-        a pruned range then contribute PARTIAL scores for that range's docs
-        — harmless for the top-k, because a pruned range's docs satisfy
-        partial ≤ total ≤ UB(range) < θ ≤ (final k-th score), so they sit
-        strictly below every true top-k doc. The Spark-seed path MUST keep
-        the mask: it unions per-phase frames relying on ranges being
-        disjoint docid sets."""
-        keys = sorted({key for i in idxs for key in per_range_blocks[i]})
-        est_posts = sum(block_n[key] for key in keys)
-        # floor of 8: below it the saved python-worker roundtrips cost more
-        # than they save — a single task serializes every file-footer probe
-        # (measured +0.2 s at coalesce(1) on a 29-file index); at real scale
-        # the work term dominates and the floor is irrelevant
-        n_tasks = min(
-            spark.sparkContext.defaultParallelism,
-            max(8, -(-est_posts // _POSTS_PER_TASK)),
-        )
-        if len(keys) <= _KEYS_PRED_MAX:
-            posts = pidx.postings_for(
-                [(t, fld) for t in live_terms],
-                block_keys=[(t, fld, s, b) for t, s, b in keys],
-                coalesce_to=n_tasks,
-            )
-        else:
-            bf = spark.createDataFrame(
-                [(t, fld, s, b) for t, s, b in keys],
-                "term string, field string, salt int, block_id int",
-            )
-            posts = pidx.postings_for(
-                [(t, fld) for t in live_terms], block_filter=bf,
-                coalesce_to=n_tasks,
-            )
-        from search_engine_spark.engine.score import bm25_score
-
-        if range_filter:
-            cond = None
-            for lo, hi in _coalesce(idxs, ranges):
-                c = (F.col("docid") >= lo) & (F.col("docid") <= hi)
-                cond = c if cond is None else (cond | c)
-            posts = posts.where(cond)
-        scored = posts.select(
-            "docid",
-            bm25_score(
-                n_docs=n_docs, df=F.col("df"), avgdl=avgdl, p=p
-            ).alias("score"),
-        )
-        return scored.groupBy("docid").agg(F.sum("score").alias("score"))
-
-    # minimum 4 ranges: with a small k a single range can satisfy the
-    # posting count yet hold only weak docs, leaving theta loose and the
-    # prune phase vacuous — a few extra seed ranges cost one filter clause
-    seed = take_ranges(4, until_k_posts=True)
-
-    theta = -math.inf
-    seed_scores: DataFrame | None = None
-    if dset is not None:
-        # ---- driver seed: decode the few seed blocks in-process ----------
-        try:
-            tombs = _tombstones_driver(pidx)
-            while True:
-                seed_keys = {key for i in seed for key in per_range_blocks[i]}
-                tot = _seed_scores_driver(
-                    dset, seed_keys, fld, idf_by_term, avgdl, p,
-                    [ranges[i] for i in seed], tombs,
+        def spark_scores(posts: DataFrame) -> DataFrame:
+            return (
+                posts.select(
+                    "docid",
+                    score_mod.bm25_score(
+                        n_docs=n_docs, df=F.col("df"), avgdl=avgdl, p=p
+                    ).alias("score"),
                 )
-                if len(tot) >= k or pos >= len(order):
-                    break
-                # block splits can leave the covered ranges short of k docs:
-                # extend in doubling batches (UB order, theta only tightens)
-                seed.extend(take_ranges(max(16, len(seed))))
-            if len(tot) >= k:
-                kth = float(np.partition(tot, len(tot) - k)[len(tot) - k])
-                theta = kth * _THETA_SLACK
-            st.seed_mode = "driver"
-            st.n_seed_blocks = len(seed_keys)
-        except Exception:
-            dset = None  # fall through to the Spark seed below
+                .groupBy("docid")
+                .agg(F.sum("score").alias("score"))
+            )
 
-    if dset is None:
-        # ---- Spark seed (fallback): r03's two-phase flow ------------------
-        st.seed_mode = "spark"
-        seed_scores = score_ranges(seed).cache()
-        top = seed_scores.orderBy(F.desc("score")).limit(k).collect()
-        while len(top) < k and pos < len(order):
-            extra = take_ranges(max(16, len(seed)))
-            seed.extend(extra)
-            seed_scores = seed_scores.unionByName(score_ranges(extra)).cache()
-            top = seed_scores.orderBy(F.desc("score")).limit(k).collect()
-        theta = top[-1]["score"] if len(top) >= k else -math.inf
-    st.theta = theta
-
-    # ---- 3. survivors ----------------------------------------------------
-    # prune only UB < θ (strict): a doc with score exactly θ could still beat
-    # the seed's k-th entry on the asc-ext-id tie-break, so it must be scored
-    seeded = set(seed)
-    survivors = [
-        i
-        for i in range(len(ranges))
-        if i not in seeded and range_ub[i] >= theta
-    ]
-    if seed_scores is None:
-        # driver seed: ONE distributed job over seed ∪ survivors — the final
-        # scores all come from the canonical Spark expression chain, so the
-        # output is bitwise the exact plan's regardless of driver-side ulps
-        final_idx = seed + survivors
-        st.n_ranges_scanned = len(final_idx)
-        st.n_blocks_scanned = len(
-            {key for i in final_idx for key in per_range_blocks[i]}
+        return _pruned_topk(
+            pidx, live, fld, k, st, block_ub, bm25_range_ub, seed_scores,
+            pivot_score, spark_scores,
         )
-        return rank_topk(
-            score_ranges(final_idx, range_filter=False),
-            pidx.doc_ids, k, n_docs=n_docs,
-        )
-
-    # Spark-seed fallback: union the cached seed scores with the survivor
-    # scan (ranges partition the docid space — no re-aggregation needed)
-    st.n_ranges_scanned = len(seed) + len(survivors)
-    st.n_blocks_scanned = len(
-        {key for i in seed + survivors for key in per_range_blocks[i]}
-    )
-    frames = [seed_scores]
-    if survivors:
-        frames.append(score_ranges(survivors))
-    allscores = frames[0] if len(frames) == 1 else frames[0].unionByName(frames[1])
-    return rank_topk(allscores, pidx.doc_ids, k, n_docs=n_docs)
+    except DRIVER_READ_ERRORS as e:
+        st.fallback = f"driver read failed: {type(e).__name__}: {e}"
+        return None
 
 
 # --------------------------------------------------------------------------
@@ -566,144 +550,62 @@ def bm25_topk_pruned(
 # valid for every candidate doc in R: a doc is in R only via >=1 overlapping
 # block, so its doclen >= that range's min block doclen, and each child
 # contribution is <= bound_i(R) whether actual or default. The final guard
-# absorbs pow()-ulp differences between the driver's libm and the JVM's.
+# absorbs pow()-ulp differences between numpy and the JVM.
 #
-# Same two-phase flow as BM25 above: driver-seeded theta (numpy full-outer
-# over the seed ranges' blocks, slack-deflated), survivors = UB >= theta,
-# ONE distributed job whose scores come from the canonical pivot expressions
-# (ops._indri_pivot_scores' exact arithmetic), so output identity never
-# depends on driver code. Blocks straddling a pruned range contribute
-# PARTIAL rows for that range's docs — harmless: their computed score is
-# also <= UB(range) < theta (each present child <= its block ub, each
-# missing child's default <= the range default bound), strictly below every
-# true top-k doc.
+# Same flow as BM25: a seeded θ, survivors = UB >= θ, final scores from the
+# canonical pivot expressions (ops._indri_pivot_scores' exact arithmetic).
+# Blocks straddling a pruned range contribute PARTIAL rows for that range's
+# docs — harmless: their computed score is also <= UB(range) < θ (each
+# present child <= its block ub, each missing child's default <= the range
+# default bound), strictly below every true top-k doc.
 #
-# Fallbacks (return None -> the caller runs the exact plan): any query term
-# absent from the index (the degenerate all-zero #AND/#WAND case and the
-# W-normalization subtlety aren't worth modeling), non-positive total
-# weight, any negative weight (monotonicity breaks), duplicate terms
-# (the term-keyed pivot can't split them), or no driver-side dataset.
+# Outside the contract (return None -> the caller runs the exact plan): any
+# query term absent from the index (the degenerate all-zero #AND/#WAND case
+# and the W-normalization subtlety aren't worth modeling), non-positive
+# total weight, any negative weight (monotonicity breaks), duplicate terms
+# (the term-keyed pivot can't split them).
 
 
 def _indri_mle(ctf: int, c_len: int) -> float:
     return ctf / float(c_len)
 
 
-def _indri_block_ub(max_tf: int, min_doclen: int, mle: float, p: IndriParams) -> float:
+def _indri_block_ub(max_tf, min_doclen, mle, p: IndriParams):
     """Upper bound on the f32-cast actual score of any posting in the block
     (increasing in tf, decreasing in doclen — QryopSlScore.java:164-167)."""
     s = (1.0 - p.lam) * (max_tf + p.mu * mle) / (min_doclen + p.mu) + p.lam * mle
     return s * _F32_GUARD
 
 
-def _indri_default_ub(min_doclen: int, mle: float, p: IndriParams) -> float:
+def _indri_default_ub(min_doclen, mle, p: IndriParams):
     """Default score at the smallest doclen a candidate in the range can
     have (the default path is NOT f32-cast — QryopSlScore.java:195)."""
     return (1.0 - p.lam) * (p.mu * mle) / (min_doclen + p.mu) + p.lam * mle
 
 
-def _indri_combine_ub(kind: str, weights: list | None, bounds: list[float]) -> float:
+def _indri_combine(kind: str, weights: list | None, scores: list):
+    """#AND geo-mean / #WAND product of pows / #WSUM weighted mean over
+    per-child scores (floats or numpy arrays), children left to right."""
     if kind == "wsum":
         W = sum(weights)
-        return sum(b * (w / W) for w, b in zip(weights, bounds)) * _F32_GUARD
+        return reduce(lambda acc, ws: acc + ws[1] * (ws[0] / W), zip(weights, scores), 0.0)
     if kind == "wand":
         W = sum(weights)
-        out = 1.0
-        for w, b in zip(weights, bounds):
-            out *= b ** (w / W)
-        return out * _F32_GUARD
-    prod = 1.0
-    for b in bounds:
-        prod *= b
-    return prod ** (1.0 / len(bounds)) * _F32_GUARD
+        return reduce(lambda acc, ws: acc * ws[1] ** (ws[0] / W), zip(weights, scores), 1.0)
+    return reduce(lambda a, b: a * b, scores) ** (1.0 / len(scores))
 
 
-def _indri_seed_scores_driver(
-    dset,
-    keys: set,
-    fld: str,
-    terms: list[str],
-    mle: dict,
-    p: IndriParams,
-    kind: str,
-    weights: list | None,
-    seed_ranges: list[tuple[int, int]],
-    tombs: np.ndarray | None,
+def indri_range_ub(
+    rb: RangeBounds, kind: str, weights: list | None, mle: np.ndarray, p: IndriParams
 ) -> np.ndarray:
-    """Full-outer Indri scores for every candidate doc inside the seed
-    ranges — numpy mirror of the pivot expressions (per-child f32 round-trip
-    on the actual path, raw-double defaults, combined in child order).
-    Exists only to produce theta; ulp drift vs the JVM is absorbed by
-    _THETA_SLACK."""
-    import pyarrow.compute as pc
-
-    from search_engine_spark.index.codec import decode_block
-
-    bids = sorted({b for _, _, b in keys})
-    tbl = dset.to_table(
-        columns=["term", "salt", "block_id", "n", "docids", "tfs", "doclens"],
-        filter=(
-            (pc.field("field") == fld)
-            & pc.field("term").isin(terms)
-            & pc.field("block_id").isin(bids)
-        ),
-    )
-    rng = sorted(seed_ranges)
-    starts = np.array([lo for lo, _ in rng], dtype=np.int64)
-    ends = np.array([hi for _, hi in rng], dtype=np.int64)
-    cols = tbl.to_pydict()
-    per_term: dict[str, list] = {t: [] for t in terms}
-    for term, salt, bid, n, db, tb, lb in zip(
-        cols["term"], cols["salt"], cols["block_id"], cols["n"],
-        cols["docids"], cols["tfs"], cols["doclens"],
-    ):
-        if (term, salt, bid) not in keys:
-            continue
-        d, t, L = decode_block({"n": n, "docids": db, "tfs": tb, "doclens": lb})
-        j = np.searchsorted(starts, d, side="right") - 1
-        m = (j >= 0) & (d <= ends[np.clip(j, 0, len(ends) - 1)])
-        if tombs is not None and tombs.size:
-            ti = np.searchsorted(tombs, d)
-            m &= ~((ti < tombs.size) & (tombs[np.clip(ti, 0, tombs.size - 1)] == d))
-        if m.any():
-            per_term[term].append((d[m], t[m], L[m]))
-
-    all_d = [d for parts in per_term.values() for d, _, _ in parts]
-    if not all_d:
-        return np.array([], dtype=np.float64)
-    uid = np.unique(np.concatenate(all_d))
-    dl = np.zeros(len(uid), dtype=np.float64)
-    for parts in per_term.values():
-        for d, _, L in parts:
-            dl[np.searchsorted(uid, d)] = L
-    child_scores = []
-    for t in terms:  # child order == term order (distinct-term gate)
-        m = mle[t]
-        s = (1.0 - p.lam) * (p.mu * m) / (dl + p.mu) + p.lam * m  # defaults
-        for d, tf, _ in per_term[t]:
-            idx = np.searchsorted(uid, d)
-            a = (
-                (1.0 - p.lam) * ((tf.astype(np.float64) + p.mu * m) / (dl[idx] + p.mu))
-                + p.lam * m
-            )
-            s[idx] = a.astype(np.float32).astype(np.float64)
-        child_scores.append(s)
-    if kind == "wsum":
-        W = sum(weights)
-        tot = np.zeros(len(uid), dtype=np.float64)
-        for w, s in zip(weights, child_scores):
-            tot += s * (w / W)
-        return tot
-    if kind == "wand":
-        W = sum(weights)
-        tot = np.ones(len(uid), dtype=np.float64)
-        for w, s in zip(weights, child_scores):
-            tot *= s ** (w / W)
-        return tot
-    prod = np.ones(len(uid), dtype=np.float64)
-    for s in child_scores:
-        prod *= s
-    return prod ** (1.0 / len(child_scores))
+    """UB(R) = combine_t(max(best_t(R), default_t(min doclen in R))), guarded;
+    -inf for a gap range (no overlapping block, hence no candidate doc)."""
+    bounds = [
+        np.maximum(rb.best[:, j], _indri_default_ub(rb.min_doclen, mle[j], p))
+        for j in range(len(mle))
+    ]
+    ub = _indri_combine(kind, weights, bounds) * _F32_GUARD
+    return np.where(rb.covered, ub, -math.inf)
 
 
 def indri_topk_pruned(
@@ -718,163 +620,81 @@ def indri_topk_pruned(
 ) -> DataFrame | None:
     """Exact Indri #AND/#WAND/#WSUM top-k with block-max pruning; bitwise
     the exact pivot plan's output. Returns None when the shape falls outside
-    the pruned path's contract (caller runs the exact plan)."""
-    from search_engine_spark.engine import score as score_mod
-
+    the pruned path's contract or the driver cannot read the index (caller
+    runs the exact plan)."""
     p = p or IndriParams()
     st = stats if stats is not None else PruneStats()
-    spark = pidx.spark
-    n_docs = pidx.corpus.n_docs
     c_len = pidx.corpus.sum_doclen(fld)
 
     if kind not in ("and", "wand", "wsum"):
+        st.fallback = f"unsupported combine {kind!r}"
         return None
     if len(set(terms)) != len(terms) or not terms:
+        st.fallback = "duplicate or no terms"
         return None
     if kind in ("wand", "wsum"):
         if weights is None or len(weights) != len(terms):
+            st.fallback = "weights do not match terms"
             return None
         if any(w < 0 for w in weights) or sum(weights) <= 0:
+            st.fallback = "negative or non-positive total weight"
             return None
-
-    if os.environ.get("SPARK_GRAFT_PRUNE_SPARK_SEED") == "1":
-        return None  # the Indri path has no Spark-seed twin; exact plan
     try:
-        dset = _packed_dataset(pidx)
-        trows = _term_stats_driver(pidx, terms, fld)
-    except Exception:
-        return None
-    if dset is None or any(t not in trows for t in terms):
-        return None  # absent term: degenerate zero-score combines — exact plan
+        if not _tombstones_fit(pidx, st):
+            return None
+        trows = pidx.reads.term_stats(terms, fld)
+        if any(t not in trows for t in terms):
+            st.fallback = "absent term"  # degenerate zero-score combines
+            return None
+        mle = np.array([_indri_mle(trows[t][1], c_len) for t in terms])
 
-    mle = {t: _indri_mle(trows[t][1], c_len) for t in terms}
+        def block_ub(q: _Query) -> np.ndarray:
+            return _indri_block_ub(q.max_tf, q.min_doclen, mle[q.term], p)
 
-    # ---- block metadata + per-range upper bounds --------------------------
-    try:
-        meta = _meta_driver(pidx, dset, terms, fld)
-        tombs = _tombstones_driver(pidx)
-    except Exception:
-        return None
-    st.n_blocks_total = len(meta)
-    blocks: dict[str, list] = {t: [] for t in terms}
-    for r in meta:
-        ub = _indri_block_ub(r["max_tf"], r["min_doclen"], mle[r["term"]], p)
-        blocks[r["term"]].append(
-            (r["min_docid"], r["max_docid"], r["salt"], r["block_id"], ub,
-             r["min_doclen"])
+        def range_ub(rb: RangeBounds) -> np.ndarray:
+            return indri_range_ub(rb, kind, weights, mle, p)
+
+        def seed_scores(piv: _Pivot) -> np.ndarray:
+            # numpy mirror of the pivot expressions: per-child f32 round-trip
+            # on the actual path, raw-double defaults, combined in child order
+            dl = piv.doclen.astype(np.float64)
+            child = []
+            for i, m in enumerate(mle):
+                tf = piv.tf[i].astype(np.float64)
+                actual = (1.0 - p.lam) * ((tf + p.mu * m) / (dl + p.mu)) + p.lam * m
+                default = (1.0 - p.lam) * (p.mu * m) / (dl + p.mu) + p.lam * m
+                child.append(
+                    np.where(
+                        piv.present[i],
+                        actual.astype(np.float32).astype(np.float64),
+                        default,
+                    )
+                )
+            return _indri_combine(kind, weights, child)
+
+        pivot_score = _indri_pivot_score(kind, weights, terms, trows, c_len, p)
+
+        def spark_scores(posts: DataFrame) -> DataFrame:
+            aggs = [
+                F.max(F.when(F.col("term") == t, F.col("tf").cast("int"))).alias(f"_tf{i}")
+                for i, t in enumerate(terms)
+            ]
+            base = posts.groupBy("docid").agg(*aggs, F.max("doclen").alias("doclen"))
+            return base.select("docid", pivot_score.alias("score"))
+
+        return _pruned_topk(
+            pidx, terms, fld, k, st, block_ub, range_ub, seed_scores,
+            pivot_score, spark_scores,
         )
-
-    cuts = sorted(
-        {b[0] for bl in blocks.values() for b in bl}
-        | {b[1] + 1 for bl in blocks.values() for b in bl}
-    )
-    ranges = list(zip(cuts[:-1], [c - 1 for c in cuts[1:]]))
-    st.n_ranges_total = len(ranges)
-
-    range_ub: list[float] = []
-    per_range_blocks: list[list] = []
-    for lo, hi in ranges:
-        rb = []
-        best = {t: 0.0 for t in terms}
-        min_dl = None
-        for t in terms:
-            for b in blocks[t]:
-                if b[0] <= hi and b[1] >= lo:
-                    best[t] = max(best[t], b[4])
-                    min_dl = b[5] if min_dl is None else min(min_dl, b[5])
-                    rb.append((t, b[2], b[3]))
-        if not rb:  # gap range: no overlapping block, no candidate docs
-            range_ub.append(-math.inf)
-            per_range_blocks.append(rb)
-            continue
-        bounds = [
-            max(best[t], _indri_default_ub(min_dl, mle[t], p)) for t in terms
-        ]
-        range_ub.append(_indri_combine_ub(kind, weights, bounds))
-        per_range_blocks.append(rb)
-
-    # ---- seed walk (same policy as the BM25 path) --------------------------
-    order = sorted(range(len(ranges)), key=lambda i: -range_ub[i])
-    block_n = {(r["term"], r["salt"], r["block_id"]): r["n"] for r in meta}
-    term_posts: dict[str, int] = {}
-    counted: set = set()
-    pos = 0
-
-    def take_ranges(min_ranges: int, until_k_posts: bool = False) -> list[int]:
-        nonlocal pos
-        batch: list[int] = []
-        while pos < len(order) and (
-            len(batch) < min_ranges or (until_k_posts and not counted_enough())
-        ):
-            i = order[pos]
-            pos += 1
-            batch.append(i)
-            for key in per_range_blocks[i]:
-                if key not in counted:
-                    counted.add(key)
-                    term_posts[key[0]] = term_posts.get(key[0], 0) + block_n[key]
-        return batch
-
-    seed_target = max(2 * k, 2 * max(block_n.values())) if block_n else 2 * k
-
-    def counted_enough() -> bool:
-        return bool(term_posts) and max(term_posts.values()) >= seed_target
-
-    seed = take_ranges(4, until_k_posts=True)
-    try:
-        while True:
-            seed_keys = {key for i in seed for key in per_range_blocks[i]}
-            tot = _indri_seed_scores_driver(
-                dset, seed_keys, fld, terms, mle, p, kind, weights,
-                [ranges[i] for i in seed], tombs,
-            )
-            if len(tot) >= k or pos >= len(order):
-                break
-            seed.extend(take_ranges(max(16, len(seed))))
-    except Exception:
+    except DRIVER_READ_ERRORS as e:
+        st.fallback = f"driver read failed: {type(e).__name__}: {e}"
         return None
-    theta = (
-        float(np.partition(tot, len(tot) - k)[len(tot) - k]) * _THETA_SLACK
-        if len(tot) >= k
-        else -math.inf
-    )
-    st.theta = theta
-    st.seed_mode = "driver"
-    st.n_seed_blocks = len(seed_keys)
 
-    seeded = set(seed)
-    survivors = [
-        i for i in range(len(ranges)) if i not in seeded and range_ub[i] >= theta
-    ]
-    final_idx = seed + survivors
-    st.n_ranges_scanned = len(final_idx)
-    keys = sorted({key for i in final_idx for key in per_range_blocks[i]})
-    st.n_blocks_scanned = len(keys)
 
-    # ---- ONE distributed job: canonical pivot over the surviving blocks ---
-    est_posts = sum(block_n[key] for key in keys)
-    n_tasks = min(
-        spark.sparkContext.defaultParallelism,
-        max(8, -(-est_posts // 250_000)),
-    )
-    pairs = [(t, fld) for t in terms]
-    if len(keys) <= 100_000:
-        posts = pidx.postings_for(
-            pairs, block_keys=[(t, fld, s, b) for t, s, b in keys],
-            coalesce_to=n_tasks,
-        )
-    else:
-        bf = spark.createDataFrame(
-            [(t, fld, s, b) for t, s, b in keys],
-            "term string, field string, salt int, block_id int",
-        )
-        posts = pidx.postings_for(pairs, block_filter=bf, coalesce_to=n_tasks)
-
-    aggs = [
-        F.max(F.when(F.col("term") == t, F.col("tf").cast("int"))).alias(f"_tf{i}")
-        for i, t in enumerate(terms)
-    ]
-    base = posts.groupBy("docid").agg(*aggs, F.max("doclen").alias("doclen"))
+def _indri_pivot_score(kind, weights, terms, trows, c_len, p: IndriParams) -> Column:
+    """Indri score over a (docid, _tf{i}, doclen) pivot: actual f32 score for
+    a present child, raw-double default otherwise; the combines replicate
+    ops.IndriAndNode/WandNode/WsumNode._combine exactly."""
     cols = []
     for i, t in enumerate(terms):
         tf_col = F.col(f"_tf{i}")
@@ -885,22 +705,16 @@ def indri_topk_pruned(
             ctf=trows[t][1], c_len=c_len, p=p, doclen=F.col("doclen")
         )
         cols.append(F.when(tf_col.isNotNull(), actual).otherwise(default))
-    # combines replicate ops.IndriAndNode/WandNode/WsumNode._combine exactly
     if kind == "wsum":
         W = sum(weights)
         score = F.lit(0.0)
         for c, w in zip(cols, weights):
-            score = score + c * F.lit(w / W if W != 0 else math.nan)
-    elif kind == "wand":
+            score = score + c * F.lit(w / W)
+        return score
+    if kind == "wand":
         W = sum(weights)
         score = F.lit(1.0)
         for c, w in zip(cols, weights):
-            score = score * F.pow(c, F.lit(w / W if W != 0 else math.nan))
-    else:
-        from functools import reduce as _reduce
-
-        score = F.pow(
-            _reduce(lambda a, b: a * b, cols), F.lit(1.0 / len(cols))
-        )
-    scores = base.select("docid", score.alias("score"))
-    return rank_topk(scores, pidx.doc_ids, k, n_docs=n_docs)
+            score = score * F.pow(c, F.lit(w / W))
+        return score
+    return F.pow(reduce(lambda a, b: a * b, cols), F.lit(1.0 / len(cols)))

@@ -75,9 +75,11 @@ class Engine:
     last_prune_stats = None
 
     def _pruned_topk(self, query: str, k: int) -> DataFrame | None:
-        """Default block-max pruned path for flat BM25 #SUM over a packed
-        index (SURVEY.md §4.2; engine/pruning.py — bit-identical to the
-        exact plan, identity-tested). Applies only when the shape matches
+        """Default block-max pruned path for flat BM25 #SUM and Indri
+        #AND/#WAND/#WSUM over a packed index (SURVEY.md §4.2;
+        engine/pruning.py — bit-identical to the exact plan,
+        identity-tested; a small surviving set is scored on the driver and
+        runs no Spark job). Applies only when the shape matches
         (single field, distinct terms — duplicate query terms carry a
         multiplicity weight the pruned scorer doesn't model) AND the index
         is big enough for pruning to pay: below ``min_blocks`` total blocks
@@ -134,20 +136,22 @@ class Engine:
             return None
         fld = next(iter(fields))
 
+        from search_engine_spark.engine.pruning import (
+            DRIVER_READ_ERRORS, PruneStats, bm25_topk_pruned, indri_topk_pruned,
+        )
+
         block_size = getattr(self.index, "block_size", 0)
         if block_size:
-            self.ctx.prefetch_terms({(t, fld) for t in terms})
-            est_blocks = sum(
-                -(-self.ctx.term_stat(t, fld)[0] // block_size) for t in terms
-            )
+            # df from the driver's cached pyarrow term stats: no Spark job
+            try:
+                dfs = self.index.reads.term_stats(terms, fld)
+            except DRIVER_READ_ERRORS:
+                return None
+            est_blocks = sum(-(-df // block_size) for df, _ in dfs.values())
             if est_blocks < int(
                 os.environ.get("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "64")
             ):
                 return None
-
-        from search_engine_spark.engine.pruning import (
-            PruneStats, bm25_topk_pruned, indri_topk_pruned,
-        )
 
         st = PruneStats()
         if self.model.name == BM25:
@@ -159,8 +163,8 @@ class Engine:
                 self.index, kind, terms, weights, k=k, fld=fld,
                 p=self.model.indri, stats=st,
             )
-            if res is None:  # outside the pruned contract: exact plan
-                return None
+        if res is None:  # outside the pruned contract: exact plan
+            return None
         self.last_prune_stats = st
         return res
 

@@ -119,13 +119,46 @@ def _rank_topk_scale(scores: DataFrame, doc_ids: DataFrame, k: int) -> DataFrame
 
 
 def _enumerate_ranks(spark, rows: list) -> DataFrame:
-    """<=k collected rows, already in (desc score, asc ext id) order ->
-    the ranked result frame."""
-    data = [
-        (i + 1, r["docid"], r["ext_docid"], float(r["score"]))
-        for i, r in enumerate(rows)
-    ]
-    return spark.createDataFrame(data, _TOPK_SCHEMA)
+    """<=k collected (docid, ext_docid, score) rows, already in (desc score,
+    asc ext id) order -> the ranked result frame. Built from an Arrow table,
+    so it is a local relation: collecting it runs no Spark job (a Python
+    list would go through parallelize and cost one)."""
+    import pyarrow as pa
+
+    tbl = pa.table(
+        {
+            "rank": pa.array(range(1, len(rows) + 1), pa.int32()),
+            "docid": pa.array([r[0] for r in rows], pa.int64()),
+            "ext_docid": pa.array(
+                [None if r[1] is None else str(r[1]) for r in rows], pa.string()
+            ),
+            "score": pa.array([float(r[2]) for r in rows], pa.float64()),
+        }
+    )
+    return spark.createDataFrame(tbl, _TOPK_SCHEMA)
+
+
+def rank_local(spark, docids, scores, k: int, ext_ids) -> DataFrame:
+    """Driver-side twin of ``rank_topk`` for (docid, score) numpy arrays
+    already on the driver: cut at the k-th score, resolve ext ids for the
+    candidates at or above it with ``ext_ids(docids) -> {docid: ext id}``,
+    then order by score desc, ext id asc and rank. No Spark job runs."""
+    import numpy as np
+
+    order = np.argsort(-scores, kind="stable")
+    docids, scores = docids[order], scores[order]
+    n = len(scores)
+    if k < n:
+        # ties at the k-th score are exactly the rows whose ext-id order
+        # decides membership
+        n = int(np.searchsorted(-scores, -scores[k - 1], side="right"))
+    cand = [int(d) for d in docids[:n]]
+    ext = ext_ids(cand)
+    rows = sorted(
+        ((d, ext[d], float(s)) for d, s in zip(cand, scores[:n])),
+        key=lambda r: (-r[2], r[1]),
+    )
+    return _enumerate_ranks(spark, rows[:k])
 
 
 def trec_lines(qid: str, topk_rows: list, run_id: str = "run-1") -> list[str]:

@@ -63,6 +63,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 from dataclasses import asdict, dataclass, field as dc_field
 
@@ -2211,10 +2212,135 @@ def build_persistent_index(
 # --------------------------------------------------------------------------
 
 
+class DriverReads:
+    """Driver-side pyarrow reads of one index generation, cached: per-term
+    (df, ctf), per-term block metadata, the tombstone set and the pyarrow
+    datasets over packed, term_stats, doc_ids and tombstones.
+
+    The index directory is immutable between lifecycle commits (append,
+    delete and compact each open a NEW PackedIndex), so nothing here is
+    ever invalidated. Serving threads share one PackedIndex, so every cache
+    access goes through one lock; file reads run outside it, and when two
+    threads miss the same key both read it and store equal values."""
+
+    def __init__(self, index_dir: str, n_deleted: int):
+        self.dir = index_dir
+        self.n_deleted = n_deleted
+        self._lock = threading.Lock()
+        self._datasets: dict = {}
+        # (term, field) -> (df, ctf), or None for a term known to be absent
+        self._term_stats: dict[tuple[str, str], tuple[int, int] | None] = {}
+        # (term, field) -> {META_COLS name: numpy array} for the term's blocks
+        self._meta: dict[tuple[str, str], dict[str, np.ndarray]] = {}
+        self._tombstones: np.ndarray | None = None
+
+    def dataset(self, name: str):
+        """pyarrow dataset over one table of the index. ``packed`` lists
+        exactly the side-manifest files (uncommitted orphans stay invisible,
+        the contract read_packed gives Spark), or discovers the legacy
+        bucket=<b>/ hive layout; None when the manifest lists no file. The
+        dataset object keeps parsed footers, so it is built once."""
+        import pyarrow.dataset as pads
+
+        with self._lock:
+            if name not in self._datasets:
+                path = os.path.join(self.dir, name)
+                man = _side_manifest(path) if name == "packed" else None
+                if man is not None:
+                    files = [os.path.join(path, n) for n in man["files"]]
+                    dset = pads.dataset(files, format="parquet") if files else None
+                elif name == "packed":
+                    dset = pads.dataset(path, format="parquet", partitioning="hive")
+                else:
+                    dset = pads.dataset(path, format="parquet")
+                self._datasets[name] = dset
+            return self._datasets[name]
+
+    def term_stats(self, terms: list[str], fld: str) -> dict[str, tuple[int, int]]:
+        """term -> (df, ctf) for the terms present in ``fld``; one row-group
+        pruned term_stats read for the terms not cached yet."""
+        import pyarrow.compute as pc
+
+        with self._lock:
+            missing = [t for t in dict.fromkeys(terms) if (t, fld) not in self._term_stats]
+        if missing:
+            tbl = self.dataset("term_stats").to_table(
+                columns=["term", "df", "ctf"],
+                filter=(pc.field("field") == fld) & pc.field("term").isin(missing),
+            )
+            found: dict = dict.fromkeys(missing)
+            for term, df_, ctf in zip(
+                tbl["term"].to_pylist(), tbl["df"].to_pylist(), tbl["ctf"].to_pylist()
+            ):
+                found[term] = (int(df_), int(ctf))
+            with self._lock:
+                for term, v in found.items():
+                    self._term_stats.setdefault((term, fld), v)
+        with self._lock:
+            got = {t: self._term_stats[(t, fld)] for t in terms}
+        return {t: v for t, v in got.items() if v is not None}
+
+    def block_meta(self, terms: list[str], fld: str) -> list[dict[str, np.ndarray]]:
+        """Per term, its blocks' metadata as {column: numpy array} — the
+        in-memory posting-list headers a serving engine keeps warm (a term's
+        metadata is df/block_size rows; the cache is bounded by the queried
+        vocabulary). Reads only the small plain columns of ``packed``."""
+        import pyarrow.compute as pc
+
+        with self._lock:
+            missing = [t for t in dict.fromkeys(terms) if (t, fld) not in self._meta]
+        if missing:
+            dset = self.dataset("packed")
+            fetched = {
+                (t, fld): {c: np.zeros(0, np.int64) for c in META_COLS[2:]}
+                for t in missing
+            }
+            if dset is not None:
+                tbl = dset.to_table(
+                    columns=META_COLS,
+                    filter=(pc.field("field") == fld) & pc.field("term").isin(missing),
+                )
+                term_col = np.asarray(tbl["term"].to_pylist(), dtype=object)
+                cols = {c: tbl[c].to_numpy().astype(np.int64) for c in META_COLS[2:]}
+                for t in missing:
+                    m = term_col == t
+                    fetched[(t, fld)] = {c: v[m] for c, v in cols.items()}
+            with self._lock:
+                for key, v in fetched.items():
+                    self._meta.setdefault(key, v)
+        with self._lock:
+            return [self._meta[(t, fld)] for t in terms]
+
+    def ext_ids(self, docids: list[int]) -> dict:
+        """docid -> ext_docid as stored, for the given docids: a docid IN
+        read of the docid-sorted doc_ids parquet (row-group min/max stats
+        skip every group without a candidate). Not cached."""
+        import pyarrow.compute as pc
+
+        tbl = self.dataset("doc_ids").to_table(
+            columns=["docid", "ext_docid"], filter=pc.field("docid").isin(docids)
+        )
+        return dict(zip(tbl["docid"].to_pylist(), tbl["ext_docid"].to_pylist()))
+
+    def tombstones(self) -> np.ndarray | None:
+        """Sorted tombstoned docids, or None when the index has none."""
+        if not self.n_deleted:
+            return None
+        with self._lock:
+            cached = self._tombstones
+        if cached is None:
+            tbl = self.dataset("tombstones").to_table(columns=["docid"])
+            cached = np.sort(tbl["docid"].to_numpy().astype(np.int64))
+            with self._lock:
+                self._tombstones = cached
+        return cached
+
+
 class PackedIndex(IndexTables):
     """IndexTables over the persisted layout: term scans decode packed
     varint blocks (bucket-pruned parquet read + Arrow-batched numpy decode);
-    block-max metadata reads touch only the small plain columns."""
+    block-max metadata reads touch only the small plain columns. ``reads``
+    is the driver's own pyarrow view of the same files (DriverReads)."""
 
     def __init__(self, spark: SparkSession, out_dir: str, cfg: BuildConfig | None = None):
         self.spark = spark
@@ -2273,6 +2399,7 @@ class PackedIndex(IndexTables):
             tokenizer_name=man.data["lineage"].get("tokenizer"),
         )
         self.packed = packed
+        self.reads = DriverReads(out_dir, self.n_deleted)
         if self.tombstones is not None:
             self.doc_ids = self._live(self.doc_ids)
             self.doc_stats = self._live(self.doc_stats)

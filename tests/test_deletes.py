@@ -133,13 +133,20 @@ def test_search_excludes_deleted_uses_live_n(spark, pristine, copy_dir, monkeypa
     assert overlap
     assert all(dict((r[1], r[3]) for r in exact)[d] != pre[d] for d in overlap)
 
-    # block-max pruned plan stays bit-identical on a deleted index
+    # block-max pruned plan stays bit-identical on a deleted index, whether
+    # the driver drops the tombstoned postings (small survivor set) or the
+    # Spark scan's anti-join does (size gate forced to 0)
+    from search_engine_spark.engine import pruning
+
     monkeypatch.setenv("SPARK_GRAFT_NO_PRUNE", "0")
     monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "0")
-    eng = Engine(idx, ModelConfig(name=BM25))
-    pruned = [tuple(r) for r in eng.search(query, 30).collect()]
-    assert eng.last_prune_stats is not None, "pruned path did not engage"
-    assert pruned == exact
+    for gate, mode in ((pruning._POSTS_PER_TASK, "driver"), (0, "spark")):
+        monkeypatch.setattr(pruning, "_POSTS_PER_TASK", gate)
+        eng = Engine(idx, ModelConfig(name=BM25))
+        pruned = [tuple(r) for r in eng.search(query, 30).collect()]
+        assert eng.last_prune_stats is not None, "pruned path did not engage"
+        assert eng.last_prune_stats.score_mode == mode
+        assert pruned == exact
 
 
 def test_delete_by_ext_docid_and_generations(spark, pristine, copy_dir):

@@ -45,24 +45,34 @@ def test_pruned_identical_to_exact(spark, pidx, terms, code_index):
     ]
     assert pruned == exact
     assert stats.n_blocks_total > 0
-    assert stats.seed_mode == "driver"  # pyarrow planner engaged, no seed job
+    assert stats.score_mode == "driver"  # small survivor set: no Spark job
 
 
 @pytest.mark.parametrize("terms", QUERIES[:2], ids=["+".join(q) for q in QUERIES[:2]])
-def test_spark_seed_fallback_identical(spark, pidx, terms, code_index, monkeypatch):
-    """SPARK_GRAFT_PRUNE_SPARK_SEED=1 forces the r03 two-phase Spark seed —
-    the fallback for layouts/tombstone-sets the driver can't read; its output
-    must stay bitwise the exact plan's too."""
-    monkeypatch.setenv("SPARK_GRAFT_PRUNE_SPARK_SEED", "1")
+def test_driver_read_failure_runs_exact_plan(spark, pidx, terms, code_index, monkeypatch):
+    """A failed driver-side read makes the planner step aside (None, with
+    the reason recorded) and Engine.search answers with the exact plan,
+    bitwise."""
+    broken = PackedIndex(spark, pidx.dir)
+    real = broken.reads.dataset
+
+    def fail_packed(name):
+        if name == "packed":
+            raise OSError("forced read failure of packed")
+        return real(name)
+
+    monkeypatch.setattr(broken.reads, "dataset", fail_packed)
+    monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "0")
     k = 20
     stats = PruneStats()
-    pruned = [
-        tuple(r) for r in bm25_topk_pruned(pidx, terms, k=k, stats=stats).collect()
-    ]
-    eng = Engine(code_index, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)
-    exact = [tuple(r) for r in eng.search(" ".join(terms), k).collect()]
-    assert pruned == exact
-    assert stats.seed_mode == "spark"
+    assert bm25_topk_pruned(broken, terms, k=k, stats=stats) is None
+    assert "forced read failure" in stats.fallback
+    eng = Engine(broken, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)
+    got = [tuple(r) for r in eng.search(" ".join(terms), k).collect()]
+    assert eng.last_prune_stats is None
+    exact_eng = Engine(code_index, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)
+    exact = [tuple(r) for r in exact_eng.search(" ".join(terms), k).collect()]
+    assert got == exact and got
 
 
 def test_pruning_skips_blocks(spark, pidx):
@@ -164,7 +174,7 @@ def test_indri_pruned_identical_to_exact(
         for r in eng.search(_indri_query_text(kind, weights, terms), k).collect()
     ]
     assert pruned == exact and pruned
-    assert stats.seed_mode == "driver"
+    assert stats.score_mode == "driver"
     assert stats.n_blocks_total > 0
 
 
@@ -187,7 +197,7 @@ def test_indri_engine_dispatch(spark, pidx, code_index, monkeypatch):
     eng = Engine(pidx, ModelConfig(name=INDRI), tokenizer=CODE_TOKENIZER)
     got = [tuple(r) for r in eng.search("#WAND(0.7 lock 0.2 queue 0.1 slot)", 15).collect()]
     assert eng.last_prune_stats is not None
-    assert eng.last_prune_stats.seed_mode == "driver"
+    assert eng.last_prune_stats.score_mode == "driver"
     monkeypatch.setenv("SPARK_GRAFT_NO_PRUNE", "1")
     exact_eng = Engine(code_index, ModelConfig(name=INDRI), tokenizer=CODE_TOKENIZER)
     want = [tuple(r) for r in exact_eng.search("#WAND(0.7 lock 0.2 queue 0.1 slot)", 15).collect()]
@@ -215,3 +225,171 @@ def test_indri_bursty_pruning_skips_and_is_identical(spark, bursty_pidx, monkeyp
         if st.n_blocks_scanned < st.n_blocks_total:
             skipped_any = True
     assert skipped_any, "no weighted theme query skipped a single block"
+
+
+# --------------------------------------------------------------------------
+# driver-local scoring: both sides of the size gate, zero Spark jobs,
+# adversarial score spreads
+# --------------------------------------------------------------------------
+
+from search_engine_spark.engine import pruning as pruning_mod  # noqa: E402
+
+
+@pytest.mark.parametrize("terms", QUERIES, ids=["+".join(q) for q in QUERIES])
+def test_pruned_spark_side_identical_to_exact(spark, pidx, terms, code_index, monkeypatch):
+    """With the driver-scoring size gate at 0 every survivor set takes the
+    one-job Spark scan, which must be bitwise the exact plan's as well."""
+    monkeypatch.setattr(pruning_mod, "_POSTS_PER_TASK", 0)
+    stats = PruneStats()
+    pruned = [tuple(r) for r in bm25_topk_pruned(pidx, terms, k=20, stats=stats).collect()]
+    eng = Engine(code_index, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)
+    exact = [tuple(r) for r in eng.search(" ".join(terms), 20).collect()]
+    assert pruned == exact
+    assert stats.score_mode == "spark"
+
+
+@pytest.mark.parametrize(
+    "kind,weights,terms", INDRI_QUERIES,
+    ids=[f"{k}-{'+'.join(t)}" for k, _, t in INDRI_QUERIES],
+)
+def test_indri_pruned_spark_side_identical_to_exact(
+    spark, pidx, code_index, monkeypatch, kind, weights, terms
+):
+    monkeypatch.setattr(pruning_mod, "_POSTS_PER_TASK", 0)
+    stats = PruneStats()
+    res = indri_topk_pruned(pidx, kind, terms, weights, k=20, stats=stats)
+    pruned = [tuple(r) for r in res.collect()]
+    monkeypatch.setenv("SPARK_GRAFT_NO_PRUNE", "1")
+    eng = Engine(code_index, ModelConfig(name=INDRI), tokenizer=CODE_TOKENIZER)
+    exact = [
+        tuple(r) for r in eng.search(_indri_query_text(kind, weights, terms), 20).collect()
+    ]
+    assert pruned == exact and pruned
+    assert stats.score_mode == "spark"
+
+
+FLAT_SHAPES = [
+    (BM25, "lock free"),
+    (BM25, "ring buffer slot"),
+    (INDRI, "#AND(lock free queue)"),
+    (INDRI, "#WAND(0.7 lock 0.3 queue)"),
+    (INDRI, "#WSUM(0.6 ring 0.4 buffer)"),
+]
+
+
+def test_flat_queries_run_no_spark_job(spark, pidx, monkeypatch):
+    """Every flat shape past the pruning gate answers, collect included,
+    without a single Spark job under its job group."""
+    monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "1")
+    sc = spark.sparkContext
+    fresh = PackedIndex(spark, pidx.dir)  # cold driver caches
+    engines = {
+        m: Engine(fresh, ModelConfig(name=m), tokenizer=CODE_TOKENIZER)
+        for m in (BM25, INDRI)
+    }
+    try:
+        for i, (model, text) in enumerate(FLAT_SHAPES):
+            group = f"flat-zero-job-{i}"
+            sc.setJobGroup(group, text)
+            eng = engines[model]
+            eng.last_prune_stats = None
+            rows = eng.search(text, 20).collect()
+            assert rows, text
+            assert eng.last_prune_stats.score_mode == "driver", text
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], text
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def _adversarial_bm25_terms(code_index) -> list[str]:
+    """Eight body terms: three df=1 terms (largest idf), three past df > N/2
+    (idf clamped to 0) and two in between — per-term scores spread over
+    many binades, the case where a double sum of float32 terms is order
+    sensitive."""
+    from pyspark.sql import functions as F
+
+    n = code_index.corpus.n_docs
+    rows = (
+        code_index.term_stats.where(F.col("field") == "body")
+        .select("term", "df").orderBy("term").collect()
+    )
+    rare = [r["term"] for r in rows if r["df"] == 1][:3]
+    clamped = [r["term"] for r in rows if r["df"] > n / 2][:3]
+    mid = [r["term"] for r in rows if n / 8 <= r["df"] <= n / 4][:2]
+    assert len(rare) == 3 and len(clamped) == 3 and len(mid) == 2, (
+        "corpus fixture lost its df spread"
+    )
+    return rare + clamped + mid
+
+
+def _assert_matches_oracle(got, want):
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        assert g[:3] == w[:3], f"rank/doc mismatch: engine={g} oracle={w}"
+        assert g[3] == pytest.approx(w[3], rel=1e-9, abs=1e-12)
+
+
+@pytest.mark.parametrize("gate", ["driver", "spark"])
+def test_adversarial_spreads_bitwise(
+    spark, pidx, code_index, py_oracle, monkeypatch, gate
+):
+    """A BM25 bag mixing df=1 and idf-clamped terms, and an Indri #WAND with
+    weights from 1e-3 to 1: bitwise the exact plan's on both sides of the
+    driver-scoring gate, and within tolerance of the pure-Python oracle."""
+    if gate == "spark":
+        monkeypatch.setattr(pruning_mod, "_POSTS_PER_TASK", 0)
+    terms = _adversarial_bm25_terms(code_index)
+    wand = "#WAND(" + " ".join(
+        f"{w} {t}" for w, t in zip([1e-3, 0.01, 0.1, 0.5, 1.0], terms[1:6])
+    ) + ")"
+    k = 30
+    for model, text in ((BM25, " ".join(terms)), (INDRI, wand)):
+        monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "0")
+        monkeypatch.setenv("SPARK_GRAFT_NO_PRUNE", "0")
+        eng = Engine(pidx, ModelConfig(name=model), tokenizer=CODE_TOKENIZER)
+        pruned = [tuple(r) for r in eng.search(text, k).collect()]
+        assert eng.last_prune_stats is not None, text
+        assert eng.last_prune_stats.score_mode == gate, text
+        monkeypatch.setenv("SPARK_GRAFT_NO_PRUNE", "1")
+        exact_eng = Engine(code_index, ModelConfig(name=model), tokenizer=CODE_TOKENIZER)
+        exact = [tuple(r) for r in exact_eng.search(text, k).collect()]
+        assert pruned == exact and pruned, text
+        _assert_matches_oracle(pruned, py_oracle.search(text, ModelConfig(name=model), k))
+
+
+def test_concurrent_flat_queries_match_serial(spark, pidx, monkeypatch):
+    """Eight serving threads share one cold PackedIndex (and so its driver
+    read cache); every answer equals the serial answer."""
+    import threading
+
+    monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "1")
+    mixed = FLAT_SHAPES + [(BM25, " ".join(q)) for q in QUERIES]
+
+    def answer(index, model, text):
+        eng = Engine(index, ModelConfig(name=model), tokenizer=CODE_TOKENIZER)
+        rows = [tuple(r) for r in eng.search(text, 15).collect()]
+        assert eng.last_prune_stats is not None
+        return rows
+
+    serial = {q: answer(PackedIndex(spark, pidx.dir), *q) for q in mixed}
+    shared = PackedIndex(spark, pidx.dir)
+    got: dict = {}
+    errors: list = []
+
+    def client(i):
+        try:
+            for j in range(len(mixed)):
+                q = mixed[(i + j) % len(mixed)]
+                got[(i, q)] = answer(shared, *q)
+        except Exception as e:  # surfaced below, with its thread
+            errors.append((i, e))
+
+    threads = [threading.Thread(target=client, args=(i,)) for i in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors, errors
+    assert len(got) == 8 * len(mixed)
+    for (i, q), rows in got.items():
+        assert rows == serial[q], f"thread {i}: {q}"
