@@ -66,6 +66,25 @@ def read_qrels(path: str, doc_ids) -> dict[str, dict[int, int]]:
     return out
 
 
+def read_queries(path: str) -> list[tuple[str, str]]:
+    """``qid:querytext`` lines -> [(qid, text)], split on the first ':'; a
+    non-blank line without one is an error that names it."""
+    out: list[tuple[str, str]] = []
+    with open(path) as f:
+        for n, line in enumerate(f, start=1):
+            line = line.strip()
+            if not line:
+                continue
+            if ":" not in line:
+                raise ValueError(
+                    f"{path}:{n}: query line {line!r} has no ':' "
+                    "(expected 'qid:querytext')"
+                )
+            qid, text = line.split(":", 1)
+            out.append((qid, text))
+    return out
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--index", required=True)
@@ -110,8 +129,7 @@ def main() -> None:
     labels = read_qrels(args.qrels, pidx.doc_ids) if args.qrels else {}
     run = read_trec_run_file(args.initial_ranking, pidx.doc_ids)
 
-    with open(args.queries) as f:
-        queries = [line.strip().split(":", 1) for line in f if line.strip()]
+    queries = read_queries(args.queries)
 
     lines: list[str] = []
     for qid, text in queries:

@@ -442,15 +442,10 @@ def _sdm_walk_iter(batches):
     so each homogeneous subgroup runs ONE numpy wavefront step-loop for all
     its docs at once (engine/poswalk.py) — the same vectorization as the
     single-query path, amortized across every query in the batch."""
-    import os
-
-    import numpy as np
     import pandas as pd
 
-    from search_engine_spark.engine.ops import _near_walk, _window_walk
     from search_engine_spark.engine.poswalk import near_batch, window_batch
 
-    scalar = os.environ.get("SPARK_GRAFT_SCALAR_WALK") == "1"
     for pdf in batches:
         qids: list = []
         cis: list = []
@@ -460,26 +455,14 @@ def _sdm_walk_iter(batches):
             for (op, dist, k), sub in pdf.groupby(
                 ["_op", "_dist", "_k"], sort=False
             ):
-                walk = _near_walk if op == "near" else _window_walk
+                batch_walk = near_batch if op == "near" else window_batch
                 plists = sub["_pl"].tolist()
-                if scalar:
-                    for qid, ci, docid, pl in zip(
-                        sub["qid"], sub["ci"], sub["docid"], plists
-                    ):
-                        res = walk([list(np.asarray(a)) for a in pl], dist)
-                        if res:
-                            qids.append(qid)
-                            cis.append(ci)
-                            docids.append(docid)
-                            tfs.append(len(res))
-                else:
-                    batch_walk = near_batch if op == "near" else window_batch
-                    cols = [[row[i] for row in plists] for i in range(k)]
-                    ranks, pos_arrays = batch_walk(cols, int(dist))
-                    qids.extend(sub["qid"].to_numpy()[ranks])
-                    cis.extend(sub["ci"].to_numpy()[ranks])
-                    docids.extend(sub["docid"].to_numpy()[ranks])
-                    tfs.extend(len(pp) for pp in pos_arrays)
+                cols = [[row[i] for row in plists] for i in range(k)]
+                ranks, pos_arrays = batch_walk(cols, int(dist))
+                qids.extend(sub["qid"].to_numpy()[ranks])
+                cis.extend(sub["ci"].to_numpy()[ranks])
+                docids.extend(sub["docid"].to_numpy()[ranks])
+                tfs.extend(len(pp) for pp in pos_arrays)
         yield pd.DataFrame(
             {
                 "qid": pd.Series(qids, dtype="object"),

@@ -332,9 +332,15 @@ def read_pagerank_file(spark: SparkSession, path: str, doc_ids: DataFrame) -> Da
     the dimension are large, so neither side broadcasts — AQE picks the
     join strategy. External ids absent from the index simply drop out, and
     docs absent from the file get no row (letor_features' left join then
-    yields the NaN→0 quirk, exactly the reference's null HashMap lookup)."""
-    pr = spark.read.csv(
-        path, sep="\t", schema="ext_docid string, pagerank double"
+    yields the NaN→0 quirk, exactly the reference's null HashMap lookup).
+    An ext id listed twice keeps its LAST line's score (``HashMap.put``):
+    monotonically_increasing_id grows in file order (partition index in
+    the high bits, row within the split below)."""
+    pr = (
+        spark.read.csv(path, sep="\t", schema="ext_docid string, pagerank double")
+        .withColumn("_line", F.monotonically_increasing_id())
+        .groupBy("ext_docid")
+        .agg(F.max_by("pagerank", "_line").alias("pagerank"))
     )
     return pr.join(doc_ids.select("docid", "ext_docid"), "ext_docid").select(
         "docid", "pagerank"

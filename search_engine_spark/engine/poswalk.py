@@ -5,10 +5,14 @@ are sequential cursor machines PER DOC, but a mapInPandas batch holds many
 docs — so we vectorize ACROSS docs with a numpy "wavefront": every iteration
 advances one step of the walk for every still-active doc at once. Per-doc
 semantics (cursor state across arg0 positions, consume-on-match, abort on
-arg exhaustion, first-min advancement) are bit-identical to the scalar walks
-in ops.py — asserted by a hypothesis equivalence test
-(tests/test_poswalk.py) and by the driver gate's recursive-CTE DuckDB twins
+arg exhaustion, first-min advancement) are bit-identical to the reference's
+scalar cursor walks — asserted by a hypothesis equivalence test against
+scalar twins (tests/test_poswalk.py) and by the driver gate's recursive-CTE DuckDB twins
 (`near2_postings`, `window8_postings`).
+
+``near_flat``/``window_flat`` take each arg as flat positions plus per-doc
+lengths (the driver evaluator decodes blocks straight into that form);
+``near_batch``/``window_batch`` wrap them for per-doc array columns.
 
 Key trick: each arg's per-doc position arrays are flattened into ONE sorted
 int64 array keyed as ``(doc_rank << 32) | position`` — globally sorted, so a
@@ -31,44 +35,64 @@ import numpy as np
 _SHIFT = np.int64(32)  # positions are int32 -> key = rank << 32 | pos
 
 
-def _flatten(col, ranks: np.ndarray):
-    """col: sequence of per-doc sorted position arrays. Returns
-    (flat_keys, offsets, lens) with flat globally sorted by (rank, pos)."""
-    n = len(col)
-    lens = np.fromiter((len(x) for x in col), dtype=np.int64, count=n)
+def _flatten(col) -> tuple[np.ndarray, np.ndarray]:
+    """col: sequence of per-doc sorted position arrays -> (flat positions,
+    per-doc lengths)."""
+    lens = np.fromiter((len(x) for x in col), dtype=np.int64, count=len(col))
+    if int(lens.sum()):
+        flat = np.concatenate([np.asarray(x, dtype=np.int64) for x in col])
+    else:
+        flat = np.zeros(0, dtype=np.int64)
+    return flat, lens
+
+
+def _keys(pos: np.ndarray, lens: np.ndarray):
+    """Flat per-doc positions (docs in rank order) -> (keys, offsets, lens)
+    with keys globally sorted by (rank, pos)."""
+    lens = np.asarray(lens, dtype=np.int64)
+    n = len(lens)
     offs = np.zeros(n, dtype=np.int64)
     if n > 1:
         np.cumsum(lens[:-1], out=offs[1:])
-    total = int(lens.sum())
-    if total:
-        flat = np.concatenate([np.asarray(x, dtype=np.int64) for x in col])
-        flat = flat + (np.repeat(ranks, lens) << _SHIFT)
-    else:
-        flat = np.zeros(0, dtype=np.int64)
+    ranks = np.arange(n, dtype=np.int64)
+    flat = np.asarray(pos, dtype=np.int64) + (np.repeat(ranks, lens) << _SHIFT)
     return flat, offs, lens
 
 
 def _assemble(out_rank: list, out_pos: list):
     """Chronologically-emitted (rank, pos) arrays -> (doc ranks with >=1
-    match, list of per-doc position arrays in walk order)."""
+    match, matches per such doc, their int32 positions grouped by doc in
+    walk order)."""
     if not out_rank:
-        return np.zeros(0, dtype=np.int64), []
+        z = np.zeros(0, dtype=np.int64)
+        return z, z, np.zeros(0, dtype=np.int32)
     rk = np.concatenate(out_rank)
     ps = np.concatenate(out_pos)
     order = np.argsort(rk, kind="stable")  # stable keeps walk order per doc
     rk, ps = rk[order], ps[order].astype(np.int32)  # positions are int32
-    uniq, starts = np.unique(rk, return_index=True)
-    return uniq, np.split(ps, starts[1:])
+    uniq, counts = np.unique(rk, return_counts=True)
+    return uniq, counts, ps
+
+
+def _split(ranks, counts, pos):
+    """Flat walk output -> (ranks, list of per-doc position arrays)."""
+    return ranks, np.split(pos, np.cumsum(counts)[:-1]) if len(ranks) else []
 
 
 def near_batch(cols: list, distance: int):
-    """Vectorized _near_walk over a batch. ``cols``: k sequences (one per
-    arg) of per-doc sorted position arrays, all length B. Returns
-    (match_ranks, per-doc position arrays)."""
-    k = len(cols)
-    B = len(cols[0])
-    ranks = np.arange(B, dtype=np.int64)
-    flats, offs, lens = zip(*(_flatten(c, ranks) for c in cols))
+    """The #NEAR walk over a batch. ``cols``: k sequences (one per arg) of
+    per-doc sorted position arrays, all length B. Returns (match_ranks,
+    per-doc position arrays)."""
+    return _split(*near_flat([_flatten(c) for c in cols], distance))
+
+
+def near_flat(args: list, distance: int):
+    """The #NEAR walk over B docs given in flat form: ``args`` holds per arg
+    (flat positions, per-doc lengths), docs in the same rank order for every
+    arg. Returns (match ranks, matches per such doc, flat positions)."""
+    k = len(args)
+    B = len(args[0][1])
+    flats, offs, lens = zip(*(_keys(p, n) for p, n in args))
 
     step = np.zeros(B, dtype=np.int64)  # arg0 cursor (relative)
     curs = [offs[i].copy() for i in range(1, k)]  # absolute cursors
@@ -113,11 +137,15 @@ def near_batch(cols: list, distance: int):
 
 
 def window_batch(cols: list, distance: int):
-    """Vectorized _window_walk over a batch (same contract as near_batch)."""
-    k = len(cols)
-    B = len(cols[0])
-    ranks = np.arange(B, dtype=np.int64)
-    flats, offs, lens = zip(*(_flatten(c, ranks) for c in cols))
+    """The #WINDOW walk over a batch (same contract as near_batch)."""
+    return _split(*window_flat([_flatten(c) for c in cols], distance))
+
+
+def window_flat(args: list, distance: int):
+    """The #WINDOW walk in flat form (same contract as near_flat)."""
+    k = len(args)
+    B = len(args[0][1])
+    flats, offs, lens = zip(*(_keys(p, n) for p, n in args))
     curs = [offs[i].copy() for i in range(k)]
     ends = [offs[i] + lens[i] for i in range(k)]
     done = np.zeros(B, dtype=bool)

@@ -185,12 +185,17 @@ def range_bounds(
 
 
 class _Query:
-    """One pruned query's driver-side state: its terms' blocks (one entry
-    per block in each array) and the blocks decoded so far (each block is
-    read and decoded at most once)."""
+    """One driver-side query's state: its terms' blocks (one entry per block
+    in each array) and the blocks decoded so far (each block is read and
+    decoded at most once). With ``positions`` every decoded block also
+    carries its flat positions."""
 
-    def __init__(self, pidx: PackedIndex, terms: list[str], fld: str, metas: list[dict]):
+    def __init__(
+        self, pidx: PackedIndex, terms: list[str], fld: str, metas: list[dict],
+        positions: bool = False,
+    ):
         self.pidx, self.terms, self.fld = pidx, terms, fld
+        self.positions = positions
         self.term = np.concatenate(
             [np.full(len(m["n"]), i, dtype=np.int64) for i, m in enumerate(metas)]
         )
@@ -202,11 +207,13 @@ class _Query:
         self._decoded: dict[int, tuple] = {}
 
     def read(self, blocks: np.ndarray) -> list[tuple]:
-        """(term index, docids, tfs, doclens) of each given block, decoded
-        on the driver with the executors' codec, tombstoned docids dropped."""
+        """(term index, docids, tfs, doclens, flat positions or None) of each
+        given block, decoded on the driver with the executors' codec,
+        tombstoned postings dropped (posting i's positions are the i-th run
+        of tfs[i] values)."""
         import pyarrow.compute as pc
 
-        from search_engine_spark.index.codec import decode_block
+        from search_engine_spark.index.codec import decode_block, positions_decode_flat
 
         todo = {int(i) for i in blocks if int(i) not in self._decoded}
         if todo:
@@ -214,27 +221,31 @@ class _Query:
                 (self.terms[self.term[i]], int(self.salt[i]), int(self.block_id[i])): i
                 for i in todo
             }
+            cols = ["term", "salt", "block_id", "n", "docids", "tfs", "doclens"]
             tbl = self.pidx.reads.dataset("packed").to_table(
-                columns=["term", "salt", "block_id", "n", "docids", "tfs", "doclens"],
+                columns=cols + ["positions"] * self.positions,
                 filter=(
                     (pc.field("field") == self.fld)
                     & pc.field("term").isin(sorted({t for t, _, _ in want}))
                     & pc.field("block_id").isin(sorted({b for _, _, b in want}))
                 ),
             )
-            cols = tbl.to_pydict()
-            for term, salt, bid, n, db, tb, lb in zip(
-                cols["term"], cols["salt"], cols["block_id"], cols["n"],
-                cols["docids"], cols["tfs"], cols["doclens"],
+            got = tbl.to_pydict()
+            pos_bufs = got["positions"] if self.positions else [None] * tbl.num_rows
+            for term, salt, bid, n, db, tb, lb, pb in zip(
+                *(got[c] for c in cols), pos_bufs
             ):
                 i = want.get((term, salt, bid))
                 if i is None:
                     continue  # same block_id under another (term, salt)
                 d, t, L = decode_block({"n": n, "docids": db, "tfs": tb, "doclens": lb})
+                pos = None if pb is None else positions_decode_flat(pb, t)[0]
                 if self.tombs is not None:
                     live = ~np.isin(d, self.tombs, assume_unique=True)
+                    if pos is not None:
+                        pos = pos[np.repeat(live, t)]
                     d, t, L = d[live], t[live], L[live]
-                self._decoded[i] = (int(self.term[i]), d, t, L)
+                self._decoded[i] = (int(self.term[i]), d, t, L, pos)
             if len(self._decoded.keys() & todo) != len(todo):
                 raise OSError("packed blocks listed in the metadata are missing")
         return [self._decoded[int(i)] for i in blocks]
@@ -242,7 +253,7 @@ class _Query:
     def pivot(self, blocks: np.ndarray, keep=None) -> "_Pivot":
         """Docs of the given blocks as (docid, tf per term, doclen); with
         ``keep(docids) -> mask``, only the docids it keeps."""
-        parts = self.read(blocks)
+        parts = [p[:4] for p in self.read(blocks)]
         if keep is not None:
             masks = [keep(d) for _, d, _, _ in parts]
             parts = [(t, d[m], f[m], L[m]) for (t, d, f, L), m in zip(parts, masks)]
@@ -375,25 +386,7 @@ def _pruned_topk(
     to_ext = _ext_id_type(pidx)
     if st.n_postings_scored <= _POSTS_PER_TASK and to_ext is not None:
         st.score_mode = "driver"
-        piv = q.pivot(blocks)
-        rows = (
-            spark.createDataFrame(piv.table())
-            .select("docid", pivot_score.alias("score"))
-            .collect()
-        )
-
-        def ext_ids(docids: list[int]) -> dict:
-            got = pidx.reads.ext_ids(docids)
-            if len(got) != len(docids):
-                raise OSError("doc_ids has no row for a scored docid")
-            return {d: to_ext(e) for d, e in got.items()}
-
-        return rank_local(
-            spark,
-            np.fromiter((r[0] for r in rows), np.int64, len(rows)),
-            np.fromiter((r[1] for r in rows), np.float64, len(rows)),
-            k, ext_ids,
-        )
+        return score_local(pidx, q.pivot(blocks), pivot_score, k, to_ext)
 
     st.score_mode = "spark"
     keys = [
@@ -414,6 +407,31 @@ def _pruned_topk(
         )
         posts = pidx.postings_for(pairs, block_filter=bf, coalesce_to=n_tasks)
     return rank_topk(spark_scores(posts), pidx.doc_ids, k, n_docs=pidx.corpus.n_docs)
+
+
+def score_local(pidx: PackedIndex, piv: _Pivot, score: Column, k: int, to_ext) -> DataFrame:
+    """The driver-side scoring tail: project ``score`` (a score.py
+    expression over the pivot's columns) over the pivot as a local relation
+    — folded in the driver JVM, so the floats are the Spark plan's — then
+    ``topk.rank_local`` with ext ids typed by ``to_ext``. No Spark job."""
+    rows = (
+        pidx.spark.createDataFrame(piv.table())
+        .select("docid", score.alias("score"))
+        .collect()
+    )
+
+    def ext_ids(docids: list[int]) -> dict:
+        got = pidx.reads.ext_ids(docids)
+        if len(got) != len(docids):
+            raise OSError("doc_ids has no row for a scored docid")
+        return {d: to_ext(e) for d, e in got.items()}
+
+    return rank_local(
+        pidx.spark,
+        np.fromiter((r[0] for r in rows), np.int64, len(rows)),
+        np.fromiter((r[1] for r in rows), np.float64, len(rows)),
+        k, ext_ids,
+    )
 
 
 def _ext_id_type(pidx: PackedIndex):
@@ -452,6 +470,23 @@ def bm25_range_ub(rb: RangeBounds) -> np.ndarray:
     for j in range(rb.best.shape[1]):
         tot += rb.best[:, j]
     return tot
+
+
+def bm25_pivot_score(dfs: list[int], n_docs: int, avgdl: float, p: BM25Params) -> Column:
+    """BM25 #SUM over a (docid, _tf{i}, doclen) pivot, child i scored with
+    df ``dfs[i]``: SumNode's sum in child order (a missing child adds
+    nothing)."""
+    return reduce(
+        lambda acc, i: acc + F.coalesce(
+            score_mod.bm25_score(
+                n_docs=n_docs, df=dfs[i], avgdl=avgdl, p=p,
+                tf=F.col(f"_tf{i}"), doclen=F.col("doclen"),
+            ),
+            F.lit(0.0),
+        ),
+        range(len(dfs)),
+        F.lit(0.0),
+    )
 
 
 def bm25_topk_pruned(
@@ -497,17 +532,8 @@ def bm25_topk_pruned(
                 tot += np.where(piv.present[i], s, 0.0)
             return tot
 
-        # SumNode's sum, in child order (a missing child adds nothing)
-        pivot_score = reduce(
-            lambda acc, i: acc + F.coalesce(
-                score_mod.bm25_score(
-                    n_docs=n_docs, df=trows[live[i]][0], avgdl=avgdl, p=p,
-                    tf=F.col(f"_tf{i}"), doclen=F.col("doclen"),
-                ),
-                F.lit(0.0),
-            ),
-            range(len(live)),
-            F.lit(0.0),
+        pivot_score = bm25_pivot_score(
+            [trows[t][0] for t in live], n_docs, avgdl, p
         )
 
         def spark_scores(posts: DataFrame) -> DataFrame:
@@ -672,7 +698,9 @@ def indri_topk_pruned(
                 )
             return _indri_combine(kind, weights, child)
 
-        pivot_score = _indri_pivot_score(kind, weights, terms, trows, c_len, p)
+        pivot_score = indri_pivot_score(
+            kind, weights, [trows[t][1] for t in terms], c_len, p
+        )
 
         def spark_scores(posts: DataFrame) -> DataFrame:
             aggs = [
@@ -691,18 +719,19 @@ def indri_topk_pruned(
         return None
 
 
-def _indri_pivot_score(kind, weights, terms, trows, c_len, p: IndriParams) -> Column:
-    """Indri score over a (docid, _tf{i}, doclen) pivot: actual f32 score for
-    a present child, raw-double default otherwise; the combines replicate
-    ops.IndriAndNode/WandNode/WsumNode._combine exactly."""
+def indri_pivot_score(kind, weights, ctfs: list[int], c_len: int, p: IndriParams) -> Column:
+    """Indri score over a (docid, _tf{i}, doclen) pivot, child i with ctf
+    ``ctfs[i]``: actual f32 score for a present child, raw-double default
+    otherwise; the combines replicate ops.IndriAndNode/WandNode/WsumNode.
+    _combine exactly."""
     cols = []
-    for i, t in enumerate(terms):
+    for i, ctf in enumerate(ctfs):
         tf_col = F.col(f"_tf{i}")
         actual = score_mod.indri_score(
-            ctf=trows[t][1], c_len=c_len, p=p, tf=tf_col, doclen=F.col("doclen")
+            ctf=ctf, c_len=c_len, p=p, tf=tf_col, doclen=F.col("doclen")
         )
         default = score_mod.indri_default_score(
-            ctf=trows[t][1], c_len=c_len, p=p, doclen=F.col("doclen")
+            ctf=ctf, c_len=c_len, p=p, doclen=F.col("doclen")
         )
         cols.append(F.when(tf_col.isNotNull(), actual).otherwise(default))
     if kind == "wsum":

@@ -71,10 +71,42 @@ class Engine:
         ast = self.parse(query)
         return evaluate(ast, self.ctx, self.default_field)
 
-    # populated by the block-max pruned path after each search that used it
+    # populated by the driver-side paths (pruned flat queries, structured
+    # queries) after each search whose shape they cover
     last_prune_stats = None
 
-    def _pruned_topk(self, query: str, k: int) -> DataFrame | None:
+    def _driver_topk(self, query: str, k: int) -> DataFrame | None:
+        """The driver-side answer of a packed-index BM25/Indri query, or
+        None when the exact plan runs: the block-max pruned path for flat
+        shapes, then the structured evaluator (engine/structured.py) for
+        trees with #NEAR/#WINDOW/#SYN children. ``SPARK_GRAFT_NO_PRUNE=1``
+        forces the exact plan."""
+        import os
+
+        from search_engine_spark.config import BM25, INDRI
+        from search_engine_spark.engine.ops import IlNode, ScoreNode
+        from search_engine_spark.engine.pruning import PruneStats
+        from search_engine_spark.engine.structured import struct_topk
+        from search_engine_spark.index.persist import PackedIndex
+
+        if os.environ.get("SPARK_GRAFT_NO_PRUNE") == "1":
+            return None
+        if self.model.name not in (BM25, INDRI):
+            return None
+        if not isinstance(self.index, PackedIndex):
+            return None
+        node = compile_node(self.parse(query), self.ctx, self.default_field)
+        if isinstance(node, IlNode):
+            node = ScoreNode(node)
+        res = self._pruned_topk(node, k)
+        if res is None:
+            st = PruneStats()
+            res = struct_topk(self.index, node, self.model, k, st)
+            if st != PruneStats():  # a structured shape: answered or declined
+                self.last_prune_stats = st
+        return res
+
+    def _pruned_topk(self, node, k: int) -> DataFrame | None:
         """Default block-max pruned path for flat BM25 #SUM and Indri
         #AND/#WAND/#WSUM over a packed index (SURVEY.md §4.2;
         engine/pruning.py — bit-identical to the exact plan,
@@ -85,29 +117,15 @@ class Engine:
         is big enough for pruning to pay: below ``min_blocks`` total blocks
         the exact single-scan plan is cheaper than the metadata round-trip
         (the gate that matters at 100 TB is automatic — df/block_size rows
-        per term). ``SPARK_GRAFT_NO_PRUNE=1`` forces the exact plan;
-        ``SPARK_GRAFT_PRUNE_MIN_BLOCKS`` overrides the gate."""
+        per term). ``SPARK_GRAFT_PRUNE_MIN_BLOCKS`` overrides the gate."""
         import os
 
-        from search_engine_spark.config import BM25, INDRI
-
-        if os.environ.get("SPARK_GRAFT_NO_PRUNE") == "1":
-            return None
-        if self.model.name not in (BM25, INDRI):
-            return None
-        from search_engine_spark.index.persist import PackedIndex
-
-        if not isinstance(self.index, PackedIndex):
-            return None
+        from search_engine_spark.config import BM25
         from search_engine_spark.engine.compiler import _flat_term_leaves
         from search_engine_spark.engine.ops import (
-            IlNode, IndriAndNode, ScoreNode, SumNode, TermNode, WandNode,
-            WsumNode,
+            IndriAndNode, ScoreNode, SumNode, TermNode, WandNode, WsumNode,
         )
 
-        node = compile_node(self.parse(query), self.ctx, self.default_field)
-        if isinstance(node, IlNode):
-            node = ScoreNode(node)
         kind, weights = None, None
         if self.model.name == BM25:
             if isinstance(node, ScoreNode) and isinstance(node.child, TermNode):
@@ -170,9 +188,9 @@ class Engine:
 
     def search(self, query: str, k: int = TOP_K) -> DataFrame:
         """query text -> top-k (rank, docid, ext_docid, score)."""
-        pruned = self._pruned_topk(query, k)
-        if pruned is not None:
-            return pruned
+        local = self._driver_topk(query, k)
+        if local is not None:
+            return local
         try:
             # rank_topk collects the ≤k survivors, so the query's action
             # completes inside this call...

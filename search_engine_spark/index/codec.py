@@ -188,16 +188,26 @@ def positions_byte_lengths(buf: bytes, tfs: np.ndarray) -> np.ndarray:
     return np.diff(np.concatenate(([0], post_ends)))
 
 
-def positions_decode(buf: bytes, tfs: np.ndarray) -> list:
-    flat = varint_decode(buf)
-    out = []
-    off = 0
-    for tf in np.asarray(tfs, dtype=np.int64):
-        out.append(delta_decode(flat[off : off + tf]))
-        off += tf
-    if off != flat.size:
+def positions_decode_flat(buf: bytes, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Positions stream -> (flat int64 positions, offsets [n + 1]): posting
+    i's positions are ``flat[offsets[i]:offsets[i + 1]]``. One varint decode
+    of the whole stream, then a cumsum that restarts at each posting (the
+    running sum minus its value before the posting's first gap; uint64
+    wrap-around cancels, so every run equals its own delta decode)."""
+    gaps = varint_decode(buf)
+    offs = np.zeros(len(tfs) + 1, dtype=np.int64)
+    np.cumsum(np.asarray(tfs, dtype=np.int64), out=offs[1:])
+    if offs[-1] != gaps.size:
         raise ValueError("positions stream length mismatch")
-    return out
+    run = np.concatenate((np.zeros(1, np.uint64), np.cumsum(gaps)))
+    flat = run[1:] - np.repeat(run[offs[:-1]], np.diff(offs))
+    return flat.astype(np.int64), offs
+
+
+def positions_decode(buf: bytes, tfs: np.ndarray) -> list:
+    """Per-posting position arrays: ``positions_decode_flat`` split."""
+    flat, offs = positions_decode_flat(buf, tfs)
+    return np.split(flat, offs[1:-1]) if len(offs) > 1 else []
 
 
 # --------------------------------------------------------------------------

@@ -438,6 +438,13 @@ def dup_groups(
             if cur == last:
                 break
             last = cur
+        else:
+            # labels from a still-changing edge set are not a fixpoint: they
+            # can split one connected component into several groups
+            raise RuntimeError(
+                f"star contraction did not converge in max_iter={max_iter} "
+                f"rounds ({rounds} run, edge fingerprint still changing)"
+            )
     if _stats is not None:
         _stats["rounds"] = rounds
     lab = P.groupBy("hi").agg(F.min("lo").alias("label")).select(

@@ -98,6 +98,49 @@ def test_block_roundtrip(data):
     assert all(np.array_equal(a, b) for a, b in zip(pp, poss))
 
 
+def _positions_decode_loop(buf: bytes, tfs) -> list:
+    """The per-posting decode loop the vectorized positions_decode
+    replaced: the reference its output must equal bitwise."""
+    flat = varint_decode(buf)
+    out = []
+    off = 0
+    for tf in np.asarray(tfs, dtype=np.int64):
+        out.append(delta_decode(flat[off : off + tf]))
+        off += tf
+    if off != flat.size:
+        raise ValueError("positions stream length mismatch")
+    return out
+
+
+@given(
+    st.lists(
+        st.lists(st.integers(0, 2**40), min_size=0, max_size=20).map(sorted),
+        max_size=40,
+    )
+)
+@settings(max_examples=200, deadline=None)
+def test_positions_decode_matches_loop(runs):
+    """Flat decode + segmented cumsum == the per-posting loop: same dtype,
+    same values, same posting count (tf=0 runs and multi-byte gaps too)."""
+    from search_engine_spark.index.codec import (
+        positions_decode, positions_decode_flat, positions_encode,
+    )
+
+    tfs = np.array([len(r) for r in runs], dtype=np.int64)
+    buf = positions_encode([np.array(r, dtype=np.int64) for r in runs])
+    want = _positions_decode_loop(buf, tfs)
+    got = positions_decode(buf, tfs)
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        assert g.dtype == w.dtype and np.array_equal(g, w)
+    flat, offs = positions_decode_flat(buf, tfs)
+    assert np.array_equal(np.diff(offs), tfs)
+    assert np.array_equal(flat, np.concatenate(want) if want else np.zeros(0, np.int64))
+    if runs:
+        with pytest.raises(ValueError):
+            positions_decode(buf + b"\x01", tfs)
+
+
 def test_delta_rejects_unsorted():
     with pytest.raises(ValueError):
         delta_encode(np.array([3, 1, 2]))

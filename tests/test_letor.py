@@ -383,3 +383,38 @@ def test_read_pagerank_file(spark, code_index, letor_setup, tmp_path):
     for d, vals in via_frame.items():
         for j, (g, w) in enumerate(zip(via_file[d], vals)):
             assert _close(g, w) or (math.isnan(g) and math.isnan(w)), (d, j + 1)
+
+
+def test_read_pagerank_file_last_line_wins(spark, code_index, tmp_path):
+    """An ext id listed more than once keeps its last line's score, one row
+    per doc (the reference reads the file with HashMap.put)."""
+    from search_engine_spark.engine.letor import read_pagerank_file
+
+    rows = code_index.doc_ids.orderBy("docid").limit(2).collect()
+    a, b = rows[0]["ext_docid"], rows[1]["ext_docid"]
+    path = tmp_path / "dup_pagerank.tsv"
+    path.write_text(f"{a}\t-1.0\n{b}\t-2.0\n{a}\t-3.0\n{a}\t-4.5\n")
+    got = [(r["docid"], r["pagerank"]) for r in read_pagerank_file(
+        spark, str(path), code_index.doc_ids
+    ).collect()]
+    assert sorted(got) == [(rows[0]["docid"], -4.5), (rows[1]["docid"], -2.0)]
+
+
+def test_letor_job_rejects_query_line_without_colon(tmp_path):
+    """jobs/letor_features.py names a malformed query line instead of
+    failing on a tuple unpack."""
+    import importlib.util
+    import os
+
+    spec = importlib.util.spec_from_file_location(
+        "letor_job",
+        os.path.join(os.path.dirname(os.path.dirname(__file__)), "jobs", "letor_features.py"),
+    )
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    path = tmp_path / "queries.txt"
+    path.write_text("1:lock free\n\n2 ring buffer\n")
+    with pytest.raises(ValueError, match=r"queries.txt:3: query line '2 ring buffer'"):
+        job.read_queries(str(path))
+    path.write_text("1:lock free\n7:a:b\n")
+    assert job.read_queries(str(path)) == [("1", "lock free"), ("7", "a:b")]

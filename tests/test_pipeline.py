@@ -170,6 +170,16 @@ def test_dup_groups_connected_components(spark):
     }
 
 
+def test_dup_groups_raises_when_max_iter_cuts_contraction(spark):
+    """A chain needs more than one star-contraction round: max_iter=1 must
+    raise, naming the round count, instead of labelling a partial edge set."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(10, 30)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match=r"max_iter=1 rounds \(1 run"):
+        dd.dup_groups(pairs, max_iter=1).collect()
+
+
 def test_dup_groups_path_graph_converges_fast(spark):
     """The adversarial shape for min-label propagation: a PATH of length
     L≈200 (diameter L) interleaved so ids don't help. The star-contraction
