@@ -7,8 +7,8 @@ advances one step of the walk for every still-active doc at once. Per-doc
 semantics (cursor state across arg0 positions, consume-on-match, abort on
 arg exhaustion, first-min advancement) are bit-identical to the reference's
 scalar cursor walks — asserted by a hypothesis equivalence test against
-scalar twins (tests/test_poswalk.py) and by the driver gate's recursive-CTE DuckDB twins
-(`near2_postings`, `window8_postings`).
+scalar twins (tests/test_poswalk.py) and by the driver gate's
+recursive-CTE DuckDB twins (`near2_postings`, `window8_postings`).
 
 ``near_flat``/``window_flat`` take each arg as flat positions plus per-doc
 lengths (the driver evaluator decodes blocks straight into that form);
