@@ -24,6 +24,7 @@ SHAPES = [
     (BM25, "#NEAR/2(try with)"),
     (BM25, "#NEAR/3(except self)"),
     (BM25, "#NEAR/3(with try lambda)"),  # 3 args
+    (BM25, "#NEAR/2(with try lambda)"),
     (BM25, "#WINDOW/4(except pass)"),
     (BM25, "#WINDOW/8(try lambda)"),
     (BM25, "#SYN(except lambda rare_alpha)"),  # a df=1 term
