@@ -33,17 +33,28 @@ BMW is doc-at-a-time and doesn't distribute), planned on the driver:
      top-k; ties are guarded because pruning drops only UB strictly below θ.
      Block metadata gives the exact posting count of the surviving blocks:
        - at most ``_POSTS_PER_TASK`` (one scan task's worth): the driver
-         decodes them, pivots to (docid, tf_1..tf_n, doclen) and hands that
-         to Spark as a local relation. The score.py expressions are
-         projected over it in child order — Spark folds that projection on
-         the driver JVM, so the floats come from the same expression code
-         and the same StrictMath log/pow — and ``topk.rank_local`` cuts at
-         the k-th score and resolves ext ids with a pyarrow docid IN read
-         of doc_ids. No Spark job runs.
+         reads them from the packed files that hold them (block metadata
+         records each block's file), decodes them in one pass
+         (``codec.decode_blocks_flat``), pivots to (docid, tf_1..tf_n,
+         doclen) and hands that to Spark as a local relation, with the
+         query's constants as float64 columns: ``_c{i}`` child i's df
+         (BM25) or ctf (Indri), ``_w{i}`` its weight share w/W. The score
+         is a template of score.py expressions over those columns, built
+         once per (model params, combine kind, child count, index
+         constants) and cached on the index (``DriverReads.memo``), so a
+         warm query builds no Column. Spark evaluates the projection on the
+         driver JVM and ``topk.rank_local`` cuts at the k-th score and
+         resolves ext ids with a pyarrow docid IN read of doc_ids. No Spark
+         job runs.
        - above it: ONE distributed job scans the surviving blocks, scores
          them with the same expressions, then the §2.6 top-k.
      Either way the output scores come from the Spark expressions, never
-     from the numpy seed, so the result is bitwise the exact plan's.
+     from the numpy seed, so the result is bitwise the exact plan's. The
+     exact plan folds the constants into literals where the template reads
+     them from columns; that changes when each operation runs, not what it
+     computes: the same StrictMath log/pow and IEEE double arithmetic run on
+     the same doubles in the same order, since Spark does not reassociate
+     floating-point arithmetic.
 
 Fallback: when the driver cannot read the index (an unreadable file, or a
 tombstone set past ``SPARK_GRAFT_PRUNE_DRIVER_TOMBSTONE_MAX``) or an Indri
@@ -100,6 +111,8 @@ class PruneStats:
     n_postings_scored: int = 0
     theta: float = 0.0
     n_seed_blocks: int = 0
+    # packed files the driver's block reads opened (seed and survivors)
+    n_files_read: int = 0
     # where the final scores came from: "driver" (a local relation, no
     # Spark job) or "spark" (one scan job over the surviving blocks)
     score_mode: str = ""
@@ -184,11 +197,23 @@ def range_bounds(
 # --------------------------------------------------------------------------
 
 
+@dataclass
+class _Posts:
+    """Flat postings: posting j is (term[j], docid[j], tf[j], doclen[j]);
+    its positions, when read, are the j-th run of tf[j] values of ``pos``."""
+
+    term: np.ndarray
+    docid: np.ndarray
+    tf: np.ndarray
+    doclen: np.ndarray
+    pos: np.ndarray | None
+
+
 class _Query:
     """One driver-side query's state: its terms' blocks (one entry per block
-    in each array) and the blocks decoded so far (each block is read and
-    decoded at most once). With ``positions`` every decoded block also
-    carries its flat positions."""
+    in each array), the blocks decoded so far (each block is read and
+    decoded at most once) and the packed files read. With ``positions``
+    every decoded block also carries its flat positions."""
 
     def __init__(
         self, pidx: PackedIndex, terms: list[str], fld: str, metas: list[dict],
@@ -203,88 +228,116 @@ class _Query:
         self.salt, self.block_id, self.n = cols["salt"], cols["block_id"], cols["n"]
         self.lo, self.hi = cols["min_docid"], cols["max_docid"]
         self.max_tf, self.min_doclen = cols["max_tf"], cols["min_doclen"]
+        self.file = cols["file"]
+        self.files_read: set[int] = set()
         self.tombs = pidx.reads.tombstones()
         self._decoded: dict[int, tuple] = {}
 
-    def read(self, blocks: np.ndarray) -> list[tuple]:
-        """(term index, docids, tfs, doclens, flat positions or None) of each
-        given block, decoded on the driver with the executors' codec,
-        tombstoned postings dropped (posting i's positions are the i-th run
-        of tfs[i] values)."""
+    def read(self, blocks: np.ndarray) -> _Posts:
+        """The postings of the given blocks, in that order, decoded on the
+        driver with the executors' codec, tombstoned postings dropped."""
+        todo = sorted({int(i) for i in blocks} - self._decoded.keys())
+        if todo:
+            self._fetch(np.array(todo, dtype=np.int64))
+        parts = [self._decoded[int(i)] for i in blocks]
+        term = np.repeat(
+            self.term[np.asarray(blocks, dtype=np.int64)], [len(p[0]) for p in parts]
+        )
+
+        def cat(j: int) -> np.ndarray:
+            return np.concatenate([p[j] for p in parts] or [np.zeros(0, np.int64)])
+
+        return _Posts(term, cat(0), cat(1), cat(2), cat(3) if self.positions else None)
+
+    def _fetch(self, todo: np.ndarray) -> None:
+        """Read the ``todo`` blocks from the packed files that hold them and
+        decode them in one pass (``codec.decode_blocks_flat``)."""
         import pyarrow.compute as pc
 
-        from search_engine_spark.index.codec import decode_block, positions_decode_flat
+        from search_engine_spark.index.codec import decode_blocks_flat
+        from search_engine_spark.index.persist import _binary_flat
 
-        todo = {int(i) for i in blocks if int(i) not in self._decoded}
-        if todo:
-            want = {
-                (self.terms[self.term[i]], int(self.salt[i]), int(self.block_id[i])): i
-                for i in todo
-            }
-            cols = ["term", "salt", "block_id", "n", "docids", "tfs", "doclens"]
-            tbl = self.pidx.reads.dataset("packed").to_table(
-                columns=cols + ["positions"] * self.positions,
-                filter=(
-                    (pc.field("field") == self.fld)
-                    & pc.field("term").isin(sorted({t for t, _, _ in want}))
-                    & pc.field("block_id").isin(sorted({b for _, _, b in want}))
-                ),
-            )
-            got = tbl.to_pydict()
-            pos_bufs = got["positions"] if self.positions else [None] * tbl.num_rows
-            for term, salt, bid, n, db, tb, lb, pb in zip(
-                *(got[c] for c in cols), pos_bufs
-            ):
-                i = want.get((term, salt, bid))
-                if i is None:
-                    continue  # same block_id under another (term, salt)
-                d, t, L = decode_block({"n": n, "docids": db, "tfs": tb, "doclens": lb})
-                pos = None if pb is None else positions_decode_flat(pb, t)[0]
-                if self.tombs is not None:
-                    live = ~np.isin(d, self.tombs, assume_unique=True)
-                    if pos is not None:
-                        pos = pos[np.repeat(live, t)]
-                    d, t, L = d[live], t[live], L[live]
-                self._decoded[i] = (int(self.term[i]), d, t, L, pos)
-            if len(self._decoded.keys() & todo) != len(todo):
-                raise OSError("packed blocks listed in the metadata are missing")
-        return [self._decoded[int(i)] for i in blocks]
+        files = np.unique(self.file[todo])
+        streams = ["docids", "tfs", "doclens"] + ["positions"] * self.positions
+        tbl = self.pidx.reads.packed_table(
+            files,
+            ["term", "salt", "block_id", "n"] + streams,
+            (pc.field("field") == self.fld)
+            & pc.field("term").isin([self.terms[t] for t in np.unique(self.term[todo])])
+            & pc.field("block_id").isin(np.unique(self.block_id[todo]).tolist()),
+        )
+        self.files_read.update(files.tolist())
+        # match rows to blocks by (term, salt, block_id); the filter also
+        # passes a listed block_id under another (term, salt)
+        row = (
+            pc.index_in(tbl["term"], pa.array(self.terms)).to_numpy().astype(np.int64),
+            tbl["salt"].to_numpy().astype(np.int64),
+            tbl["block_id"].to_numpy().astype(np.int64),
+        )
+        want = (self.term[todo], self.salt[todo], self.block_id[todo])
+        n_salt = max(int(row[1].max(initial=0)), int(want[1].max())) + 1
+        n_bid = max(int(row[2].max(initial=0)), int(want[2].max())) + 1
+        wkey = (want[0] * n_salt + want[1]) * n_bid + want[2]
+        rkey = (row[0] * n_salt + row[1]) * n_bid + row[2]
+        by_key = np.argsort(wkey)
+        at = np.minimum(np.searchsorted(wkey[by_key], rkey), len(todo) - 1)
+        rows = np.flatnonzero(wkey[by_key][at] == rkey)
+        blk = todo[by_key[at[rows]]]
+        if len(np.unique(blk)) != len(todo):
+            raise OSError("packed blocks listed in the metadata are missing")
+
+        got = tbl.take(rows)
+        n = got["n"].to_numpy().astype(np.int64)
+        d, t, L, pos = decode_blocks_flat(
+            n, *(_binary_flat(got[c])[0] for c in streams[:3]),
+            _binary_flat(got["positions"])[0] if self.positions else None,
+        )
+        offs = np.concatenate(([0], np.cumsum(n)))
+        if self.tombs is not None:
+            live = ~np.isin(d, self.tombs)
+            if pos is not None:
+                pos = pos[np.repeat(live, t)]
+            d, t, L = d[live], t[live], L[live]
+            offs = np.concatenate(([0], np.cumsum(live)))[offs]
+        pofs = np.concatenate(([0], np.cumsum(t)))[offs]
+        for r, i in enumerate(blk.tolist()):
+            a, b = offs[r], offs[r + 1]
+            p = None if pos is None else pos[pofs[r]:pofs[r + 1]]
+            self._decoded[i] = (d[a:b], t[a:b], L[a:b], p)
 
     def pivot(self, blocks: np.ndarray, keep=None) -> "_Pivot":
         """Docs of the given blocks as (docid, tf per term, doclen); with
         ``keep(docids) -> mask``, only the docids it keeps."""
-        parts = [p[:4] for p in self.read(blocks)]
-        if keep is not None:
-            masks = [keep(d) for _, d, _, _ in parts]
-            parts = [(t, d[m], f[m], L[m]) for (t, d, f, L), m in zip(parts, masks)]
-        return _Pivot(parts, len(self.terms))
+        p = self.read(blocks)
+        m = slice(None) if keep is None else keep(p.docid)
+        return _Pivot(p.term[m], p.docid[m], p.tf[m], p.doclen[m], len(self.terms))
 
 
 class _Pivot:
     """Per doc: docid, tf per term (``present`` marks the terms it has), doclen."""
 
-    def __init__(self, parts: list[tuple], n_terms: int):
-        self.docid = np.unique(
-            np.concatenate([d for _, d, _, _ in parts] or [np.zeros(0, np.int64)])
-        )
+    def __init__(self, term, docid, tf, doclen, n_terms: int):
+        self.docid = np.unique(docid)
+        ix = np.searchsorted(self.docid, docid)
         self.tf = np.zeros((n_terms, len(self.docid)), dtype=np.int64)
+        self.tf[term, ix] = tf
         self.present = np.zeros((n_terms, len(self.docid)), dtype=bool)
+        self.present[term, ix] = True
         self.doclen = np.zeros(len(self.docid), dtype=np.int64)
-        for t, d, f, L in parts:
-            ix = np.searchsorted(self.docid, d)
-            self.tf[t, ix] = f
-            self.present[t, ix] = True
-            self.doclen[ix] = L
+        self.doclen[ix] = doclen
 
-    def table(self) -> pa.Table:
+    def table(self, consts: dict[str, float]) -> pa.Table:
         """Arrow (docid, _tf0.._tf{n-1} nullable int, doclen) — the shape of
-        the Spark path's per-doc pivot."""
+        the Spark path's per-doc pivot — plus one constant float64 column
+        per ``consts`` entry."""
         cols = {"docid": pa.array(self.docid, pa.int64())}
         for i in range(len(self.tf)):
             cols[f"_tf{i}"] = pa.array(
                 self.tf[i].astype(np.int32), pa.int32(), mask=~self.present[i]
             )
         cols["doclen"] = pa.array(self.doclen, pa.int64())
+        for name, v in consts.items():
+            cols[name] = pa.array(np.full(len(self.docid), v, dtype=np.float64))
         return pa.table(cols)
 
 
@@ -355,13 +408,13 @@ def _pruned_topk(
     block_ub,
     range_ub,
     seed_scores,
-    pivot_score: Column,
+    pivot_score: PivotScore,
     spark_scores,
 ) -> DataFrame:
     """The flow shared by both models, given the model's pieces:
     ``block_ub(q)`` -> [B] per-block bounds, ``range_ub(rb)`` -> [R] range
     bounds, ``seed_scores(pivot)`` -> numpy seed scores, ``pivot_score`` the
-    score column over a (docid, _tf{i}, doclen) pivot, and
+    score over a (docid, _tf{i}, doclen) pivot, and
     ``spark_scores(posts)`` the Spark (docid, score) plan over scanned
     postings."""
     metas = pidx.reads.block_meta(terms, fld)
@@ -386,9 +439,12 @@ def _pruned_topk(
     to_ext = _ext_id_type(pidx)
     if st.n_postings_scored <= _POSTS_PER_TASK and to_ext is not None:
         st.score_mode = "driver"
-        return score_local(pidx, q.pivot(blocks), pivot_score, k, to_ext)
+        piv = q.pivot(blocks)
+        st.n_files_read = len(q.files_read)
+        return score_local(pidx, piv, pivot_score, k, to_ext)
 
     st.score_mode = "spark"
+    st.n_files_read = len(q.files_read)
     keys = [
         (terms[q.term[i]], fld, int(q.salt[i]), int(q.block_id[i])) for i in blocks
     ]
@@ -409,14 +465,20 @@ def _pruned_topk(
     return rank_topk(spark_scores(posts), pidx.doc_ids, k, n_docs=pidx.corpus.n_docs)
 
 
-def score_local(pidx: PackedIndex, piv: _Pivot, score: Column, k: int, to_ext) -> DataFrame:
-    """The driver-side scoring tail: project ``score`` (a score.py
-    expression over the pivot's columns) over the pivot as a local relation
-    — folded in the driver JVM, so the floats are the Spark plan's — then
-    ``topk.rank_local`` with ext ids typed by ``to_ext``. No Spark job."""
+def score_local(
+    pidx: PackedIndex, piv: _Pivot, score: PivotScore, k: int, to_ext
+) -> DataFrame:
+    """The driver-side scoring tail: the pivot, with the query's constants
+    as columns, becomes a local relation; ``score``'s template (score.py
+    expressions, built once per index and shape) is projected over it in
+    the driver JVM; ``topk.rank_local`` ranks with ext ids typed by
+    ``to_ext``. No Spark job. The floats are the Spark plan's: the same
+    expressions run the same StrictMath log/pow on the same doubles, read
+    from columns here where the exact plan folds them as literals, and
+    Spark does not reassociate floating-point arithmetic."""
     rows = (
-        pidx.spark.createDataFrame(piv.table())
-        .select("docid", score.alias("score"))
+        pidx.spark.createDataFrame(piv.table(score.consts))
+        .select("docid", score.column)
         .collect()
     )
 
@@ -438,11 +500,16 @@ def _ext_id_type(pidx: PackedIndex):
     """How the Spark plan's ``doc_ids`` types ext ids, which decides their
     tie-break order: int for an integral column (9 sorts before 10), str for
     a string one. None for any other type: the driver cannot mirror its
-    order, so the survivors are scored by the Spark job instead."""
-    name = pidx.doc_ids.schema["ext_docid"].dataType.typeName()
-    if name in ("long", "integer", "short", "byte"):
-        return int
-    return str if name == "string" else None
+    order, so the survivors are scored by the Spark job instead. Probed
+    once per index."""
+
+    def probe():
+        name = pidx.doc_ids.schema["ext_docid"].dataType.typeName()
+        if name in ("long", "integer", "short", "byte"):
+            return int
+        return str if name == "string" else None
+
+    return pidx.reads.memo(("ext_id_type",), probe)
 
 
 def _tombstones_fit(pidx: PackedIndex, st: PruneStats) -> bool:
@@ -472,20 +539,43 @@ def bm25_range_ub(rb: RangeBounds) -> np.ndarray:
     return tot
 
 
-def bm25_pivot_score(dfs: list[int], n_docs: int, avgdl: float, p: BM25Params) -> Column:
+@dataclass(frozen=True)
+class PivotScore:
+    """A score over a (docid, _tf{i}, doclen) pivot: ``column``, aliased
+    "score", is a template shared by every query of one shape on one index;
+    ``consts`` are this query's constants, which the template reads as
+    columns — ``_c{i}``: child i's df (BM25) or ctf (Indri), ``_w{i}``: its
+    weight share w/W (#WAND, #WSUM)."""
+
+    column: Column
+    consts: dict
+
+
+def bm25_pivot_score(
+    pidx: PackedIndex, dfs: list[int], n_docs: int, avgdl: float, p: BM25Params
+) -> PivotScore:
     """BM25 #SUM over a (docid, _tf{i}, doclen) pivot, child i scored with
     df ``dfs[i]``: SumNode's sum in child order (a missing child adds
-    nothing)."""
-    return reduce(
-        lambda acc, i: acc + F.coalesce(
-            score_mod.bm25_score(
-                n_docs=n_docs, df=dfs[i], avgdl=avgdl, p=p,
-                tf=F.col(f"_tf{i}"), doclen=F.col("doclen"),
+    nothing). The template is built once per (params, child count, N,
+    avgdl) on ``pidx``."""
+    n = len(dfs)
+
+    def build() -> Column:
+        return reduce(
+            lambda acc, i: acc + F.coalesce(
+                score_mod.bm25_score(
+                    n_docs=n_docs, df=F.col(f"_c{i}"), avgdl=avgdl, p=p,
+                    tf=F.col(f"_tf{i}"), doclen=F.col("doclen"),
+                ),
+                F.lit(0.0),
             ),
+            range(n),
             F.lit(0.0),
-        ),
-        range(len(dfs)),
-        F.lit(0.0),
+        ).alias("score")
+
+    return PivotScore(
+        pidx.reads.memo(("bm25", p, n, n_docs, avgdl), build),
+        {f"_c{i}": float(df) for i, df in enumerate(dfs)},
     )
 
 
@@ -533,7 +623,7 @@ def bm25_topk_pruned(
             return tot
 
         pivot_score = bm25_pivot_score(
-            [trows[t][0] for t in live], n_docs, avgdl, p
+            pidx, [trows[t][0] for t in live], n_docs, avgdl, p
         )
 
         def spark_scores(posts: DataFrame) -> DataFrame:
@@ -699,7 +789,7 @@ def indri_topk_pruned(
             return _indri_combine(kind, weights, child)
 
         pivot_score = indri_pivot_score(
-            kind, weights, [trows[t][1] for t in terms], c_len, p
+            pidx, kind, weights, [trows[t][1] for t in terms], c_len, p
         )
 
         def spark_scores(posts: DataFrame) -> DataFrame:
@@ -708,7 +798,8 @@ def indri_topk_pruned(
                 for i, t in enumerate(terms)
             ]
             base = posts.groupBy("docid").agg(*aggs, F.max("doclen").alias("doclen"))
-            return base.select("docid", pivot_score.alias("score"))
+            consts = {c: F.lit(v) for c, v in pivot_score.consts.items()}
+            return base.withColumns(consts).select("docid", pivot_score.column)
 
         return _pruned_topk(
             pidx, terms, fld, k, st, block_ub, range_ub, seed_scores,
@@ -719,31 +810,41 @@ def indri_topk_pruned(
         return None
 
 
-def indri_pivot_score(kind, weights, ctfs: list[int], c_len: int, p: IndriParams) -> Column:
+def indri_pivot_score(
+    pidx: PackedIndex, kind: str, weights, ctfs: list[int], c_len: int, p: IndriParams
+) -> PivotScore:
     """Indri score over a (docid, _tf{i}, doclen) pivot, child i with ctf
     ``ctfs[i]``: actual f32 score for a present child, raw-double default
     otherwise; the combines replicate ops.IndriAndNode/WandNode/WsumNode.
-    _combine exactly."""
-    cols = []
-    for i, ctf in enumerate(ctfs):
-        tf_col = F.col(f"_tf{i}")
-        actual = score_mod.indri_score(
-            ctf=ctf, c_len=c_len, p=p, tf=tf_col, doclen=F.col("doclen")
-        )
-        default = score_mod.indri_default_score(
-            ctf=ctf, c_len=c_len, p=p, doclen=F.col("doclen")
-        )
-        cols.append(F.when(tf_col.isNotNull(), actual).otherwise(default))
-    if kind == "wsum":
+    _combine exactly. The template is built once per (params, kind, child
+    count, C_len) on ``pidx``."""
+    n = len(ctfs)
+
+    def build() -> Column:
+        cols = []
+        for i in range(n):
+            tf_col, ctf = F.col(f"_tf{i}"), F.col(f"_c{i}")
+            actual = score_mod.indri_score(
+                ctf=ctf, c_len=c_len, p=p, tf=tf_col, doclen=F.col("doclen")
+            )
+            default = score_mod.indri_default_score(
+                ctf=ctf, c_len=c_len, p=p, doclen=F.col("doclen")
+            )
+            cols.append(F.when(tf_col.isNotNull(), actual).otherwise(default))
+        if kind == "wsum":
+            score = reduce(
+                lambda acc, i: acc + cols[i] * F.col(f"_w{i}"), range(n), F.lit(0.0)
+            )
+        elif kind == "wand":
+            score = reduce(
+                lambda acc, i: acc * F.pow(cols[i], F.col(f"_w{i}")), range(n), F.lit(1.0)
+            )
+        else:
+            score = F.pow(reduce(lambda a, b: a * b, cols), F.lit(1.0 / n))
+        return score.alias("score")
+
+    consts = {f"_c{i}": float(ctf) for i, ctf in enumerate(ctfs)}
+    if kind in ("wand", "wsum"):
         W = sum(weights)
-        score = F.lit(0.0)
-        for c, w in zip(cols, weights):
-            score = score + c * F.lit(w / W)
-        return score
-    if kind == "wand":
-        W = sum(weights)
-        score = F.lit(1.0)
-        for c, w in zip(cols, weights):
-            score = score * F.pow(c, F.lit(w / W))
-        return score
-    return F.pow(reduce(lambda a, b: a * b, cols), F.lit(1.0 / len(cols)))
+        consts.update({f"_w{i}": w / W for i, w in enumerate(weights)})
+    return PivotScore(pidx.reads.memo(("indri", kind, p, n, c_len), build), consts)

@@ -77,16 +77,17 @@ class Engine:
 
     def _driver_topk(self, query: str, k: int) -> DataFrame | None:
         """The driver-side answer of a packed-index BM25/Indri query, or
-        None when the exact plan runs: the block-max pruned path for flat
-        shapes, then the structured evaluator (engine/structured.py) for
-        trees with #NEAR/#WINDOW/#SYN children. ``SPARK_GRAFT_NO_PRUNE=1``
-        forces the exact plan."""
+        None when the exact plan runs. One classifier
+        (``structured.root_shape``) routes the root: flat shapes to the
+        block-max pruned path, trees with #NEAR/#WINDOW/#SYN children to the
+        structured evaluator (engine/structured.py).
+        ``SPARK_GRAFT_NO_PRUNE=1`` forces the exact plan."""
         import os
 
         from search_engine_spark.config import BM25, INDRI
         from search_engine_spark.engine.ops import IlNode, ScoreNode
         from search_engine_spark.engine.pruning import PruneStats
-        from search_engine_spark.engine.structured import struct_topk
+        from search_engine_spark.engine.structured import root_shape, struct_topk
         from search_engine_spark.index.persist import PackedIndex
 
         if os.environ.get("SPARK_GRAFT_NO_PRUNE") == "1":
@@ -98,58 +99,38 @@ class Engine:
         node = compile_node(self.parse(query), self.ctx, self.default_field)
         if isinstance(node, IlNode):
             node = ScoreNode(node)
-        res = self._pruned_topk(node, k)
-        if res is None:
-            st = PruneStats()
-            res = struct_topk(self.index, node, self.model, k, st)
-            if st != PruneStats():  # a structured shape: answered or declined
-                self.last_prune_stats = st
+        shape = root_shape(node, self.model.name)
+        if shape is None:
+            return None
+        if shape.flat:
+            return self._pruned_topk(shape, k)
+        st = PruneStats()
+        res = struct_topk(self.index, shape, self.model, k, st)
+        if st != PruneStats():  # answered or declined with a reason
+            self.last_prune_stats = st
         return res
 
-    def _pruned_topk(self, node, k: int) -> DataFrame | None:
+    def _pruned_topk(self, shape, k: int) -> DataFrame | None:
         """Default block-max pruned path for flat BM25 #SUM and Indri
         #AND/#WAND/#WSUM over a packed index (SURVEY.md §4.2;
         engine/pruning.py — bit-identical to the exact plan,
         identity-tested; a small surviving set is scored on the driver and
         runs no Spark job). Applies only when the shape matches
         (single field, distinct terms — duplicate query terms carry a
-        multiplicity weight the pruned scorer doesn't model) AND the index
-        is big enough for pruning to pay: below ``min_blocks`` total blocks
-        the exact single-scan plan is cheaper than the metadata round-trip
-        (the gate that matters at 100 TB is automatic — df/block_size rows
-        per term). ``SPARK_GRAFT_PRUNE_MIN_BLOCKS`` overrides the gate."""
+        multiplicity weight the pruned scorer doesn't model; an Indri root
+        that is a bare #SCORE runs the exact plan) AND the index is big
+        enough for pruning to pay: below ``min_blocks`` total blocks the
+        exact single-scan plan is cheaper than the metadata round-trip (the
+        gate that matters at 100 TB is automatic — df/block_size rows per
+        term). ``SPARK_GRAFT_PRUNE_MIN_BLOCKS`` overrides the gate."""
         import os
 
         from search_engine_spark.config import BM25
-        from search_engine_spark.engine.compiler import _flat_term_leaves
-        from search_engine_spark.engine.ops import (
-            IndriAndNode, ScoreNode, SumNode, TermNode, WandNode, WsumNode,
-        )
 
-        kind, weights = None, None
-        if self.model.name == BM25:
-            if isinstance(node, ScoreNode) and isinstance(node.child, TermNode):
-                leaves = [node.child]
-            elif isinstance(node, SumNode):
-                leaves = _flat_term_leaves(node)
-                if leaves is None:
-                    return None
-            else:
-                return None
-        else:  # Indri: flat weighted shapes (engine/pruning.py MaxScore block)
-            if isinstance(node, IndriAndNode):
-                kind, children = "and", node.children
-            elif isinstance(node, WandNode):
-                kind, weights, children = "wand", node.weights, node.children
-            elif isinstance(node, WsumNode):
-                kind, weights, children = "wsum", node.weights, node.children
-            else:
-                return None
-            leaves = _flat_term_leaves(node)
-            if leaves is None:
-                return None
-        terms = [l.term for l in leaves]
-        fields = {l.field for l in leaves}
+        if shape.bare and self.model.name != BM25:
+            return None
+        terms = [l.term for l in shape.leaves]
+        fields = {l.field for l in shape.leaves}
         if len(fields) != 1 or len(set(terms)) != len(terms):
             return None
         fld = next(iter(fields))
@@ -178,7 +159,7 @@ class Engine:
             )
         else:
             res = indri_topk_pruned(
-                self.index, kind, terms, weights, k=k, fld=fld,
+                self.index, shape.kind, terms, shape.weights, k=k, fld=fld,
                 p=self.model.indri, stats=st,
             )
         if res is None:  # outside the pruned contract: exact plan

@@ -8,8 +8,9 @@ most ``pruning._POSTS_PER_TASK`` postings (Σ df from the driver's term
 stats, no job) this module evaluates the same tree on the driver:
 
   1. every leaf term's blocks are read and decoded with positions
-     (``pruning._Query.read``: pyarrow, tombstoned postings dropped) into a
-     docid-sorted list whose positions are one flat array;
+     (``pruning._Query.read``: pyarrow reads of the files holding them, one
+     decode pass, tombstoned postings dropped) into a docid-sorted list
+     whose positions are one flat array;
   2. the Il tree is walked bottom-up: #SYN is a union that concatenates and
      sorts positions per doc, #NEAR/#WINDOW intersect their args' docids
      and run the numpy wavefront walks (``poswalk.near_flat`` /
@@ -113,40 +114,58 @@ def _leaf_terms(node, out: list) -> bool:
     return all(_leaf_terms(c, out) for c in node.children)
 
 
-def _shape(node, model: str):
-    """(combine kind, weights, #SCORE children) of a root the evaluator
-    covers, or None. A bare #SCORE root is a one-child #SUM (BM25) or #AND
-    (Indri): 0.0 + s and pow(s, 1.0) are both exactly s."""
+@dataclass
+class Shape:
+    """A query root the driver planners cover: its combine ``kind`` ("sum"
+    for BM25, "and"/"wand"/"wsum" for Indri), ``weights``, and #SCORE
+    ``children``, each over a tree of Term/Syn/Near/Window nodes whose
+    TermNodes, in order, are ``leaves``. ``bare``: the root is one #SCORE."""
+
+    kind: str
+    weights: list | None
+    children: list
+    leaves: list
+    bare: bool
+
+    @property
+    def flat(self) -> bool:
+        """Every child scores a plain term: the block-max pruned planner's
+        shapes. The others hold a #NEAR/#WINDOW/#SYN: ``struct_topk``'s."""
+        return all(isinstance(c.child, TermNode) for c in self.children)
+
+
+def root_shape(node, model: str) -> Shape | None:
+    """The one classifier of a compiled root for both driver planners, or
+    None (the exact plan runs). A bare #SCORE root is a one-child #SUM
+    (BM25) or #AND (Indri): 0.0 + s and pow(s, 1.0) are both exactly s."""
+    weights = None
     if isinstance(node, ScoreNode):
-        return ("sum" if model == BM25 else "and"), None, [node]
-    if model == BM25:
-        return ("sum", None, node.children) if isinstance(node, SumNode) else None
-    if isinstance(node, IndriAndNode):
-        return "and", None, node.children
-    if isinstance(node, WandNode):
-        return "wand", node.weights, node.children
-    if isinstance(node, WsumNode):
-        return "wsum", node.weights, node.children
-    return None
+        kind, children = ("sum" if model == BM25 else "and"), [node]
+    elif model == BM25 and isinstance(node, SumNode):
+        kind, children = "sum", node.children
+    elif model != BM25 and isinstance(node, IndriAndNode):
+        kind, children = "and", node.children
+    elif model != BM25 and isinstance(node, (WandNode, WsumNode)):
+        kind = "wand" if isinstance(node, WandNode) else "wsum"
+        weights, children = node.weights, node.children
+    else:
+        return None
+    leaves: list = []
+    if not children or not all(
+        isinstance(c, ScoreNode) and _leaf_terms(c.child, leaves) for c in children
+    ):
+        return None  # nested Sl
+    return Shape(kind, weights, children, leaves, isinstance(node, ScoreNode))
 
 
 def struct_topk(
-    pidx: PackedIndex, node, model: ModelConfig, k: int, st: pruning.PruneStats
+    pidx: PackedIndex, shape: Shape, model: ModelConfig, k: int, st: pruning.PruneStats
 ) -> DataFrame | None:
-    """Top-k of a compiled BM25/Indri query tree with at least one
-    composite #SCORE child, evaluated on the driver; None when the shape or
-    the gate says the exact plan runs (the reason in ``st.fallback`` once
-    the shape matched). ``st`` is filled only when the shape matches."""
-    shape = _shape(node, model.name)
-    if shape is None:
-        return None
-    kind, weights, children = shape
-    leaves: list = []
-    if not all(
-        isinstance(c, ScoreNode) and _leaf_terms(c.child, leaves) for c in children
-    ) or all(isinstance(c.child, TermNode) for c in children):
-        return None  # nested Sl, or flat (the pruned planner's shapes)
-    fields = {x.field for x in leaves}
+    """Top-k of a BM25/Indri query of a non-flat ``shape`` (at least one
+    composite #SCORE child), evaluated on the driver; None when the gate
+    says the exact plan runs (the reason in ``st.fallback``)."""
+    kind, weights, children = shape.kind, shape.weights, shape.children
+    fields = {x.field for x in shape.leaves}
     if len(fields) != 1:
         st.fallback = "leaves span several fields"
         return None
@@ -154,7 +173,7 @@ def struct_topk(
         st.fallback = "non-positive total weight"
         return None
     fld = fields.pop()
-    terms = list(dict.fromkeys(x.term for x in leaves))
+    terms = list(dict.fromkeys(x.term for x in shape.leaves))
     try:
         if not pruning._tombstones_fit(pidx, st):
             return None
@@ -170,13 +189,22 @@ def struct_topk(
             return None
         metas = pidx.reads.block_meta(terms, fld)
         q = pruning._Query(pidx, terms, fld, metas, positions=True)
-        parts = q.read(np.arange(len(q.n)))
-        st.n_blocks_total = st.n_blocks_scanned = len(parts)
+        got = q.read(np.arange(len(q.n)))
+        st.n_blocks_total = st.n_blocks_scanned = len(q.n)
+        st.n_files_read = len(q.files_read)
         st.n_postings_scored = posts
-        leaf_lists = {}
-        for i, t in enumerate(terms):
-            lst = _concat([_List(*p[1:]) for p in parts if p[0] == i])
-            leaf_lists[t] = lst.take(np.argsort(lst.docid, kind="stable"))
+        # docid-ascending per term (a term's postings are distinct docs)
+        by = np.lexsort((got.docid, got.term))
+        srt = _List(got.docid, got.tf, got.doclen, got.pos).take(by)
+        cut = np.searchsorted(got.term[by], np.arange(len(terms) + 1))
+        pcut = np.concatenate(([0], np.cumsum(srt.tf)))[cut]
+        leaf_lists = {
+            t: _List(
+                srt.docid[cut[i]:cut[i + 1]], srt.tf[cut[i]:cut[i + 1]],
+                srt.doclen[cut[i]:cut[i + 1]], srt.pos[pcut[i]:pcut[i + 1]],
+            )
+            for i, t in enumerate(terms)
+        }
 
         lists, stats = [], []
         for c in children:
@@ -186,18 +214,21 @@ def struct_topk(
                 stats.append(trows.get(c.child.term, (0, 0)))
             else:  # IlNode.list_stats of the evaluated list
                 stats.append((len(lst.docid), int(lst.tf.sum())))
+        u = _concat(lists)
         piv = pruning._Pivot(
-            [(i, x.docid, x.tf, x.doclen) for i, x in enumerate(lists)], len(lists)
+            np.repeat(np.arange(len(lists)), [len(x.docid) for x in lists]),
+            u.docid, u.tf, u.doclen, len(lists),
         )
         corpus = pidx.corpus
         if kind == "sum":
             score = pruning.bm25_pivot_score(
-                [df for df, _ in stats], corpus.n_docs, corpus.avgdl(fld), model.bm25
+                pidx, [df for df, _ in stats], corpus.n_docs, corpus.avgdl(fld),
+                model.bm25,
             )
         else:
             score = pruning.indri_pivot_score(
-                kind, weights, [ctf for _, ctf in stats], corpus.sum_doclen(fld),
-                model.indri,
+                pidx, kind, weights, [ctf for _, ctf in stats],
+                corpus.sum_doclen(fld), model.indri,
             )
         st.score_mode = "driver"
         return pruning.score_local(pidx, piv, score, k, to_ext)

@@ -195,13 +195,24 @@ def positions_decode_flat(buf: bytes, tfs: np.ndarray) -> tuple[np.ndarray, np.n
     running sum minus its value before the posting's first gap; uint64
     wrap-around cancels, so every run equals its own delta decode)."""
     gaps = varint_decode(buf)
-    offs = np.zeros(len(tfs) + 1, dtype=np.int64)
-    np.cumsum(np.asarray(tfs, dtype=np.int64), out=offs[1:])
+    offs = _run_offsets(tfs)
     if offs[-1] != gaps.size:
         raise ValueError("positions stream length mismatch")
-    run = np.concatenate((np.zeros(1, np.uint64), np.cumsum(gaps)))
-    flat = run[1:] - np.repeat(run[offs[:-1]], np.diff(offs))
-    return flat.astype(np.int64), offs
+    return _run_cumsum(gaps, offs), offs
+
+
+def _run_offsets(lengths: np.ndarray) -> np.ndarray:
+    """[0, cumsum(lengths)]: run i spans ``offs[i]:offs[i + 1]``."""
+    offs = np.zeros(len(lengths) + 1, dtype=np.int64)
+    np.cumsum(np.asarray(lengths, dtype=np.int64), out=offs[1:])
+    return offs
+
+
+def _run_cumsum(gaps: np.ndarray, offs: np.ndarray) -> np.ndarray:
+    """Delta decode of many runs at once: a cumsum that restarts at each run
+    start (the running sum minus its value before the run's first gap)."""
+    run = np.concatenate((np.zeros(1, np.uint64), np.cumsum(gaps, dtype=np.uint64)))
+    return (run[1:] - np.repeat(run[offs[:-1]], np.diff(offs))).astype(np.int64)
 
 
 def positions_decode(buf: bytes, tfs: np.ndarray) -> list:
@@ -350,6 +361,23 @@ def _block_meta(docids, tfs, doclens, bstarts, bends) -> list[dict]:
         }
         for bi in range(bstarts.size)
     ]
+
+
+def decode_blocks_flat(n, docids, tfs, doclens, positions=None):
+    """Many blocks in one pass: ``n`` holds their posting counts and each
+    stream is the blocks' byte strings concatenated in the same order (e.g.
+    ``persist._binary_flat`` of a column). Returns flat (docids, tfs,
+    doclens, positions or None); block i's postings are the i-th run of
+    n[i], posting j's positions the j-th run of tfs[j]. One varint decode
+    per stream and a docid delta decode that restarts at every block —
+    equal to ``decode_block`` per block, concatenated."""
+    offs = _run_offsets(n)
+    total = int(offs[-1])
+    docid = _run_cumsum(varint_decode(docids, total), offs)
+    tf = varint_decode(tfs, total).astype(np.int64)
+    doclen = varint_decode(doclens, total).astype(np.int64)
+    pos = None if positions is None else positions_decode_flat(positions, tf)[0]
+    return docid, tf, doclen, pos
 
 
 def decode_block(block: dict, with_positions: bool = False):

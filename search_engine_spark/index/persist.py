@@ -1659,9 +1659,12 @@ def read_packed(spark: SparkSession, out_dir: str) -> tuple[DataFrame, bool]:
     """The packed-blocks table across both layouts. Returns (df, bucketed):
     ``bucketed`` is True under the legacy ``bucket=<b>/`` partition layout
     (per-bucket resume builds, pre-manifest indexes) where queries prune by
-    the bucket partition column; under the manifest layout pruning comes
-    from the pushed term predicate against per-row-group term min/max stats
-    (merge output is sorted by term within each file)."""
+    the bucket partition column. Under the manifest layout the pushed term
+    predicate is checked against per-row-group term min/max stats, which
+    prune only when a file holds several row groups: merge output is sorted
+    by term within each file, but a small file is one row group spanning
+    its whole term range (every file of a 2,000-file index is), so its
+    stats skip nothing and a term read opens every file."""
     pk_dir = f"{out_dir}/packed"
     man = _side_manifest(pk_dir)
     if man is not None:
@@ -2215,13 +2218,16 @@ def build_persistent_index(
 class DriverReads:
     """Driver-side pyarrow reads of one index generation, cached: per-term
     (df, ctf), per-term block metadata, the tombstone set and the pyarrow
-    datasets over packed, term_stats, doc_ids and tombstones.
+    datasets over packed, term_stats, doc_ids and tombstones — plus
+    ``memo``, values the query planners derive once per index (score
+    templates, the ext-id type).
 
     The index directory is immutable between lifecycle commits (append,
     delete and compact each open a NEW PackedIndex), so nothing here is
     ever invalidated. Serving threads share one PackedIndex, so every cache
     access goes through one lock; file reads run outside it, and when two
-    threads miss the same key both read it and store equal values."""
+    threads miss the same key both read it and the first stored value
+    wins."""
 
     def __init__(self, index_dir: str, n_deleted: int):
         self.dir = index_dir
@@ -2233,6 +2239,9 @@ class DriverReads:
         # (term, field) -> {META_COLS name: numpy array} for the term's blocks
         self._meta: dict[tuple[str, str], dict[str, np.ndarray]] = {}
         self._tombstones: np.ndarray | None = None
+        # the packed dataset's fragments, and each one's index by path
+        self._frags: tuple[list, dict[str, int]] | None = None
+        self._memo: dict = {}
 
     def dataset(self, name: str):
         """pyarrow dataset over one table of the index. ``packed`` lists
@@ -2284,7 +2293,10 @@ class DriverReads:
         """Per term, its blocks' metadata as {column: numpy array} — the
         in-memory posting-list headers a serving engine keeps warm (a term's
         metadata is df/block_size rows; the cache is bounded by the queried
-        vocabulary). Reads only the small plain columns of ``packed``."""
+        vocabulary). Reads only the small plain columns of ``packed``; the
+        extra ``file`` column is the packed file holding each block (an
+        index for ``packed_table``)."""
+        import pyarrow as pa
         import pyarrow.compute as pc
 
         with self._lock:
@@ -2292,16 +2304,24 @@ class DriverReads:
         if missing:
             dset = self.dataset("packed")
             fetched = {
-                (t, fld): {c: np.zeros(0, np.int64) for c in META_COLS[2:]}
+                (t, fld): {c: np.zeros(0, np.int64) for c in META_COLS[2:] + ["file"]}
                 for t in missing
             }
             if dset is not None:
-                tbl = dset.to_table(
+                file_ix = self._packed_fragments(dset)[1]
+                scan = dset.scanner(
                     columns=META_COLS,
                     filter=(pc.field("field") == fld) & pc.field("term").isin(missing),
                 )
+                batches, files = [], []
+                for tagged in scan.scan_batches():
+                    rb = tagged.record_batch
+                    batches.append(rb)
+                    files.append(np.full(rb.num_rows, file_ix[tagged.fragment.path]))
+                tbl = pa.Table.from_batches(batches, scan.projected_schema)
                 term_col = np.asarray(tbl["term"].to_pylist(), dtype=object)
                 cols = {c: tbl[c].to_numpy().astype(np.int64) for c in META_COLS[2:]}
+                cols["file"] = np.concatenate(files or [np.zeros(0, np.int64)])
                 for t in missing:
                     m = term_col == t
                     fetched[(t, fld)] = {c: v[m] for c, v in cols.items()}
@@ -2310,6 +2330,39 @@ class DriverReads:
                     self._meta.setdefault(key, v)
         with self._lock:
             return [self._meta[(t, fld)] for t in terms]
+
+    def _packed_fragments(self, dset) -> tuple[list, dict[str, int]]:
+        with self._lock:
+            if self._frags is None:
+                frags = list(dset.get_fragments())
+                self._frags = frags, {f.path: i for i, f in enumerate(frags)}
+            return self._frags
+
+    def packed_table(self, files: np.ndarray, columns: list[str], filter):
+        """Rows of ``packed`` matching ``filter`` read from the listed files
+        only (indices from ``block_meta``'s ``file`` column): a query's
+        blocks sit in a few of the packed files, and a whole-dataset scan
+        opens every one of them (row-group stats rarely skip a file, see
+        ``read_packed``)."""
+        import pyarrow.dataset as pads
+
+        dset = self.dataset("packed")
+        frags = self._packed_fragments(dset)[0]
+        sub = pads.FileSystemDataset(
+            [frags[int(i)] for i in files], dset.schema, dset.format, dset.filesystem
+        )
+        return sub.to_table(columns=columns, filter=filter)
+
+    def memo(self, key, build):
+        """The value cached under ``key``, built by ``build()`` on the first
+        call. For values derived from this index generation alone (score
+        templates, the ext-id type): bounded by the distinct keys asked."""
+        with self._lock:
+            if key in self._memo:
+                return self._memo[key]
+        value = build()
+        with self._lock:
+            return self._memo.setdefault(key, value)
 
     def ext_ids(self, docids: list[int]) -> dict:
         """docid -> ext_docid as stored, for the given docids: a docid IN
@@ -2429,8 +2482,8 @@ class PackedIndex(IndexTables):
             cond = (F.col("term") == t) & (F.col("field") == f)
             if self._bucketed:
                 # legacy layout: the bucket partition column prunes files;
-                # manifest layout prunes via the term predicate against
-                # row-group min/max stats instead (term-sorted files)
+                # the manifest layout has only row-group term stats, which
+                # prune only multi-row-group files (see read_packed)
                 cond = (F.col("bucket") == _py_bucket(t, self.n_buckets)) & cond
             return cond
 

@@ -58,3 +58,22 @@ def py_oracle(code_docs):
     return PyOracle(
         rows, CODE_TOKENIZER, fields={"body": 2, "path": 3, "lang": 4}
     )
+
+
+@pytest.fixture
+def template_spy(monkeypatch):
+    """Every PivotScore the driver planners get from the score template
+    builders (engine/pruning.py), in call order."""
+    from search_engine_spark.engine import pruning
+
+    made: list = []
+    for name in ("bm25_pivot_score", "indri_pivot_score"):
+        real = getattr(pruning, name)
+
+        def spy(*a, _real=real, **kw):
+            score = _real(*a, **kw)
+            made.append(score)
+            return score
+
+        monkeypatch.setattr(pruning, name, spy)
+    return made
