@@ -601,7 +601,6 @@ def _q_bm25_bucketed_build_topk(spark, sf_dir):
         cfg = BuildConfig(
             out_dir=out, fields=DOC_FIELDS, tokenizer=WHITESPACE_TOKENIZER,
             n_buckets=8, merge_strategy="bucketed", merge_buckets=16,
-            merge_tasks=8,
         )
         build_persistent_index(spark, docs, cfg, resume=False)
         pidx = PackedIndex(spark, out)

@@ -1,5 +1,5 @@
-"""Incremental index append: add new documents to a persisted index in
-O(delta) work — no rebuild, no rewrite of existing data.
+"""Incremental index append: add new documents to a persisted index
+without a rebuild and without rewriting existing data.
 
 The reference (like the Lucene index it reads) is a frozen snapshot; the
 north-rule deployment is a living corpus: new files arrive and the index
@@ -10,34 +10,45 @@ N+1..N+Δ). Every appended posting therefore has a docid strictly greater
 than every existing posting's, so a term's merged posting list is exactly
 ``existing blocks ++ delta blocks`` — the base packed files never change.
 
-Append = a normal delta build + an atomic graft:
+Append = checks + a normal delta build + an atomic graft:
 
+0. **checks** — one aggregate over the Δ docs (dense docid range, delta
+   fingerprint) and, side by side with it, the ext-id uniqueness check, a
+   semi-join that scans the base ``doc_ids``.
 1. **delta** — ``build_persistent_index`` over the Δ docs into a staging
    dir (same BuildConfig, validated against the base manifest's config
-   echo exactly like resume does). All of the build's own machinery —
-   segment pass, salted merge, stats, per-stage checkpoints — is reused,
-   sized by Δ, not by the corpus.
+   echo exactly like resume does). Every Spark job is sized by Δ: the
+   docs coalesce to one partition per ``DELTA_DOCS_PER_TASK`` docs (at
+   most one per core) and route into as many merge buckets, so a small
+   delta is one segment task, one merge task and one packed file. The merge writes ``block_id + hwm`` (the base's
+   block-id high-water mark, read from the packed side manifest or
+   bounded from term_stats with pyarrow — no Spark job), so
+   (term, field, salt, block_id) stays unique across generations.
 2. **graft_docs** — staging doc_ids / doc_stats part-files MOVE into the
    base dirs under deterministic ``append{g}-`` names (idempotent: a redo
    skips files already in place). Harmless if visible early: dimension
    rows for docs that match nothing yet.
-3. **graft_packed** — staging packed blocks get ``block_id += hwm`` (the
-   base's block-id high-water mark, carried in the side manifest) so
-   (term, field, salt, block_id) stays unique across generations, then the
-   rewritten files move into ``packed/`` and COMMIT by atomically
-   rewriting ``packed/_manifest.json`` (Iceberg-style: unlisted files are
-   invisible, so a crash leaves readers on the old file list). Delta salt
-   ids are computed over the delta's own docid range — a different basis
-   than the base generation's, which is correct because salt is only a
-   build-time grouping refinement: every query scans all salts of a term,
-   and the block-max pruner keys blocks by the full (term, field, salt,
-   block_id) identity.
-4. **graft_term_stats** — df/ctf are additive: ``base ∪ delta``
-   re-aggregated, written beside the live table, swapped in by rename.
+3. **graft_packed** — the staged packed files MOVE into ``packed/`` as
+   they are, then COMMIT by atomically rewriting ``packed/_manifest.json``
+   with the file list and the new high-water mark (Iceberg-style: unlisted
+   files are invisible, so a crash leaves readers on the old file list and
+   a resumed move keeps the files already moved). No Spark job. Delta
+   salt ids are computed over the delta's own docid range — a different
+   basis than the base generation's, which is correct because salt is
+   only a build-time grouping refinement: every query scans all salts of a
+   term, and the block-max pruner keys blocks by the full
+   (term, field, salt, block_id) identity.
+4. **term_stats** — df/ctf are additive: ``base ∪ delta`` re-aggregated,
+   written beside the live table, swapped in by rename.
 5. **commit** — corpus_stats.json sums updated; manifest lineage advances
    (n_docs, XOR-combinable input fingerprint, an ``appends`` log entry
-   with per-append counters: the lineage story the north rule asks for);
-   staging removed.
+   with per-append counters and per-step seconds, ``steps_s``: the lineage
+   story the north rule asks for); staging removed.
+
+Cost model: the delta build and both grafts are O(Δ). The term_stats
+rewrite is O(vocabulary) — it re-aggregates the whole base table. The
+ext-id uniqueness check scans the base ``doc_ids`` (O(N) bytes read,
+skippable with ``check_ext_unique=False``).
 
 Every step records completion in the base manifest
 (``append{g}:<step>``); re-invoking after a crash resumes the same
@@ -57,28 +68,35 @@ import json
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from search_engine_spark.index.persist import (
-    PACKED_SCHEMA,
     BuildConfig,
     Manifest,
+    StepClock,
     _config_echo,
     _side_manifest,
     _write_side_manifest,
     build_persistent_index,
-    read_packed,
 )
+
+# documents per task of an append's delta build (segment pass and merge):
+# a task's fixed cost (scheduling, a Python worker, file opens) is ~0.1 s,
+# so a delta smaller than this runs as one task of each kind
+DELTA_DOCS_PER_TASK = 256
 
 
 def _stage(man: Manifest, g: int, step: str) -> str:
     return f"append{g}:{step}"
 
 
-def _move_parts(src_dir: str, dst_dir: str, prefix: str) -> list[str]:
+def _move_parts(
+    src_dir: str, dst_dir: str, prefix: str, names: list[str] | None = None
+) -> list[str]:
     """Move every parquet part-file from src to dst under deterministic
     names derived from the SOURCE filename (``{prefix}-{src_name}``), so a
     resumed move is truly idempotent: after a crash partway through, the
@@ -86,27 +104,34 @@ def _move_parts(src_dir: str, dst_dir: str, prefix: str) -> list[str]:
     already moved. (Enumeration-index naming would renumber the survivors
     from 0, collide with already-moved targets, and drop their rows.)
     Already-moved targets discovered in dst (source gone) are re-listed so
-    the returned name set is complete on resume."""
-    names = sorted(
-        n for n in os.listdir(src_dir)
-        if n.endswith(".parquet") and not n.startswith("_")
-    )
+    the returned name set is complete on resume. ``names`` restricts the
+    move to those source files (a manifest-listed table, whose unlisted
+    files are orphans of a crashed write); a listed name is then found in
+    src or, already moved, in dst."""
+    listed = names is not None
+    if not listed:
+        names = sorted(
+            n for n in os.listdir(src_dir)
+            if n.endswith(".parquet") and not n.startswith("_")
+        )
     moved = set()
     for n in names:
         dst = f"{prefix}-{n}"
         target = os.path.join(dst_dir, dst)
+        src = os.path.join(src_dir, n)
         if not os.path.exists(target):
-            os.replace(os.path.join(src_dir, n), target)
-        else:
+            os.replace(src, target)
+        elif os.path.exists(src):
             # same source name already moved by a crashed prior attempt —
             # the rename is the identity map, so the content is in place
-            os.remove(os.path.join(src_dir, n))
+            os.remove(src)
         moved.add(dst)
-    # resume completeness: targets whose source already moved in a prior
-    # crashed attempt are part of this generation's file set too
-    for n in os.listdir(dst_dir):
-        if n.startswith(f"{prefix}-") and n.endswith(".parquet"):
-            moved.add(n)
+    if not listed:
+        # resume completeness: targets whose source already moved in a
+        # prior crashed attempt are part of this generation's file set too
+        for n in os.listdir(dst_dir):
+            if n.startswith(f"{prefix}-") and n.endswith(".parquet"):
+                moved.add(n)
     return sorted(moved)
 
 
@@ -120,6 +145,18 @@ def _next_generation(man: Manifest) -> int:
     return g
 
 
+def _column_max(paths, column: str) -> int | None:
+    """Max of one column over parquet files (or a table dir): one pyarrow
+    column read on the driver, no Spark job. None when there are no rows."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    if not paths:
+        return None
+    tbl = ds.dataset(paths, format="parquet").to_table(columns=[column])
+    return pc.max(tbl[column]).as_py()
+
+
 def append_to_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -129,8 +166,10 @@ def append_to_index(
 ) -> dict:
     """Append ``docs`` (docid, ext_docid + cfg.fields source columns, with
     docids dense from n_base+1) to the index at ``cfg.out_dir``. Returns the
-    committed append's counters. ``fail_after_step`` injects a crash after
-    that step commits (resume test only)."""
+    committed append's counters, with the wall seconds of each step in
+    ``steps_s``. ``fail_after_step`` injects a crash after that step
+    commits (resume test only)."""
+    clock = StepClock()
     out = cfg.out_dir
     man = Manifest(os.path.join(out, "manifest.json"))
     lin = man.data["lineage"]
@@ -152,15 +191,31 @@ def append_to_index(
     n_base = int(lin["n_docs"])
     g = _next_generation(man)
     staging = os.path.join(out, f"append-{g}-staging")
-    t0 = time.time()
 
-    # ---- docid contract + delta lineage (one tiny agg) -------------------
-    row = docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("docid").alias("lo"),
-        F.max("docid").alias("hi"),
-        F.bit_xor(F.xxhash64("ext_docid")).alias("fp"),
-    ).first()
+    # ---- docid contract + delta lineage (one tiny agg), side by side with
+    # the ext-id uniqueness join (it needs only n_base) -------------------
+    def ext_dups() -> int:
+        # only the BASE docid range counts: a resumed append re-checks after
+        # its own doc_ids rows may already have grafted in (crash between
+        # graft_docs and commit)
+        base_ids = spark.read.parquet(f"{out}/doc_ids").where(
+            F.col("docid") <= n_base
+        )
+        return (
+            base_ids.join(docs.select("ext_docid"), "ext_docid", "left_semi")
+            .limit(1)
+            .count()
+        )
+
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        dups = pool.submit(ext_dups) if check_ext_unique else None
+        row = docs.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("docid").alias("lo"),
+            F.max("docid").alias("hi"),
+            F.bit_xor(F.xxhash64("ext_docid")).alias("fp"),
+        ).first()
+        dup = dups is not None and dups.result()
     n_delta = int(row["n"])
     if n_delta == 0:
         raise ValueError("empty append batch")
@@ -171,32 +226,52 @@ def append_to_index(
             f"them with with_docids(docs, base={n_base})"
         )
     fp_delta = int(row["fp"])
-    if check_ext_unique:
-        # only the BASE docid range counts: a resumed append re-checks after
-        # its own doc_ids rows may already have grafted in (crash between
-        # graft_docs and commit)
-        base_ids = spark.read.parquet(f"{out}/doc_ids").where(
-            F.col("docid") <= n_base
+    if dup:
+        raise ValueError(
+            "append batch re-uses ext_docids already in the index "
+            "(pass check_ext_unique=False to allow duplicates knowingly)"
         )
-        dup = (
-            base_ids.join(docs.select("ext_docid").distinct(), "ext_docid")
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                "append batch re-uses ext_docids already in the index "
-                "(pass check_ext_unique=False to allow duplicates knowingly)"
-            )
+    clock.lap("checks")
 
     # ---- step 1: delta build into staging (resumable on its own) ---------
+    # Sized by the delta: one input partition and one merge bucket per
+    # DELTA_DOCS_PER_TASK docs, at most one per core (a small delta is one
+    # segment task, one merge task, one packed file), and block ids start
+    # at the base's high-water mark so the staged packed files graft in as
+    # they are. The base is untouched until step 1 is marked, so a resumed
+    # build sees the same mark.
+    pk_dir = f"{out}/packed"
+    st_dir = f"{staging}/packed"
     if not man.stage_done(_stage(man, g, "delta")):
+        # the high-water mark: recorded by a prior append (or carried by
+        # compaction), else bounded from the base term_stats — a group
+        # emits <= ceil(df / block_size) blocks, so max(df) bounds every
+        # generation-0 block id
+        hwm = _side_manifest(pk_dir).get("block_id_hwm")
+        if hwm is None:
+            max_df = _column_max(f"{out}/term_stats", "df") or 0
+            hwm = -(-max_df // cfg.block_size) + 1
+        n_tasks = max(1, min(
+            spark.sparkContext.defaultParallelism,
+            -(-n_delta // DELTA_DOCS_PER_TASK),
+        ))
         build_persistent_index(
-            spark, docs, replace(cfg, out_dir=staging), resume=True
+            spark, docs.coalesce(n_tasks),
+            replace(cfg, out_dir=staging, merge_buckets=n_tasks),
+            resume=True, block_id_base=hwm,
+        )
+        # the graft's new high-water mark rides the staged side manifest
+        st_man = _side_manifest(st_dir)
+        top = _column_max(
+            [os.path.join(st_dir, n) for n in st_man["files"]], "block_id"
+        )
+        _write_side_manifest(
+            st_dir, {**st_man, "block_id_hwm": hwm if top is None else top + 1}
         )
         man.mark_stage(_stage(man, g, "delta"))
     if fail_after_step == "delta":
         raise RuntimeError("injected failure after step delta")
+    clock.lap("delta")
 
     # ---- step 2: graft doc_ids + doc_stats -------------------------------
     if not man.stage_done(_stage(man, g, "graft_docs")):
@@ -207,63 +282,38 @@ def append_to_index(
         man.mark_stage(_stage(man, g, "graft_docs"))
     if fail_after_step == "graft_docs":
         raise RuntimeError("injected failure after step graft_docs")
+    clock.lap("graft_docs")
 
     # ---- step 3: graft packed blocks (atomic manifest commit) ------------
-    pk_dir = f"{out}/packed"
-    pk_man = _side_manifest(pk_dir)
-    if not man.stage_done(_stage(man, g, "graft_packed")) and any(
-        n.startswith(f"append{g}-") for n in pk_man["files"]
-    ):
-        # crash landed between the side-manifest commit and the stage mark:
-        # the files ARE committed — only the mark is missing
-        man.mark_stage(
-            _stage(man, g, "graft_packed"),
-            blocks_appended=int(_side_manifest(f"{staging}/packed")["total_rows"]),
-        )
+    # A file move: the staged blocks already carry their final ids. Moved
+    # but uncommitted files are invisible (not in the file list) and a
+    # resumed move keeps them, so every crash window redoes the same commit.
     if not man.stage_done(_stage(man, g, "graft_packed")):
-        # block-id high-water mark: recorded by a prior append, else bounded
-        # from the base term_stats (a group emits <= ceil(df / block_size)
-        # blocks, so max(df) bounds every generation-0 block id)
-        hwm = pk_man.get("block_id_hwm")
-        if hwm is None:
-            r = (
-                spark.read.parquet(f"{out}/term_stats")
-                .agg(F.max("df").alias("m"))
-                .first()
+        pk_man, st_man = _side_manifest(pk_dir), _side_manifest(st_dir)
+        delta_rows = int(st_man["total_rows"])
+        if not any(n.startswith(f"append{g}-") for n in pk_man["files"]):
+            moved = _move_parts(
+                st_dir, pk_dir, f"append{g}-packed", names=st_man["files"]
             )
-            hwm = int(-(-int(r["m"] or 0) // cfg.block_size)) + 1
-        # uncommitted orphans from a crashed attempt are invisible (not in
-        # the file list) — drop and redo deterministically
-        for n in os.listdir(pk_dir):
-            if n.startswith(f"append{g}-"):
-                os.remove(os.path.join(pk_dir, n))
-        delta_packed, _ = read_packed(spark, staging)
-        off_dir = f"{staging}/packed_offset"
-        shutil.rmtree(off_dir, ignore_errors=True)
-        offset = delta_packed.withColumn(
-            "block_id", (F.col("block_id") + F.lit(int(hwm))).cast("int")
-        )
-        delta_hwm = offset.agg(F.max("block_id").alias("m")).first()["m"]
-        (
-            offset.sortWithinPartitions("term", "field", "salt", "block_id")
-            .write.mode("overwrite").parquet(off_dir)
-        )
-        moved = _move_parts(off_dir, pk_dir, f"append{g}-packed")
-        delta_rows = int(_side_manifest(f"{staging}/packed")["total_rows"])
-        _write_side_manifest(
-            pk_dir,
-            {
-                **pk_man,
-                "files": sorted(pk_man["files"] + moved),
-                "total_rows": int(pk_man["total_rows"]) + delta_rows,
-                "block_id_hwm": int(delta_hwm) + 1,
-            },
-        )
+            if fail_after_step == "moved_packed":
+                raise RuntimeError("injected failure after step moved_packed")
+            _write_side_manifest(
+                pk_dir,
+                {
+                    **pk_man,
+                    "files": sorted(pk_man["files"] + moved),
+                    "total_rows": int(pk_man["total_rows"]) + delta_rows,
+                    "block_id_hwm": int(st_man["block_id_hwm"]),
+                },
+            )
+        # else: a crash landed between the side-manifest commit and the
+        # stage mark — the files ARE committed, only the mark is missing
         man.mark_stage(
             _stage(man, g, "graft_packed"), blocks_appended=delta_rows
         )
     if fail_after_step == "graft_packed":
         raise RuntimeError("injected failure after step graft_packed")
+    clock.lap("graft_packed")
 
     # ---- step 4: merged term_stats, swapped in by rename ------------------
     # Crash-safe state machine: the OLD table is renamed aside (never
@@ -311,6 +361,7 @@ def append_to_index(
     shutil.rmtree(old_dir, ignore_errors=True)
     if fail_after_step == "graft_term_stats":
         raise RuntimeError("injected failure after step graft_term_stats")
+    clock.lap("term_stats")
 
     # ---- step 5: corpus stats + lineage commit, staging cleanup ----------
     with open(f"{staging}/corpus_stats.json") as f:
@@ -347,6 +398,7 @@ def append_to_index(
         if fp_base not in (None, "empty")
         else _signed_hex(fp_delta)
     )
+    clock.lap("commit")
     entry = {
         "generation": g,
         "n_docs": n_delta,
@@ -354,7 +406,7 @@ def append_to_index(
             "blocks_appended"
         ),
         "fingerprint": _signed_hex(fp_delta),
-        "sec": round(time.time() - t0, 2),
+        **clock.report(),
         "ts": time.time(),
     }
     man.set_lineage(

@@ -42,7 +42,7 @@ import time
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from search_engine_spark.index.deletes import tombstones_path
@@ -50,8 +50,11 @@ from search_engine_spark.index.persist import (
     PACKED_SCHEMA,
     Manifest,
     PackedIndex,
+    StepClock,
     _side_manifest,
     _write_side_manifest,
+    by_field_stats,
+    field_sums,
 )
 
 
@@ -99,7 +102,8 @@ def _rewrite_packed(
     spark: SparkSession, pidx: PackedIndex, ts_ids: np.ndarray, tmp: str
 ) -> tuple[int, int]:
     """Purge tombstoned postings from the packed table into ``tmp``.
-    Returns (blocks_rewritten, blocks_passthrough)."""
+    Returns (blocks after, blocks before), both counted by Observations on
+    the one rewrite job — no read-back."""
     from search_engine_spark.index.codec import decode_block, encode_blocks
 
     ts_b = spark.sparkContext.broadcast(np.sort(ts_ids))
@@ -148,14 +152,19 @@ def _rewrite_packed(
                 else pd.DataFrame({c: pd.Series([], dtype="object") for c in cols})
             )
 
+    obs_in, obs_out = Observation("blocks_before"), Observation("blocks_after")
     scan = pidx.packed.select([f.name for f in PACKED_SCHEMA.fields])
-    out_df = scan.mapInPandas(gen, PACKED_SCHEMA)
+    out_df = (
+        scan.observe(obs_in, F.count(F.lit(1)).alias("n"))
+        .mapInPandas(gen, PACKED_SCHEMA)
+        .observe(obs_out, F.count(F.lit(1)).alias("n"))
+    )
     shutil.rmtree(tmp, ignore_errors=True)
     out_df.write.parquet(tmp)
     files = sorted(
         f for f in os.listdir(tmp) if f.endswith(".parquet")
     )
-    total = spark.read.schema(PACKED_SCHEMA).parquet(tmp).count()
+    total = int(obs_out.get["n"])
     old_man = _side_manifest(os.path.join(pidx.dir, "packed"))
     side = {
         "format": 1,
@@ -173,8 +182,7 @@ def _rewrite_packed(
     if old_man and "block_id_hwm" in old_man:
         side["block_id_hwm"] = int(old_man["block_id_hwm"])
     _write_side_manifest(tmp, side)
-    n_before = pidx.packed.count()
-    return total, n_before
+    return total, int(obs_in.get["n"])
 
 
 def _stats_delta(pidx: PackedIndex, ts_ids: list) -> DataFrame:
@@ -194,10 +202,12 @@ def _stats_delta(pidx: PackedIndex, ts_ids: list) -> DataFrame:
 
 
 def compact_index(spark: SparkSession, out_dir: str) -> dict:
-    """Purge all tombstones from the index at ``out_dir`` in place.
-    No-op (returns ``n_purged=0``) when there are none."""
+    """Purge all tombstones from the index at ``out_dir`` in place and
+    return the compaction's counters, with the wall seconds of each step in
+    ``steps_s``. No-op (returns ``n_purged=0``) when there are none."""
     from search_engine_spark.index.deletes import recover_delete_inflight
 
+    clock = StepClock()
     check_not_inflight(out_dir)
     recover_delete_inflight(out_dir)
     man = Manifest(os.path.join(out_dir, "manifest.json"))
@@ -205,7 +215,6 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
     n_del = int(lin.get("n_deleted", 0))
     if n_del == 0:
         return {"n_purged": 0}
-    t0 = time.time()
     gen = len(lin.get("compactions", [])) + 1
 
     # raw (unmasked) view: the delta pass must see the doomed docs
@@ -213,6 +222,7 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
     pidx.tombstones, pidx.n_deleted = None, 0
     ts_rows = spark.read.parquet(tombstones_path(out_dir)).collect()
     ts_ids = np.asarray(sorted(r["docid"] for r in ts_rows), dtype=np.int64)
+    clock.lap("open")
 
     # ---- stage fresh tables aside (no visible change yet) -----------------
     delta = _stats_delta(pidx, [int(d) for d in ts_ids])
@@ -227,32 +237,35 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
         .where(F.col("df") > 0)
     )
     ts_new.write.mode("overwrite").parquet(f"{out_dir}/term_stats.compact")
+    clock.lap("term_stats")
 
     blocks_after, blocks_before = _rewrite_packed(
         spark, pidx, ts_ids, f"{out_dir}/packed.compact"
     )
+    clock.lap("packed")
 
     ts_df = F.broadcast(
         spark.createDataFrame([(int(d),) for d in ts_ids], "docid long")
     )
-    for name in ("doc_stats", "doc_ids"):
-        spark.read.parquet(f"{out_dir}/{name}").join(
-            ts_df, "docid", "left_anti"
-        ).write.mode("overwrite").parquet(f"{out_dir}/{name}.compact")
+    # fresh per-field aggregates for corpus_stats.json ride the doc_stats
+    # write as Observation metrics (n_docs key stays the BUILD-TIME docid
+    # high-water mark — see module docstring)
+    ds_obs = Observation("corpus_stats")
 
-    # fresh per-field aggregates for corpus_stats.json (n_docs key stays the
-    # BUILD-TIME docid high-water mark — see module docstring)
-    by_field = {
-        r["field"]: {
-            "n_docs": int(r["n"]),
-            "sum_doclen": int(r["s"]),
-            "avgdl": (int(r["s"]) / int(r["n"])) if int(r["n"]) else 0.0,
-        }
-        for r in spark.read.parquet(f"{out_dir}/doc_stats.compact")
-        .groupBy("field")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("doclen").alias("s"))
-        .collect()
-    }
+    def live(name: str) -> DataFrame:
+        return spark.read.parquet(f"{out_dir}/{name}").join(
+            ts_df, "docid", "left_anti"
+        )
+
+    (
+        live("doc_stats")
+        .observe(ds_obs, *field_sums(pidx.fields))
+        .write.mode("overwrite")
+        .parquet(f"{out_dir}/doc_stats.compact")
+    )
+    live("doc_ids").write.mode("overwrite").parquet(f"{out_dir}/doc_ids.compact")
+    by_field = by_field_stats(ds_obs.get, pidx.fields)
+    clock.lap("doc_tables")
 
     # ---- commit ------------------------------------------------------------
     # journal the commit: individually-atomic swaps, jointly guarded —
@@ -270,13 +283,14 @@ def compact_index(spark: SparkSession, out_dir: str) -> dict:
     with open(tmp, "w") as f:
         json.dump(st, f, indent=1)
     os.replace(tmp, f"{out_dir}/corpus_stats.json")
+    clock.lap("commit")
 
     entry = {
         "generation": gen,
         "n_purged": n_del,
         "blocks_before": blocks_before,
         "blocks_after": blocks_after,
-        "sec": round(time.time() - t0, 2),
+        **clock.report(),
         "ts": time.time(),
     }
     # ONE atomic manifest write: n_deleted -> 0 and n_purged accumulate

@@ -28,10 +28,10 @@ import os
 import shutil
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
-from search_engine_spark.index.persist import Manifest
+from search_engine_spark.index.persist import Manifest, StepClock
 
 TOMBSTONES = "tombstones"
 DELETE_INFLIGHT = "delete_inflight.json"
@@ -91,9 +91,12 @@ def delete_docs(
     ext_docids: list[str] | None = None,
 ) -> dict:
     """Tombstone the given docs (by internal docid and/or external id).
-    Idempotent: re-deleting is a no-op. Returns the committed counters."""
+    Idempotent: re-deleting is a no-op. Returns the committed counters,
+    with the call's wall seconds (``sec``) and those of its steps
+    (``steps_s``)."""
     from search_engine_spark.index.compact import check_not_inflight
 
+    clock = StepClock()
     check_not_inflight(out_dir)
     recover_delete_inflight(out_dir)
     man = Manifest(os.path.join(out_dir, "manifest.json"))
@@ -132,16 +135,19 @@ def delete_docs(
     ghosts = sorted(ids - present)
     if ghosts:
         raise ValueError(f"docids not in the index (purged?): {ghosts[:5]}")
+    clock.lap("checks")
 
     t_dir = tombstones_path(out_dir)
     new = spark.createDataFrame([(d,) for d in sorted(ids)], "docid long")
     if os.path.exists(t_dir):
         new = spark.read.parquet(t_dir).unionByName(new)
-    merged = new.distinct().coalesce(1)
+    obs = Observation("tombstones")
+    merged = new.distinct().coalesce(1).observe(obs, F.count(F.lit(1)).alias("n"))
     tmp = t_dir + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
     merged.write.parquet(tmp)
-    total = spark.read.parquet(tmp).count()
+    total = int(obs.get["n"])
+    clock.lap("write")
 
     entry = {
         "generation": len(lin.get("deletes", [])) + 1,
@@ -165,4 +171,5 @@ def delete_docs(
         n_deleted=total, deletes=lin.get("deletes", []) + [entry]
     )
     os.remove(journal)
-    return entry
+    clock.lap("commit")
+    return {**entry, **clock.report()}

@@ -62,6 +62,7 @@ Design points for 100 TB / 1000 executors:
 from __future__ import annotations
 
 import json
+import math
 import os
 import threading
 import time
@@ -149,21 +150,14 @@ class BuildConfig:
             os.environ.get("SPARK_GRAFT_MERGE_STRATEGY") or "bucketed"
         )
     )
-    # bucket count for the bucketed strategy. Fixed (NOT parallelism-
-    # derived) so N-vs-4N scaling runs execute the identical task set at
-    # both levels; sized so the largest bucket (one heavy keyword + ~1/B of
-    # the Zipf tail) stays well under a 1/cores share of merge work.
-    merge_buckets: int = dc_field(
-        default_factory=lambda: int(os.environ.get("SPARK_GRAFT_MERGE_BUCKETS", "64"))
-    )
-    # bucketed strategy: task count for the merge job — buckets are greedy
-    # bin-packed (longest first, by routed rows) into this many tasks, so
-    # footer opens scale with tasks x files, not buckets x files. Fixed
-    # (not parallelism-derived) so N-vs-4N scaling levels run the identical
-    # task set.
-    merge_tasks: int = dc_field(
-        default_factory=lambda: int(os.environ.get("SPARK_GRAFT_MERGE_TASKS", "32"))
-    )
+    # bucket count for the bucketed strategy: the number of packed files a
+    # build writes (one per non-empty bucket), sized so the largest bucket
+    # (one heavy keyword + ~1/B of the Zipf tail) stays a small share of
+    # merge work. The merge's TASK count is not a knob: _bucketed_merge
+    # bin-packs the buckets into as many tasks as the routed rows and
+    # defaultParallelism call for, and an append routes its delta into one
+    # bucket per delta task (index/append.py).
+    merge_buckets: int = 64
 
 
 PACKED_SCHEMA = T.StructType(
@@ -917,18 +911,16 @@ def _segment_writer_rows(docs: DataFrame, cfg: BuildConfig, seg_dir: str) -> Dat
 def _packed_writer_rows(
     part_df: DataFrame, n_salts: int, max_docid: int, block_size: int,
     pk_dir: str, merge_kernel: str = "vec",
-    merge_chunk_postings: int | None = None,
+    merge_chunk_postings: int | None = None, block_id_base: int = 0,
 ) -> DataFrame:
     """Merge pass with python-side parquet write: each shuffle partition
     merges its (term, field, salt) groups (sorted by key, so parquet
     row-group min/max stats on `term` prune query scans) and writes one
     packed file, returning (kind, file, rows) manifest rows."""
-    if merge_kernel == "vec":
-        inner = make_merge_partition_vec(
-            n_salts, max_docid, block_size, merge_chunk_postings
-        )
-    else:
-        inner = make_merge_partition(n_salts, max_docid, block_size)
+    inner = _merge_kernel(
+        merge_kernel, n_salts, max_docid, block_size, merge_chunk_postings,
+        block_id_base,
+    )
 
     def gen(batches):
         import pyarrow as pa
@@ -983,11 +975,49 @@ def _salt_explode_table(tbl, heavy_terms: list, n_salts: int, max_docid: int):
     return out
 
 
+# routed segment rows one merge task takes on before the merge fans out:
+# below it a task's fixed cost (scheduling, a Python worker, footer opens)
+# outweighs the kernel work it would split off
+MERGE_ROWS_PER_TASK = 4096
+
+
+def _merge_kernel(
+    merge_kernel: str, n_salts: int, max_docid: int, block_size: int,
+    chunk_postings: int | None, block_id_base: int = 0,
+):
+    """The merge kernel ("vec" or the "pandas" reference) as one
+    batches -> packed-batches function. ``block_id_base`` is added to every
+    block id: an append's delta starts its blocks above the index's
+    block-id high-water mark (index/append.py), so the staged files graft
+    in unchanged."""
+    if merge_kernel == "vec":
+        inner = make_merge_partition_vec(
+            n_salts, max_docid, block_size, chunk_postings
+        )
+    else:
+        inner = make_merge_partition(n_salts, max_docid, block_size)
+    if not block_id_base:
+        return inner
+
+    def offset(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        base = pa.scalar(block_id_base, pa.int32())
+        for rb in inner(batches):
+            i = rb.schema.get_field_index("block_id")
+            yield rb.set_column(
+                i, "block_id", pc.add_checked(rb.column(i), base)
+            )
+
+    return offset
+
+
 def _bucketed_merge(
     spark: SparkSession, seg_dir: str, seg_man: dict, pk_dir: str,
     heavy_terms: list, n_salts: int, max_docid: int, block_size: int,
     merge_kernel: str = "vec", merge_chunk_postings: int | None = None,
-    merge_tasks: int = 32,
+    block_id_base: int = 0,
 ) -> list:
     """SHUFFLE-FREE merge (merge_strategy="bucketed"): one python task per
     merge bucket reads that bucket's segment files directly with pyarrow
@@ -1006,14 +1036,14 @@ def _bucketed_merge(
 
     Buckets are scheduled longest-first (by routed row count) so the
     heaviest bucket — one stopword-grade keyword plus ~1/B of the Zipf
-    tail — never lands last on a nearly-drained task queue. Returns
-    [(file, rows)]."""
-    if merge_kernel == "vec":
-        inner = make_merge_partition_vec(
-            n_salts, max_docid, block_size, merge_chunk_postings
-        )
-    else:
-        inner = make_merge_partition(n_salts, max_docid, block_size)
+    tail — never lands last on a nearly-drained task queue. The task count
+    follows the data: one task per ``MERGE_ROWS_PER_TASK`` routed segment
+    rows, at most ``defaultParallelism`` and at most one per bucket, so a
+    small append's delta merges in one task. Returns [(file, rows)]."""
+    inner = _merge_kernel(
+        merge_kernel, n_salts, max_docid, block_size, merge_chunk_postings,
+        block_id_base,
+    )
 
     rg_map = seg_man.get("rg_buckets")
     if rg_map is None or set(rg_map) != set(seg_man["files"]):
@@ -1049,11 +1079,15 @@ def _bucketed_merge(
             by.setdefault(k, []).append((f, idxs))
     if not by:
         return []
-    # greedy bin-pack buckets (longest first, by routed rows) into
-    # merge_tasks bins: footer opens scale with tasks x files instead of
+    # greedy bin-pack buckets (longest first, by routed rows) into one bin
+    # per task — one per MERGE_ROWS_PER_TASK rows, at most one per core and
+    # one per bucket: footer opens scale with tasks x files instead of
     # buckets x files, and the heaviest bucket leads its bin
     order = sorted(by, key=lambda k: -rows_of[k])
-    n_bins = min(merge_tasks, len(order))
+    by_rows = -(-sum(rows_of.values()) // MERGE_ROWS_PER_TASK)
+    n_bins = max(
+        1, min(spark.sparkContext.defaultParallelism, len(order), by_rows)
+    )
     bins: list = [[] for _ in range(n_bins)]
     bin_rows = [0] * n_bins
     for k in order:
@@ -1561,6 +1595,59 @@ class Manifest:
         os.replace(tmp, self.path)
 
 
+def field_sums(fields) -> list:
+    """Per-field doc count and doclen sum over (field, doclen) rows as flat
+    conditional aggregates, to observe on a doc_stats write (no groupBy,
+    no read-back job)."""
+    out = []
+    for fld in sorted(fields):
+        is_f = F.col("field") == fld
+        out += [
+            F.sum(F.when(is_f, 1).otherwise(0)).alias(f"n__{fld}"),
+            F.sum(F.when(is_f, F.col("doclen")).otherwise(0)).alias(f"len__{fld}"),
+        ]
+    return out
+
+
+def by_field_stats(metrics, fields) -> dict:
+    """corpus_stats.json's ``by_field`` from observed ``field_sums``."""
+    by_field = {}
+    for fld in sorted(fields):
+        n_f = int(metrics[f"n__{fld}"] or 0)
+        len_f = int(metrics[f"len__{fld}"] or 0)
+        by_field[fld] = {
+            "n_docs": n_f,
+            "sum_doclen": len_f,
+            "avgdl": len_f / n_f if n_f else 0.0,
+        }
+    return by_field
+
+
+class StepClock:
+    """Wall seconds per step of one maintenance call (append, delete,
+    compact): ``lap(name)`` charges the time since the previous lap to
+    ``name``. ``report()`` floors the steps and ceils the total to the
+    millisecond, so the reported steps never sum past the reported
+    ``sec``."""
+
+    def __init__(self):
+        self.t0 = self.last = time.perf_counter()
+        self.steps: dict[str, float] = {}
+
+    def lap(self, name: str) -> None:
+        now = time.perf_counter()
+        self.steps[name] = self.steps.get(name, 0.0) + now - self.last
+        self.last = now
+
+    def report(self) -> dict:
+        return {
+            "sec": math.ceil((time.perf_counter() - self.t0) * 1000) / 1000,
+            "steps_s": {
+                k: math.floor(v * 1000) / 1000 for k, v in self.steps.items()
+            },
+        }
+
+
 # --------------------------------------------------------------------------
 # build
 # --------------------------------------------------------------------------
@@ -1709,11 +1796,14 @@ def build_persistent_index(
     cfg: BuildConfig,
     resume: bool = True,
     fail_after_bucket: int | None = None,
+    block_id_base: int = 0,
 ) -> dict:
     """Build (or resume) the on-disk index. ``docs`` must carry docid,
     ext_docid and the source columns named in cfg.fields.
     ``fail_after_bucket`` injects a crash after that bucket commits — used by
-    the resume test only. Returns the manifest counters."""
+    the resume test only. ``block_id_base`` offsets every block id (an
+    append's delta build; 0 for an index of its own). Returns the manifest
+    counters."""
     from pyspark.sql import Observation
 
     out = cfg.out_dir
@@ -1919,15 +2009,6 @@ def build_persistent_index(
         # metrics (fields are known from cfg, so a flat conditional aggregate
         # replaces the groupBy + a second read-back job over doc_stats)
         ds_obs = Observation("corpus_stats")
-        ds_metrics = []
-        for fld in sorted(cfg.fields):
-            is_f = F.col("field") == fld
-            ds_metrics.append(
-                F.sum(F.when(is_f, 1).otherwise(0)).alias(f"n__{fld}")
-            )
-            ds_metrics.append(
-                F.sum(F.when(is_f, F.col("doclen")).otherwise(0)).alias(f"len__{fld}")
-            )
         ts_obs = Observation("n_terms")
 
         def write_doc_stats():
@@ -1935,7 +2016,7 @@ def build_persistent_index(
                 markers.where(F.col("term") == DOCSTATS_MARKER)
                 .select("field", "n", "docids", "doclens")
                 .mapInPandas(decode_docstats, ds_schema)
-                .observe(ds_obs, *ds_metrics)
+                .observe(ds_obs, *field_sums(cfg.fields))
                 .write.mode("overwrite")
                 .parquet(f"{out}/doc_stats")
             )
@@ -1983,17 +2064,10 @@ def build_persistent_index(
             for fut in futs:
                 fut.result()
 
-        dm = ds_obs.get
-        by_field = {}
-        for fld in sorted(cfg.fields):
-            n_f = int(dm[f"n__{fld}"] or 0)
-            len_f = int(dm[f"len__{fld}"] or 0)
-            by_field[fld] = {
-                "n_docs": n_f,
-                "sum_doclen": len_f,
-                "avgdl": len_f / n_f if n_f else 0.0,
-            }
-        stats = {"n_docs": man.data["lineage"]["n_docs"], "by_field": by_field}
+        stats = {
+            "n_docs": man.data["lineage"]["n_docs"],
+            "by_field": by_field_stats(ds_obs.get, cfg.fields),
+        }
         with open(f"{out}/corpus_stats.json", "w") as f:
             json.dump(stats, f, indent=1)
         with man_lock:
@@ -2009,12 +2083,10 @@ def build_persistent_index(
     block_size = cfg.block_size
 
     # ---- per-bucket packed postings build (segment MERGE phase) ---------
-    if cfg.merge_kernel == "vec":
-        merge_partition = make_merge_partition_vec(
-            n_salts, max_docid, block_size, cfg.merge_chunk_postings
-        )
-    else:
-        merge_partition = make_merge_partition(n_salts, max_docid, block_size)
+    merge_partition = _merge_kernel(
+        cfg.merge_kernel, n_salts, max_docid, block_size,
+        cfg.merge_chunk_postings, block_id_base,
+    )
     # merge parallelism: partitions hold complete (term,field,salt) groups
     # (repartition hashes the full group key); sized to ~2 waves per core
     # locally — at cluster scale set it to segment-bytes / ~128MB
@@ -2029,24 +2101,28 @@ def build_persistent_index(
     # instead of a per-bucket broadcast-join sub-job. Computed from the
     # segment METADATA columns (sum of per-segment df parts), NOT from
     # term_stats — the merge must not wait on the stats stage it overlaps.
-    _ts_parts = read_termstat_partials(spark, out)
-    if _ts_parts is not None:
-        heavy_src = _ts_parts.groupBy("term", "field").agg(
-            F.sum("df").alias("df")
-        )
-    else:
-        heavy_src = (
-            read_segment_terms(spark, out)
-            .groupBy("term", "field")
-            .agg(F.sum("n").alias("df"))
-        )
-    heavy_terms = [
-        r["term"]
-        for r in heavy_src.where(F.col("df") > threshold)
-        .select("term")
-        .distinct()
-        .collect()
-    ]
+    # df never exceeds the doc count, so a build of at most `threshold`
+    # docs (a small append's delta) has no heavy term and runs no job here.
+    heavy_terms: list = []
+    if max_docid > threshold:
+        _ts_parts = read_termstat_partials(spark, out)
+        if _ts_parts is not None:
+            heavy_src = _ts_parts.groupBy("term", "field").agg(
+                F.sum("df").alias("df")
+            )
+        else:
+            heavy_src = (
+                read_segment_terms(spark, out)
+                .groupBy("term", "field")
+                .agg(F.sum("n").alias("df"))
+            )
+        heavy_terms = [
+            r["term"]
+            for r in heavy_src.where(F.col("df") > threshold)
+            .select("term")
+            .distinct()
+            .collect()
+        ]
 
     def build_bucket(b: int) -> int:
         """One bucket: partition-pruned segments read, heavy terms exploded
@@ -2125,7 +2201,7 @@ def build_persistent_index(
             wfiles = _bucketed_merge(
                 spark, f"{out}/segments", seg_man_d, pk_dir, heavy_terms,
                 n_salts, max_docid, block_size, cfg.merge_kernel,
-                cfg.merge_chunk_postings, cfg.merge_tasks,
+                cfg.merge_chunk_postings, block_id_base,
             )
         else:
             segs_all = read_segment_terms(spark, out).drop("bucket")
@@ -2147,7 +2223,7 @@ def build_persistent_index(
                 (r["file"], r["rows"])
                 for r in _packed_writer_rows(
                     part_df, n_salts, max_docid, block_size, pk_dir,
-                    cfg.merge_kernel, cfg.merge_chunk_postings,
+                    cfg.merge_kernel, cfg.merge_chunk_postings, block_id_base,
                 ).collect()
             ]
         _write_side_manifest(

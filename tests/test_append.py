@@ -120,6 +120,9 @@ def test_chained_appends(spark, code_docs, split_docs, full_idx, tmp_path):
         # ts_swapped (swap done, stage mark missing), which must NOT
         # re-merge the delta's df/ctf into the already-merged table
         "moved_doc_ids", "ts_merged", "ts_renamed", "ts_swapped",
+        # packed files moved, side manifest not yet committed: the resume
+        # must keep the moved files, not drop them as orphans
+        "moved_packed",
     ],
 )
 def test_append_resumes_after_crash(
@@ -133,6 +136,82 @@ def test_append_resumes_after_crash(
         append_to_index(spark, delta, cfg, fail_after_step=step)
     append_to_index(spark, delta, cfg)  # resume same generation
     _assert_equivalent(spark, PackedIndex(spark, out), full_idx)
+    dups = (
+        PackedIndex(spark, out).packed
+        .groupBy("term", "field", "salt", "block_id")
+        .count()
+        .where(F.col("count") > 1)
+        .count()
+    )
+    assert dups == 0
+
+
+def _ungrouped_jobs(sc) -> set:
+    return set(sc.statusTracker().getJobIdsForGroup())
+
+
+def test_small_append_is_sized_to_its_delta(
+    spark, split_docs, tmp_path, monkeypatch
+):
+    """A 40-doc append runs its delta merge as one Spark task, grafts its
+    packed blocks with no Spark job (a file move: block ids are offset at
+    merge time) and adds at most one packed file per merge task."""
+    import search_engine_spark.index.persist as P
+
+    base, delta = split_docs
+    out = str(tmp_path / "idx_budget")
+    cfg = _cfg(out)
+    build_persistent_index(spark, base, cfg, resume=False)
+    files_before = len(P._side_manifest(f"{out}/packed")["files"])
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    real_merge = P._bucketed_merge
+    merge_tasks = []
+
+    def traced_merge(*a, **kw):
+        # the merge runs on the calling thread; the overlapped stats jobs
+        # run on a pool thread and stay outside this job group
+        sc.setLocalProperty("spark.jobGroup.id", "delta-merge")
+        try:
+            return real_merge(*a, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            for j in tracker.getJobIdsForGroup("delta-merge"):
+                merge_tasks.append(
+                    sum(
+                        tracker.getStageInfo(s).numTasks
+                        for s in tracker.getJobInfo(j).stageIds
+                    )
+                )
+
+    monkeypatch.setattr(P, "_bucketed_merge", traced_merge)
+    with pytest.raises(RuntimeError, match="injected"):
+        append_to_index(spark, delta, cfg, fail_after_step="graft_docs")
+    assert merge_tasks == [1]
+
+    # resumed with the delta built and its docs grafted, a call that stops
+    # after step 1 runs only the checks; one that stops after graft_packed
+    # runs the same jobs and no more
+    jobs = _ungrouped_jobs(sc)
+    with pytest.raises(RuntimeError, match="injected"):
+        append_to_index(
+            spark, delta, cfg, check_ext_unique=False, fail_after_step="delta"
+        )
+    checks_jobs = _ungrouped_jobs(sc) - jobs
+    jobs |= checks_jobs
+    with pytest.raises(RuntimeError, match="injected"):
+        append_to_index(
+            spark, delta, cfg, check_ext_unique=False,
+            fail_after_step="graft_packed",
+        )
+    through_graft_jobs = _ungrouped_jobs(sc) - jobs
+    assert checks_jobs and len(through_graft_jobs) == len(checks_jobs)
+
+    files_after = len(P._side_manifest(f"{out}/packed")["files"])
+    assert 0 < files_after - files_before <= sum(merge_tasks)
+    entry = append_to_index(spark, delta, cfg)
+    assert entry["n_docs"] == delta.count()
 
 
 def test_move_parts_resume_no_loss(tmp_path):

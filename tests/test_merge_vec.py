@@ -222,3 +222,31 @@ def test_fuzz_many_groups():
         r["salt"] = int((r["min_docid"] * 4) // 1001)
     rng.shuffle(rows)
     assert_identical(rows)
+
+
+@pytest.mark.parametrize("kernel", ["vec", "pandas"])
+def test_block_id_base_offsets_only_block_ids(kernel):
+    """An append's delta merge writes block ids above the base's high-water
+    mark: the offset kernel's output equals the plain kernel's with every
+    block_id shifted, all other columns untouched."""
+    from search_engine_spark.index.persist import _merge_kernel
+
+    rng = np.random.default_rng(5)
+    rows = rand_group(rng, "alpha", "body", 1, 900, 6) + rand_group(
+        rng, "beta", "body", 1, 900, 3
+    )
+    tbl = as_table(rows)
+    plain, shifted = (
+        pa.Table.from_batches(
+            list(_merge_kernel(kernel, 4, 1000, 8, None, base)(tbl.to_batches()))
+        )
+        for base in (0, 41)
+    )
+    assert plain.num_rows > 2
+    for c in plain.column_names:
+        want = plain.column(c)
+        if c == "block_id":
+            want = pa.chunked_array(
+                [np.asarray(want.to_pylist(), dtype=np.int32) + 41]
+            )
+        assert shifted.column(c).equals(want), f"column {c} differs"
