@@ -17,9 +17,8 @@ driver gate runs the in-memory side, so both stay exercised.
 Extra keys record index-build files/sec and the block-max pruning evidence
 (blocks skipped / total for the flagship BM25 query — engine/pruning.py is
 the default flat-#SUM path on packed indexes past the size gate). The
-north-rule two-parallelism-level scaling evidence is produced by
-``tools/bench_scaling.py`` / ``tools/bench_query_scaling.py`` and recorded
-with full history in ``BENCH_SCALING.md``.
+history of the earlier two-parallelism-level scaling campaign is recorded
+in ``BENCH_SCALING.md``.
 """
 
 from __future__ import annotations

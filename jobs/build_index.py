@@ -9,9 +9,7 @@ Cluster usage (north_rule):
         --buckets 256 --salts 32 --salt-threshold 1000000
 
 Sandbox stand-in (no cluster): ``--master local[N]`` via --cores, with the
-deterministic synthetic corpus (``--synthetic N_FILES``). The same job run at
-two parallelism levels is the scaling-efficiency evidence
-(tools/bench_scaling.py drives that).
+deterministic synthetic corpus (``--synthetic N_FILES``).
 
 Prints one JSON line with wall time, files/sec, and the manifest counters.
 """
@@ -46,20 +44,6 @@ def main() -> None:
     ap.add_argument("--salts", type=int, default=8)
     ap.add_argument("--salt-threshold", type=int, default=100_000)
     ap.add_argument("--block-size", type=int, default=1024)
-    ap.add_argument(
-        "--merge-partitions", type=int, default=0,
-        help="shuffle partitions for the segment merge (0 = engine default, "
-        "2x total cores; at cluster scale set to segment-bytes / ~128MB)",
-    )
-    ap.add_argument(
-        "--merge-strategy", choices=["shuffle", "bucketed"],
-        default=os.environ.get("SPARK_GRAFT_MERGE_STRATEGY") or "shuffle",
-        help="'bucketed' = shuffle-free merge: segment tasks route term "
-        "rows into key-exclusive parquet row groups so the merge reads "
-        "each bucket directly (bit-identical output; removes the shuffle-"
-        "map co-residency penalty on multi-executor clusters — "
-        "BENCH_SCALING.md chain-22)",
-    )
     ap.add_argument(
         "--analyzer", default="code", metavar="NAME",
         help="analyzer for content tokenization: code (default; identifier "
@@ -116,7 +100,6 @@ def main() -> None:
                 salt_threshold=args.salt_threshold, block_size=args.block_size,
                 fields={"body": "content"},
                 tokenizer=tokenizer_by_name(args.analyzer),
-                merge_strategy=args.merge_strategy,
             ),
             resume=False,
         )
@@ -128,10 +111,8 @@ def main() -> None:
         n_salts=args.salts,
         salt_threshold=args.salt_threshold,
         block_size=args.block_size,
-        merge_partitions=args.merge_partitions or None,
         fields={"body": "content"},
         tokenizer=tokenizer_by_name(args.analyzer),
-        merge_strategy=args.merge_strategy,
     )
     counters = build_persistent_index(spark, docs, cfg, resume=not args.no_resume)
     wall = time.time() - t0

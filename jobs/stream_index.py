@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """spark-submit entry: incrementally ingest an arrival directory of document
-parquet files into index segments via Structured Streaming, optionally
-finalizing into the complete packed index.
+parquet files into the packed index via Structured Streaming — each
+micro-batch is a build (the first) or an append (every later one), so the
+index is queryable after every batch.
 
 Cluster usage — run on a schedule (or with a processingTime trigger) against
 the landing bucket; each invocation drains only files that arrived since the
@@ -11,11 +12,10 @@ last one (the checkpoint tracks processed files):
         --input /data/landing/source_code --out /data/index_v1 \
         --buckets 256 --salts 32
     ...                       # more files land, rerun any number of times
-    spark-submit ... jobs/stream_index.py --out /data/index_v1 --finalize
 
 Sandbox stand-in: ``--synthetic N --waves K`` writes the deterministic corpus
-into the arrival dir in K waves with a drain after each, then finalizes —
-one process demonstrating the whole lifecycle.
+into the arrival dir in K waves with a drain after each — one process
+demonstrating the whole lifecycle.
 
 Prints one JSON line per invocation with ingest wall time and batch counts.
 """
@@ -33,10 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from search_engine_spark.corpus import distributed_corpus_df  # noqa: E402
 from search_engine_spark.index.persist import BuildConfig, Manifest  # noqa: E402
 from search_engine_spark.session import get_spark  # noqa: E402
-from search_engine_spark.streaming.ingest import (  # noqa: E402
-    finalize_stream_index,
-    stream_ingest,
-)
+from search_engine_spark.streaming.ingest import stream_ingest  # noqa: E402
 from search_engine_spark.tokenize import CODE_TOKENIZER  # noqa: E402
 
 
@@ -53,8 +50,6 @@ def main() -> None:
     ap.add_argument("--salt-threshold", type=int, default=100_000)
     ap.add_argument("--block-size", type=int, default=1024)
     ap.add_argument("--max-files-per-trigger", type=int)
-    ap.add_argument("--finalize", action="store_true",
-                    help="promote streamed segments to the packed index")
     ap.add_argument(
         "--conf", action="append", default=[], metavar="K=V",
         help="extra Spark conf (repeatable)",
@@ -74,11 +69,9 @@ def main() -> None:
     )
 
     def _totals() -> tuple[int, int]:
-        st = Manifest(os.path.join(args.out, "manifest.json")).data.get(
-            "stream", {}
-        )
-        batches = st.get("batches", {})
-        return sum(b["n_docs"] for b in batches.values()), len(batches)
+        data = Manifest(os.path.join(args.out, "manifest.json")).data
+        batches = data.get("stream", {}).get("batches", {})
+        return data["lineage"].get("n_docs", 0), len(batches)
 
     n_before, batches_before = _totals()
     ingest_wall = 0.0
@@ -103,7 +96,6 @@ def main() -> None:
                 max_files_per_trigger=args.max_files_per_trigger,
             )
             ingest_wall += time.time() - t0
-        args.finalize = True
     elif args.input:
         t0 = time.time()
         stream_ingest(
@@ -111,13 +103,6 @@ def main() -> None:
             max_files_per_trigger=args.max_files_per_trigger,
         )
         ingest_wall += time.time() - t0
-    finalize_wall = 0.0
-    if args.finalize:
-        t0 = time.time()
-        finalize_stream_index(spark, cfg)
-        finalize_wall = time.time() - t0
-
-    man = Manifest(os.path.join(args.out, "manifest.json"))
     n_total, batches_total = _totals()
     n_new = n_total - n_before
     print(
@@ -125,9 +110,8 @@ def main() -> None:
             {
                 "job": "stream_index",
                 # THIS invocation's work: docs drained now / ingest seconds
-                # now (corpus-generation writes and finalize excluded)
+                # now (corpus-generation writes excluded)
                 "ingest_wall_sec": round(ingest_wall, 3),
-                "finalize_wall_sec": round(finalize_wall, 3),
                 "files_ingested": n_new,
                 "files_per_sec": (
                     round(n_new / ingest_wall, 2) if ingest_wall else None
@@ -135,7 +119,6 @@ def main() -> None:
                 "batches": batches_total - batches_before,
                 "files_total": n_total,
                 "batches_total": batches_total,
-                "finalized": man.stage_done("packed"),
                 "cores": args.cores,
             }
         )

@@ -250,7 +250,7 @@ def load_packed_documents_index(spark: SparkSession, sf_dir: str):
         docs = docs.repartition(parts)
         cfg = BuildConfig(
             out_dir=out, fields=DOC_FIELDS, tokenizer=WHITESPACE_TOKENIZER,
-            n_buckets=8, merge_partitions=max(parts, 8),
+            n_buckets=8,
         )
         build_persistent_index(spark, docs, cfg, resume=False)
         pidx = PackedIndex(spark, out)
@@ -539,7 +539,7 @@ def _q_bm25_appended_topk(spark, sf_dir):
         shutil.rmtree(out, ignore_errors=True)
         cfg = BuildConfig(
             out_dir=out, fields=DOC_FIELDS, tokenizer=WHITESPACE_TOKENIZER,
-            n_buckets=8, merge_partitions=8,
+            n_buckets=8,
         )
         build_persistent_index(
             spark, docs.where(F.col("docid") <= split), cfg, resume=False
@@ -568,14 +568,14 @@ _register(
 )
 
 
-# -- shuffle-free bucketed merge (index/persist.py merge_strategy) ------------
-# an index built with merge_strategy="bucketed" (segment rows routed into
-# key-exclusive parquet row groups at write time; merge reads each bucket
-# directly — NO shuffle) must be query-identical to the shuffle build. The
-# oracle is the SAME full-corpus SQL as bm25_sum_topk, so a bitwise pass
-# proves the shuffle-free plan end-to-end under the driver gate (pytest
-# additionally proves all five tables bit-identical:
-# tests/test_merge_bucketed.py).
+# -- routing-invariant merge (index/persist.py merge_buckets) ----------------
+# the build's shuffle-free merge routes segment rows into key-exclusive
+# parquet row groups at write time, and each merge task reads its buckets
+# directly. An index built with a different bucket count (16 here, 64 by
+# default) must be query-identical: the oracle is the SAME full-corpus SQL
+# as bm25_sum_topk, so a bitwise pass proves the routing end-to-end under
+# the driver gate (pytest additionally proves all five tables bit-identical
+# across bucket counts: tests/test_merge_bucketed.py).
 
 
 def _q_bm25_bucketed_build_topk(spark, sf_dir):
@@ -600,7 +600,7 @@ def _q_bm25_bucketed_build_topk(spark, sf_dir):
         shutil.rmtree(out, ignore_errors=True)
         cfg = BuildConfig(
             out_dir=out, fields=DOC_FIELDS, tokenizer=WHITESPACE_TOKENIZER,
-            n_buckets=8, merge_strategy="bucketed", merge_buckets=16,
+            n_buckets=8, merge_buckets=16,
         )
         build_persistent_index(spark, docs, cfg, resume=False)
         pidx = PackedIndex(spark, out)

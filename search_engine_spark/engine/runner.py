@@ -144,7 +144,10 @@ class Engine:
             # df from the driver's cached pyarrow term stats: no Spark job
             try:
                 dfs = self.index.reads.term_stats(terms, fld)
-            except DRIVER_READ_ERRORS:
+            except DRIVER_READ_ERRORS as e:
+                self.last_prune_stats = PruneStats(
+                    fallback=f"driver read failed: {type(e).__name__}: {e}"
+                )
                 return None
             est_blocks = sum(-(-df // block_size) for df, _ in dfs.values())
             if est_blocks < int(

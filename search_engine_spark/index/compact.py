@@ -168,7 +168,7 @@ def _rewrite_packed(
     old_man = _side_manifest(os.path.join(pidx.dir, "packed"))
     side = {
         "format": 1,
-        "n_buckets": (old_man or {}).get("n_buckets", pidx.n_buckets),
+        "n_buckets": old_man["n_buckets"],
         "files": files,
         "total_rows": total,
     }
@@ -179,7 +179,7 @@ def _rewrite_packed(
     # generation block ids, minting duplicate (term,field,salt,block_id)
     # identities — the uniqueness invariant append.py documents and the
     # block-max pruner keys on.
-    if old_man and "block_id_hwm" in old_man:
+    if "block_id_hwm" in old_man:
         side["block_id_hwm"] = int(old_man["block_id_hwm"])
     _write_side_manifest(tmp, side)
     return total, int(obs_in.get["n"])

@@ -5,16 +5,15 @@ The production-scale pipeline (SURVEY.md §4.2, north_rule). Layout under
 
     doc_ids/            parquet  docid, ext_docid (+ natural-key columns)
     doc_stats/          parquet  docid, field, doclen
-    segments/           parquet  per-partition index SEGMENTS: one row per
+    segments/           parquet  per-task index SEGMENTS: one row per
                                  (doc-chunk, field, term) holding that
-                                 chunk's postings as raw LE int bytes +
-                                 merge metadata; marker rows carry
-                                 per-chunk (docid, doclen) pairs.
-                                 Batch layout: flat terms-*/markers-* files
-                                 listed in _manifest.json (python-side
-                                 writes, Iceberg-style manifest commit);
-                                 streaming layout: batch=<id>/bucket=<b>/
-                                 partitions (marker rows at bucket=-1)
+                                 chunk's postings as varint bytes + merge
+                                 metadata, in row groups exclusive to one
+                                 merge bucket; marker rows carry per-chunk
+                                 (docid, doclen) pairs; per-task partial
+                                 term stats. All files are listed in
+                                 _manifest.json (python-side writes,
+                                 Iceberg-style manifest commit).
     term_stats/         parquet  term, field, df, ctf, bucket
     packed/             parquet  one row per posting BLOCK — term, field,
                                  salt, block_id, n, min_docid, max_docid,
@@ -22,67 +21,67 @@ The production-scale pipeline (SURVEY.md §4.2, north_rule). Layout under
                                  plain columns) + docids/tfs/doclens/
                                  positions (delta-gap + varint binary).
                                  Column pruning means a metadata-only read
-                                 never touches the binary columns.
-                                 Batch layout: packed-* files listed in
-                                 _manifest.json, term-sorted so row-group
-                                 stats prune term scans; legacy layout:
-                                 bucket=<b>/ partitions
+                                 never touches the binary columns. packed-*
+                                 files listed in _manifest.json, one per
+                                 merge bucket, term-sorted so row-group
+                                 stats prune term scans.
     corpus_stats.json   tiny per-field aggregates (N, sum_doclen, avgdl)
-    manifest.json       lineage + per-stage/per-bucket completion + counters
+    manifest.json       lineage + per-stage completion + counters
 
 Build = the classic two-phase segment architecture, Spark-shaped:
 
-1. **Segment pass** (mapInPandas, NO shuffle): each task tokenizes its docs
-   (Python re via Arrow — measured 7x faster than JVM regex split) and
-   emits per-chunk packed posting segments; the JVM<->Python boundary
-   carries ~index-sized binary data instead of one row per (doc, term).
-   Map-side partitionBy(bucket) write.
-2. **Merge pass** (one shuffle by (term, field, salt)): segments decode with
-   `np.frombuffer`, concatenate/sort (vectorized run gather), re-cut into
-   block_size varint blocks with block-max metadata.
+1. **Segment pass** (mapInArrow, NO shuffle): each task tokenizes its docs
+   with pyarrow.compute and groups them with numpy, then writes its own
+   segment file python-side, routing every term row into the row group of
+   its merge bucket (crc32(term) % merge_buckets).
+2. **Merge pass** (NO shuffle): one python task per bin of merge buckets
+   reads exactly its buckets' row groups, decodes with ``np.frombuffer``,
+   concatenates/sorts (vectorized run gather) and re-cuts into block_size
+   varint blocks with block-max metadata.
 
 Design points for 100 TB / 1000 executors:
 
 - **Skew (stopword-grade terms).** groupBy(term) would put all of ``def``'s
   postings in one task. Terms with df > ``salt_threshold`` are salted by
-  docid RANGE (integer ``div`` on both JVM and numpy sides): a segment
-  spanning a salt boundary is exploded to every salt it overlaps and the
-  merge kernel keeps only the salt's exact docid range, so salt spans stay
-  disjoint and globally docid-ascending — no extra merge pass, unlike
-  modulo salting.
-- **Resumable.** A fresh build merges all buckets in one job; a resumed
-  build runs per-bucket idempotent-overwrite jobs, skipping buckets the
-  manifest marks complete. The resume test asserts a killed+resumed build
-  equals a never-failed build content-identically.
+  docid RANGE (integer ``//`` in numpy): a segment spanning a salt boundary
+  is exploded to every salt it overlaps and the merge kernel keeps only the
+  salt's exact docid range, so salt spans stay disjoint and globally
+  docid-ascending — no extra merge pass, unlike modulo salting.
+- **Resumable.** Each stage (segments, packed, stats) commits by a manifest
+  mark after its files are listed in a side manifest; a rerun skips the
+  marked stages. A merge that crashed before its side-manifest commit is
+  redone from an emptied ``packed/``. The resume test asserts a killed and
+  resumed build equals a never-failed build content-identically.
 - **Counters/lineage** persisted per stage in the manifest (docs tokenized,
   blocks written, per-stage seconds, order-independent input fingerprint,
   config echo).
 """
+
 
 from __future__ import annotations
 
 import json
 import math
 import os
+import shutil
 import threading
 import time
-from dataclasses import asdict, dataclass, field as dc_field
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass, field as dc_field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from search_engine_spark.index.build import CorpusStats, IndexTables
 from search_engine_spark.index.codec import (
     BLOCK_SIZE,
-    delta_encode,
     encode_blocks,
     positions_byte_lengths,
     positions_pack_flat,
     varint_decode,
-    varint_encode,
     varint_encode_with_offsets,
 )
 from search_engine_spark.tokenize import CODE_TOKENIZER, Tokenizer
@@ -97,17 +96,6 @@ class BuildConfig:
     n_salts: int = 8
     fields: dict = dc_field(default_factory=lambda: {"body": "content"})
     tokenizer: Tokenizer = CODE_TOKENIZER
-    # merge-phase shuffle partitions (None = 2x parallelism; at cluster
-    # scale: total segment bytes / ~128MB)
-    merge_partitions: int | None = None
-    # segment kernel: "arrow" = pyarrow.compute tokenize + numpy grouping
-    # (the fast path — no per-token Python objects); "python" = the
-    # per-token reference kernel (kept for the equivalence test)
-    kernel: str = "arrow"
-    # merge kernel: "vec" = whole-partition numpy/Arrow kernel (one decode/
-    # encode pass per stream, zero-copy output); "pandas" = the per-group
-    # reference kernel (kept for the bit-identity test)
-    merge_kernel: str = "vec"
     # parquet codec for the SEGMENT files only (write-once, read-once by the
     # merge): trades segment-stage compress CPU against merge-stage scan
     # bytes. The packed index stays snappy — it is read on every query, where
@@ -119,44 +107,20 @@ class BuildConfig:
     # whole partition). Chunking is bit-identical (cuts land on group
     # boundaries) and keeps the kernel's ~8 int64 temporaries small enough
     # to stay allocator/cache-resident when several merge tasks share a
-    # host's memory system — tools/merge_kernel_probe.py measured the
-    # whole-partition kernel inflating 5.7x per-task at 4-way co-residency
-    # on disjoint inputs vs 1.18x for the streaming segment kernel.
+    # host's memory system (BENCH_SCALING.md, chunked merge kernel).
     merge_chunk_postings: int = dc_field(
         default_factory=lambda: int(
             os.environ.get("SPARK_GRAFT_MERGE_CHUNK", "1000000")
         )
     )
-    # merge strategy: "shuffle" = one repartition(term, field, salt) job
-    # (the classic path); "bucketed" = SHUFFLE-FREE merge — the segment
-    # writer routes term rows into per-merge-bucket files (deterministic
-    # crc32(term) % merge_buckets, so every (term, field, salt) group is
-    # co-located at WRITE time) and the merge is one python task per bucket
-    # reading its files directly with pyarrow. This deletes the merge
-    # shuffle-map pass entirely — the pass event-log forensics showed
-    # inflating 6.3x in task-seconds under 4-executor co-residency on
-    # identical bytes (BENCH_SCALING.md chain-12) — and with it one full
-    # write+read of the segments table. The strategy is a property of the
-    # segments AS WRITTEN (recorded in segments/_manifest.json), so resume /
-    # append / streaming interop needs no config coupling: the merge phase
-    # dispatches on what the side manifest says, not on cfg.
-    # Default is "bucketed" (round 5): bit-identical to the shuffle path
-    # (tests/test_merge_bucketed.py), wins every same-window multi-JVM A/B
-    # (300k eff 0.725 vs 0.485, 1M 0.591 vs 0.516, 4-core walls 18-38%
-    # shorter), and interop is config-decoupled via the segment side
-    # manifest. "shuffle" stays as the explicit fallback.
-    merge_strategy: str = dc_field(
-        default_factory=lambda: (
-            os.environ.get("SPARK_GRAFT_MERGE_STRATEGY") or "bucketed"
-        )
-    )
-    # bucket count for the bucketed strategy: the number of packed files a
-    # build writes (one per non-empty bucket), sized so the largest bucket
-    # (one heavy keyword + ~1/B of the Zipf tail) stays a small share of
-    # merge work. The merge's TASK count is not a knob: _bucketed_merge
-    # bin-packs the buckets into as many tasks as the routed rows and
-    # defaultParallelism call for, and an append routes its delta into one
-    # bucket per delta task (index/append.py).
+    # merge buckets: the segment pass routes each term row to bucket
+    # crc32(term) % merge_buckets, and the build writes one packed file per
+    # non-empty bucket, sized so the largest bucket (one heavy keyword +
+    # ~1/B of the Zipf tail) stays a small share of merge work. The merge's
+    # TASK count is not a knob: _bucketed_merge bin-packs the buckets into
+    # as many tasks as the routed rows and defaultParallelism call for, and
+    # an append routes its delta into one bucket per delta task
+    # (index/append.py).
     merge_buckets: int = 64
 
 
@@ -187,7 +151,7 @@ META_COLS = [
 # merge metadata. docids/tfs/doclens are raw LE ints (decoded by the merge
 # anyway); positions are ALREADY the final per-posting varint-delta format
 # (v2) so the merge slices bytes instead of re-encoding the largest stream.
-# Marker rows (bucket=-1) carry per-chunk (docid, doclen) pairs for
+# Marker rows carry per-chunk (docid, doclen) pairs for
 # doc_stats and (docid, ext_docid) pairs for doc_ids.
 SEGMENT_SCHEMA = T.StructType(
     [
@@ -213,141 +177,16 @@ DOCSTATS_MARKER = "\x00docstats"
 # must stay complete), so the doc_ids table needs no separate docs scan.
 DOCIDS_MARKER = "\x00docids"
 MARKER_TERMS = [DOCSTATS_MARKER, DOCIDS_MARKER]
-SEGMENT_CHUNK = 512  # docs per segment (python reference kernel)
-ARROW_CHUNK_DOCS = 4096  # docs per segment chunk (arrow kernel)
-
-
-def _segment_rows(docs: DataFrame, cfg: BuildConfig) -> DataFrame:
-    """mapInPandas kernel: docs -> segment rows (one per chunk×field×term)
-    + doc-stats marker rows. Pure Python tokenize + dict grouping (measured
-    faster than JVM regex split). Segment payloads are RAW little-endian
-    int bytes (`tobytes`/`frombuffer` — no per-term varint in the hot
-    path); the final merge phase emits the varint block format. Chunk rows
-    are sorted by docid so every segment is docid-ascending."""
-    flds = list(cfg.fields.items())
-    tok = cfg.tokenizer
-    chunk_docs = SEGMENT_CHUNK
-
-    def gen(batches):
-        buf: list = []
-
-        def flush():
-            rows = []
-            by_field: dict = {}
-            srt = sorted(buf, key=lambda x: x[0])
-            all_ids = np.asarray([x[0] for x in srt], dtype="<i8")
-            ext_blob = "\x00".join(x[1] for x in srt).encode("utf-8")
-            rows.append(
-                (
-                    DOCIDS_MARKER, "", int(all_ids.size), int(all_ids[0]),
-                    int(all_ids[-1]), 0, 0, 0,
-                    all_ids.tobytes(), b"", b"", ext_blob,
-                )
-            )
-            for docid, _ext, per_field in srt:
-                for fld, toks in per_field:
-                    if not toks:  # no tokens -> no doc_stats row (parity
-                        continue  # with the Lucene-norm-absent case)
-                    f_entry = by_field.setdefault(fld, ({}, [], []))
-                    terms, ds_ids, ds_lens = f_entry
-                    groups: dict = {}
-                    for pos, t in enumerate(toks):
-                        groups.setdefault(t, []).append(pos)
-                    n = len(toks)
-                    ds_ids.append(docid)
-                    ds_lens.append(n)
-                    for t, positions in groups.items():
-                        terms.setdefault(t, ([], [], [], []))
-                        d_, t_, l_, p_ = terms[t]
-                        d_.append(docid)
-                        t_.append(len(positions))
-                        l_.append(n)
-                        p_.extend(positions)
-            for fld, (terms, ds_ids, ds_lens) in by_field.items():
-                for t, (d_, t_, l_, p_) in terms.items():
-                    d = np.asarray(d_, dtype=np.int64)
-                    tf = np.asarray(t_, dtype=np.int64)
-                    L = np.asarray(l_, dtype=np.int64)
-                    pos_bytes, _ = positions_pack_flat(
-                        np.asarray(p_, dtype=np.int64), tf
-                    )
-                    rows.append(
-                        (
-                            t, fld, int(d.size), int(d[0]), int(d[-1]),
-                            int(tf.max()), int(L.min()), int(tf.sum()),
-                            varint_encode(delta_encode(d)),
-                            varint_encode(tf.astype(np.uint64)),
-                            varint_encode(L.astype(np.uint64)),
-                            pos_bytes,
-                        )
-                    )
-                md = np.asarray(ds_ids, dtype="<i8")
-                ml = np.asarray(ds_lens, dtype="<i8")
-                rows.append(
-                    (
-                        DOCSTATS_MARKER, fld, int(md.size), int(md[0]),
-                        int(md[-1]), 1, int(ml.min()), 0,
-                        md.tobytes(), b"", ml.tobytes(), b"",
-                    )
-                )
-            buf.clear()
-            cols = list(zip(*rows)) if rows else [[] for _ in range(12)]
-            return pd.DataFrame(
-                {
-                    "term": pd.Series(cols[0], dtype="object"),
-                    "field": pd.Series(cols[1], dtype="object"),
-                    "n": pd.Series(cols[2], dtype="int32"),
-                    "min_docid": pd.Series(cols[3], dtype="int64"),
-                    "max_docid": pd.Series(cols[4], dtype="int64"),
-                    "max_tf": pd.Series(cols[5], dtype="int32"),
-                    "min_doclen": pd.Series(cols[6], dtype="int64"),
-                    "ctf_part": pd.Series(cols[7], dtype="int64"),
-                    "docids": pd.Series(cols[8], dtype="object"),
-                    "tfs": pd.Series(cols[9], dtype="object"),
-                    "doclens": pd.Series(cols[10], dtype="object"),
-                    "positions": pd.Series(cols[11], dtype="object"),
-                }
-            )
-
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                buf.append(
-                    (
-                        row.docid,
-                        row.ext_docid,
-                        [(fld, tok.tokenize(getattr(row, src))) for fld, src in flds],
-                    )
-                )
-                if len(buf) >= chunk_docs:
-                    yield flush()
-        if buf:
-            yield flush()
-
-    cols = ["docid", "ext_docid"] + sorted({src for _, src in flds})
-    return docs.select(*cols).mapInPandas(gen, SEGMENT_SCHEMA)
-
-
-def _segment_rows_arrow(docs: DataFrame, cfg: BuildConfig) -> DataFrame:
-    """Vectorized twin of ``_segment_rows`` via ``mapInArrow``: tokenize with
-    pyarrow.compute (RE2 split, C-side), group with numpy sorts — NO
-    per-token Python objects. The r01 python kernel allocated ~39M token
-    strings + dict-of-list cells per 100k files; that allocator/memory
-    traffic was the measured scaling ceiling of the segment stage (0.64-0.7
-    efficiency at 1→4 cores). One Arrow batch of docs = one segment chunk.
-
-    Output rows are SEGMENT_SCHEMA, same payload format (raw LE int bytes);
-    chunk boundaries differ from the python kernel (batch-sized, not 512),
-    which is invisible after the merge pass — equivalence of the final index
-    is asserted in tests/test_index_format.py."""
-    cols = ["docid", "ext_docid"] + sorted({src for _, src in cfg.fields.items()})
-    return docs.select(*cols).mapInArrow(_arrow_kernel_gen(cfg), SEGMENT_SCHEMA)
+ARROW_CHUNK_DOCS = 4096  # docs per segment chunk
 
 
 def _arrow_kernel_gen(cfg: BuildConfig):
-    """The Arrow segment kernel as a standalone generator factory (worker-
-    side), shared by ``_segment_rows_arrow`` (JVM parquet write — the
-    streaming ingest path) and ``_segment_writer_rows`` (python-side parquet
-    write with manifest-listed commit — the batch path)."""
+    """The segment kernel as a worker-side generator factory: Arrow batches
+    of docs -> SEGMENT_SCHEMA batches (one row per chunk×field×term plus the
+    marker rows). Tokenizes with pyarrow.compute (RE2 split, C-side) and
+    groups with numpy sorts — no per-token Python objects. Consecutive input
+    batches coalesce into ~ARROW_CHUNK_DOCS-doc chunks; each chunk is one
+    segment. ``_segment_writer_rows`` runs it and writes its output."""
     import pyarrow as pa
 
     flds = list(cfg.fields.items())
@@ -449,7 +288,7 @@ def _arrow_kernel_gen(cfg: BuildConfig):
         pos_f = np.arange(doc_f.size, dtype=np.int64) - kept_starts[doc_f]
 
         # docid-ascending emission: rank docs by docid (input order within a
-        # partition is docid order, but stay defensive like the python kernel)
+        # partition is docid order, but stay defensive)
         drank = np.empty(docid_np.size, dtype=np.int64)
         order_docs = np.argsort(docid_np, kind="stable")
         drank[order_docs] = np.arange(docid_np.size)
@@ -515,7 +354,7 @@ def _arrow_kernel_gen(cfg: BuildConfig):
             schema=arrow_schema,
         )
         # doc-stats marker row (docs with zero post-filter tokens excluded,
-        # matching the python kernel / Lucene-norm-absent case)
+        # matching the Lucene-norm-absent case)
         nz = kept_by_rank > 0
         md = docid_by_rank[nz].astype("<i8")
         ml = kept_by_rank[nz].astype("<i8")
@@ -613,8 +452,7 @@ def segment_rows(docs: DataFrame, cfg: BuildConfig) -> DataFrame:
 #   there is no O(files) driver-side rename pass.
 #
 # Marker rows (doc_ids/doc_stats payloads) go to a SEPARATE file set so the
-# stats phase reads only marker bytes — the manifest-layout equivalent of
-# the legacy bucket=-1 partition pruning. On a real cluster the same writer
+# stats phase reads only marker bytes. On a real cluster the same writer
 # targets the object store via pyarrow.fs; locally it is the shared FS.
 
 
@@ -671,9 +509,8 @@ class _KeyedRowGroupWriter:
     in ascending key order at close; a key whose buffer overflows the
     memory bound flushes early and simply spans several row groups.
 
-    This is the bucketed merge strategy's routing vehicle: ONE file per
-    segment task (file count identical to the shuffle strategy — no
-    small-file explosion for stats scans or file listings), with bucket
+    This is the segment pass's routing vehicle: ONE file per segment task
+    (no small-file explosion for stats scans or file listings), with bucket
     co-location expressed a level down, in parquet's own unit of
     independent IO."""
 
@@ -745,7 +582,7 @@ WRITER_SCHEMA = "kind string, file string, rows long, extra string"
 
 
 def _mbucket_of(term: str, n: int) -> int:
-    """Deterministic merge-bucket of a term (bucketed strategy): crc32 is
+    """Deterministic merge-bucket of a term: crc32 is
     stable across processes/runs (unlike PYTHONHASHSEED-salted hash()), so
     a resumed segment stage routes identically."""
     import zlib
@@ -758,52 +595,35 @@ def _segment_writer_rows(docs: DataFrame, cfg: BuildConfig, seg_dir: str) -> Dat
     kernel and writes its term rows / marker rows to its own files under
     ``seg_dir``, returning (kind, file, rows) manifest rows.
 
-    Under ``merge_strategy="bucketed"`` the term rows are routed into
-    key-exclusive parquet ROW GROUPS of the task's single terms file
-    (bucket = crc32(term) % merge_buckets, via _KeyedRowGroupWriter): every
-    (term, field) group — hence every post-salt (term, field, salt) group —
-    is co-located across segments by construction, so the merge phase
-    row-group-prunes each bucket's rows directly instead of shuffling the
-    whole segments table. The bucket→row-group map rides the manifest row's
-    ``extra`` column into the side manifest. File count is IDENTICAL to the
-    shuffle strategy — stats scans and file listings see no small-file
-    explosion (the first cut, one file per bucket per task, made the stats
-    stage 5-10x slower on footer storms)."""
+    Term rows are routed into key-exclusive parquet ROW GROUPS of the
+    task's single terms file (bucket = crc32(term) % merge_buckets, via
+    _KeyedRowGroupWriter): every (term, field) group — hence every
+    post-salt (term, field, salt) group — is co-located across segments by
+    construction, so the merge phase row-group-prunes each bucket's rows
+    directly instead of shuffling the whole segments table. The
+    bucket→row-group map rides the manifest row's ``extra`` column into
+    the side manifest. One terms file per task keeps stats scans and file
+    listings free of small-file storms (the first cut, one file per bucket
+    per task, made the stats stage 5-10x slower on footer storms)."""
     inner = _arrow_kernel_gen(cfg)
     codec = cfg.segment_codec
-    n_mb = cfg.merge_buckets if cfg.merge_strategy == "bucketed" else 0
+    n_mb = cfg.merge_buckets
 
     def gen(batches):
         import pyarrow as pa
         import pyarrow.compute as pc
 
         tag = _task_tag()
-        sinks: dict = {}
-        keyed: list = []  # [(writer, fname)] when routing
-
-        def sink(kind: str) -> _TaskParquetWriter:
-            if kind not in sinks:
-                fname = f"{kind}-{tag}.parquet"
-                sinks[kind] = (
-                    _TaskParquetWriter(os.path.join(seg_dir, fname), codec),
-                    fname,
-                )
-            return sinks[kind][0]
-
-        def keyed_sink() -> _KeyedRowGroupWriter:
-            if not keyed:
-                fname = f"terms-{tag}.parquet"
-                keyed.append(
-                    (_KeyedRowGroupWriter(os.path.join(seg_dir, fname), codec),
-                     fname)
-                )
-            return keyed[0][0]
+        # both writers create their file on the first row written
+        markers_f, terms_f = f"markers-{tag}.parquet", f"terms-{tag}.parquet"
+        marker_writer = _TaskParquetWriter(os.path.join(seg_dir, markers_f), codec)
+        term_writer = _KeyedRowGroupWriter(os.path.join(seg_dir, terms_f), codec)
 
         mb_cache: dict = {}
         ts_part: dict = {}  # (term, field) -> [df_part, ctf_part]
 
         def accum_term_stats(rb) -> None:
-            # per-task partial term stats (bucketed mode): segment rows are
+            # per-task partial term stats: segment rows are
             # unique per (chunk, field, term) over disjoint docids, so
             # df_part = sum(n), ctf_part = sum(ctf_part). The stats stage
             # then aggregates ~one tiny file per task instead of scanning
@@ -824,9 +644,6 @@ def _segment_writer_rows(docs: DataFrame, cfg: BuildConfig, seg_dir: str) -> Dat
             if rb.num_rows == 0:
                 # zero-row batch would make bounds [0, 0] below and the
                 # routing loop would index sb[0] -> IndexError
-                return
-            if not n_mb:
-                sink("terms").write(rb)
                 return
             accum_term_stats(rb)
             # vectorized routing: hash only the batch's UNIQUE terms (a
@@ -849,10 +666,9 @@ def _segment_writer_rows(docs: DataFrame, cfg: BuildConfig, seg_dir: str) -> Dat
             sb = bks[order]
             bounds = np.flatnonzero(np.r_[True, np.diff(sb) != 0])
             bounds = np.r_[bounds, sb.size]
-            w = keyed_sink()
             for i in range(len(bounds) - 1):
                 lo, hi = int(bounds[i]), int(bounds[i + 1])
-                w.write(int(sb[lo]), srt.slice(lo, hi - lo))
+                term_writer.write(int(sb[lo]), srt.slice(lo, hi - lo))
 
         mset = pa.array(MARKER_TERMS)
         for rb in inner(batches):
@@ -861,17 +677,16 @@ def _segment_writer_rows(docs: DataFrame, cfg: BuildConfig, seg_dir: str) -> Dat
             if n_m == 0:
                 write_terms(rb)
             elif n_m == rb.num_rows:
-                sink("markers").write(rb)
+                marker_writer.write(rb)
             else:
-                sink("markers").write(rb.filter(mask))
+                marker_writer.write(rb.filter(mask))
                 write_terms(rb.filter(pc.invert(mask)))
-        out = [(k, f, w.close(), None) for k, (w, f) in sinks.items()]
-        for w, f in keyed:
-            n, rg_keys, rg_rows = w.close()
-            out.append(
-                ("terms", f, n,
-                 json.dumps({"rg_keys": rg_keys, "rg_rows": rg_rows}))
-            )
+        n, rg_keys, rg_rows = term_writer.close()
+        out = [
+            ("markers", markers_f, marker_writer.close(), None),
+            ("terms", terms_f, n,
+             json.dumps({"rg_keys": rg_keys, "rg_rows": rg_rows})),
+        ]
         if ts_part:
             import pyarrow.parquet as pq
 
@@ -908,45 +723,12 @@ def _segment_writer_rows(docs: DataFrame, cfg: BuildConfig, seg_dir: str) -> Dat
     return docs.select(*cols).mapInArrow(gen, WRITER_SCHEMA)
 
 
-def _packed_writer_rows(
-    part_df: DataFrame, n_salts: int, max_docid: int, block_size: int,
-    pk_dir: str, merge_kernel: str = "vec",
-    merge_chunk_postings: int | None = None, block_id_base: int = 0,
-) -> DataFrame:
-    """Merge pass with python-side parquet write: each shuffle partition
-    merges its (term, field, salt) groups (sorted by key, so parquet
-    row-group min/max stats on `term` prune query scans) and writes one
-    packed file, returning (kind, file, rows) manifest rows."""
-    inner = _merge_kernel(
-        merge_kernel, n_salts, max_docid, block_size, merge_chunk_postings,
-        block_id_base,
-    )
-
-    def gen(batches):
-        import pyarrow as pa
-
-        fname = f"packed-{_task_tag()}.parquet"
-        w = _TaskParquetWriter(os.path.join(pk_dir, fname))
-        for rb in inner(batches):
-            w.write(rb)
-        n = w.close()
-        if n:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(["packed"]), pa.array([fname]),
-                 pa.array([n], type=pa.int64()),
-                 pa.array([None], type=pa.string())],
-                names=["kind", "file", "rows", "extra"],
-            )
-
-    return part_df.mapInArrow(gen, WRITER_SCHEMA)
-
-
 def _salt_explode_table(tbl, heavy_terms: list, n_salts: int, max_docid: int):
-    """numpy twin of the JVM-side salt explode (the withColumn/F.explode in
-    the shuffle merge path): heavy-term rows are repeated once per salt
-    range their [min_docid, max_docid] span overlaps; everything else gets
-    salt 0. Integer // matches Spark's `div` for the non-negative docids
-    here, so salt boundaries agree bit-for-bit with the shuffle plan."""
+    """Salt explode of one merge bucket's segment rows: heavy-term rows are
+    repeated once per salt range their [min_docid, max_docid] span
+    overlaps; everything else gets salt 0. Integer ``//`` on the
+    non-negative docids, the same division the merge kernels' salt filter
+    uses, so salt boundaries agree bit-for-bit."""
     import pyarrow as pa
 
     n = tbl.num_rows
@@ -982,20 +764,22 @@ MERGE_ROWS_PER_TASK = 4096
 
 
 def _merge_kernel(
-    merge_kernel: str, n_salts: int, max_docid: int, block_size: int,
+    n_salts: int, max_docid: int, block_size: int,
     chunk_postings: int | None, block_id_base: int = 0,
 ):
-    """The merge kernel ("vec" or the "pandas" reference) as one
-    batches -> packed-batches function. ``block_id_base`` is added to every
-    block id: an append's delta starts its blocks above the index's
-    block-id high-water mark (index/append.py), so the staged files graft
-    in unchanged."""
-    if merge_kernel == "vec":
-        inner = make_merge_partition_vec(
-            n_salts, max_docid, block_size, chunk_postings
-        )
-    else:
-        inner = make_merge_partition(n_salts, max_docid, block_size)
+    """The merge kernel as one batches -> packed-batches function.
+    ``block_id_base`` is added to every block id: an append's delta starts
+    its blocks above the index's block-id high-water mark
+    (index/append.py), so the staged files graft in unchanged."""
+    return _offset_block_ids(
+        make_merge_partition_vec(n_salts, max_docid, block_size, chunk_postings),
+        block_id_base,
+    )
+
+
+def _offset_block_ids(inner, block_id_base: int):
+    """``inner`` (a merge kernel) with ``block_id_base`` added to every
+    block id of its output; ``inner`` itself when the base is 0."""
     if not block_id_base:
         return inner
 
@@ -1016,23 +800,20 @@ def _merge_kernel(
 def _bucketed_merge(
     spark: SparkSession, seg_dir: str, seg_man: dict, pk_dir: str,
     heavy_terms: list, n_salts: int, max_docid: int, block_size: int,
-    merge_kernel: str = "vec", merge_chunk_postings: int | None = None,
-    block_id_base: int = 0,
+    merge_chunk_postings: int | None = None, block_id_base: int = 0,
 ) -> list:
-    """SHUFFLE-FREE merge (merge_strategy="bucketed"): one python task per
-    merge bucket reads that bucket's segment files directly with pyarrow
+    """SHUFFLE-FREE merge: one python task per bin of merge buckets reads
+    those buckets' row groups of the segment files directly with pyarrow
     (the segment writer already co-located every (term, field) group by
-    crc32 routing), salt-explodes heavy terms in numpy, runs the SAME merge
-    kernel as the shuffle path, and writes its packed file python-side.
-    Spark is pure orchestration — the only bytes on the wire are
-    (bucket, file-list) out and (file, rows) back; the merge shuffle-map
-    pass (segment scan → hash → shuffle-file write, the pass chain-12
-    event-log forensics measured inflating 6.3x in task-seconds under
-    4-executor co-residency) does not exist in this plan, and the segments
-    table crosses DRAM once instead of three times (scan + shuffle write +
-    fetch). Packed blocks are identical to the shuffle strategy's — the
-    kernel is deterministic per (term, field, salt) group and routing only
-    changes which task a group lands in (tests/test_merge_bucketed.py).
+    crc32 routing), salt-explodes heavy terms in numpy, runs the merge
+    kernel, and writes one packed file per bucket python-side. Spark is
+    pure orchestration — the only bytes on the wire are (bucket, file-list)
+    out and (file, rows) back; there is no shuffle-map pass (the pass
+    chain-12 event-log forensics measured inflating 6.3x in task-seconds
+    under 4-executor co-residency), and the segments table crosses DRAM
+    once. Packed rows do not depend on the routing: the kernel is
+    deterministic per (term, field, salt) group and routing only changes
+    which task a group lands in (tests/test_merge_bucketed.py).
 
     Buckets are scheduled longest-first (by routed row count) so the
     heaviest bucket — one stopword-grade keyword plus ~1/B of the Zipf
@@ -1041,8 +822,7 @@ def _bucketed_merge(
     rows, at most ``defaultParallelism`` and at most one per bucket, so a
     small append's delta merges in one task. Returns [(file, rows)]."""
     inner = _merge_kernel(
-        merge_kernel, n_salts, max_docid, block_size, merge_chunk_postings,
-        block_id_base,
+        n_salts, max_docid, block_size, merge_chunk_postings, block_id_base
     )
 
     rg_map = seg_man.get("rg_buckets")
@@ -1061,11 +841,10 @@ def _bucketed_merge(
                 f"{extra[:3]}{'…' if len(extra) > 3 else ''}"
             )
         raise ValueError(
-            "bucketed merge: segment side manifest is inconsistent ("
+            "merge: segment side manifest is inconsistent ("
             + "; ".join(parts or ["rg_buckets missing"])
-            + ") — the segments were not written by the bucketed strategy "
-            "(or the manifest is corrupt); rebuild or use "
-            "merge_strategy='shuffle'"
+            + ") — the manifest is corrupt or predates bucket routing; "
+            "rebuild with resume=False"
         )
     # per bucket: [(file, [row-group indices])] + routed row count
     by: dict = {}
@@ -1169,8 +948,9 @@ def _gather_runs(flat: np.ndarray, lengths: np.ndarray, order: np.ndarray) -> np
 
 
 def make_merge_group(n_salts: int, max_docid: int, block_size: int):
-    """applyInPandas kernel factory for the segment MERGE phase (module-level
-    so it's profilable/testable outside a Spark job)."""
+    """Per-group reference merge: one (term, field, salt) group of segment
+    rows as a pandas frame -> its packed block rows. Only
+    :func:`make_merge_partition` uses it."""
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         """One (term, field, salt) group of SEGMENT rows -> final packed
@@ -1279,15 +1059,11 @@ def _packed_arrow_schema():
 
 
 def make_merge_partition(n_salts: int, max_docid: int, block_size: int):
-    """mapInArrow kernel: one shuffle PARTITION of segment rows (already
-    co-partitioned by (term, field, salt) via repartition) -> packed block
-    rows for every group in it.
-
-    Replaces the per-group applyInPandas formulation: Spark materialized each
-    of the ~6k (term,field,salt) groups as its own Arrow batch + pandas frame
-    (per-group JVM<->Python conversion dominated the merge stage); here the
-    partition streams through as a handful of Arrow batches and the group
-    split is an in-kernel pandas groupby over bytes columns."""
+    """Reference merge kernel: salted segment rows holding complete
+    (term, field, salt) groups -> packed block rows, one pandas group at a
+    time. The build runs :func:`make_merge_partition_vec`; this per-group
+    formulation is the bitwise reference tests/test_merge_vec.py holds it
+    to."""
     import pyarrow as pa
 
     merge_group = make_merge_group(n_salts, max_docid, block_size)
@@ -1362,8 +1138,8 @@ def make_merge_partition_vec(
     run makes a full decode→filter→encode pass of its own. The whole-
     partition formulation (chunk_postings=None) materializes ~8 int64
     temporaries of the full partition's posting count (~120 MB each at a
-    1M-file merge partition) — tools/merge_kernel_probe.py measured its
-    per-task time inflating 5.7x when four pinned processes run on DISJOINT
+    1M-file merge partition) — a co-residency probe measured its per-task
+    time inflating 5.7x when four pinned processes run on DISJOINT
     partitions (the box's shared memory system, not code), while the
     streaming segment kernel inflates only 1.18x. Chunking keeps the
     temporaries allocator/cache-resident across iterations; output rows and
@@ -1560,7 +1336,7 @@ def make_merge_partition_vec(
 class Manifest:
     def __init__(self, path: str):
         self.path = path
-        self.data = {"stages": {}, "buckets": {}, "counters": {}, "lineage": {}}
+        self.data = {"stages": {}, "counters": {}, "lineage": {}}
         if os.path.exists(path):
             with open(path) as f:
                 self.data = json.load(f)
@@ -1573,15 +1349,6 @@ class Manifest:
         for k, v in counters.items():
             if isinstance(v, (int, float)):
                 self.data["counters"][k] = self.data["counters"].get(k, 0) + v
-        self._flush()
-
-    def bucket_done(self, b: int) -> bool:
-        return self.data["buckets"].get(str(b), {}).get("done", False)
-
-    def mark_bucket(self, b: int, **counters) -> None:
-        self.data["buckets"][str(b)] = {"done": True, "ts": time.time(), **counters}
-        for k, v in counters.items():
-            self.data["counters"][k] = self.data["counters"].get(k, 0) + v
         self._flush()
 
     def set_lineage(self, **kv) -> None:
@@ -1668,51 +1435,13 @@ def _config_echo(cfg: BuildConfig) -> dict:
     }
 
 
-def read_segments(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The segments table normalized to SEGMENT_SCHEMA + bucket, across both
-    layouts:
-
-    - manifest layout (batch build): flat ``terms-*/markers-*`` files listed
-      in ``segments/_manifest.json``; bucket is COMPUTED at read time
-      (pmod(xxhash64(term), B) — the scan reads term anyway).
-    - legacy partition layout (streaming ingest: batch=<id>/bucket=<b>/
-      per-batch idempotent overwrite): partition discovery adds a `batch`
-      column that the stats/merge phases must not see."""
-    seg_dir = f"{out_dir}/segments"
-    man = _side_manifest(seg_dir)
-    if man is not None:
-        df = _read_listed(
-            spark, seg_dir, man["files"] + man["marker_files"], SEGMENT_SCHEMA
-        )
-        bucket = F.when(F.col("term").isin(MARKER_TERMS), F.lit(-1)).otherwise(
-            _bucket_col(F.col("term"), man["n_buckets"])
-        )
-        return df.withColumn("bucket", bucket)
-    df = spark.read.parquet(seg_dir)
-    return df.select(*[f.name for f in SEGMENT_SCHEMA], "bucket")
-
-
 def read_segment_markers(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Marker rows only (doc_ids/doc_stats payloads) — file-pruned under the
-    manifest layout, partition-pruned (bucket=-1) under the legacy one."""
+    """Marker rows only (doc_ids/doc_stats payloads): the side manifest
+    lists them as a file set of their own."""
     seg_dir = f"{out_dir}/segments"
-    man = _side_manifest(seg_dir)
-    if man is not None:
-        return _read_listed(
-            spark, seg_dir, man["marker_files"], SEGMENT_SCHEMA
-        ).withColumn("bucket", F.lit(-1))
-    return read_segments(spark, out_dir).where(F.col("bucket") == -1)
-
-
-def read_segment_terms(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Posting-segment rows only (no markers), both layouts."""
-    seg_dir = f"{out_dir}/segments"
-    man = _side_manifest(seg_dir)
-    if man is not None:
-        return _read_listed(spark, seg_dir, man["files"], SEGMENT_SCHEMA).withColumn(
-            "bucket", _bucket_col(F.col("term"), man["n_buckets"])
-        )
-    return read_segments(spark, out_dir).where(F.col("bucket") >= 0)
+    return _read_listed(
+        spark, seg_dir, _side_manifest(seg_dir)["marker_files"], SEGMENT_SCHEMA
+    )
 
 
 TERMSTAT_PARTIAL_SCHEMA = T.StructType(
@@ -1725,65 +1454,36 @@ TERMSTAT_PARTIAL_SCHEMA = T.StructType(
 )
 
 
-def read_termstat_partials(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """Per-task partial term stats (written by the bucketed-strategy
-    segment pass): one tiny file per segment task with (term, field)
-    already combined within the task. Aggregating these is equivalent to
-    aggregating the segment metadata columns (sums of partial sums over
-    disjoint docid ranges) but reads ~KBs per task instead of scanning the
-    row-group-fragmented segments table. None when the segments carry no
-    partials (shuffle strategy / legacy layouts)."""
+def read_termstat_partials(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Per-task partial term stats written by the segment pass: one tiny
+    file per segment task with (term, field) already combined within the
+    task. Aggregating these is equivalent to aggregating the segment
+    metadata columns (sums of partial sums over disjoint docid ranges) but
+    reads ~KBs per task instead of scanning the row-group-fragmented
+    segments table."""
     seg_dir = f"{out_dir}/segments"
-    man = _side_manifest(seg_dir)
-    if man is None or not man.get("termstat_files"):
-        return None
     return _read_listed(
-        spark, seg_dir, man["termstat_files"], TERMSTAT_PARTIAL_SCHEMA
+        spark, seg_dir, _side_manifest(seg_dir)["termstat_files"],
+        TERMSTAT_PARTIAL_SCHEMA,
     )
 
 
-def read_packed(spark: SparkSession, out_dir: str) -> tuple[DataFrame, bool]:
-    """The packed-blocks table across both layouts. Returns (df, bucketed):
-    ``bucketed`` is True under the legacy ``bucket=<b>/`` partition layout
-    (per-bucket resume builds, pre-manifest indexes) where queries prune by
-    the bucket partition column. Under the manifest layout the pushed term
-    predicate is checked against per-row-group term min/max stats, which
-    prune only when a file holds several row groups: merge output is sorted
-    by term within each file, but a small file is one row group spanning
-    its whole term range (every file of a 2,000-file index is), so its
-    stats skip nothing and a term read opens every file."""
+def read_packed(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The packed-blocks table: exactly the files its side manifest lists.
+    The pushed term predicate is checked against per-row-group term
+    min/max stats, which prune only when a file holds several row groups:
+    merge output is sorted by term within each file, but a small file is
+    one row group spanning its whole term range (every file of a
+    2,000-file index is), so its stats skip nothing and a term read opens
+    every file."""
     pk_dir = f"{out_dir}/packed"
     man = _side_manifest(pk_dir)
-    if man is not None:
-        return _read_listed(spark, pk_dir, man["files"], PACKED_SCHEMA), False
-    return spark.read.parquet(pk_dir), True
-
-
-def observed_segment_rows(docs: DataFrame, cfg: BuildConfig, obs_name: str):
-    """The segment-stage plan shared by the batch build and streaming
-    ingest: lineage metrics (doc count + order-independent keys-xor
-    fingerprint) observed on the input scan, kernel dispatch, and marker/
-    term bucket assignment. ONE definition so the two paths can never drift
-    on what the fingerprint or the bucketing means (the streaming finalize
-    depends on byte-equal lineage semantics for its resume validation).
-
-    Returns (observation, segments_df); read ``observation.get`` only after
-    an action has consumed segments_df."""
-    from pyspark.sql import Observation
-
-    obs = Observation(obs_name)
-    observed = docs.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_docs"),
-        F.bit_xor(F.xxhash64("ext_docid")).alias("fp"),
-    )
-    segs = segment_rows(observed, cfg).withColumn(
-        "bucket",
-        F.when(F.col("term").isin(MARKER_TERMS), F.lit(-1)).otherwise(
-            _bucket_col(F.col("term"), cfg.n_buckets)
-        ),
-    )
-    return obs, segs
+    if man is None:
+        raise ValueError(
+            f"{pk_dir} has no _manifest.json: the packed table is not "
+            "committed, or predates the manifest-listed layout — rebuild"
+        )
+    return _read_listed(spark, pk_dir, man["files"], PACKED_SCHEMA)
 
 
 def _bucket_col(term_col, n_buckets: int):
@@ -1795,22 +1495,23 @@ def build_persistent_index(
     docs: DataFrame,
     cfg: BuildConfig,
     resume: bool = True,
-    fail_after_bucket: int | None = None,
     block_id_base: int = 0,
+    fail_after_step: str | None = None,
 ) -> dict:
     """Build (or resume) the on-disk index. ``docs`` must carry docid,
     ext_docid and the source columns named in cfg.fields.
-    ``fail_after_bucket`` injects a crash after that bucket commits — used by
-    the resume test only. ``block_id_base`` offsets every block id (an
-    append's delta build; 0 for an index of its own). Returns the manifest
+    ``block_id_base`` offsets every block id (an append's delta build; 0
+    for an index of its own). ``fail_after_step`` injects a crash after
+    that step — ``segments``, ``packed_written`` (packed files written,
+    side manifest not yet committed) or ``packed`` (before the stats
+    stage) — used by the resume test only. Returns the manifest
     counters."""
-    from pyspark.sql import Observation
-
     out = cfg.out_dir
+    seg_dir, pk_dir = f"{out}/segments", f"{out}/packed"
     os.makedirs(out, exist_ok=True)
     man = Manifest(os.path.join(out, "manifest.json"))
     if not resume:
-        man.data = {"stages": {}, "buckets": {}, "counters": {}, "lineage": {}}
+        man.data = {"stages": {}, "counters": {}, "lineage": {}}
 
     config_echo = _config_echo(cfg)
 
@@ -1857,77 +1558,46 @@ def build_persistent_index(
     # SAME job as Observation metrics on the input scan — zero extra jobs.
     # Keys only: content integrity is covered by the per-row sha256(content)
     # invariant in the pytest gate. doc_ids need no scan of their own either:
-    # the kernels emit per-chunk (docid, ext_docid) marker rows (bucket=-1)
-    # that the stats stage decodes.
+    # the kernel emits per-chunk (docid, ext_docid) marker rows that the
+    # stats stage decodes.
     if not man.stage_done("segments"):
         t_stage = time.time()
-        if cfg.kernel == "arrow":
-            # python-side parquet write + manifest-listed commit (see the
-            # writer section above): the index-sized binary never re-crosses
-            # the Python->JVM boundary and there is no committer rename pass.
-            # New segments invalidate any packed output a prior build left in
-            # this out_dir (incl. a stale packed _manifest.json, which would
-            # otherwise be mistaken for a completed merge on resume).
-            import shutil
+        # python-side parquet write + manifest-listed commit (see the writer
+        # section above): the index-sized binary never re-crosses the
+        # Python->JVM boundary and there is no committer rename pass. New
+        # segments invalidate any packed output a prior build left in this
+        # out_dir (incl. a stale packed _manifest.json, which would
+        # otherwise be mistaken for a completed merge on resume).
+        shutil.rmtree(seg_dir, ignore_errors=True)
+        shutil.rmtree(pk_dir, ignore_errors=True)
+        os.makedirs(seg_dir)
+        obs = Observation("lineage")
+        observed = docs.observe(
+            obs,
+            F.count(F.lit(1)).alias("n_docs"),
+            F.bit_xor(F.xxhash64("ext_docid")).alias("fp"),
+        )
+        wrows = _segment_writer_rows(observed, cfg, seg_dir).collect()
 
-            seg_dir = f"{out}/segments"
-            shutil.rmtree(seg_dir, ignore_errors=True)
-            shutil.rmtree(f"{out}/packed", ignore_errors=True)
-            os.makedirs(seg_dir)
-            from pyspark.sql import Observation
+        def listed(kind: str) -> list:
+            return sorted(r["file"] for r in wrows if r["kind"] == kind)
 
-            obs = Observation("lineage")
-            observed = docs.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_docs"),
-                F.bit_xor(F.xxhash64("ext_docid")).alias("fp"),
-            )
-            wrows = _segment_writer_rows(observed, cfg, seg_dir).collect()
-            seg_man = {
+        _write_side_manifest(
+            seg_dir,
+            {
                 "format": 1,
                 "n_buckets": cfg.n_buckets,
-                "files": sorted(
-                    r["file"] for r in wrows if r["kind"] == "terms"
-                ),
-                "marker_files": sorted(
-                    r["file"] for r in wrows if r["kind"] == "markers"
-                ),
-            }
-            if cfg.merge_strategy == "bucketed":
-                # the strategy is a property of the segments AS WRITTEN —
-                # the merge phase dispatches on these keys, so a resume (or
-                # a differently-configured process) can never shuffle-merge
-                # segments that were bucket-routed or vice versa
-                seg_man["merge_buckets"] = cfg.merge_buckets
-                seg_man["rg_buckets"] = {
+                "merge_buckets": cfg.merge_buckets,
+                "files": listed("terms"),
+                "marker_files": listed("markers"),
+                "termstat_files": listed("termstats"),
+                "rg_buckets": {
                     r["file"]: json.loads(r["extra"])
                     for r in wrows
-                    if r["kind"] == "terms" and r["extra"]
-                }
-                seg_man["termstat_files"] = sorted(
-                    r["file"] for r in wrows if r["kind"] == "termstats"
-                )
-            _write_side_manifest(seg_dir, seg_man)
-        else:
-            # python reference kernel: JVM partitioned write (the layout the
-            # streaming ingest also uses); map-side partitionBy, no shuffle.
-            # This path has no bucket router, so a configured bucketed merge
-            # strategy cannot apply — say so instead of silently dropping it
-            # (the merge phase dispatches on the side manifest and will
-            # correctly fall back to the shuffle merge).
-            if cfg.merge_strategy == "bucketed":
-                import warnings
-
-                warnings.warn(
-                    "merge_strategy='bucketed' requires kernel='arrow'; the "
-                    f"python kernel writes unrouted segments, so this build "
-                    "falls back to the shuffle merge",
-                    stacklevel=2,
-                )
-            obs, segs = observed_segment_rows(docs, cfg, "lineage")
-            segs.write.mode("overwrite").partitionBy("bucket").parquet(
-                f"{out}/segments"
-            )
+                    if r["kind"] == "terms"
+                },
+            },
+        )
         m = obs.get
         n_docs = int(m["n_docs"])
         fp = f"{m['fp']:x}" if n_docs else "empty"
@@ -1937,19 +1607,19 @@ def build_persistent_index(
             docs_tokenized=n_docs,
             segments_sec=round(time.time() - t_stage, 2),
         )
-
-    import threading
+    if fail_after_step == "segments":
+        raise RuntimeError("injected failure after step segments")
 
     man_lock = threading.Lock()
 
     # ---- stage: doc_ids + doc_stats + term_stats + corpus_stats ---------
-    # Three small independent writes over the segments table, submitted
-    # CONCURRENTLY (Spark schedules the jobs side by side): doc_ids and
-    # doc_stats decode only the marker rows (their own file set / partition),
-    # term_stats aggregates segment metadata columns. Corpus aggregates and
-    # row counts ride the writes as Observation metrics — no read-back jobs.
-    # Deferred into a closure so the fresh-build path can OVERLAP this stats
-    # barrier with the merge job (they read disjoint segment file sets).
+    # Three small independent writes, submitted CONCURRENTLY (Spark
+    # schedules the jobs side by side): doc_ids and doc_stats decode only
+    # the marker rows (their own file set), term_stats aggregates the
+    # per-task partials. Corpus aggregates and row counts ride the writes
+    # as Observation metrics — no read-back jobs. Deferred into a closure so
+    # this stats barrier can OVERLAP the merge job (they read disjoint
+    # segment file sets).
     def run_stats() -> None:
         t_stage = time.time()
         markers = read_segment_markers(spark, out)
@@ -2031,32 +1701,20 @@ def build_persistent_index(
             )
 
         def write_term_stats():
-            parts = read_termstat_partials(spark, out)
-            if parts is not None:
-                src = parts.groupBy("term", "field").agg(
+            (
+                read_termstat_partials(spark, out)
+                .groupBy("term", "field")
+                .agg(
                     F.sum("df").cast("long").alias("df"),
                     F.sum("ctf").cast("long").alias("ctf"),
                 )
-            else:
-                src = (
-                    read_segment_terms(spark, out)
-                    .groupBy("term", "field")
-                    .agg(
-                        F.sum("n").cast("long").alias("df"),
-                        F.sum("ctf_part").cast("long").alias("ctf"),
-                    )
-                )
-            (
-                src
                 .withColumn("bucket", _bucket_col(F.col("term"), cfg.n_buckets))
                 .observe(ts_obs, F.count(F.lit(1)).alias("n"))
                 .write.mode("overwrite")
                 .parquet(f"{out}/term_stats")
             )
 
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-
-        with _TPE(max_workers=3) as pool:
+        with ThreadPoolExecutor(max_workers=3) as pool:
             futs = [
                 pool.submit(f)
                 for f in (write_doc_stats, write_doc_ids, write_term_stats)
@@ -2078,211 +1736,79 @@ def build_persistent_index(
 
     # max docid for range salting (from lineage — docids are dense 1..N)
     max_docid = int(man.data["lineage"]["n_docs"])
-    n_salts = cfg.n_salts
     threshold = cfg.salt_threshold
-    block_size = cfg.block_size
-
-    # ---- per-bucket packed postings build (segment MERGE phase) ---------
-    merge_partition = _merge_kernel(
-        cfg.merge_kernel, n_salts, max_docid, block_size,
-        cfg.merge_chunk_postings, block_id_base,
-    )
-    # merge parallelism: partitions hold complete (term,field,salt) groups
-    # (repartition hashes the full group key); sized to ~2 waves per core
-    # locally — at cluster scale set it to segment-bytes / ~128MB
-    merge_parts = cfg.merge_partitions or max(
-        2 * spark.sparkContext.defaultParallelism, cfg.n_buckets
-    )
-
-    from concurrent.futures import ThreadPoolExecutor
 
     # heavy terms collected ONCE (tiny: df > threshold can only be a handful
-    # of stopword-grade terms); shipped to every bucket job as an isin list
-    # instead of a per-bucket broadcast-join sub-job. Computed from the
-    # segment METADATA columns (sum of per-segment df parts), NOT from
-    # term_stats — the merge must not wait on the stats stage it overlaps.
-    # df never exceeds the doc count, so a build of at most `threshold`
-    # docs (a small append's delta) has no heavy term and runs no job here.
+    # of stopword-grade terms) and shipped to the merge tasks as a list.
+    # Computed from the term-stat partials, NOT from term_stats — the merge
+    # must not wait on the stats stage it overlaps. df never exceeds the doc
+    # count, so a build of at most `threshold` docs (a small append's delta)
+    # has no heavy term and runs no job here.
     heavy_terms: list = []
-    if max_docid > threshold:
-        _ts_parts = read_termstat_partials(spark, out)
-        if _ts_parts is not None:
-            heavy_src = _ts_parts.groupBy("term", "field").agg(
-                F.sum("df").alias("df")
-            )
-        else:
-            heavy_src = (
-                read_segment_terms(spark, out)
-                .groupBy("term", "field")
-                .agg(F.sum("n").alias("df"))
-            )
+    if max_docid > threshold and not man.stage_done("packed"):
         heavy_terms = [
             r["term"]
-            for r in heavy_src.where(F.col("df") > threshold)
+            for r in read_termstat_partials(spark, out)
+            .groupBy("term", "field")
+            .agg(F.sum("df").alias("df"))
+            .where(F.col("df") > threshold)
             .select("term")
             .distinct()
             .collect()
         ]
 
-    def build_bucket(b: int) -> int:
-        """One bucket: partition-pruned segments read, heavy terms exploded
-        to their overlapping salt ranges (JVM-side), one applyInPandas
-        merge per (term, field, salt), idempotent overwrite. Reads the
-        segments ROOT with a bucket filter (partition pruning gives the same
-        single-directory scan) — reading `bucket={b}` directly raised when no
-        term hashed to bucket b (ADVICE r01); an empty bucket now just writes
-        an empty packed partition."""
-        part = (
-            read_segments(spark, out)
-            .where(F.col("bucket") == b)
-            .drop("bucket")
-        )
-        salted = (
-            F.col("term").isin(heavy_terms) if heavy_terms else F.lit(False)
-        )
-        # a segment spanning a salt boundary goes to every salt it overlaps;
-        # the merge kernel filters decoded docids to the salt's exact range,
-        # so salt spans stay disjoint. INTEGER division (div) on both sides
-        # — a double-division salt could round differently from numpy's //
-        # at large docids and strand postings at salt boundaries.
-        salt_lo = F.expr(f"(min_docid * {n_salts}) div {max_docid + 1}").cast("int")
-        salt_hi = F.expr(f"(max_docid * {n_salts}) div {max_docid + 1}").cast("int")
-        joined = (
-            part.withColumn("salted", salted)
-            .withColumn(
-                "salt",
-                F.explode(
-                    F.when(F.col("salted"), F.sequence(salt_lo, salt_hi)).otherwise(
-                        F.array(F.lit(0))
-                    )
-                ),
-            )
-        )
-        packed = joined.repartition(
-            max(merge_parts // cfg.n_buckets, 2), "term", "field", "salt"
-        ).mapInArrow(merge_partition, PACKED_SCHEMA)
-        packed.write.mode("overwrite").parquet(f"{out}/packed/bucket={b}")
-        return 0
-
-    t_buckets = time.time()
-    fresh_blocks: int | None = None
-
-    todo = [b for b in range(cfg.n_buckets) if not man.bucket_done(b)]
-    fresh = fail_after_bucket is None and len(todo) == cfg.n_buckets
-
     # ---- stats ∥ merge ---------------------------------------------------
-    # The stats jobs read only marker files + segment metadata columns; the
-    # merge reads the term binaries — disjoint inputs, no ordering edge. On
-    # the fresh path the stats barrier (a serial 1-2 s slice of the r02
-    # executor-cluster tail) therefore OVERLAPS the merge job instead of
-    # preceding it. Resume paths keep the sequential order (cheap and rare).
+    # The stats jobs read only marker files + term-stat partials; the merge
+    # reads the term rows — disjoint inputs, no ordering edge. The stats
+    # barrier therefore OVERLAPS the merge job instead of preceding it. An
+    # injected failure runs them in sequence, merge first, so every crash
+    # point of the resume test is deterministic.
     stats_pool = stats_fut = None
-    if not man.stage_done("stats"):
-        if fresh:
-            stats_pool = ThreadPoolExecutor(max_workers=1)
-            stats_fut = stats_pool.submit(run_stats)
-        else:
+    if not man.stage_done("stats") and fail_after_step is None:
+        stats_pool = ThreadPoolExecutor(max_workers=1)
+        stats_fut = stats_pool.submit(run_stats)
+    try:
+        if not man.stage_done("packed"):
+            t_merge = time.time()
+            pk_man = _side_manifest(pk_dir)
+            if pk_man is None:
+                # nothing committed: files a crashed attempt wrote here are
+                # orphans, cleared so the committed set is this merge's alone
+                shutil.rmtree(pk_dir, ignore_errors=True)
+                os.makedirs(pk_dir)
+                wfiles = _bucketed_merge(
+                    spark, seg_dir, _side_manifest(seg_dir), pk_dir,
+                    heavy_terms, cfg.n_salts, max_docid, cfg.block_size,
+                    cfg.merge_chunk_postings, block_id_base,
+                )
+                if fail_after_step == "packed_written":
+                    raise RuntimeError("injected failure after step packed_written")
+                pk_man = {
+                    "format": 1,
+                    "n_buckets": cfg.n_buckets,
+                    "files": sorted(f for f, _ in wfiles),
+                    "total_rows": int(sum(n for _, n in wfiles)),
+                }
+                _write_side_manifest(pk_dir, pk_man)
+            # else: a crash landed between the side-manifest commit and this
+            # mark — the packed files ARE committed, only the mark is missing
+            with man_lock:
+                man.mark_stage(
+                    "packed",
+                    total_blocks=pk_man["total_rows"],
+                    blocks_written=pk_man["total_rows"],
+                    buckets_sec=round(time.time() - t_merge, 2),
+                )
+        if fail_after_step == "packed":
+            raise RuntimeError("injected failure after step packed")
+        if not man.stage_done("stats") and stats_fut is None:
             run_stats()
-
-    if fresh:
-        # fresh build: ONE merge job over every bucket. Dispatch on the
-        # segment side manifest: bucketed-routed segments merge SHUFFLE-FREE
-        # (one python task per merge bucket reads its co-located files
-        # directly — see _bucketed_merge); otherwise a single shuffle by
-        # (term, field, salt). Per-bucket jobs (the resume path below) would
-        # pay n_buckets x job-orchestration overhead for identical output.
-        # The packed files are written python-side (groups sorted by term so
-        # row-group min/max stats prune query scans) and committed by
-        # manifest listing.
-        pk_dir = f"{out}/packed"
-        os.makedirs(pk_dir, exist_ok=True)
-        seg_man_d = _side_manifest(f"{out}/segments") or {}
-        if seg_man_d.get("merge_buckets"):
-            wfiles = _bucketed_merge(
-                spark, f"{out}/segments", seg_man_d, pk_dir, heavy_terms,
-                n_salts, max_docid, block_size, cfg.merge_kernel,
-                cfg.merge_chunk_postings, block_id_base,
-            )
-        else:
-            segs_all = read_segment_terms(spark, out).drop("bucket")
-            salted = (
-                F.col("term").isin(heavy_terms) if heavy_terms else F.lit(False)
-            )
-            salt_lo = F.expr(f"(min_docid * {n_salts}) div {max_docid + 1}").cast("int")
-            salt_hi = F.expr(f"(max_docid * {n_salts}) div {max_docid + 1}").cast("int")
-            joined = segs_all.withColumn("salted", salted).withColumn(
-                "salt",
-                F.explode(
-                    F.when(F.col("salted"), F.sequence(salt_lo, salt_hi)).otherwise(
-                        F.array(F.lit(0))
-                    )
-                ),
-            )
-            part_df = joined.repartition(merge_parts, "term", "field", "salt")
-            wfiles = [
-                (r["file"], r["rows"])
-                for r in _packed_writer_rows(
-                    part_df, n_salts, max_docid, block_size, pk_dir,
-                    cfg.merge_kernel, cfg.merge_chunk_postings, block_id_base,
-                ).collect()
-            ]
-        _write_side_manifest(
-            pk_dir,
-            {
-                "format": 1,
-                "n_buckets": cfg.n_buckets,
-                "files": sorted(f for f, _ in wfiles),
-                "total_rows": int(sum(n for _, n in wfiles)),
-            },
-        )
-        fresh_blocks = int(sum(n for _, n in wfiles))
-        with man_lock:
-            for b in todo:
-                man.mark_bucket(b)
-        todo = []
-
-    # resume path: buckets build concurrently (Spark schedules the jobs side
-    # by side); each commits independently -> per-bucket resume granularity.
-    if fail_after_bucket is not None:
-        # deterministic sequential mode for the failure-injection test
-        for b in todo:
-            build_bucket(b)
-            man.mark_bucket(b)
-            if b >= fail_after_bucket:
-                raise RuntimeError(f"injected failure after bucket {b}")
-    elif todo:
-        with ThreadPoolExecutor(max_workers=min(8, len(todo))) as pool:
-            for b, _ in zip(todo, pool.map(build_bucket, todo)):
-                with man_lock:
-                    man.mark_bucket(b)
-
-    if not man.stage_done("packed"):
-        # fresh path counted rows off the writer manifest; a crash between
-        # the side-manifest commit and this mark reads the count back from
-        # it; the (rare) per-bucket resume path pays one parquet count
-        if fresh_blocks is not None:
-            total_blocks = fresh_blocks
-        else:
-            pk_man = _side_manifest(f"{out}/packed")
-            total_blocks = (
-                int(pk_man["total_rows"])
-                if pk_man is not None
-                else spark.read.parquet(f"{out}/packed").count()
-            )
-        with man_lock:
-            man.mark_stage(
-                "packed",
-                total_blocks=total_blocks,
-                blocks_written=total_blocks,
-                buckets_sec=round(time.time() - t_buckets, 2),
-            )
-
-    # join the overlapped stats job (exceptions propagate here)
+    finally:
+        # a failed merge must not leave the stats jobs writing behind it
+        if stats_pool is not None:
+            stats_pool.shutdown(wait=True)
     if stats_fut is not None:
-        try:
-            stats_fut.result()
-        finally:
-            stats_pool.shutdown(wait=False)
+        stats_fut.result()  # the overlapped stats job's exception, if any
     return dict(man.data["counters"], **man.data["lineage"])
 
 
@@ -2322,20 +1848,19 @@ class DriverReads:
     def dataset(self, name: str):
         """pyarrow dataset over one table of the index. ``packed`` lists
         exactly the side-manifest files (uncommitted orphans stay invisible,
-        the contract read_packed gives Spark), or discovers the legacy
-        bucket=<b>/ hive layout; None when the manifest lists no file. The
-        dataset object keeps parsed footers, so it is built once."""
+        the contract read_packed gives Spark); None when the manifest lists
+        no file. The dataset object keeps parsed footers, so it is built
+        once."""
         import pyarrow.dataset as pads
 
         with self._lock:
             if name not in self._datasets:
                 path = os.path.join(self.dir, name)
-                man = _side_manifest(path) if name == "packed" else None
-                if man is not None:
-                    files = [os.path.join(path, n) for n in man["files"]]
+                if name == "packed":
+                    files = [
+                        os.path.join(path, n) for n in _side_manifest(path)["files"]
+                    ]
                     dset = pads.dataset(files, format="parquet") if files else None
-                elif name == "packed":
-                    dset = pads.dataset(path, format="parquet", partitioning="hive")
                 else:
                     dset = pads.dataset(path, format="parquet")
                 self._datasets[name] = dset
@@ -2467,7 +1992,7 @@ class DriverReads:
 
 class PackedIndex(IndexTables):
     """IndexTables over the persisted layout: term scans decode packed
-    varint blocks (bucket-pruned parquet read + Arrow-batched numpy decode);
+    varint blocks (term-pruned parquet read + Arrow-batched numpy decode);
     block-max metadata reads touch only the small plain columns. ``reads``
     is the driver's own pyarrow view of the same files (DriverReads)."""
 
@@ -2487,7 +2012,7 @@ class PackedIndex(IndexTables):
         self.n_buckets = int(man.data["lineage"]["n_buckets"])
         # block size drives the query-side pruning gate (runner._pruned_topk)
         self.block_size = int(man.data["lineage"].get("block_size", BLOCK_SIZE))
-        packed, self._bucketed = read_packed(spark, out_dir)
+        packed = read_packed(spark, out_dir)
         # live-docs tombstones (index/deletes.py): corpus.n_docs is the LIVE
         # count (Lucene numDocs semantics — QryopSlScore.java:118); per-field
         # sums and df/ctf stay stale until compaction, like Lucene's
@@ -2554,16 +2079,10 @@ class PackedIndex(IndexTables):
     def _pairs_cond(self, pairs):
         from functools import reduce
 
-        def one(t, f):
-            cond = (F.col("term") == t) & (F.col("field") == f)
-            if self._bucketed:
-                # legacy layout: the bucket partition column prunes files;
-                # the manifest layout has only row-group term stats, which
-                # prune only multi-row-group files (see read_packed)
-                cond = (F.col("bucket") == _py_bucket(t, self.n_buckets)) & cond
-            return cond
-
-        return reduce(lambda a, b: a | b, [one(t, f) for t, f in pairs])
+        return reduce(
+            lambda a, b: a | b,
+            [(F.col("term") == t) & (F.col("field") == f) for t, f in pairs],
+        )
 
     # -- decode scan -------------------------------------------------------
     def postings_for(
@@ -2577,7 +2096,7 @@ class PackedIndex(IndexTables):
         """(term, field) pairs -> postings-shaped DataFrame
         (term, field, docid, tf, doclen[, positions], df, ctf).
 
-        The parquet scan is pruned to the terms' buckets; decode is an
+        The parquet scan is pruned to the terms' row groups; decode is an
         Arrow-batched numpy loop (no per-row Python). ``block_filter``
         (term, field, salt, block_id) DataFrame restricts to surviving
         blocks via a broadcast join; ``block_keys`` is the same restriction
@@ -2678,17 +2197,9 @@ class PackedIndex(IndexTables):
         decoded = self._live(scan.mapInPandas(decode_iter, out_schema))
         # df/ctf ride in via broadcast join with term_stats (tiny per query)
         st = self.term_stats.where(
-            self._stats_cond(pairs)
+            self._pairs_cond(pairs)
         ).select("term", "field", "df", "ctf")
         return decoded.join(F.broadcast(st), ["term", "field"])
-
-    def _stats_cond(self, pairs):
-        from functools import reduce
-
-        return reduce(
-            lambda a, b: a | b,
-            [(F.col("term") == t) & (F.col("field") == f) for t, f in pairs],
-        )
 
     def term_postings(self, term: str, fld: str) -> DataFrame:
         return self.postings_for([(term, fld)], with_positions=True)
@@ -2773,13 +2284,3 @@ class PackedIndex(IndexTables):
                     yield pd.DataFrame(empty)
 
         return self._live(scan.mapInPandas(decode_iter, T.StructType(out_fields)))
-
-
-def _py_bucket(term: str, n_buckets: int) -> int:
-    """Driver-side xxhash64 bucket — equals ``pmod(F.xxhash64(term), B)``
-    bit-for-bit (pure-Python XXH64 from the public spec, equality asserted in
-    tests/test_index_format.py). No Spark job runs: a cold k-term query pays
-    zero extra driver round-trips (VERDICT r01 item 8)."""
-    from search_engine_spark.index.xxhash import xxhash64_str
-
-    return xxhash64_str(term) % n_buckets

@@ -61,15 +61,9 @@ def get_spark(
         # forward-index kernels expand each doc ~300x: small Arrow batches
         # keep per-worker pandas frames bounded (large batches thrash RAM)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2000")
-        # task-side commit (v2): partitioned writes produce tasks x buckets
-        # files; v1's driver-side sequential rename pass serializes the tail
-        # of every write stage
+        # task-side commit (v2): v1's driver-side sequential rename pass
+        # serializes the tail of every JVM write stage
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-        # keep one writer per partition-dir open instead of sort-based
-        # dynamic-partition writing: the segment pass writes n_buckets dirs
-        # per task, and the implicit sort re-buffered the whole (binary-
-        # heavy) task output before writing
-        .config("spark.sql.maxConcurrentOutputFileWriters", "32")
         # zstd shuffle/broadcast/spill compression: the merge stage moves the
         # whole segment stream (~63% of corpus bytes) through the shuffle, and
         # on the 4x1-core executor harness it is bandwidth-bound, not

@@ -1,4 +1,1 @@
-from search_engine_spark.streaming.ingest import (  # noqa: F401
-    finalize_stream_index,
-    stream_ingest,
-)
+from search_engine_spark.streaming.ingest import stream_ingest  # noqa: F401

@@ -1,6 +1,7 @@
-"""Structured-Streaming corpus ingestion: new document files become index
-SEGMENTS incrementally; one finalize call merges them into the same packed
-index the batch build produces.
+"""Structured-Streaming corpus ingestion: every micro-batch of new document
+files becomes a committed part of the packed index — the first batch is a
+build, each later batch an append — so streamed documents are queryable as
+soon as their batch returns.
 
 The reference is strictly batch (SURVEY.md §2.12 — one process, one pass),
 so this surface has no reference twin; it exists because a web-scale corpus
@@ -9,24 +10,17 @@ table and must index documents as they land, without re-tokenizing the
 ever-growing history. Spark-first shape:
 
     readStream (file source, exactly-once file tracking via the checkpoint)
-      -> foreachBatch:  docid assignment (dense, monotonic across batches)
-                        -> the SAME segment kernel as the batch build
-                        -> idempotent per-batch segment write
-    ... stream runs / restarts / crashes ...
-    finalize_stream_index(): lineage from the per-batch manifest entries,
-                        then build_persistent_index() with the segment
-                        stage already satisfied -> stats + salted merge.
+      -> foreachBatch:  docid assignment (dense, continuing the index)
+                        -> batch 0: build_persistent_index
+                           later:   append_to_index (O(batch), index/append.py)
 
-Exactly-once without a transactional sink: each micro-batch writes its
-segments under ``segments/batch=<id>/`` with mode("overwrite") — a replayed
-batch (file-source replays are identical by construction) overwrites its own
-directory and nothing else. The manifest records per-batch
-``{base docid, n_docs, keys-fingerprint}``; a replay of a recorded batch
-reuses its recorded docid base, so docids stay stable across crash/restart.
-The per-batch keys-fingerprints XOR together into the same order-independent
-lineage fingerprint the batch build computes in one pass (xor is
-associative/commutative), so ``build_persistent_index``'s resume validation
-accepts a streamed segment stage exactly as if it had built it itself.
+Exactly-once without a transactional sink: before any write, the manifest
+records the batch as ``{generation, base docid}`` (generation 0 is the
+build, g ≥ 1 the g-th append). A replayed batch (file-source replays are
+identical by construction) whose generation committed is a no-op; one whose
+generation did not commit resumes it at its first unfinished step — the
+build and the append are both resumable by step and validate the input
+fingerprint, so a replay cannot mix two batches' documents.
 
 Equivalence to the batch build is asserted in tests/test_streaming.py on the
 query-visible surface (term_stats, corpus stats, doclens and BM25 top-k by
@@ -37,98 +31,72 @@ EXTERNAL id): internal docids may differ (arrival order vs global key rank)
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from search_engine_spark.corpus import CODE_DOC_SCHEMA, with_docids
+from search_engine_spark.index.append import append_to_index
 from search_engine_spark.index.persist import (
     BuildConfig,
     Manifest,
-    _config_echo,
     build_persistent_index,
 )
 
 
-def _stream_state(man: Manifest) -> dict:
-    return man.data.setdefault(
-        "stream", {"next_docid_base": 0, "batches": {}, "ingest_sec": 0.0}
-    )
+def _committed(man: Manifest, generation: int) -> bool:
+    if generation == 0:
+        return man.stage_done("packed") and man.stage_done("stats")
+    return man.stage_done(f"append{generation}:commit")
 
 
 def ingest_batch(batch_df: DataFrame, batch_id: int, cfg: BuildConfig) -> None:
-    """One micro-batch -> segment files under segments/batch=<id>/ +
-    a manifest entry. Safe to replay: the write overwrites only this
-    batch's directory and a recorded batch reuses its recorded docid base."""
-    from search_engine_spark.index.persist import observed_segment_rows
-
-    out = cfg.out_dir
-    os.makedirs(out, exist_ok=True)
-    man = Manifest(os.path.join(out, "manifest.json"))
-    if man.stage_done("segments"):
-        raise RuntimeError(
-            f"index at {out} is already finalized; streaming into a "
-            "finalized index requires a fresh out_dir"
-        )
-    st = _stream_state(man)
-    # a segments dir with NO stream state is a partial BATCH build
-    # (bucket=*/ layout): streaming batch=*/ dirs next to it would poison
-    # partition discovery at finalize — refuse up front, near the cause
-    if not st["batches"] and os.path.exists(os.path.join(out, "segments")):
-        raise RuntimeError(
-            f"{out}/segments exists but holds no streamed batches — it is a "
-            "partial batch build; stream into a fresh out_dir (or finish/"
-            "remove the batch build)"
-        )
-    # config drift across drains silently mixes incompatible segments
-    # (different tokenizer/bucketing per batch, one winner stamped into
-    # lineage at finalize) — record the echo on the first batch, compare on
-    # every later one
-    echo = _config_echo(cfg)
-    recorded = st.setdefault("config", echo)
-    if recorded != echo:
-        mism = {k for k in echo if recorded.get(k) != echo[k]}
-        raise ValueError(
-            f"stream config mismatch vs first drain at {man.path}: "
-            + ", ".join(
-                f"{k}: recorded={recorded.get(k)!r} now={echo[k]!r}"
-                for k in sorted(mism)
-            )
-            + " — use a fresh out_dir for a different BuildConfig"
-        )
+    """One micro-batch -> one committed index generation (a build for the
+    first batch, an append after it) + a manifest entry. Safe to replay: a
+    committed batch is skipped and an uncommitted one resumes its recorded
+    generation with its recorded docid base."""
+    man = Manifest(os.path.join(cfg.out_dir, "manifest.json"))
+    batches = man.data.setdefault("stream", {"batches": {}})["batches"]
     key = str(batch_id)
-    prior = st["batches"].get(key)
-    base = prior["base"] if prior else st["next_docid_base"]
+    rec = batches.get(key)
+    if rec is not None and _committed(man, rec["generation"]):
+        return
+    unfinished = [
+        k for k, b in batches.items() if not _committed(man, b["generation"])
+    ]
+    if rec is None and unfinished:
+        raise RuntimeError(
+            f"stream batch {unfinished[0]} at {cfg.out_dir} has not committed; "
+            f"replay it before batch {batch_id}"
+        )
+    if rec is None:
+        if batch_df.isEmpty():
+            return
+        lin = man.data["lineage"]
+        if batches or man.stage_done("packed"):
+            rec = {
+                "generation": len(lin.get("appends", [])) + 1,
+                "base": int(lin["n_docs"]),
+            }
+        else:
+            rec = {"generation": 0, "base": 0}
+        batches[key] = rec
+        os.makedirs(cfg.out_dir, exist_ok=True)
+        man._flush()
 
-    t0 = time.time()
-    # dense docids 1..n within the batch, shifted to continue the stream;
-    # ext ids / natural keys are identical to the batch ingest path
-    docs0 = with_docids(batch_df)
-    docs = docs0
-    if base:
-        docs = docs.withColumn("docid", (F.col("docid") + F.lit(base)).cast("long"))
-
-    obs, segs = observed_segment_rows(docs, cfg, f"stream_lineage_{batch_id}")
-    segs.write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{out}/segments/batch={batch_id}"
-    )
-    # release the docid-assignment cache now instead of waiting for the
-    # context cleaner — a long stream would otherwise pin one cached copy
-    # of every batch's corpus
-    part = getattr(docs0, "_persisted_part", None)
-    if part is not None:
-        part.unpersist()
-    m = obs.get
-    n = int(m["n_docs"])
-    st["batches"][key] = {
-        "base": base,
-        "n_docs": n,
-        "fp_xor": int(m["fp"]) if n else 0,
-    }
-    st["next_docid_base"] = max(st["next_docid_base"], base + n)
-    st["ingest_sec"] = round(st["ingest_sec"] + time.time() - t0, 2)
-    man._flush()
+    # dense docids continuing the index; ext ids / natural keys are
+    # identical to the batch ingest path
+    spark = batch_df.sparkSession
+    docs = with_docids(batch_df, base=rec["base"])
+    try:
+        if rec["generation"] == 0:
+            build_persistent_index(spark, docs, cfg, resume=True)
+        else:
+            append_to_index(spark, docs, cfg)
+    finally:
+        # release the docid-assignment cache now instead of waiting for the
+        # context cleaner — a long stream would otherwise pin one cached
+        # copy of every batch's corpus
+        docs._persisted_part.unpersist()
 
 
 def stream_ingest(
@@ -141,10 +109,10 @@ def stream_ingest(
     await_termination: bool = True,
 ):
     """Ingest every parquet file under ``input_path`` (and any that arrive
-    while the stream runs) into index segments. With the default
-    availableNow trigger the stream drains the current backlog and stops —
-    the incremental-batch analog of one build invocation; rerunning later
-    picks up only NEW files (the checkpoint tracks processed ones).
+    while the stream runs) into the index. With the default availableNow
+    trigger the stream drains the current backlog and stops — the
+    incremental-batch analog of one build invocation; rerunning later picks
+    up only NEW files (the checkpoint tracks processed ones).
 
     At cluster scale the same call tails an arrival bucket/table with a
     processingTime trigger; nothing in the batch function is trigger-aware.
@@ -165,65 +133,3 @@ def stream_ingest(
     if await_termination:
         q.awaitTermination()
     return q
-
-
-def finalize_stream_index(
-    spark: SparkSession, cfg: BuildConfig, docs_for_validation: DataFrame | None = None
-) -> dict:
-    """Promote the streamed segments to a complete packed index: fold the
-    per-batch lineage into the stage-level lineage the batch build records,
-    then run the normal stats + salted-merge phases (build_persistent_index
-    sees the segment stage as done and validates the lineage the usual way).
-
-    ``docs_for_validation``: any DataFrame carrying the corpus's
-    ``ext_docid`` column (e.g. the ingested files re-read); defaults to the
-    streamed doc_ids reconstructed from the manifest-recorded fingerprint —
-    i.e. validation trusts the stream's own lineage. Pass the source table
-    to cross-check stream completeness against it.
-    """
-    man = Manifest(os.path.join(cfg.out_dir, "manifest.json"))
-    st = man.data.get("stream")
-    if not st or not st["batches"]:
-        raise ValueError(f"no streamed batches recorded at {cfg.out_dir}")
-    rec = st.get("config")
-    if rec is not None and rec != _config_echo(cfg):
-        raise ValueError(
-            f"finalize config differs from the streamed drains' config at "
-            f"{man.path}: recorded={rec!r} now={_config_echo(cfg)!r}"
-        )
-    if not man.stage_done("segments"):
-        n_docs = sum(b["n_docs"] for b in st["batches"].values())
-        fp_xor = 0
-        for b in st["batches"].values():
-            if b["n_docs"]:
-                fp_xor ^= b["fp_xor"]
-        # the batch build formats the xor'd SIGNED long with :x (negative ->
-        # leading minus); reproduce that exactly or resume validation would
-        # reject a correct stream half the time
-        v = fp_xor & (2**64 - 1)
-        signed = v - 2**64 if v >= 2**63 else v
-        fp = f"{signed:x}" if n_docs else "empty"
-        man.set_lineage(n_docs=n_docs, input_fingerprint=fp, **_config_echo(cfg))
-        man.mark_stage(
-            "segments",
-            docs_tokenized=n_docs,
-            segments_sec=st["ingest_sec"],
-            streamed_batches=len(st["batches"]),
-        )
-    if docs_for_validation is None:
-        # self-consistent validation frame: n_docs rows whose ext-id xor
-        # equals the recorded fingerprint cannot be synthesized without the
-        # ids, so validate against the stream's own marker rows
-        from search_engine_spark.index.persist import read_segments, DOCIDS_MARKER
-
-        markers = read_segments(spark, cfg.out_dir).where(
-            (F.col("bucket") == -1) & (F.col("term") == DOCIDS_MARKER)
-        )
-        docs_for_validation = (
-            markers.select(
-                F.explode(F.split(F.decode("positions", "UTF-8"), "\x00")).alias(
-                    "ext_docid"
-                )
-            )
-        )
-    return build_persistent_index(spark, docs_for_validation, cfg, resume=True)

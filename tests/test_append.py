@@ -27,7 +27,7 @@ def _cfg(out: str) -> BuildConfig:
     # and hit salted terms (mixed salt bases across generations)
     return BuildConfig(
         out_dir=out, fields=FIELDS, tokenizer=CODE_TOKENIZER,
-        n_buckets=4, merge_partitions=4, block_size=16,
+        n_buckets=4, block_size=16,
         salt_threshold=60, n_salts=4,
     )
 

@@ -45,7 +45,7 @@ def _query_terms(pristine) -> list[str]:
 def _cfg(out: str) -> BuildConfig:
     return BuildConfig(
         out_dir=out, fields=FIELDS, tokenizer=CODE_TOKENIZER,
-        n_buckets=4, merge_partitions=4, block_size=16,
+        n_buckets=4, block_size=16,
     )
 
 

@@ -30,7 +30,7 @@ def appended(spark, code_docs, tmp_path_factory):
     generations, so their blocks sit in base and delta files."""
     out = str(tmp_path_factory.mktemp("readidx") / "v1")
     cfg = BuildConfig(
-        out_dir=out, n_buckets=4, merge_partitions=4, block_size=8,
+        out_dir=out, n_buckets=4, block_size=8,
         salt_threshold=30, n_salts=4, fields={"body": "content"},
         tokenizer=CODE_TOKENIZER,
     )

@@ -168,7 +168,8 @@ def test_build_counters_and_lineage(built, code_docs):
     assert counters["docs_tokenized"] == code_docs.count()
     assert counters["blocks_written"] > 0
     man = Manifest(os.path.join(out, "manifest.json"))
-    assert len(man.data["buckets"]) == cfg.n_buckets
+    assert all(man.stage_done(s) for s in ("segments", "packed", "stats"))
+    assert man.data["stages"]["packed"]["blocks_written"] == counters["blocks_written"]
     assert man.data["lineage"]["input_fingerprint"]
 
 
@@ -246,9 +247,12 @@ def _dir_fingerprint(root: str) -> dict:
 
 
 def test_resume_after_injected_failure(spark, code_docs, tmp_path_factory):
-    """Kill the build after bucket 1, resume, assert the final index equals a
-    never-failed build bit-for-bit (per-table content hashes) and counters
-    cover all buckets."""
+    """Kill the build at each of its commit points, resume, and assert the
+    final index equals a never-failed build bit-for-bit (per-table content
+    hashes over every parquet file in the table dirs, so orphans of the
+    crashed merge would show). Crash points: after the segments stage;
+    after the packed files are written but before their side manifest
+    commits; after the packed mark but before the stats stage."""
     base = tmp_path_factory.mktemp("resume")
     cfg_a = BuildConfig(
         out_dir=str(base / "a"), n_buckets=4, block_size=16,
@@ -256,19 +260,29 @@ def test_resume_after_injected_failure(spark, code_docs, tmp_path_factory):
         fields={"body": "content"}, tokenizer=CODE_TOKENIZER,
     )
     build_persistent_index(spark, code_docs, cfg_a)
+    want = _dir_fingerprint(cfg_a.out_dir)
 
-    cfg_b = BuildConfig(**{**cfg_a.__dict__, "out_dir": str(base / "b")})
-    with pytest.raises(RuntimeError, match="injected failure"):
-        build_persistent_index(spark, code_docs, cfg_b, fail_after_bucket=1)
-    man = Manifest(os.path.join(cfg_b.out_dir, "manifest.json"))
-    assert man.bucket_done(0) and man.bucket_done(1)
-    assert not man.bucket_done(3)
+    for step, done, not_done in [
+        ("segments", ["segments"], ["packed", "stats"]),
+        ("packed_written", ["segments"], ["packed", "stats"]),
+        ("packed", ["segments", "packed"], ["stats"]),
+    ]:
+        cfg_b = BuildConfig(**{**cfg_a.__dict__, "out_dir": str(base / step)})
+        with pytest.raises(RuntimeError, match=f"injected failure after step {step}$"):
+            build_persistent_index(spark, code_docs, cfg_b, fail_after_step=step)
+        man = Manifest(os.path.join(cfg_b.out_dir, "manifest.json"))
+        assert all(man.stage_done(s) for s in done), step
+        assert not any(man.stage_done(s) for s in not_done), step
+        if step == "packed_written":
+            # the crashed merge's files are on disk, uncommitted
+            assert glob.glob(f"{cfg_b.out_dir}/packed/*.parquet")
+            assert not os.path.exists(f"{cfg_b.out_dir}/packed/_manifest.json")
 
-    counters = build_persistent_index(spark, code_docs, cfg_b, resume=True)
-    assert _dir_fingerprint(cfg_a.out_dir) == _dir_fingerprint(cfg_b.out_dir)
-    man2 = Manifest(os.path.join(cfg_b.out_dir, "manifest.json"))
-    assert all(man2.bucket_done(i) for i in range(4))
-    assert counters["blocks_written"] > 0
+        counters = build_persistent_index(spark, code_docs, cfg_b, resume=True)
+        assert _dir_fingerprint(cfg_b.out_dir) == want, step
+        man2 = Manifest(os.path.join(cfg_b.out_dir, "manifest.json"))
+        assert all(man2.stage_done(s) for s in ("segments", "packed", "stats"))
+        assert counters["blocks_written"] > 0
 
 
 def test_resume_validates_config_and_input(spark, code_docs, built):
@@ -319,32 +333,3 @@ def test_packed_forward_index_and_prf(spark, built, code_index):
     assert [
         (r["rank"], r["docid"], r["score"]) for r in res_m.collect()
     ] == [(r["rank"], r["docid"], r["score"]) for r in res_p.collect()]
-
-
-def test_driver_side_xxhash_bucket_matches_jvm(spark):
-    """_py_bucket (pure-Python XXH64) must equal pmod(F.xxhash64(term), B)
-    for every term shape — bucket routing must never drift from the build."""
-    import random
-    import string
-
-    from pyspark.sql import functions as F
-
-    from search_engine_spark.index.persist import _bucket_col, _py_bucket
-    from search_engine_spark.index.xxhash import xxhash64_str
-
-    rng = random.Random(11)
-    terms = ["", "a", "def", "x" * 7, "y" * 8, "z" * 31, "w" * 32, "v" * 40,
-             "héllo_wörld", "token_✓"]
-    terms += [
-        "".join(rng.choices(string.ascii_lowercase + "_0123456789", k=rng.randrange(1, 60)))
-        for _ in range(150)
-    ]
-    df = spark.createDataFrame([(t,) for t in terms], "term string")
-    rows = df.select(
-        "term",
-        F.xxhash64("term").alias("h"),
-        _bucket_col(F.col("term"), 16).alias("b"),
-    ).collect()
-    for r in rows:
-        assert xxhash64_str(r["term"]) == r["h"], r["term"]
-        assert _py_bucket(r["term"], 16) == r["b"], r["term"]

@@ -1,25 +1,21 @@
-"""Shuffle-free bucketed merge (merge_strategy="bucketed") identity and
-resume behavior.
+"""Shuffle-free bucketed merge: routing invariance and resume behavior.
 
-The bucketed strategy routes segment term rows into per-merge-bucket files
-at WRITE time (crc32(term) % merge_buckets) so the merge phase can read
-each bucket's files directly in one python task — no repartition, no
-shuffle-map pass. The packed index must be IDENTICAL (as a row set, all
-columns including the binary streams) to the shuffle strategy's: the merge
-kernel is deterministic per (term, field, salt) group and routing only
-changes which task a group lands in.
+The segment pass routes term rows into per-merge-bucket row groups at WRITE
+time (crc32(term) % merge_buckets) so the merge phase reads each bucket's
+rows directly in one python task — no repartition, no shuffle-map pass. The
+index must not depend on the routing: builds with 8 buckets and with 1
+bucket are IDENTICAL (as row sets, all columns including the binary
+streams), because the merge kernel is deterministic per (term, field, salt)
+group and routing only changes which task a group lands in.
 
-Covers: full five-table fingerprint identity (salting active), salt
-explode parity (numpy _salt_explode_table vs the JVM withColumn/F.explode
-plan — both integer-div), crash-before-merge resume, dispatch-on-side-
-manifest (a shuffle-written segments dir never takes the bucketed path),
-and the unrouted-file guard.
+Covers: full five-table fingerprint identity across bucket counts (salting
+active), salt explode against a row-wise reference, crash-before-merge
+resume, and the unrouted-file guard.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 
@@ -35,29 +31,28 @@ from search_engine_spark.tokenize import CODE_TOKENIZER
 from tests.test_index_format import _dir_fingerprint
 
 
-def _cfg(out: str, strategy: str, **kw) -> BuildConfig:
+def _cfg(out: str, merge_buckets: int, **kw) -> BuildConfig:
     # salt_threshold=40 on the 120-doc corpus -> heavy keywords ARE salted,
     # so the numpy salt explode is exercised, not just the salt=0 path
     return BuildConfig(
         out_dir=out, n_buckets=4, block_size=16, salt_threshold=40,
         n_salts=4, fields={"body": "content"}, tokenizer=CODE_TOKENIZER,
-        merge_strategy=strategy, merge_buckets=8, **kw
+        merge_buckets=merge_buckets, **kw
     )
 
 
 @pytest.fixture(scope="module")
 def both_builds(spark, code_docs, tmp_path_factory):
     roots = {}
-    for strat in ("shuffle", "bucketed"):
-        out = str(tmp_path_factory.mktemp("mbidx") / strat)
-        build_persistent_index(spark, code_docs, _cfg(out, strat))
-        roots[strat] = out
+    for mb in (8, 1):
+        out = str(tmp_path_factory.mktemp("mbidx") / f"mb{mb}")
+        build_persistent_index(spark, code_docs, _cfg(out, mb))
+        roots[mb] = out
     return roots
 
 
 def _listed_fingerprint(root: str, names: list) -> str:
-    """Row-set fingerprint of the manifest-LISTED segment files only (the
-    bucketed layout adds termstat-partial side files by design)."""
+    """Row-set fingerprint of the manifest-LISTED segment files only."""
     import hashlib
 
     import pyarrow.parquet as pq
@@ -71,33 +66,33 @@ def _listed_fingerprint(root: str, names: list) -> str:
     return hashlib.sha256("\n".join(rows).encode()).hexdigest()
 
 
-def test_bucketed_identical_to_shuffle(both_builds):
-    fp_s = _dir_fingerprint(both_builds["shuffle"])
-    fp_b = _dir_fingerprint(both_builds["bucketed"])
-    for t in ("doc_ids", "doc_stats", "term_stats", "packed"):
-        assert fp_s[t] == fp_b[t], f"{t} differs between merge strategies"
-    # segment ROWS identical too — routing only changes file/row-group
-    # placement (whole-dir hashing would see the termstat side files)
+def test_routing_invariant_across_merge_buckets(both_builds):
+    fp_8 = _dir_fingerprint(both_builds[8])
+    fp_1 = _dir_fingerprint(both_builds[1])
+    for t in ("doc_ids", "doc_stats", "term_stats", "segments", "packed"):
+        assert fp_8[t] == fp_1[t], f"{t} differs between bucket counts"
+    # the listed segment rows too — routing only changes row-group placement
     fps = []
-    for strat in ("shuffle", "bucketed"):
-        man = _side_manifest(f"{both_builds[strat]}/segments")
+    for mb in (8, 1):
+        man = _side_manifest(f"{both_builds[mb]}/segments")
         fps.append(
             _listed_fingerprint(
-                both_builds[strat], man["files"] + man["marker_files"]
+                both_builds[mb], man["files"] + man["marker_files"]
             )
         )
-    assert fps[0] == fps[1], "segment rows differ between merge strategies"
+    assert fps[0] == fps[1], "segment rows differ between bucket counts"
+    assert len(_side_manifest(f"{both_builds[1]}/packed")["files"]) == 1
 
 
 def test_bucketed_layout_and_manifest(both_builds):
     import pyarrow.parquet as pq
 
-    out = both_builds["bucketed"]
+    out = both_builds[8]
     man = _side_manifest(f"{out}/segments")
     assert man["merge_buckets"] == 8
     assert man["files"], "no term files committed"
-    # same file count/naming as the shuffle strategy — routing lives in
-    # row groups, not in a small-file explosion
+    # one terms file per segment task — routing lives in row groups, not in
+    # a small-file explosion
     assert set(man["rg_buckets"]) == set(man["files"])
     buckets = set()
     for f in man["files"]:
@@ -116,17 +111,13 @@ def test_bucketed_layout_and_manifest(both_builds):
     assert len(buckets) > 1  # vocab actually spread over buckets
     pk = _side_manifest(f"{out}/packed")
     assert all(f.startswith("packed-mb") for f in pk["files"])
-    # shuffle layout untouched by the change
-    man_s = _side_manifest(f"{both_builds['shuffle']}/segments")
-    assert "merge_buckets" not in man_s and "rg_buckets" not in man_s
 
 
 def test_resume_after_crash_before_merge(
     spark, code_docs, tmp_path_factory, both_builds, monkeypatch
 ):
     """A crash between the segment stage and the merge resumes into the
-    SAME bucketed merge (dispatch reads the side manifest, not cfg) and
-    produces the identical index."""
+    same bucketed merge and produces the identical index."""
     out = str(tmp_path_factory.mktemp("mbidx") / "resume")
     import search_engine_spark.index.persist as P
 
@@ -135,13 +126,13 @@ def test_resume_after_crash_before_merge(
 
     monkeypatch.setattr(P, "_bucketed_merge", boom)
     with pytest.raises(RuntimeError, match="injected crash"):
-        build_persistent_index(spark, code_docs, _cfg(out, "bucketed"))
+        build_persistent_index(spark, code_docs, _cfg(out, 8))
     man = Manifest(os.path.join(out, "manifest.json"))
     assert man.stage_done("segments") and not man.stage_done("packed")
     monkeypatch.undo()
     # resume: segments stage skipped, bucketed merge completes
-    build_persistent_index(spark, code_docs, _cfg(out, "bucketed"))
-    assert _dir_fingerprint(out) == _dir_fingerprint(both_builds["bucketed"])
+    build_persistent_index(spark, code_docs, _cfg(out, 8))
+    assert _dir_fingerprint(out) == _dir_fingerprint(both_builds[8])
 
 
 def test_unrouted_files_are_refused(spark, tmp_path):

@@ -229,17 +229,23 @@ def test_block_id_base_offsets_only_block_ids(kernel):
     """An append's delta merge writes block ids above the base's high-water
     mark: the offset kernel's output equals the plain kernel's with every
     block_id shifted, all other columns untouched."""
-    from search_engine_spark.index.persist import _merge_kernel
+    from search_engine_spark.index.persist import _merge_kernel, _offset_block_ids
 
     rng = np.random.default_rng(5)
     rows = rand_group(rng, "alpha", "body", 1, 900, 6) + rand_group(
         rng, "beta", "body", 1, 900, 3
     )
     tbl = as_table(rows)
+    # "vec" is the build's kernel; "pandas" the reference under the same
+    # offset wrapper
+    make = {
+        "vec": lambda base: _merge_kernel(4, 1000, 8, None, base),
+        "pandas": lambda base: _offset_block_ids(
+            make_merge_partition(4, 1000, 8), base
+        ),
+    }[kernel]
     plain, shifted = (
-        pa.Table.from_batches(
-            list(_merge_kernel(kernel, 4, 1000, 8, None, base)(tbl.to_batches()))
-        )
+        pa.Table.from_batches(list(make(base)(tbl.to_batches())))
         for base in (0, 41)
     )
     assert plain.num_rows > 2

@@ -75,6 +75,39 @@ def test_driver_read_failure_runs_exact_plan(spark, pidx, terms, code_index, mon
     assert got == exact and got
 
 
+def test_gate_term_stats_failure_reports_fallback(spark, pidx, code_index, monkeypatch):
+    """A failed term-stats read in the engine's pruning gate answers with
+    the exact plan, bitwise, and reports that fallback — not the stats of
+    the query before it."""
+    import sys
+
+    broken = PackedIndex(spark, pidx.dir)
+    real = broken.reads.term_stats
+    armed = []
+
+    def term_stats(terms, fld):
+        # only the gate's read fails: the exact plan reads term stats too
+        if armed and sys._getframe(1).f_code.co_name == "_pruned_topk":
+            raise OSError("forced term-stats read failure")
+        return real(terms, fld)
+
+    monkeypatch.setattr(broken.reads, "term_stats", term_stats)
+    monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "0")
+    k = 20
+    eng = Engine(broken, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)
+    eng.search(" ".join(QUERIES[0]), k).collect()
+    assert eng.last_prune_stats.score_mode == "driver"
+    armed.append(True)
+    terms = QUERIES[1]
+    got = [tuple(r) for r in eng.search(" ".join(terms), k).collect()]
+    assert eng.last_prune_stats == PruneStats(
+        fallback="driver read failed: OSError: forced term-stats read failure"
+    )
+    exact_eng = Engine(code_index, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)
+    exact = [tuple(r) for r in exact_eng.search(" ".join(terms), k).collect()]
+    assert got == exact and got
+
+
 def test_pruning_skips_blocks(spark, pidx):
     """A selective query over a corpus with a dominant rare term must not
     scan every block. (With an idf-clamped heavy term and k past the nonzero
@@ -102,7 +135,7 @@ def bursty_pidx(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("pruneburst") / "v1")
     docs = with_docids(code_corpus_df(spark, 4000, bursty=True))
     cfg = BuildConfig(
-        out_dir=out, n_buckets=4, block_size=32, merge_partitions=8,
+        out_dir=out, n_buckets=4, block_size=32,
         fields={"body": "content"}, tokenizer=CODE_TOKENIZER,
     )
     build_persistent_index(spark, docs, cfg)

@@ -1,10 +1,11 @@
-"""Structured-Streaming ingest (streaming/ingest.py): segments streamed in
-micro-batches + one finalize produce the same QUERY-VISIBLE index as the
+"""Structured-Streaming ingest (streaming/ingest.py): micro-batches become
+a build and then appends, and produce the same QUERY-VISIBLE index as the
 one-shot batch build (term/doc/corpus stats and ranked output keyed by
-external id — internal docids may differ by arrival order), the file-source
-checkpoint makes re-runs incremental (second drain ingests only files that
-arrived after the first), and batch replay is idempotent (same batch id →
-same docid base, overwrite of only its own segment directory).
+external id — internal docids may differ by arrival order); documents are
+queryable after every batch; the file-source checkpoint makes re-runs
+incremental (second drain ingests only files that arrived after the
+first); a replay of a committed batch is a no-op and a replay of an
+uncommitted one resumes its generation.
 
 The reference is strictly batch (SURVEY.md §2.12) — this surface is the
 Spark-native extension for a corpus that keeps arriving.
@@ -26,11 +27,8 @@ from search_engine_spark.index.persist import (
     PackedIndex,
     build_persistent_index,
 )
-from search_engine_spark.streaming.ingest import (
-    finalize_stream_index,
-    ingest_batch,
-    stream_ingest,
-)
+import search_engine_spark.streaming.ingest as ingest_mod
+from search_engine_spark.streaming.ingest import ingest_batch, stream_ingest
 from search_engine_spark.tokenize import CODE_TOKENIZER
 
 N_FILES, SEED = 90, 7
@@ -59,10 +57,40 @@ def _term_stats(idx: PackedIndex):
     }
 
 
+def _ranked(idx: PackedIndex, model: str, q: str):
+    eng = Engine(idx, ModelConfig(name=model), tokenizer=CODE_TOKENIZER)
+    return [(r["rank"], r["ext_docid"], r["score"]) for r in eng.search(q, 30).collect()]
+
+
+RANKING_QUERIES = [
+    (BM25, "lock free queue"),
+    (BM25, "#SUM(ring buffer slot)"),
+    (INDRI, "#WAND(0.7 lock 0.2 free 0.1 queue)"),
+]
+
+
+def _assert_equals_batch_build(spark, sdir: str, docs, bdir: str) -> None:
+    """The streamed index at ``sdir`` equals a batch build of ``docs`` on
+    stats and on ranking by external id."""
+    build_persistent_index(spark, with_docids(docs), _cfg(bdir))
+    sidx, bidx = PackedIndex(spark, sdir), PackedIndex(spark, bdir)
+    assert sidx.corpus.n_docs == bidx.corpus.n_docs
+    assert sidx.corpus.by_field == bidx.corpus.by_field
+    assert _term_stats(sidx) == _term_stats(bidx)
+    assert _doclens_by_ext(sidx) == _doclens_by_ext(bidx)
+    for model, q in RANKING_QUERIES:
+        assert _ranked(sidx, model, q) == _ranked(bidx, model, q), (model, q)
+
+
+def _stream_state(out: str) -> tuple:
+    data = Manifest(os.path.join(out, "manifest.json")).data
+    return data["stream"], data["lineage"]
+
+
 @pytest.fixture(scope="module")
 def streamed_vs_batch(spark, tmp_path_factory):
-    """Stream the corpus in two arrival waves (checkpointed drains), finalize,
-    and batch-build the same corpus; return both PackedIndexes + the dirs."""
+    """Stream the corpus in two arrival waves (checkpointed drains) and
+    batch-build the same corpus; return both PackedIndexes + the config."""
     root = tmp_path_factory.mktemp("stream")
     arrivals = str(root / "arrivals")
     docs = code_corpus_df(spark, N_FILES, SEED).cache()
@@ -79,17 +107,16 @@ def streamed_vs_batch(spark, tmp_path_factory):
     wave2.repartition(2).write.mode("append").parquet(arrivals)
     stream_ingest(spark, arrivals, cfg, max_files_per_trigger=1)
 
-    man = Manifest(os.path.join(cfg.out_dir, "manifest.json"))
-    n_batches_after_two_drains = len(man.data["stream"]["batches"])
+    stream, lineage = _stream_state(cfg.out_dir)
+    # one generation per micro-batch: the build, then one append each
+    assert sorted(b["generation"] for b in stream["batches"].values()) == list(
+        range(len(stream["batches"]))
+    )
+    assert len(lineage["appends"]) == len(stream["batches"]) - 1 >= 4
     # a third drain with no new arrivals must ingest nothing
     stream_ingest(spark, arrivals, cfg)
-    man = Manifest(os.path.join(cfg.out_dir, "manifest.json"))
-    assert len(man.data["stream"]["batches"]) == n_batches_after_two_drains
-    assert sum(
-        b["n_docs"] for b in man.data["stream"]["batches"].values()
-    ) == docs.count()
-
-    finalize_stream_index(spark, cfg)
+    assert _stream_state(cfg.out_dir) == (stream, lineage)
+    assert lineage["n_docs"] == docs.count()
 
     bcfg = _cfg(str(root / "bidx"))
     build_persistent_index(spark, with_docids(docs), bcfg)
@@ -107,66 +134,61 @@ def test_stream_equals_batch_stats(streamed_vs_batch):
 
 def test_stream_equals_batch_ranking(streamed_vs_batch):
     sidx, bidx, _ = streamed_vs_batch
-    for model, q in [
-        (BM25, "lock free queue"),
-        (BM25, "#SUM(ring buffer slot)"),
-        (INDRI, "#WAND(0.7 lock 0.2 free 0.1 queue)"),
-    ]:
-        se = Engine(sidx, ModelConfig(name=model), tokenizer=CODE_TOKENIZER)
-        be = Engine(bidx, ModelConfig(name=model), tokenizer=CODE_TOKENIZER)
-        a = [
-            (r["rank"], r["ext_docid"], r["score"])
-            for r in se.search(q, 30).collect()
-        ]
-        b = [
-            (r["rank"], r["ext_docid"], r["score"])
-            for r in be.search(q, 30).collect()
-        ]
-        assert a == b, (model, q)
-
-
-def test_stream_into_finalized_index_refused(spark, streamed_vs_batch):
-    _, _, cfg = streamed_vs_batch
-    docs = code_corpus_df(spark, 5, 11)
-    with pytest.raises(RuntimeError, match="finalized"):
-        ingest_batch(docs, 99, cfg)
+    for model, q in RANKING_QUERIES:
+        assert _ranked(sidx, model, q) == _ranked(bidx, model, q), (model, q)
 
 
 def test_stream_config_drift_refused(spark, tmp_path_factory):
-    """Drains with a different BuildConfig against the same out_dir must be
-    refused (they would write incompatibly-bucketed/tokenized segments that
-    finalize would silently stamp with the last config)."""
+    """A batch with a different BuildConfig against the same out_dir must be
+    refused (its segments would be incompatibly bucketed/tokenized); the
+    recorded config still ingests the replayed batch."""
     root = tmp_path_factory.mktemp("drift")
-    docs = code_corpus_df(spark, 10, 5)
+    docs = code_corpus_df(spark, 20, 5).cache()
+    b0 = docs.where(F.crc32(F.col("path")) % 2 == 0)
+    b1 = docs.where(F.crc32(F.col("path")) % 2 != 0)
     cfg = _cfg(str(root / "idx"))
-    ingest_batch(docs, 0, cfg)
-    from search_engine_spark.index.persist import BuildConfig
-
+    ingest_batch(b0, 0, cfg)
     bad = BuildConfig(**{**cfg.__dict__, "n_buckets": cfg.n_buckets * 2})
     with pytest.raises(ValueError, match="config mismatch"):
-        ingest_batch(docs, 1, bad)
-    with pytest.raises(ValueError, match="config differs"):
-        finalize_stream_index(spark, bad)
-    finalize_stream_index(spark, cfg)  # the recorded config still finalizes
+        ingest_batch(b1, 1, bad)
+    ingest_batch(b1, 1, cfg)
+    _, lineage = _stream_state(cfg.out_dir)
+    assert lineage["n_docs"] == docs.count()
 
 
-def test_stream_into_partial_batch_build_refused(spark, tmp_path_factory):
-    """segments/ with a bucket=*/ (batch-build) layout and no stream state
-    means a crashed batch build — streaming batch=*/ dirs next to it would
-    poison partition discovery at finalize."""
-    root = tmp_path_factory.mktemp("partial")
-    cfg = _cfg(str(root / "idx"))
-    os.makedirs(os.path.join(cfg.out_dir, "segments", "bucket=0"))
-    docs = code_corpus_df(spark, 5, 5)
-    with pytest.raises(RuntimeError, match="partial batch build"):
-        ingest_batch(docs, 0, cfg)
+def test_documents_queryable_after_each_batch(spark, tmp_path_factory):
+    """Every micro-batch commits: after each one, a query over the index
+    ranks exactly the documents ingested so far, as the pure-Python oracle
+    does over those documents."""
+    from tests.oracle import PyOracle
+
+    root = tmp_path_factory.mktemp("queryable")
+    docs = code_corpus_df(spark, 60, 9).cache()
+    cfg = _cfg(str(root / "sidx"))
+    seen = None
+    for i in range(3):
+        batch = docs.where(F.crc32(F.col("path")) % 3 == i)
+        ingest_batch(batch, i, cfg)
+        seen = batch if seen is None else seen.unionByName(batch)
+        rows = [
+            (r["docid"], r["ext_docid"], r["content"])
+            for r in with_docids(seen).select("docid", "ext_docid", "content").collect()
+        ]
+        oracle = PyOracle(rows, CODE_TOKENIZER, fields={"body": 2})
+        idx = PackedIndex(spark, cfg.out_dir)
+        assert idx.corpus.n_docs == len(rows)
+        for model, q in RANKING_QUERIES:
+            got = _ranked(idx, model, q)
+            want = oracle.search(q, ModelConfig(name=model), 30)
+            assert [g[:2] for g in got] == [(w[0], w[2]) for w in want], (i, q)
+            for g, w in zip(got, want):
+                assert g[2] == pytest.approx(w[3], rel=1e-9, abs=1e-12)
 
 
 def test_batch_replay_is_idempotent(spark, tmp_path_factory):
-    """Replaying a recorded micro-batch (crash between segment write and
-    checkpoint commit) reuses its docid base and overwrites only its own
-    directory — the finalized index is identical to the batch build's
-    query surface."""
+    """Replaying a committed micro-batch (crash between the append commit
+    and the checkpoint commit) is a no-op: no new generation, the same
+    manifest, and the index equals the batch build's query surface."""
     root = tmp_path_factory.mktemp("replay")
     docs = code_corpus_df(spark, 40, 3).cache()
     b0 = docs.where(F.crc32(F.col("path")) % 2 == 0)
@@ -175,15 +197,47 @@ def test_batch_replay_is_idempotent(spark, tmp_path_factory):
     cfg = _cfg(str(root / "sidx"))
     ingest_batch(b0, 0, cfg)
     ingest_batch(b1, 1, cfg)
-    man_once = Manifest(os.path.join(cfg.out_dir, "manifest.json")).data["stream"]
+    once = _stream_state(cfg.out_dir)
     ingest_batch(b1, 1, cfg)  # replay the last batch
-    man_twice = Manifest(os.path.join(cfg.out_dir, "manifest.json")).data["stream"]
-    assert man_once["batches"] == man_twice["batches"]
-    assert man_once["next_docid_base"] == man_twice["next_docid_base"]
-    finalize_stream_index(spark, cfg)
+    ingest_batch(b0, 0, cfg)  # and the first
+    assert _stream_state(cfg.out_dir) == once
+    assert len(once[1]["appends"]) == 1
+    _assert_equals_batch_build(spark, cfg.out_dir, docs, str(root / "bidx"))
 
-    bcfg = _cfg(str(root / "bidx"))
-    build_persistent_index(spark, with_docids(docs), bcfg)
-    sidx, bidx = PackedIndex(spark, cfg.out_dir), PackedIndex(spark, bcfg.out_dir)
-    assert _term_stats(sidx) == _term_stats(bidx)
-    assert _doclens_by_ext(sidx) == _doclens_by_ext(bidx)
+
+@pytest.mark.parametrize("window", ["recorded", "graft_packed"])
+def test_uncommitted_batch_resumes_on_replay(
+    spark, tmp_path_factory, monkeypatch, window
+):
+    """A crash after a batch's generation is recorded but before its append
+    commits — before any append step, or after the packed graft — leaves
+    the batch open: a different batch is refused, the replay resumes the
+    recorded generation, and the index equals the batch build."""
+    root = tmp_path_factory.mktemp(f"crash_{window}")
+    docs = code_corpus_df(spark, 40, 4).cache()
+    b0 = docs.where(F.crc32(F.col("path")) % 2 == 0)
+    b1 = docs.where(F.crc32(F.col("path")) % 2 != 0)
+    cfg = _cfg(str(root / "sidx"))
+    ingest_batch(b0, 0, cfg)
+
+    real = ingest_mod.append_to_index
+
+    def crashing(spark_, docs_, cfg_):
+        if window == "recorded":
+            raise RuntimeError("injected failure before the append")
+        return real(spark_, docs_, cfg_, fail_after_step=window)
+
+    monkeypatch.setattr(ingest_mod, "append_to_index", crashing)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        ingest_batch(b1, 1, cfg)
+    monkeypatch.undo()
+    stream, lineage = _stream_state(cfg.out_dir)
+    assert stream["batches"]["1"] == {"generation": 1, "base": b0.count()}
+    assert "appends" not in lineage
+    with pytest.raises(RuntimeError, match="batch 1 .* has not committed"):
+        ingest_batch(code_corpus_df(spark, 5, 12), 2, cfg)
+
+    ingest_batch(b1, 1, cfg)
+    _, lineage = _stream_state(cfg.out_dir)
+    assert [a["generation"] for a in lineage["appends"]] == [1]
+    _assert_equals_batch_build(spark, cfg.out_dir, docs, str(root / "bidx"))

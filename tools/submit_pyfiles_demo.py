@@ -21,7 +21,7 @@ checkout leaking in through a path:
 After the submitted build exits, a fresh local session opens the packed
 index it wrote and runs a BM25 top-k over it (rows asserted non-empty).
 Prints one JSON line. Uses port 7177 / its own run dir so it can never
-collide with a concurrently-running bench_scaling cluster (7077).
+collide with a concurrently-running cluster on the default port (7077).
 """
 
 from __future__ import annotations
