@@ -10,9 +10,8 @@ Runs at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 production segment+merge+stats path -> PackedIndex) followed by every
 headline query EXECUTED AGAINST THAT PACKED INDEX — i.e. the bench measures
 exactly what a deployment runs (VERDICT r02 item 2: the r01/r02 bench built
-twice and queried the in-memory path). Rank identity between the packed and
-in-memory backends is asserted by tests/test_index_format.py and the 33-query
-driver gate runs the in-memory side, so both stay exercised.
+twice and queried the in-memory path). The driver gate queries the same
+packed build.
 
 Extra keys record index-build files/sec and the block-max pruning evidence
 (blocks skipped / total for the flagship BM25 query — engine/pruning.py is
@@ -72,9 +71,8 @@ def main() -> None:
     # stats -> PackedIndex); every query below runs against it. At sf0.1's
     # 5,000 docs the wall is dominated by fixed per-job costs — the at-scale
     # throughput evidence is BENCH_SCALING.md (100k files).
-    dq.USE_PACKED = True
     t0 = time.time()
-    pidx = dq.load_packed_documents_index(spark, sf_dir)
+    pidx = dq.load_documents_index(spark, sf_dir)
     n_files = pidx.corpus.n_docs
     build_sec = time.time() - t0
 

@@ -19,6 +19,10 @@ tests/ against the pure-Python oracle.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,11 +36,13 @@ from search_engine_spark.config import (
     ModelConfig,
 )
 from search_engine_spark.engine.runner import Engine
-from search_engine_spark.index.build import build_index
+from search_engine_spark.index.persist import (
+    BuildConfig, PackedIndex, build_persistent_index,
+)
 from search_engine_spark.tokenize import WHITESPACE_TOKENIZER
 
 # ---------------------------------------------------------------------------
-# shared SQL prelude: tokenize + stats tables, mirroring index/build.py
+# shared SQL prelude: tokenize + stats tables, mirroring the index build
 # ---------------------------------------------------------------------------
 
 SQL_PRELUDE = r"""
@@ -57,7 +63,7 @@ consts AS (SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
 
 # Multi-field prelude: the same tokenize/stats tables per (doc, field) for
 # the three indexed fields (body=text, lang, source) — the DuckDB twin of
-# index/build.py's fields={} walk. Per-field avgdl/c_len; n_docs stays the
+# the build's BuildConfig.fields walk. Per-field avgdl/c_len; n_docs stays the
 # corpus-wide count (ops.py uses corpus.n_docs for every field's idf).
 MF_SQL_PRELUDE = r"""
 WITH docs_f AS (
@@ -178,91 +184,55 @@ def _indri_join_sql(terms: list[str], sfx: str = "") -> str:
 
 _INDEX_CACHE: dict = {}
 
-# bench.py flips this to route every engine query through the PERSISTENT
-# segment-architecture build + PackedIndex (the production path, ~10x the
-# in-memory build's files/sec); the correctness gate keeps the in-memory
-# default so both backends stay exercised. Rank identity between the two is
-# asserted in tests/test_index_format.py.
-import os as _os
-
-USE_PACKED = _os.environ.get("SPARK_GRAFT_PACKED") == "1"
-
 # field name -> source column in documents.parquet (SURVEY.md §2.2 P1: the
 # reference indexes body/title/url/inlink/keywords; the sf documents table
 # carries text/lang/source, so the gate exercises three field slots)
 DOC_FIELDS = {"body": "text", "lang": "lang", "source": "source"}
 
 
-def load_documents_index(spark: SparkSession, sf_dir: str):
-    # module flag ONLY (initialized from the env at import): re-reading the
-    # env here would make bench.py's `dq.USE_PACKED = False` flip a no-op
-    # in exactly the SPARK_GRAFT_PACKED=1 case it exists for
-    if USE_PACKED:
-        return load_packed_documents_index(spark, sf_dir)
-    key = (id(spark), sf_dir)
+def _one_shot_build(spark, docs, cfg) -> None:
+    build_persistent_index(spark, docs, cfg, resume=False)
+
+
+def _gate_index(
+    spark: SparkSession, sf_dir: str, name: str, write=_one_shot_build, *,
+    docid_base: int = 0, **overrides,
+) -> PackedIndex:
+    """One gate index, written once per (session, sf_dir) into its own temp
+    dir ``spark_graft_<name>_<sf>`` and opened as a PackedIndex.
+
+    ``write(spark, docs, cfg)`` lays the index down in ``cfg.out_dir``:
+    ``docs`` is the sf documents table (docid = doc_id + ``docid_base``,
+    ext_docid = doc_id as a string) and ``cfg`` the gate's multi-field
+    whitespace BuildConfig with ``overrides`` applied. The default writer
+    is a one-shot build."""
+    key = (name, id(spark), sf_dir)
     if key not in _INDEX_CACHE:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            F.col("doc_id").cast("long").alias("docid"),
-            F.col("doc_id").cast("long").alias("ext_docid"),
-            "text", "lang", "source",
-        )
-        # multi-field corpus (the reference's 5-field reality,
-        # hw1/QryEval/mengyuy.qry): per-field stats keep the body-field
-        # scores bit-identical to a body-only build
-        idx = build_index(
-            spark, docs, fields=DOC_FIELDS, tokenizer=WHITESPACE_TOKENIZER
-        )
-        # materialize the cached forward index AND the postings view once
-        # (postings add df/ctf via a window over doc_terms — uncached, every
-        # flat query re-paid that shuffle)
-        idx.doc_terms.count()
-        idx.postings = idx.postings.cache()
-        idx.postings.count()
-        _INDEX_CACHE[key] = idx
-    return _INDEX_CACHE[key]
-
-
-def load_packed_documents_index(spark: SparkSession, sf_dir: str):
-    """Fresh persistent build of the documents index -> PackedIndex."""
-    import shutil
-    import tempfile
-
-    from search_engine_spark.index.persist import (
-        BuildConfig, PackedIndex, build_persistent_index,
-    )
-
-    key = ("packed", id(spark), sf_dir)
-    if key not in _INDEX_CACHE:
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            F.col("doc_id").cast("long").alias("docid"),
+            (F.col("doc_id").cast("long") + docid_base).alias("docid"),
             F.col("doc_id").cast("string").alias("ext_docid"),
             "text", "lang", "source",
         )
-        out = _os.path.join(
+        out = os.path.join(
             tempfile.gettempdir(),
-            f"spark_graft_packed_{_os.path.basename(sf_dir.rstrip('/'))}",
+            f"spark_graft_{name}_{os.path.basename(sf_dir.rstrip('/'))}",
         )
         shutil.rmtree(out, ignore_errors=True)
-        # the sf corpora are small (500-5000 docs): cap the fan-out so the
-        # build isn't pure task-launch overhead at local[32]
-        n_docs = docs.count()
-        parts = max(2, min(16, n_docs // 500))
-        docs = docs.repartition(parts)
         cfg = BuildConfig(
             out_dir=out, fields=DOC_FIELDS, tokenizer=WHITESPACE_TOKENIZER,
-            n_buckets=8,
+            n_buckets=8, **overrides,
         )
-        build_persistent_index(spark, docs, cfg, resume=False)
+        write(spark, docs, cfg)
         pidx = PackedIndex(spark, out)
         # ext ids are numeric doc_ids here: keep the tie-break numeric like
-        # the in-memory path (string sort would put "10" before "2")
+        # the oracle's (a string sort would put "10" before "2")
         pidx.doc_ids = pidx.doc_ids.select(
             "docid", F.col("ext_docid").cast("long").alias("ext_docid")
         )
         # pin the small dimension tables hot (a query server keeps the
         # dictionary resident; doc_ids is broadcast by every rank_topk and
-        # term_stats is probed per query) — packed postings stay on disk,
-        # which is the part that matters at 100 TB
+        # term_stats is joined by every decode scan) — packed postings stay
+        # on disk, which is the part that matters at 100 TB
         for small in ("doc_ids", "term_stats", "doc_stats"):
             df = getattr(pidx, small).cache()
             df.count()
@@ -271,76 +241,59 @@ def load_packed_documents_index(spark: SparkSession, sf_dir: str):
     return _INDEX_CACHE[key]
 
 
+def load_documents_index(spark: SparkSession, sf_dir: str) -> PackedIndex:
+    """The gate's documents index: a persistent build (docid = doc_id)."""
+
+    def write(spark, docs, cfg):
+        # the sf corpora are small (500-5000 docs): cap the fan-out so the
+        # build isn't pure task-launch overhead at local[32]
+        parts = max(2, min(16, docs.count() // 500))
+        _one_shot_build(spark, docs.repartition(parts), cfg)
+
+    return _gate_index(spark, sf_dir, "packed", write)
+
+
 # every doc_id ≡ DELETE_REM (mod DELETE_MOD) is tombstoned in the deleted
 # variant of the packed index — a predicate DuckDB can mirror exactly
 DELETE_MOD, DELETE_REM = 10, 7
 
 
-def load_deleted_documents_index(spark: SparkSession, sf_dir: str):
-    """Copy of the packed documents index with doc_id % 10 == 7 tombstoned
+def load_deleted_documents_index(spark: SparkSession, sf_dir: str) -> PackedIndex:
+    """Copy of the documents index with doc_id % 10 == 7 tombstoned
     (index/deletes.py; SURVEY.md §2.2 P3 — the liveDocs walk of
     hw5/QryEval/InvList.java:84-86). Deletes mutate the manifest, so the
-    shared packed cache is never touched: the segments are copied aside and
+    shared index is never touched: its files are copied aside and
     tombstoned there."""
-    import shutil
-    import tempfile
-
     from search_engine_spark.index.deletes import delete_docs
-    from search_engine_spark.index.persist import PackedIndex
 
-    key = ("deleted", id(spark), sf_dir)
-    if key not in _INDEX_CACHE:
-        load_packed_documents_index(spark, sf_dir)  # on-disk segments exist
-        src = _os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_packed_{_os.path.basename(sf_dir.rstrip('/'))}",
-        )
-        out = src + "_deleted"
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.copytree(src, out)
-        packed = _INDEX_CACHE[("packed", id(spark), sf_dir)]
+    packed = load_documents_index(spark, sf_dir)  # on-disk files exist
+
+    def write(spark, docs, cfg):
+        shutil.copytree(packed.dir, cfg.out_dir)
         victims = [
             str(r["ext_docid"])
             for r in packed.doc_ids.where(
                 F.col("ext_docid") % DELETE_MOD == DELETE_REM
             ).collect()
         ]
-        delete_docs(spark, out, ext_docids=victims)
-        pidx = PackedIndex(spark, out)
-        pidx.doc_ids = pidx.doc_ids.select(
-            "docid", F.col("ext_docid").cast("long").alias("ext_docid")
-        )
-        _INDEX_CACHE[key] = pidx
-    return _INDEX_CACHE[key]
+        delete_docs(spark, cfg.out_dir, ext_docids=victims)
+
+    return _gate_index(spark, sf_dir, "deleted", write)
 
 
-def load_compacted_documents_index(spark: SparkSession, sf_dir: str):
+def load_compacted_documents_index(spark: SparkSession, sf_dir: str) -> PackedIndex:
     """The deleted index, compacted (index/compact.py): tombstones purged,
     df/ctf/avgdl fresh — query-equivalent to a fresh build over the live
     docs. Own copy so the deleted index keeps its stale-stats contract."""
-    import shutil
-    import tempfile
-
     from search_engine_spark.index.compact import compact_index
-    from search_engine_spark.index.persist import PackedIndex
 
-    key = ("compacted", id(spark), sf_dir)
-    if key not in _INDEX_CACHE:
-        load_deleted_documents_index(spark, sf_dir)  # deleted dir exists
-        base = _os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_packed_{_os.path.basename(sf_dir.rstrip('/'))}",
-        )
-        out = base + "_compacted"
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.copytree(base + "_deleted", out)
-        compact_index(spark, out)
-        pidx = PackedIndex(spark, out)
-        pidx.doc_ids = pidx.doc_ids.select(
-            "docid", F.col("ext_docid").cast("long").alias("ext_docid")
-        )
-        _INDEX_CACHE[key] = pidx
-    return _INDEX_CACHE[key]
+    deleted = load_deleted_documents_index(spark, sf_dir)
+
+    def write(spark, docs, cfg):
+        shutil.copytree(deleted.dir, cfg.out_dir)
+        compact_index(spark, cfg.out_dir)
+
+    return _gate_index(spark, sf_dir, "compacted", write)
 
 
 def _engine(spark: SparkSession, sf_dir: str, model: str) -> Engine:
@@ -512,46 +465,17 @@ _register("bm25_batch_topk", _q_bm25_batch_topk, _batch_sql())
 
 
 def _q_bm25_appended_topk(spark, sf_dir):
-    import shutil
-    import tempfile
-
-    from search_engine_spark.engine.topk import rank_topk
     from search_engine_spark.index.append import append_to_index
-    from search_engine_spark.index.persist import (
-        BuildConfig, PackedIndex, build_persistent_index,
-    )
 
-    key = ("appended", id(spark), sf_dir)
-    if key not in _INDEX_CACHE:
-        # internal docids are 1-based dense (the builder/append contract);
-        # the sf table's 0-based doc_id stays the external id
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            (F.col("doc_id").cast("long") + 1).alias("docid"),
-            F.col("doc_id").cast("string").alias("ext_docid"),
-            "text", "lang", "source",
-        )
-        n = docs.count()
-        split = max(1, (n * 4) // 5)
-        out = _os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_appended_{_os.path.basename(sf_dir.rstrip('/'))}",
-        )
-        shutil.rmtree(out, ignore_errors=True)
-        cfg = BuildConfig(
-            out_dir=out, fields=DOC_FIELDS, tokenizer=WHITESPACE_TOKENIZER,
-            n_buckets=8,
-        )
-        build_persistent_index(
-            spark, docs.where(F.col("docid") <= split), cfg, resume=False
-        )
+    def write(spark, docs, cfg):
+        split = max(1, (docs.count() * 4) // 5)
+        _one_shot_build(spark, docs.where(F.col("docid") <= split), cfg)
         append_to_index(spark, docs.where(F.col("docid") > split), cfg)
-        pidx = PackedIndex(spark, out)
-        # numeric tie-break, like the packed loader above
-        pidx.doc_ids = pidx.doc_ids.select(
-            "docid", F.col("ext_docid").cast("long").alias("ext_docid")
-        )
-        _INDEX_CACHE[key] = pidx
-    eng = Engine(_INDEX_CACHE[key], ModelConfig(name=BM25))
+
+    # internal docids are 1-based dense (the builder/append contract); the
+    # sf table's 0-based doc_id stays the external id
+    pidx = _gate_index(spark, sf_dir, "appended", write, docid_base=1)
+    eng = Engine(pidx, ModelConfig(name=BM25))
     return eng.search(" ".join(FLAGSHIP_TERMS), 100).select(
         "rank", F.col("ext_docid").cast("long").alias("docid"), "score"
     )
@@ -579,36 +503,10 @@ _register(
 
 
 def _q_bm25_bucketed_build_topk(spark, sf_dir):
-    import shutil
-    import tempfile
-
-    from search_engine_spark.index.persist import (
-        BuildConfig, PackedIndex, build_persistent_index,
+    pidx = _gate_index(
+        spark, sf_dir, "bucketed", docid_base=1, merge_buckets=16
     )
-
-    key = ("bucketed_build", id(spark), sf_dir)
-    if key not in _INDEX_CACHE:
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            (F.col("doc_id").cast("long") + 1).alias("docid"),
-            F.col("doc_id").cast("string").alias("ext_docid"),
-            "text", "lang", "source",
-        )
-        out = _os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_bucketed_{_os.path.basename(sf_dir.rstrip('/'))}",
-        )
-        shutil.rmtree(out, ignore_errors=True)
-        cfg = BuildConfig(
-            out_dir=out, fields=DOC_FIELDS, tokenizer=WHITESPACE_TOKENIZER,
-            n_buckets=8, merge_buckets=16,
-        )
-        build_persistent_index(spark, docs, cfg, resume=False)
-        pidx = PackedIndex(spark, out)
-        pidx.doc_ids = pidx.doc_ids.select(
-            "docid", F.col("ext_docid").cast("long").alias("ext_docid")
-        )
-        _INDEX_CACHE[key] = pidx
-    eng = Engine(_INDEX_CACHE[key], ModelConfig(name=BM25))
+    eng = Engine(pidx, ModelConfig(name=BM25))
     return eng.search(" ".join(FLAGSHIP_TERMS), 100).select(
         "rank", F.col("ext_docid").cast("long").alias("docid"), "score"
     )

@@ -26,9 +26,10 @@ Tie-break NOTE: the reference sorts candidate terms by score via a HashMap
 entry list — ties land in hash order (unspecified). We break score ties by
 ascending term, deterministically; tests use tie-free fixtures.
 
-Spark shape: candidates = top-docs (tiny, broadcast) ⋈ doc_terms →
-one groupBy(term) aggregation; everything else is driver-side arithmetic on
-fbTerms-sized data.
+Spark shape: the top-docs' forward-index slice (PackedIndex.doc_terms_for,
+a docid-range-pruned decode of the packed postings) collected at (term,
+doc) grain; everything else is driver-side arithmetic on fbTerms-sized
+data.
 """
 
 from __future__ import annotations
@@ -126,10 +127,9 @@ def rm_term_weights(
 
     # contains part: top-docs' forward-index slice, collected at (term, doc)
     # grain (≤ fbDocs × per-doc vocab rows — a constant-bounded driver load)
-    # and folded per term in rank order. doc_terms_for works on BOTH index
-    # backends: the in-memory doc_terms filter and PackedIndex's block-pruned
-    # packed-postings decode (hw5/QryEval/TermVector.java random access
-    # analog).
+    # and folded per term in rank order. doc_terms_for is PackedIndex's
+    # block-pruned packed-postings decode (hw5/QryEval/TermVector.java
+    # random access analog).
     tv = (
         eng.index.doc_terms_for(list(doc_rows), fld)
         .where(~F.col("term").rlike("[.,]"))

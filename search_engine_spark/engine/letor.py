@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 from search_engine_spark.config import BM25Params, IndriParams, ModelConfig
 from search_engine_spark.engine.ops import EvalContext
 from search_engine_spark.engine.topk import rank_topk
-from search_engine_spark.index.build import IndexTables
+from search_engine_spark.index.persist import PackedIndex
 
 # Java double limits (FeatureVector.java:456-457 init values)
 JAVA_DOUBLE_MIN = 4.9406564584124654e-324  # Double.MIN_VALUE (positive!)
@@ -85,7 +85,7 @@ def _nan_if_null(c: Column) -> Column:
 
 def letor_features(
     spark: SparkSession,
-    index: IndexTables,
+    index: PackedIndex,
     qtokens: list[str],
     docids: list[int],
     cfg: LetorConfig,
@@ -349,7 +349,7 @@ def read_pagerank_file(spark: SparkSession, path: str, doc_ids: DataFrame) -> Da
 
 def letor_rerank(
     spark: SparkSession,
-    index: IndexTables,
+    index: PackedIndex,
     qtokens: list[str],
     candidates: list[int],
     weights: list[float],
@@ -385,7 +385,7 @@ def letor_rerank(
 
 def letor_features_local(
     spark: SparkSession,
-    index: IndexTables,
+    index: PackedIndex,
     qtokens: list[str],
     docids: list[int],
     cfg: LetorConfig,

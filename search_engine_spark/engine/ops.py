@@ -45,7 +45,7 @@ from search_engine_spark.config import (
     ModelConfig,
 )
 from search_engine_spark.engine import score as score_mod
-from search_engine_spark.index.build import IndexTables
+from search_engine_spark.index.persist import PackedIndex
 
 
 # --------------------------------------------------------------------------
@@ -64,7 +64,7 @@ class EvalContext:
     (the analog of the reference pulling df/ctf from the live Lucene reader,
     QryopSlScore.java:118,156)."""
 
-    index: IndexTables
+    index: PackedIndex
     model: ModelConfig
     _stats: dict = dc_field(default_factory=dict)  # (term, field) -> (df, ctf)
     # unique per-context token for per-query materialization caches (id()
@@ -86,35 +86,16 @@ class EvalContext:
         self.cached_frames.clear()
 
     def prefetch_terms(self, pairs: set[tuple[str, str]]) -> None:
-        """(df, ctf) of every leaf term of a query: one tiny filtered scan of
-        term_stats, or the packed index's driver-side read (no Spark job)."""
-        missing = [p for p in pairs if p not in self._stats]
-        if not missing:
-            return
-        # group by field + one IN list per field: a flat expression even for
-        # hundreds of terms (a reduce-OR chain overflows the JVM stack)
+        """(df, ctf) of every leaf term of a query: the driver's cached
+        pyarrow read of term_stats, one per field (no Spark job)."""
         by_field: dict = {}
-        for t, f in missing:
-            by_field.setdefault(f, []).append(t)
-        reads = getattr(self.index, "reads", None)
-        if reads is not None:
-            # packed index: the driver's cached pyarrow read, no Spark job
-            for f, ts in by_field.items():
-                found = reads.term_stats(ts, f)
-                for t in ts:
-                    self._stats[(t, f)] = found.get(t, (0, 0))
-            return
-        cond = reduce(
-            lambda a, b: a | b,
-            [
-                (F.col("field") == f) & F.col("term").isin(ts)
-                for f, ts in by_field.items()
-            ],
-        )
-        rows = self.index.term_stats.where(cond).collect()
-        found = {(r["term"], r["field"]): (r["df"], r["ctf"]) for r in rows}
-        for p in missing:
-            self._stats[p] = found.get(p, (0, 0))
+        for t, f in pairs:
+            if (t, f) not in self._stats:
+                by_field.setdefault(f, []).append(t)
+        for f, ts in by_field.items():
+            found = self.index.reads.term_stats(ts, f)
+            for t in ts:
+                self._stats[(t, f)] = found.get(t, (0, 0))
 
     def term_stat(self, term: str, fld: str) -> tuple[int, int]:
         if (term, fld) not in self._stats:
@@ -129,9 +110,7 @@ def _empty_scores(ctx: EvalContext) -> DataFrame:
             T.StructField("score", T.DoubleType()),
         ]
     )
-    # doc_ids exists on both backends (IndexTables materializes postings;
-    # PackedIndex leaves .postings None and decodes on demand)
-    return ctx.index.doc_ids.sparkSession.createDataFrame([], schema)
+    return ctx.index.spark.createDataFrame([], schema)
 
 
 def _doclen_for(ctx: EvalContext, fld: str) -> DataFrame:
@@ -430,7 +409,15 @@ def _union_scores(ctx: EvalContext, children: list) -> DataFrame:
 
 
 def _cand_docids(ctx: EvalContext, children: list) -> DataFrame:
-    return _union_scores(ctx, children).select("docid").distinct()
+    """The union-of-candidates docid set of an Indri combine, cached: the
+    chain join hands it to every child and grandchild, and each reference
+    would otherwise re-plan the union of every leaf scan (a packed leaf is
+    its own mapInPandas decode, so no copy can be reused: a PRF-expanded
+    #WAND with 11 leaves planned 165 decodes). Released with the query's
+    other cached frames (EvalContext.release_caches)."""
+    cands = _union_scores(ctx, children).select("docid").distinct().cache()
+    ctx.cached_frames.append(cands)
+    return cands
 
 
 @dataclass

@@ -16,7 +16,7 @@ from search_engine_spark.engine.compiler import DEFAULT_FIELD, compile_node, eva
 from search_engine_spark.engine.ops import EvalContext
 from search_engine_spark.engine.parser import QOp, QTerm, parse_query
 from search_engine_spark.engine.topk import rank_topk, trec_lines
-from search_engine_spark.index.build import IndexTables
+from search_engine_spark.index.persist import PackedIndex
 from search_engine_spark.tokenize import Tokenizer, WHITESPACE_TOKENIZER
 
 
@@ -31,10 +31,10 @@ def _collect_terms(ast) -> set[str]:
 
 @dataclass
 class Engine:
-    index: IndexTables
+    index: PackedIndex
     model: ModelConfig = ModelConfig()
     # None = resolve from the index's recorded analyzer (manifest lineage /
-    # IndexTables.tokenizer_name), falling back to whitespace for legacy
+    # PackedIndex.tokenizer_name), falling back to whitespace for legacy
     # indexes. Passing one explicitly is validated against the record: the
     # reference warns a doc/query analyzer mismatch silently yields zero
     # results (hw1/QryEval/ReadMe.txt) — here it is a hard error instead.
@@ -43,7 +43,7 @@ class Engine:
     _ctx: EvalContext | None = dc_field(default=None, repr=False)
 
     def __post_init__(self) -> None:
-        recorded = getattr(self.index, "tokenizer_name", None)
+        recorded = self.index.tokenizer_name
         if self.tokenizer is None:
             from search_engine_spark.tokenize import tokenizer_by_name
 
@@ -76,7 +76,7 @@ class Engine:
     last_prune_stats = None
 
     def _driver_topk(self, query: str, k: int) -> DataFrame | None:
-        """The driver-side answer of a packed-index BM25/Indri query, or
+        """The driver-side answer of a BM25/Indri query, or
         None when the exact plan runs. One classifier
         (``structured.root_shape``) routes the root: flat shapes to the
         block-max pruned path, trees with #NEAR/#WINDOW/#SYN children to the
@@ -88,13 +88,10 @@ class Engine:
         from search_engine_spark.engine.ops import IlNode, ScoreNode
         from search_engine_spark.engine.pruning import PruneStats
         from search_engine_spark.engine.structured import root_shape, struct_topk
-        from search_engine_spark.index.persist import PackedIndex
 
         if os.environ.get("SPARK_GRAFT_NO_PRUNE") == "1":
             return None
         if self.model.name not in (BM25, INDRI):
-            return None
-        if not isinstance(self.index, PackedIndex):
             return None
         node = compile_node(self.parse(query), self.ctx, self.default_field)
         if isinstance(node, IlNode):
@@ -139,21 +136,18 @@ class Engine:
             DRIVER_READ_ERRORS, PruneStats, bm25_topk_pruned, indri_topk_pruned,
         )
 
-        block_size = getattr(self.index, "block_size", 0)
-        if block_size:
-            # df from the driver's cached pyarrow term stats: no Spark job
-            try:
-                dfs = self.index.reads.term_stats(terms, fld)
-            except DRIVER_READ_ERRORS as e:
-                self.last_prune_stats = PruneStats(
-                    fallback=f"driver read failed: {type(e).__name__}: {e}"
-                )
-                return None
-            est_blocks = sum(-(-df // block_size) for df, _ in dfs.values())
-            if est_blocks < int(
-                os.environ.get("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "64")
-            ):
-                return None
+        # df from the driver's cached pyarrow term stats: no Spark job
+        try:
+            dfs = self.index.reads.term_stats(terms, fld)
+        except DRIVER_READ_ERRORS as e:
+            self.last_prune_stats = PruneStats(
+                fallback=f"driver read failed: {type(e).__name__}: {e}"
+            )
+            return None
+        block_size = self.index.block_size
+        est_blocks = sum(-(-df // block_size) for df, _ in dfs.values())
+        if est_blocks < int(os.environ.get("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "64")):
+            return None
 
         st = PruneStats()
         if self.model.name == BM25:

@@ -1,1 +1,2 @@
-from search_engine_spark.index.build import IndexTables, build_index  # noqa: F401
+"""Index layer: the persistent build (persist.py), its lifecycle (append,
+deletes, compact) and the queryable PackedIndex."""

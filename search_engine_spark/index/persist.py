@@ -75,7 +75,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from search_engine_spark.index.build import CorpusStats, IndexTables
 from search_engine_spark.index.codec import (
     BLOCK_SIZE,
     encode_blocks,
@@ -1990,11 +1989,33 @@ class DriverReads:
         return cached
 
 
-class PackedIndex(IndexTables):
-    """IndexTables over the persisted layout: term scans decode packed
-    varint blocks (term-pruned parquet read + Arrow-batched numpy decode);
-    block-max metadata reads touch only the small plain columns. ``reads``
-    is the driver's own pyarrow view of the same files (DriverReads)."""
+@dataclass
+class CorpusStats:
+    """Driver-side broadcast of the tiny per-field aggregates."""
+
+    n_docs: int  # numDocs() analog — LIVE docs in the index
+    by_field: dict  # field -> {"n_docs": int, "sum_doclen": int, "avgdl": float}
+
+    def avgdl(self, fld: str) -> float:
+        return self.by_field[fld]["avgdl"]
+
+    def sum_doclen(self, fld: str) -> int:
+        return self.by_field[fld]["sum_doclen"]
+
+
+class PackedIndex:
+    """The queryable index over the persisted layout: term scans decode
+    packed varint blocks (term-pruned parquet read + Arrow-batched numpy
+    decode); block-max metadata reads touch only the small plain columns.
+    ``reads`` is the driver's own pyarrow view of the same files
+    (DriverReads).
+
+    Spark-side tables: ``doc_ids`` (docid, ext_docid), ``doc_stats``
+    (docid, field, doclen) and ``term_stats`` (term, field, df, ctf) —
+    the first two minus tombstoned docs — plus ``packed`` (one row per
+    posting block). ``corpus`` holds the live per-field aggregates,
+    ``tokenizer_name`` the analyzer the index was built with (Engine
+    validates its query tokenizer against it — the §1.4 invariant)."""
 
     def __init__(self, spark: SparkSession, out_dir: str, cfg: BuildConfig | None = None):
         self.spark = spark
@@ -2036,27 +2057,19 @@ class PackedIndex(IndexTables):
             )
         if self.n_deleted and os.path.isdir(t_dir):
             self.tombstones = spark.read.parquet(t_dir)
-        super().__init__(
-            doc_ids=spark.read.parquet(f"{out_dir}/doc_ids"),
-            # forward index is not materialized in the segment layout —
-            # reconstructable by decoding packed postings (PRF runs against
-            # the in-memory IndexTables in this build)
-            doc_terms=None,
-            doc_stats=spark.read.parquet(f"{out_dir}/doc_stats"),
-            postings=None,  # packed — use postings_for / term_postings
-            term_stats=spark.read.parquet(f"{out_dir}/term_stats"),
-            corpus=CorpusStats(
-                n_docs=st["n_docs"] - self.n_purged - self.n_deleted,
-                by_field=st["by_field"],
-            ),
-            fields=tuple(sorted({f for f in st["by_field"]})),
-            tokenizer_name=man.data["lineage"].get("tokenizer"),
+        # the forward index is not materialized: doc_terms_for decodes it
+        # from the packed postings on demand
+        self.doc_ids = self._live(spark.read.parquet(f"{out_dir}/doc_ids"))
+        self.doc_stats = self._live(spark.read.parquet(f"{out_dir}/doc_stats"))
+        self.term_stats = spark.read.parquet(f"{out_dir}/term_stats")
+        self.corpus = CorpusStats(
+            n_docs=st["n_docs"] - self.n_purged - self.n_deleted,
+            by_field=st["by_field"],
         )
+        self.fields = tuple(sorted(st["by_field"]))
+        self.tokenizer_name = man.data["lineage"].get("tokenizer")
         self.packed = packed
         self.reads = DriverReads(out_dir, self.n_deleted)
-        if self.tombstones is not None:
-            self.doc_ids = self._live(self.doc_ids)
-            self.doc_stats = self._live(self.doc_stats)
 
     def _live(self, df: DataFrame) -> DataFrame:
         """Drop tombstoned docids (no-op without deletes): a map-side

@@ -32,11 +32,35 @@ from pyspark.sql import functions as F
 
 from search_engine_spark.config import BM25Params
 from search_engine_spark.engine.score import bm25_score
-from search_engine_spark.index.build import IndexTables, tokenize_fields
+from search_engine_spark.index.persist import PackedIndex
 from search_engine_spark.tokenize import Tokenizer
 
+
+def tokenize_field(
+    docs: DataFrame, field: str, source_col: str, tokenizer: Tokenizer
+) -> DataFrame:
+    """arriving docs -> (ext_docid, field, doclen, pos, term), one row per
+    token occurrence. Tokenization is a JVM split/lower/filter expression;
+    posexplode assigns 0-based positions. No Python in the loop; keyed by
+    ext_docid — arriving docs have no internal id yet."""
+    toks = tokenizer.tokens_col(F.col(source_col))
+    # two selects: the token ARRAY is materialized once as a column, then
+    # size+explode reference that attribute. Referencing the raw expression
+    # twice in one select invites per-output-row recomputation of the split
+    # inside the generator (quadratic in doc length — observed as a 20x
+    # stall at 2k-token docs).
+    return docs.select("ext_docid", toks.alias("_toks")).select(
+        "ext_docid",
+        F.lit(field).alias("field"),
+        # doclen = token count BEFORE the explode: rides every token row
+        # for free — no later shuffle/window/join to recover it
+        F.size("_toks").cast("long").alias("doclen"),
+        F.posexplode("_toks").alias("pos", "term"),
+    )
+
+
 def query_term_table(
-    index: IndexTables,
+    index: PackedIndex,
     queries: list[tuple[str, str]],
     tokenizer: Tokenizer,
     field: str = "body",
@@ -59,7 +83,7 @@ def query_term_table(
 def match_docs(
     docs: DataFrame,
     query_terms: DataFrame,
-    index: IndexTables,
+    index: PackedIndex,
     field: str = "body",
     source_col: str = "content",
     tokenizer: Tokenizer | None = None,
@@ -79,7 +103,7 @@ def match_docs(
             ),
         )
     tf = (
-        tokenize_fields(docs, {field: source_col}, tokenizer, key="ext_docid")
+        tokenize_field(docs, field, source_col, tokenizer)
         .groupBy("ext_docid", "field", "term")
         .agg(F.count(F.lit(1)).cast("int").alias("tf"),
              F.min("doclen").alias("doclen"))
@@ -111,7 +135,7 @@ def index_tokenizer_required() -> Tokenizer:
 def stream_matches(
     spark: SparkSession,
     input_path: str,
-    index: IndexTables,
+    index: PackedIndex,
     queries: list[tuple[str, str]],
     out_path: str,
     tokenizer: Tokenizer,

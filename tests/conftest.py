@@ -1,8 +1,10 @@
 """Shared fixtures: one local SparkSession, the deterministic code corpus,
-and the built index over it (fields: body=content, path=path, lang=lang)."""
+and the packed index built over it once per session (fields: body=content,
+path=path, lang=lang)."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -11,7 +13,11 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from search_engine_spark.corpus import code_corpus_df, with_docids  # noqa: E402
-from search_engine_spark.index.build import build_index  # noqa: E402
+from search_engine_spark.index.persist import (  # noqa: E402
+    BuildConfig,
+    PackedIndex,
+    build_persistent_index,
+)
 from search_engine_spark.session import get_spark  # noqa: E402
 from search_engine_spark.tokenize import CODE_TOKENIZER  # noqa: E402
 
@@ -34,15 +40,51 @@ def code_docs(spark):
 
 
 @pytest.fixture(scope="session")
-def code_index(spark, code_docs):
-    idx = build_index(
-        spark, code_docs, fields=FIELDS, tokenizer=CODE_TOKENIZER
+def code_index_dir(spark, code_docs, tmp_path_factory):
+    """The code corpus's packed index on disk; small blocks so deletes and
+    compaction hit some blocks and pass others through. Read-only: tests
+    that mutate an index copy this directory first."""
+    out = str(tmp_path_factory.mktemp("code_index") / "idx")
+    cfg = BuildConfig(
+        out_dir=out, fields=FIELDS, tokenizer=CODE_TOKENIZER,
+        n_buckets=4, block_size=16,
     )
-    # materialize the cached tables once; every query reuses them
-    idx.doc_terms.count()
-    idx.doc_stats.count()
-    idx.term_stats.count()
-    return idx
+    build_persistent_index(spark, code_docs, cfg, resume=False)
+    return out
+
+
+@pytest.fixture(scope="session")
+def code_index(spark, code_index_dir):
+    return PackedIndex(spark, code_index_dir)
+
+
+@pytest.fixture(scope="session")
+def pidx(spark, code_docs, tmp_path_factory):
+    """Body-only packed index with tiny blocks and salted heavy terms: the
+    block-max pruning and driver-read tests' shared build."""
+    out = str(tmp_path_factory.mktemp("pidx") / "v1")
+    cfg = BuildConfig(
+        out_dir=out, n_buckets=4, block_size=8, salt_threshold=40, n_salts=4,
+        fields={"body": "content"}, tokenizer=CODE_TOKENIZER,
+    )
+    build_persistent_index(spark, code_docs, cfg, resume=False)
+    return PackedIndex(spark, out)
+
+
+@pytest.fixture
+def exact_plan(monkeypatch):
+    """``with exact_plan():`` routes Engine.search to the exact Spark plan
+    (SPARK_GRAFT_NO_PRUNE=1) inside the block. On a packed index the engine
+    otherwise answers structured shapes, and flat shapes past the pruning
+    gate, on the driver — tests whose reference is the Spark plan use this."""
+
+    @contextlib.contextmanager
+    def forced():
+        with monkeypatch.context() as m:
+            m.setenv("SPARK_GRAFT_NO_PRUNE", "1")
+            yield
+
+    return forced
 
 
 @pytest.fixture(scope="session")

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from search_engine_spark.config import BM25, ModelConfig
 from search_engine_spark.engine.runner import Engine
-from search_engine_spark.index.build import build_index
 from search_engine_spark.index.compact import compact_index
 from search_engine_spark.index.deletes import delete_docs
 from search_engine_spark.index.persist import (
@@ -32,10 +31,16 @@ def _cfg(out: str) -> BuildConfig:
 
 
 @pytest.fixture(scope="module")
-def pristine_dir(spark, code_docs, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("idx_cmp") / "pristine")
-    build_persistent_index(spark, code_docs, _cfg(out), resume=False)
-    return out
+def pristine_dir(code_index_dir):
+    """The session's code index (the same config as ``_cfg``); read-only."""
+    return code_index_dir
+
+
+def _live_build(spark, code_docs, victims, out):
+    """Fresh packed build over the live docs (original docids)."""
+    docs = code_docs.where(~F.col("docid").isin(victims))
+    build_persistent_index(spark, docs, _cfg(out), resume=False)
+    return PackedIndex(spark, out)
 
 
 @pytest.fixture(scope="module")
@@ -56,16 +61,9 @@ def compacted(spark, pristine_dir, victims, tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def live_mem(spark, code_docs, victims):
-    """In-memory reference build over the live docs (original docids)."""
-    idx = build_index(
-        spark,
-        code_docs.where(~F.col("docid").isin(victims)),
-        fields=FIELDS,
-        tokenizer=CODE_TOKENIZER,
-    )
-    idx.doc_terms.count()
-    return idx
+def live(spark, code_docs, victims, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("idx_cmp") / "live")
+    return _live_build(spark, code_docs, victims, out)
 
 
 def _rows(df, cols):
@@ -80,26 +78,26 @@ def test_compact_counters(compacted, victims):
     assert idx.n_purged == len(victims)
 
 
-def test_compact_equals_fresh_build_over_live(spark, compacted, live_mem):
+def test_compact_equals_fresh_build_over_live(spark, compacted, live):
     idx, _ = compacted
     # corpus stats go FRESH (unlike the pre-compaction stale contract)
-    assert idx.corpus.n_docs == live_mem.corpus.n_docs
-    assert idx.corpus.by_field == live_mem.corpus.by_field
+    assert idx.corpus.n_docs == live.corpus.n_docs
+    assert idx.corpus.by_field == live.corpus.by_field
     # dimension tables
     assert _rows(idx.doc_ids, ["docid", "ext_docid"]) == _rows(
-        live_mem.doc_ids, ["docid", "ext_docid"]
+        live.doc_ids, ["docid", "ext_docid"]
     )
     assert _rows(idx.doc_stats, ["docid", "field", "doclen"]) == _rows(
-        live_mem.doc_stats, ["docid", "field", "doclen"]
+        live.doc_stats, ["docid", "field", "doclen"]
     )
     # term dictionary: df/ctf fresh, df=0 terms dropped
     assert _rows(idx.term_stats, ["term", "field", "df", "ctf"]) == _rows(
-        live_mem.term_stats, ["term", "field", "df", "ctf"]
+        live.term_stats, ["term", "field", "df", "ctf"]
     )
     # postings incl. re-encoded positions, for the 3 most common body terms
     terms = [
         r["term"]
-        for r in live_mem.term_stats.where(F.col("field") == "body")
+        for r in live.term_stats.where(F.col("field") == "body")
         .orderBy(F.desc("df"), "term").limit(3).collect()
     ]
     cols = ["term", "docid", "tf", "doclen", "df", "ctf", "positions"]
@@ -113,24 +111,24 @@ def test_compact_equals_fresh_build_over_live(spark, compacted, live_mem):
     want = sorted(
         (r["term"], r["docid"], r["tf"], r["doclen"], r["df"], r["ctf"],
          tuple(r["positions"]))
-        for r in live_mem.postings.where(
-            (F.col("field") == "body") & F.col("term").isin(terms)
+        for r in live.postings_for(
+            [(t, "body") for t in terms], with_positions=True
         ).collect()
     )
     assert got == want and got
 
 
-def test_compact_search_bitwise(spark, compacted, live_mem):
+def test_compact_search_bitwise(spark, compacted, live):
     idx, _ = compacted
     terms = [
         r["term"]
-        for r in live_mem.term_stats.where(
+        for r in live.term_stats.where(
             (F.col("field") == "body") & F.col("df").between(5, 30)
         ).orderBy(F.desc("df"), "term").limit(3).collect()
     ]
     query = " ".join(terms)
     a = [tuple(r) for r in Engine(idx, ModelConfig(name=BM25)).search(query, 30).collect()]
-    b = [tuple(r) for r in Engine(live_mem, ModelConfig(name=BM25)).search(query, 30).collect()]
+    b = [tuple(r) for r in Engine(live, ModelConfig(name=BM25)).search(query, 30).collect()]
     assert a == b and a
 
 
@@ -194,12 +192,7 @@ def test_lifecycle_delete_append_compact(spark, code_docs, tmp_path):
 
     compact_index(spark, out)
     final = PackedIndex(spark, out)
-    live = build_index(
-        spark,
-        code_docs.where(~F.col("docid").isin(victims)),
-        fields=FIELDS,
-        tokenizer=CODE_TOKENIZER,
-    )
+    live = _live_build(spark, code_docs, victims, str(tmp_path / "idx_live"))
     assert final.corpus.n_docs == live.corpus.n_docs
     assert final.corpus.by_field == live.corpus.by_field
     assert _rows(final.term_stats, ["term", "field", "df", "ctf"]) == _rows(

@@ -16,14 +16,7 @@ from pyspark.sql import functions as F
 from search_engine_spark.config import BM25, ModelConfig
 from search_engine_spark.engine.runner import Engine
 from search_engine_spark.index.deletes import delete_docs
-from search_engine_spark.index.persist import (
-    BuildConfig,
-    PackedIndex,
-    build_persistent_index,
-)
-from search_engine_spark.tokenize import CODE_TOKENIZER
-
-FIELDS = {"body": "content", "path": "path", "lang": "lang"}
+from search_engine_spark.index.persist import PackedIndex
 
 
 def _query_terms(pristine) -> list[str]:
@@ -42,18 +35,10 @@ def _query_terms(pristine) -> list[str]:
     return [r["term"] for r in rows]
 
 
-def _cfg(out: str) -> BuildConfig:
-    return BuildConfig(
-        out_dir=out, fields=FIELDS, tokenizer=CODE_TOKENIZER,
-        n_buckets=4, block_size=16,
-    )
-
-
 @pytest.fixture(scope="module")
-def pristine_dir(spark, code_docs, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("idx_del") / "pristine")
-    build_persistent_index(spark, code_docs, _cfg(out), resume=False)
-    return out
+def pristine_dir(code_index_dir):
+    """The session's code index; read-only (tests delete in a copy)."""
+    return code_index_dir
 
 
 @pytest.fixture(scope="module")

@@ -11,9 +11,7 @@ import pytest
 from search_engine_spark.config import BM25, INDRI, ModelConfig
 from search_engine_spark.engine import pruning as pruning_mod
 from search_engine_spark.engine.runner import Engine
-from search_engine_spark.index.persist import (
-    BuildConfig, PackedIndex, build_persistent_index,
-)
+from search_engine_spark.index.persist import PackedIndex
 from search_engine_spark.tokenize import CODE_TOKENIZER
 
 K = 20
@@ -44,17 +42,6 @@ EDGE = [
     (BM25, "#NEAR/1(zzz_not_in_vocab_zzz qqq_not_in_vocab_qqq)"),  # no leaf at all
 ]
 NO_MATCH = "#AND(lock #NEAR/1(free lock))"
-
-
-@pytest.fixture(scope="module")
-def pidx(spark, code_docs, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("structidx") / "v1")
-    cfg = BuildConfig(
-        out_dir=out, n_buckets=4, block_size=8, salt_threshold=40, n_salts=4,
-        fields={"body": "content"}, tokenizer=CODE_TOKENIZER,
-    )
-    build_persistent_index(spark, code_docs, cfg)
-    return PackedIndex(spark, out)
 
 
 def _answer(index, model, text, k=K):

@@ -8,12 +8,14 @@ search_engine_spark/porter.py). Covered here:
 
 - Porter golden vectors: every worked example printed in the 1980 paper;
 - the pipeline order contract (possessive before stop, stop before stem);
-- index-path equivalence: the in-memory build (Python-twin tokenize) and the
-  packed v3 build (Arrow kernel + vocab-level transform/remap) produce
-  rank-identical BM25 results;
-- rank identity vs the independent PyOracle on an English micro-corpus;
+- rank identity of the packed build (Arrow kernel + vocab-level
+  transform/remap) vs the independent PyOracle (Python-twin tokenize) on
+  an English micro-corpus;
+- query-path equivalence on that index: the driver-side answers (block-max
+  pruned flat shapes) are bitwise the exact Spark plan's;
 - stem collapse: distinct surface forms of one stem merge into ONE posting
-  with ascending interleaved positions on both paths.
+  with ascending interleaved positions, in the posting scan and the
+  forward-index decode.
 """
 
 from __future__ import annotations
@@ -23,7 +25,6 @@ import pytest
 from search_engine_spark.config import BM25, INDRI, ModelConfig
 from search_engine_spark.corpus import with_docids
 from search_engine_spark.engine.runner import Engine
-from search_engine_spark.index.build import build_index
 from search_engine_spark.index.persist import (
     BuildConfig,
     PackedIndex,
@@ -174,7 +175,7 @@ def test_registry_roundtrip(spark):
 
 
 # ---------------------------------------------------------------------------
-# English micro-corpus: in-memory vs packed vs PyOracle
+# English micro-corpus: packed index vs PyOracle, driver vs exact plan
 # ---------------------------------------------------------------------------
 
 _DOCS = [
@@ -204,15 +205,6 @@ def eng_docs(spark):
     ).cache()
     df.count()
     return df
-
-
-@pytest.fixture(scope="module")
-def eng_mem_index(spark, eng_docs):
-    idx = build_index(
-        spark, eng_docs, fields={"body": "content"}, tokenizer=ENGLISH_TOKENIZER
-    )
-    idx.doc_terms.count()
-    return idx
 
 
 @pytest.fixture(scope="module")
@@ -247,18 +239,22 @@ QUERIES = [
 
 
 @pytest.mark.parametrize("model,q", QUERIES)
-def test_packed_matches_inmemory_english(eng_mem_index, eng_packed, model, q):
-    mem = Engine(eng_mem_index, ModelConfig(name=model), tokenizer=ENGLISH_TOKENIZER)
-    pak = Engine(eng_packed, ModelConfig(name=model), tokenizer=ENGLISH_TOKENIZER)
-    a = [(r["rank"], r["docid"], r["score"]) for r in mem.search(q, 20).collect()]
-    b = [(r["rank"], r["docid"], r["score"]) for r in pak.search(q, 20).collect()]
+def test_packed_matches_inmemory_english(eng_packed, exact_plan, monkeypatch, model, q):
+    """The packed index's driver-side answer (pruning gate forced open, so
+    flat shapes take the block-max pruned path) is bitwise the exact Spark
+    plan's."""
+    eng = Engine(eng_packed, ModelConfig(name=model), tokenizer=ENGLISH_TOKENIZER)
+    monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "0")
+    a = [(r["rank"], r["docid"], r["score"]) for r in eng.search(q, 20).collect()]
+    with exact_plan():
+        b = [(r["rank"], r["docid"], r["score"]) for r in eng.search(q, 20).collect()]
     assert a == b, (model, q)
     assert a, f"vacuous query: {q!r}"
 
 
 @pytest.mark.parametrize("model,q", QUERIES)
-def test_rank_identity_vs_pyoracle_english(eng_mem_index, eng_oracle, model, q):
-    eng = Engine(eng_mem_index, ModelConfig(name=model), tokenizer=ENGLISH_TOKENIZER)
+def test_rank_identity_vs_pyoracle_english(eng_packed, eng_oracle, model, q):
+    eng = Engine(eng_packed, ModelConfig(name=model), tokenizer=ENGLISH_TOKENIZER)
     got = [
         (r["rank"], r["docid"], r["ext_docid"], r["score"])
         for r in eng.search(q, 20).collect()
@@ -270,36 +266,43 @@ def test_rank_identity_vs_pyoracle_english(eng_mem_index, eng_oracle, model, q):
         assert g[3] == pytest.approx(w[3], rel=1e-9, abs=1e-12)
 
 
-def test_engine_resolves_and_guards_analyzer(eng_packed, eng_mem_index):
+def test_engine_resolves_and_guards_analyzer(eng_packed):
     """§1.4 invariant, enforced mechanically: the engine resolves the
-    analyzer recorded in the index (manifest lineage for PackedIndex,
-    tokenizer_name for in-memory tables) and refuses a mismatched one —
-    the reference's silent zero-results footgun becomes a hard error."""
+    analyzer recorded in the index's manifest lineage and refuses a
+    mismatched one — the reference's silent zero-results footgun becomes a
+    hard error."""
+    import copy
+
     from search_engine_spark.tokenize import CODE_TOKENIZER
 
     assert eng_packed.tokenizer_name == "english"
-    assert eng_mem_index.tokenizer_name == "english"
     eng = Engine(eng_packed, ModelConfig(name=BM25))  # auto-resolve
     assert eng.tokenizer is ENGLISH_TOKENIZER
     with pytest.raises(ValueError, match="must share the analyzer"):
         Engine(eng_packed, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)
     # legacy index without a record: defaults to whitespace, no guard
-    import dataclasses
-
-    legacy = dataclasses.replace(eng_mem_index, tokenizer_name=None)
+    legacy = copy.copy(eng_packed)
+    legacy.tokenizer_name = None
     assert Engine(legacy, ModelConfig(name=BM25)).tokenizer.name == "whitespace"
     Engine(legacy, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)  # allowed
 
 
-def test_stem_collapse_single_posting(eng_mem_index, eng_packed):
+def test_stem_collapse_single_posting(eng_packed):
     """d07: 'run run run — a running tally of runs' -> post-stop tokens
     [run, run, run, run, tally, run] -> ONE posting for 'run' with tf=5 and
-    positions [0,1,2,3,5] on BOTH index paths."""
-    for idx in (eng_mem_index, eng_packed):
-        rows = idx.postings_for([("run", "body")], with_positions=True).collect()
-        by_doc = {r["docid"]: r for r in rows}
-        d07 = [r for r in rows if r["tf"] == 5]
-        assert len(d07) == 1
-        assert list(d07[0]["positions"]) == [0, 1, 2, 3, 5]
-        # df spans the docs whose surface forms all collapse to 'run'
-        assert len(by_doc) >= 2
+    positions [0,1,2,3,5], in the posting scan AND the forward index."""
+    rows = eng_packed.postings_for([("run", "body")], with_positions=True).collect()
+    by_doc = {r["docid"]: r for r in rows}
+    d07 = [r for r in rows if r["tf"] == 5]
+    assert len(d07) == 1
+    assert list(d07[0]["positions"]) == [0, 1, 2, 3, 5]
+    # df spans the docs whose surface forms all collapse to 'run'
+    assert len(by_doc) >= 2
+    fwd = {
+        r["term"]: (r["tf"], list(r["positions"]))
+        for r in eng_packed.doc_terms_for(
+            [d07[0]["docid"]], "body", with_positions=True
+        ).collect()
+    }
+    assert fwd.pop("run") == (5, [0, 1, 2, 3, 5])
+    assert list(fwd.values()) == [(1, [4])]  # tally's stem

@@ -103,3 +103,29 @@ def test_no_match_returns_none(indri_eng):
 
     res, learned, exp = search_expanded(indri_eng, ABSENT_TERM, FbParams())
     assert res is None and learned is None
+
+
+def _count_plan_nodes(jplan, simple_name: str) -> int:
+    n = int(jplan.getClass().getSimpleName() == simple_name)
+    kids = jplan.children()
+    return n + sum(
+        _count_plan_nodes(kids.apply(i), simple_name) for i in range(kids.size())
+    )
+
+
+def test_expanded_query_plan_decodes_each_leaf_once(indri_eng):
+    """The PRF-shaped nested #WAND runs the chain-join plan: its candidate
+    set is cached, so each packed leaf is decoded by exactly one
+    mapInPandas node. Re-planned per child and grandchild, the candidate
+    union repeated every leaf decode ~15x, which exhausted the JVM at
+    sf0.01."""
+    q = (
+        "#WAND ( 0.5 #AND( lock free queue ) "
+        "0.5 #WAND (0.3 ring 0.3 buffer 0.4 slot ) )"
+    )
+    scores = indri_eng.scores(q)
+    try:
+        plan = scores._jdf.queryExecution().sparkPlan()
+        assert _count_plan_nodes(plan, "MapInPandasExec") == 6
+    finally:
+        indri_eng.ctx.release_caches()

@@ -173,20 +173,28 @@ def test_build_counters_and_lineage(built, code_docs):
     assert man.data["lineage"]["input_fingerprint"]
 
 
-def test_packed_matches_inmemory(spark, built, code_index):
+def _assert_matches_oracle(got, want):
+    """rank/docid/ext id exact, score to 1e-9 (the oracle sums in its own
+    order) — the test_rank_identity contract."""
+    assert len(got) == len(want) > 0
+    for g, w in zip(got, want):
+        assert g[:3] == w[:3], (g, w)
+        assert g[3] == pytest.approx(w[3], rel=1e-9, abs=1e-12)
+
+
+def test_packed_matches_inmemory(spark, built, py_oracle):
+    """The salted body-only build ranks like the pure-Python oracle's dict
+    index (the reference semantics, computed independently)."""
     out, _, _ = built
     pidx = PackedIndex(spark, out)
-    # NOTE: code_index has 3 fields; compare on body-only queries
     for model, q in [
         (BM25, "lock free queue"),
         (BM25, "#SUM(ring buffer slot)"),
         (INDRI, "#WAND(0.7 lock 0.2 free 0.1 queue)"),
     ]:
-        mem = Engine(code_index, ModelConfig(name=model), tokenizer=CODE_TOKENIZER)
         pak = Engine(pidx, ModelConfig(name=model), tokenizer=CODE_TOKENIZER)
-        a = [(r["rank"], r["docid"], r["score"]) for r in mem.search(q, 30).collect()]
-        b = [(r["rank"], r["docid"], r["score"]) for r in pak.search(q, 30).collect()]
-        assert a == b, (model, q)
+        got = [tuple(r) for r in pak.search(q, 30).collect()]
+        _assert_matches_oracle(got, py_oracle.search(q, ModelConfig(name=model), 30))
 
 
 def test_heavy_terms_are_salted(spark, built):
@@ -300,36 +308,36 @@ def test_resume_validates_config_and_input(spark, code_docs, built):
     assert counters["blocks_written"] > 0
 
 
-def test_packed_forward_index_and_prf(spark, built, code_index):
+def test_packed_forward_index_and_prf(spark, built, py_oracle):
     """doc_terms_for on PackedIndex (decode-on-demand from packed postings)
-    must equal the in-memory forward index, and PRF through the packed index
-    must produce the identical expansion + ranking (VERDICT r01 item 3)."""
+    must equal the oracle's forward view (tf and positions), and PRF
+    through the packed index must produce the oracle's expansion + ranking
+    (VERDICT r01 item 3)."""
     from search_engine_spark.config import INDRI, ModelConfig
     from search_engine_spark.engine.expand import FbParams, search_expanded
+    from tests.test_expand import py_learned
 
     out, _, _ = built
     pidx = PackedIndex(spark, out)
     ids = [3, 17, 42, 99]
-    mem = {
-        (r["docid"], r["term"]): (r["tf"], tuple(r["positions"]))
-        for r in code_index.doc_terms_for(ids, "body", with_positions=True).collect()
+    want = {
+        (d, t): (posts[d][0], tuple(posts[d][1]))
+        for t, posts in py_oracle.post["body"].items()
+        for d in ids
+        if d in posts
     }
-    pak = {
+    got = {
         (r["docid"], r["term"]): (r["tf"], tuple(r["positions"]))
         for r in pidx.doc_terms_for(ids, "body", with_positions=True).collect()
     }
-    assert mem and mem == pak
+    assert want and got == want
 
     p = FbParams(fb_docs=4, fb_terms=6, fb_mu=0.0, fb_orig_weight=0.5)
-    res_m, learned_m, _ = search_expanded(
-        Engine(code_index, ModelConfig(name=INDRI), tokenizer=CODE_TOKENIZER),
-        "lock free queue", p, k=15,
+    model = ModelConfig(name=INDRI)
+    res, learned, exp = search_expanded(
+        Engine(pidx, model, tokenizer=CODE_TOKENIZER), "lock free queue", p, k=15,
     )
-    res_p, learned_p, _ = search_expanded(
-        Engine(pidx, ModelConfig(name=INDRI), tokenizer=CODE_TOKENIZER),
-        "lock free queue", p, k=15,
+    assert learned == py_learned(py_oracle, "lock free queue", p, model)
+    _assert_matches_oracle(
+        [tuple(r) for r in res.collect()], py_oracle.search(exp, model, 15)
     )
-    assert learned_m == learned_p
-    assert [
-        (r["rank"], r["docid"], r["score"]) for r in res_m.collect()
-    ] == [(r["rank"], r["docid"], r["score"]) for r in res_p.collect()]

@@ -19,7 +19,11 @@ from search_engine_spark.config import (
 from search_engine_spark.engine.compiler import compile_node
 from search_engine_spark.engine.ops import EvalContext
 from search_engine_spark.engine.runner import Engine
-from search_engine_spark.index.build import build_index
+from search_engine_spark.index.persist import (
+    BuildConfig,
+    PackedIndex,
+    build_persistent_index,
+)
 from search_engine_spark.tokenize import WHITESPACE_TOKENIZER
 
 DOCS = [
@@ -33,11 +37,24 @@ DOCS = [
 
 
 @pytest.fixture(scope="module")
-def micro_index(spark):
+def micro_index(spark, tmp_path_factory):
     df = spark.createDataFrame(
         [(d, e, t) for d, e, t in DOCS], "docid long, ext_docid string, text string"
     )
-    return build_index(spark, df, fields={"body": "text"}, tokenizer=WHITESPACE_TOKENIZER)
+    out = str(tmp_path_factory.mktemp("micro_index") / "idx")
+    cfg = BuildConfig(
+        out_dir=out, fields={"body": "text"}, tokenizer=WHITESPACE_TOKENIZER,
+        n_buckets=2,
+    )
+    build_persistent_index(spark, df, cfg, resume=False)
+    return PackedIndex(spark, out)
+
+
+@pytest.fixture(autouse=True)
+def _exact_plan(exact_plan):
+    # the hand-computed values check the Spark operators themselves
+    with exact_plan():
+        yield
 
 
 def scores_map(eng, q):

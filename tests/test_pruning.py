@@ -10,17 +10,6 @@ from search_engine_spark.index.persist import BuildConfig, PackedIndex, build_pe
 from search_engine_spark.tokenize import CODE_TOKENIZER
 
 
-@pytest.fixture(scope="module")
-def pidx(spark, code_docs, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("pruneidx") / "v1")
-    cfg = BuildConfig(
-        out_dir=out, n_buckets=4, block_size=8, salt_threshold=40, n_salts=4,
-        fields={"body": "content"}, tokenizer=CODE_TOKENIZER,
-    )
-    build_persistent_index(spark, code_docs, cfg)
-    return PackedIndex(spark, out)
-
-
 QUERIES = [
     ["lock", "free", "queue"],
     ["parse_init", "token_next"],
@@ -31,7 +20,7 @@ QUERIES = [
 
 
 @pytest.mark.parametrize("terms", QUERIES, ids=["+".join(q) for q in QUERIES])
-def test_pruned_identical_to_exact(spark, pidx, terms, code_index):
+def test_pruned_identical_to_exact(spark, pidx, terms, code_index, exact_plan):
     k = 20
     stats = PruneStats()
     pruned = [
@@ -39,17 +28,20 @@ def test_pruned_identical_to_exact(spark, pidx, terms, code_index):
         for r in bm25_topk_pruned(pidx, terms, k=k, stats=stats).collect()
     ]
     eng = Engine(code_index, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)
-    exact = [
-        (r["rank"], r["docid"], r["ext_docid"], r["score"])
-        for r in eng.search(" ".join(terms), k).collect()
-    ]
+    with exact_plan():
+        exact = [
+            (r["rank"], r["docid"], r["ext_docid"], r["score"])
+            for r in eng.search(" ".join(terms), k).collect()
+        ]
     assert pruned == exact
     assert stats.n_blocks_total > 0
     assert stats.score_mode == "driver"  # small survivor set: no Spark job
 
 
 @pytest.mark.parametrize("terms", QUERIES[:2], ids=["+".join(q) for q in QUERIES[:2]])
-def test_driver_read_failure_runs_exact_plan(spark, pidx, terms, code_index, monkeypatch):
+def test_driver_read_failure_runs_exact_plan(
+    spark, pidx, terms, code_index, exact_plan, monkeypatch
+):
     """A failed driver-side read makes the planner step aside (None, with
     the reason recorded) and Engine.search answers with the exact plan,
     bitwise."""
@@ -71,11 +63,14 @@ def test_driver_read_failure_runs_exact_plan(spark, pidx, terms, code_index, mon
     got = [tuple(r) for r in eng.search(" ".join(terms), k).collect()]
     assert eng.last_prune_stats is None
     exact_eng = Engine(code_index, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)
-    exact = [tuple(r) for r in exact_eng.search(" ".join(terms), k).collect()]
+    with exact_plan():
+        exact = [tuple(r) for r in exact_eng.search(" ".join(terms), k).collect()]
     assert got == exact and got
 
 
-def test_gate_term_stats_failure_reports_fallback(spark, pidx, code_index, monkeypatch):
+def test_gate_term_stats_failure_reports_fallback(
+    spark, pidx, code_index, exact_plan, monkeypatch
+):
     """A failed term-stats read in the engine's pruning gate answers with
     the exact plan, bitwise, and reports that fallback — not the stats of
     the query before it."""
@@ -104,7 +99,8 @@ def test_gate_term_stats_failure_reports_fallback(spark, pidx, code_index, monke
         fallback="driver read failed: OSError: forced term-stats read failure"
     )
     exact_eng = Engine(code_index, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)
-    exact = [tuple(r) for r in exact_eng.search(" ".join(terms), k).collect()]
+    with exact_plan():
+        exact = [tuple(r) for r in exact_eng.search(" ".join(terms), k).collect()]
     assert got == exact and got
 
 
@@ -190,7 +186,7 @@ def _indri_query_text(kind, weights, terms):
     ids=[f"{k}-{'+'.join(t)}" for k, _, t in INDRI_QUERIES],
 )
 def test_indri_pruned_identical_to_exact(
-    spark, pidx, code_index, monkeypatch, kind, weights, terms
+    spark, pidx, code_index, exact_plan, kind, weights, terms
 ):
     k = 20
     stats = PruneStats()
@@ -200,12 +196,12 @@ def test_indri_pruned_identical_to_exact(
         (r["rank"], r["docid"], r["ext_docid"], r["score"])
         for r in res.collect()
     ]
-    monkeypatch.setenv("SPARK_GRAFT_NO_PRUNE", "1")
     eng = Engine(code_index, ModelConfig(name=INDRI), tokenizer=CODE_TOKENIZER)
-    exact = [
-        (r["rank"], r["docid"], r["ext_docid"], r["score"])
-        for r in eng.search(_indri_query_text(kind, weights, terms), k).collect()
-    ]
+    with exact_plan():
+        exact = [
+            (r["rank"], r["docid"], r["ext_docid"], r["score"])
+            for r in eng.search(_indri_query_text(kind, weights, terms), k).collect()
+        ]
     assert pruned == exact and pruned
     assert stats.score_mode == "driver"
     assert stats.n_blocks_total > 0
@@ -223,7 +219,7 @@ def test_indri_pruned_fallback_contract(spark, pidx):
     assert indri_topk_pruned(pidx, "wsum", ["lock", "queue"], [0.0, 0.0], k=5) is None
 
 
-def test_indri_engine_dispatch(spark, pidx, code_index, monkeypatch):
+def test_indri_engine_dispatch(spark, pidx, code_index, exact_plan, monkeypatch):
     """Engine.search routes flat Indri shapes through the pruned plan past
     the block gate, bitwise-identical to the exact pivot plan."""
     monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "1")
@@ -231,9 +227,12 @@ def test_indri_engine_dispatch(spark, pidx, code_index, monkeypatch):
     got = [tuple(r) for r in eng.search("#WAND(0.7 lock 0.2 queue 0.1 slot)", 15).collect()]
     assert eng.last_prune_stats is not None
     assert eng.last_prune_stats.score_mode == "driver"
-    monkeypatch.setenv("SPARK_GRAFT_NO_PRUNE", "1")
     exact_eng = Engine(code_index, ModelConfig(name=INDRI), tokenizer=CODE_TOKENIZER)
-    want = [tuple(r) for r in exact_eng.search("#WAND(0.7 lock 0.2 queue 0.1 slot)", 15).collect()]
+    with exact_plan():
+        want = [
+            tuple(r)
+            for r in exact_eng.search("#WAND(0.7 lock 0.2 queue 0.1 slot)", 15).collect()
+        ]
     assert got == want and got
 
 
@@ -269,14 +268,17 @@ from search_engine_spark.engine import pruning as pruning_mod  # noqa: E402
 
 
 @pytest.mark.parametrize("terms", QUERIES, ids=["+".join(q) for q in QUERIES])
-def test_pruned_spark_side_identical_to_exact(spark, pidx, terms, code_index, monkeypatch):
+def test_pruned_spark_side_identical_to_exact(
+    spark, pidx, terms, code_index, exact_plan, monkeypatch
+):
     """With the driver-scoring size gate at 0 every survivor set takes the
     one-job Spark scan, which must be bitwise the exact plan's as well."""
     monkeypatch.setattr(pruning_mod, "_POSTS_PER_TASK", 0)
     stats = PruneStats()
     pruned = [tuple(r) for r in bm25_topk_pruned(pidx, terms, k=20, stats=stats).collect()]
     eng = Engine(code_index, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)
-    exact = [tuple(r) for r in eng.search(" ".join(terms), 20).collect()]
+    with exact_plan():
+        exact = [tuple(r) for r in eng.search(" ".join(terms), 20).collect()]
     assert pruned == exact
     assert stats.score_mode == "spark"
 
@@ -286,17 +288,18 @@ def test_pruned_spark_side_identical_to_exact(spark, pidx, terms, code_index, mo
     ids=[f"{k}-{'+'.join(t)}" for k, _, t in INDRI_QUERIES],
 )
 def test_indri_pruned_spark_side_identical_to_exact(
-    spark, pidx, code_index, monkeypatch, kind, weights, terms
+    spark, pidx, code_index, exact_plan, monkeypatch, kind, weights, terms
 ):
     monkeypatch.setattr(pruning_mod, "_POSTS_PER_TASK", 0)
     stats = PruneStats()
     res = indri_topk_pruned(pidx, kind, terms, weights, k=20, stats=stats)
     pruned = [tuple(r) for r in res.collect()]
-    monkeypatch.setenv("SPARK_GRAFT_NO_PRUNE", "1")
     eng = Engine(code_index, ModelConfig(name=INDRI), tokenizer=CODE_TOKENIZER)
-    exact = [
-        tuple(r) for r in eng.search(_indri_query_text(kind, weights, terms), 20).collect()
-    ]
+    with exact_plan():
+        exact = [
+            tuple(r)
+            for r in eng.search(_indri_query_text(kind, weights, terms), 20).collect()
+        ]
     assert pruned == exact and pruned
     assert stats.score_mode == "spark"
 
@@ -364,7 +367,7 @@ def _assert_matches_oracle(got, want):
 
 @pytest.mark.parametrize("gate", ["driver", "spark"])
 def test_adversarial_spreads_bitwise(
-    spark, pidx, code_index, py_oracle, monkeypatch, gate
+    spark, pidx, code_index, py_oracle, exact_plan, monkeypatch, gate
 ):
     """A BM25 bag mixing df=1 and idf-clamped terms, and an Indri #WAND with
     weights from 1e-3 to 1: bitwise the exact plan's on both sides of the
@@ -378,14 +381,13 @@ def test_adversarial_spreads_bitwise(
     k = 30
     for model, text in ((BM25, " ".join(terms)), (INDRI, wand)):
         monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "0")
-        monkeypatch.setenv("SPARK_GRAFT_NO_PRUNE", "0")
         eng = Engine(pidx, ModelConfig(name=model), tokenizer=CODE_TOKENIZER)
         pruned = [tuple(r) for r in eng.search(text, k).collect()]
         assert eng.last_prune_stats is not None, text
         assert eng.last_prune_stats.score_mode == gate, text
-        monkeypatch.setenv("SPARK_GRAFT_NO_PRUNE", "1")
         exact_eng = Engine(code_index, ModelConfig(name=model), tokenizer=CODE_TOKENIZER)
-        exact = [tuple(r) for r in exact_eng.search(text, k).collect()]
+        with exact_plan():
+            exact = [tuple(r) for r in exact_eng.search(text, k).collect()]
         assert pruned == exact and pruned, text
         _assert_matches_oracle(pruned, py_oracle.search(text, ModelConfig(name=model), k))
 

@@ -41,6 +41,14 @@ QUERIES = [
 ]
 
 
+@pytest.fixture(autouse=True)
+def _exact_plan(exact_plan):
+    # the oracle checks the Spark plan; the driver-side answers are
+    # checked bitwise against it in test_pruning / test_driver_struct
+    with exact_plan():
+        yield
+
+
 def _engine(code_index, model_name):
     return Engine(
         code_index, ModelConfig(name=model_name), tokenizer=CODE_TOKENIZER
