@@ -617,6 +617,26 @@ def _indri_pivot_scores_mf(ctx: EvalContext, children: list, combine) -> DataFra
     return base.select("docid", combine(cols).alias("score"))
 
 
+def indri_combine(kind: str, weights: list | None, cols: list) -> Column:
+    """The Indri combines over per-child score Columns, children left to
+    right: "and" the geometric mean (QryopSlIndriAnd.java:80), "wand"
+    ∏ sᵢ^(wᵢ/W) starting at 1.0 (QryopSlWand.java:55-125), "wsum" Σ sᵢ·wᵢ/W
+    starting at 0.0 (QryopSlWsum.java:56-135). engine/pruning.py's
+    ``_indri_combine`` is its numpy twin."""
+    if kind == "and":
+        prod = reduce(lambda a, b: a * b, cols)
+        return F.pow(prod, F.lit(1.0 / len(cols)))
+    W = _total_weight(weights)
+    shares = [F.lit(w / W if W != 0 else math.nan) for w in weights]
+    if kind == "wand":
+        return reduce(lambda acc, cw: acc * F.pow(*cw), zip(cols, shares), F.lit(1.0))
+    return reduce(lambda acc, cw: acc + cw[0] * cw[1], zip(cols, shares), F.lit(0.0))
+
+
+def _total_weight(weights: list) -> float:
+    return float(sum(weights))
+
+
 @dataclass
 class IndriAndNode(SlNode):
     """#AND under Indri — every doc in the union of child lists is scored with
@@ -626,8 +646,7 @@ class IndriAndNode(SlNode):
     children: list
 
     def _combine(self, cols: list) -> Column:
-        prod = reduce(lambda a, b: a * b, cols)
-        return F.pow(prod, F.lit(1.0 / len(self.children)))
+        return indri_combine("and", None, cols)
 
     def scores(self, ctx: EvalContext) -> DataFrame:
         fast = _indri_pivot_scores(ctx, self.children, self._combine)
@@ -643,10 +662,6 @@ class IndriAndNode(SlNode):
         )
 
 
-def _total_weight(weights: list) -> float:
-    return float(sum(weights))
-
-
 @dataclass
 class WandNode(SlNode):
     """#WAND — Indri weighted-AND: ∏ sᵢ^(wᵢ/W) over the union of child lists
@@ -656,12 +671,7 @@ class WandNode(SlNode):
     children: list
 
     def _combine(self, cols: list) -> Column:
-        W = _total_weight(self.weights)
-        # score starts at 1.0 and multiplies pow(s_i, w_i/W) in child order
-        prod = F.lit(1.0)
-        for c, w in zip(cols, self.weights):
-            prod = prod * F.pow(c, F.lit(w / W if W != 0 else math.nan))
-        return prod
+        return indri_combine("wand", self.weights, cols)
 
     def scores(self, ctx: EvalContext) -> DataFrame:
         fast = _indri_pivot_scores(ctx, self.children, self._combine)
@@ -686,11 +696,7 @@ class WsumNode(SlNode):
     children: list
 
     def _combine(self, cols: list) -> Column:
-        W = _total_weight(self.weights)
-        acc = F.lit(0.0)
-        for c, w in zip(cols, self.weights):
-            acc = acc + c * F.lit(w / W if W != 0 else math.nan)
-        return acc
+        return indri_combine("wsum", self.weights, cols)
 
     def scores(self, ctx: EvalContext) -> DataFrame:
         fast = _indri_pivot_scores(ctx, self.children, self._combine)

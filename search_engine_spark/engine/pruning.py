@@ -24,9 +24,8 @@ BMW is doc-at-a-time and doesn't distribute), planned on the driver:
      to its span of range indices with one sort, so planning costs
      O(B log B + block/range overlaps), not O(ranges × blocks).
   2. Seed: decode the few highest-UB ranges' blocks with the numpy codec
-     and score them (numpy mirror of the score expressions) ⇒ θ ≈ k-th best
-     seed score. θ is deflated by (1 − 2⁻³⁰) so numpy/JVM ulps can never
-     make it exceed the true k-th score: a smaller θ only keeps extra
+     and score them with the query's numpy scorer ⇒ θ ≈ k-th best seed
+     score. θ is deflated by (1 − 2⁻³⁰): a smaller θ only keeps extra
      survivors, never prunes a true top-k doc.
   3. Survivors = seed ranges ∪ ranges with UB(R) ≥ θ. Any doc outside them
      has total score ≤ UB(R) < θ ≤ (true k-th score) — provably outside the
@@ -35,26 +34,23 @@ BMW is doc-at-a-time and doesn't distribute), planned on the driver:
        - at most ``_POSTS_PER_TASK`` (one scan task's worth): the driver
          reads them from the packed files that hold them (block metadata
          records each block's file), decodes them in one pass
-         (``codec.decode_blocks_flat``), pivots to (docid, tf_1..tf_n,
-         doclen) and hands that to Spark as a local relation, with the
-         query's constants as float64 columns: ``_c{i}`` child i's df
-         (BM25) or ctf (Indri), ``_w{i}`` its weight share w/W. The score
-         is a template of score.py expressions over those columns, built
-         once per (model params, combine kind, child count, index
-         constants) and cached on the index (``DriverReads.memo``), so a
-         warm query builds no Column. Spark evaluates the projection on the
-         driver JVM and ``topk.rank_local`` cuts at the k-th score and
-         resolves ext ids with a pyarrow docid IN read of doc_ids. No Spark
-         job runs.
-       - above it: ONE distributed job scans the surviving blocks, scores
-         them with the same expressions, then the §2.6 top-k.
-     Either way the output scores come from the Spark expressions, never
-     from the numpy seed, so the result is bitwise the exact plan's. The
-     exact plan folds the constants into literals where the template reads
-     them from columns; that changes when each operation runs, not what it
-     computes: the same StrictMath log/pow and IEEE double arithmetic run on
-     the same doubles in the same order, since Spark does not reassociate
-     floating-point arithmetic.
+         (``codec.decode_blocks_flat``), pivots to (docid, tf per term,
+         doclen) and scores the pivot with the same numpy scorer as the
+         seed: score.py's numpy twins of the Spark expressions, combined as
+         the exact plan combines them (``bm25_scorer``, ``indri_scorer``).
+         ``topk.rank_local`` cuts at the k-th score and resolves ext ids
+         with a pyarrow docid IN read of doc_ids. No Spark job runs and
+         nothing crosses to the JVM but the answer frame.
+       - above it: ONE distributed job scans the surviving blocks and scores
+         them with the Spark expressions (constants folded as literals, as
+         in the exact plan), then the §2.6 top-k.
+     Either way the output scores are bitwise the exact plan's. The numpy
+     scorer runs the Spark expressions' IEEE double operations on the same
+     doubles in the same order (Java neither reassociates nor contracts to
+     FMA), its float32 cast rounds as Java's does, its BM25 idf takes
+     ``StrictMath.log`` from the JVM once per argument (memoized on the
+     index) and its Indri ``pow`` is ``engine.strictmath.pow``, a port of
+     the JDK's ``StrictMath.pow`` that Spark's ``F.pow`` calls.
 
 Fallback: when the driver cannot read the index (an unreadable file, or a
 tombstone set past ``SPARK_GRAFT_PRUNE_DRIVER_TOMBSTONE_MAX``) or an Indri
@@ -70,21 +66,25 @@ from __future__ import annotations
 
 import math
 import os
+from collections.abc import Callable
 from dataclasses import dataclass
 from functools import reduce
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from search_engine_spark.config import BM25Params, IndriParams
-from search_engine_spark.engine import score as score_mod
+from search_engine_spark.engine import score as score_mod, strictmath
+from search_engine_spark.engine.ops import indri_combine
 from search_engine_spark.engine.topk import _enumerate_ranks, rank_local, rank_topk
 from search_engine_spark.index.persist import PackedIndex
 
 _F32_GUARD = 1.0 + 2.0**-20
-# driver-side theta deflation: seed scores are summed in numpy, the final
-# scores in the JVM; 2^-30 relative slack dwarfs any ulp drift between them
+# theta deflation: θ comes from the numpy scorer, the final scores from the
+# same scorer or, past the driver gate, from the Spark scan (bitwise equal
+# by the identity tests); 2^-30 relative slack keeps θ at or below the true
+# k-th score even if the two ever drifted by ulps
 _THETA_SLACK = 1.0 - 2.0**-30
 # past this many tombstones the driver stops pinning the delete set in its
 # own memory and the query runs the exact plan (which applies the same
@@ -119,8 +119,11 @@ class PruneStats:
     fallback: str = ""  # why the planner returned None (exact plan runs)
 
 
-def _idf(n_docs: int, df: int) -> float:
-    return max(0.0, math.log((n_docs - df + 0.5) / (df + 0.5)))
+def _strict_log(pidx: PackedIndex) -> Callable[[float], float]:
+    """``java.lang.StrictMath.log`` (Spark's ``F.log``): one Py4J call per
+    distinct argument, memoized on the index."""
+    jvm_log = pidx.spark._jvm.java.lang.StrictMath.log
+    return lambda v: pidx.reads.memo(("StrictMath.log", v), lambda: jvm_log(v))
 
 
 # --------------------------------------------------------------------------
@@ -326,27 +329,13 @@ class _Pivot:
         self.doclen = np.zeros(len(self.docid), dtype=np.int64)
         self.doclen[ix] = doclen
 
-    def table(self, consts: dict[str, float]) -> pa.Table:
-        """Arrow (docid, _tf0.._tf{n-1} nullable int, doclen) — the shape of
-        the Spark path's per-doc pivot — plus one constant float64 column
-        per ``consts`` entry."""
-        cols = {"docid": pa.array(self.docid, pa.int64())}
-        for i in range(len(self.tf)):
-            cols[f"_tf{i}"] = pa.array(
-                self.tf[i].astype(np.int32), pa.int32(), mask=~self.present[i]
-            )
-        cols["doclen"] = pa.array(self.doclen, pa.int64())
-        for name, v in consts.items():
-            cols[name] = pa.array(np.full(len(self.docid), v, dtype=np.float64))
-        return pa.table(cols)
-
 
 def _seed_theta(
-    q: _Query, rb: RangeBounds, range_ub: np.ndarray, k: int, seed_scores, st: PruneStats
+    q: _Query, rb: RangeBounds, range_ub: np.ndarray, k: int, score, st: PruneStats
 ) -> np.ndarray:
     """Seed walk: decode the best ranges by UB until the seed is guaranteed
-    to contain >= k distinct docids, score them with ``seed_scores(pivot)``
-    and set θ. Returns the [R] mask of seed ranges.
+    to contain >= k distinct docids, score them with the query's scorer
+    ``score(pivot)`` and set θ. Returns the [R] mask of seed ranges.
 
     A single term's postings are distinct docs, so unique blocks are counted
     per term and the walk stops once one term's covered postings reach the
@@ -385,7 +374,7 @@ def _seed_theta(
     while True:
         in_seed[seed] = True
         blocks = np.flatnonzero(rb.blocks_in(in_seed))
-        tot = seed_scores(q.pivot(blocks, lambda d: in_seed[rb.range_of(d)]))
+        tot = score(q.pivot(blocks, lambda d: in_seed[rb.range_of(d)]))
         if len(tot) >= k or pos >= n_ranges:
             break
         # block splits can leave the covered ranges short of k docs: extend
@@ -407,23 +396,21 @@ def _pruned_topk(
     st: PruneStats,
     block_ub,
     range_ub,
-    seed_scores,
-    pivot_score: PivotScore,
+    score,
     spark_scores,
 ) -> DataFrame:
     """The flow shared by both models, given the model's pieces:
     ``block_ub(q)`` -> [B] per-block bounds, ``range_ub(rb)`` -> [R] range
-    bounds, ``seed_scores(pivot)`` -> numpy seed scores, ``pivot_score`` the
-    score over a (docid, _tf{i}, doclen) pivot, and
-    ``spark_scores(posts)`` the Spark (docid, score) plan over scanned
-    postings."""
+    bounds, ``score(pivot)`` -> the numpy scores of a pivot's docs (seed and
+    driver-side answer), and ``spark_scores(posts)`` the Spark (docid,
+    score) plan over scanned postings."""
     metas = pidx.reads.block_meta(terms, fld)
     q = _Query(pidx, terms, fld, metas)
     st.n_blocks_total = len(q.n)
     rb = range_bounds(q.lo, q.hi, q.term, block_ub(q), len(terms), q.min_doclen)
     ub = range_ub(rb)
     st.n_ranges_total = len(ub)
-    in_seed = _seed_theta(q, rb, ub, k, seed_scores, st)
+    in_seed = _seed_theta(q, rb, ub, k, score, st)
 
     # prune only UB < θ (strict): a doc scoring exactly θ could still beat
     # the seed's k-th entry on the asc-ext-id tie-break, so it is scored
@@ -441,7 +428,7 @@ def _pruned_topk(
         st.score_mode = "driver"
         piv = q.pivot(blocks)
         st.n_files_read = len(q.files_read)
-        return score_local(pidx, piv, pivot_score, k, to_ext)
+        return score_local(pidx, piv, score, k, to_ext)
 
     st.score_mode = "spark"
     st.n_files_read = len(q.files_read)
@@ -466,21 +453,13 @@ def _pruned_topk(
 
 
 def score_local(
-    pidx: PackedIndex, piv: _Pivot, score: PivotScore, k: int, to_ext
+    pidx: PackedIndex, piv: _Pivot, score: Callable[[_Pivot], np.ndarray], k: int,
+    to_ext,
 ) -> DataFrame:
-    """The driver-side scoring tail: the pivot, with the query's constants
-    as columns, becomes a local relation; ``score``'s template (score.py
-    expressions, built once per index and shape) is projected over it in
-    the driver JVM; ``topk.rank_local`` ranks with ext ids typed by
-    ``to_ext``. No Spark job. The floats are the Spark plan's: the same
-    expressions run the same StrictMath log/pow on the same doubles, read
-    from columns here where the exact plan folds them as literals, and
-    Spark does not reassociate floating-point arithmetic."""
-    rows = (
-        pidx.spark.createDataFrame(piv.table(score.consts))
-        .select("docid", score.column)
-        .collect()
-    )
+    """The driver-side scoring tail: ``score`` (a numpy scorer, bitwise the
+    Spark plan's expressions) scores the pivot's docs and
+    ``topk.rank_local`` ranks them with ext ids typed by ``to_ext``. No
+    Spark job, and no JVM call before the answer frame."""
 
     def ext_ids(docids: list[int]) -> dict:
         got = pidx.reads.ext_ids(docids)
@@ -488,12 +467,7 @@ def score_local(
             raise OSError("doc_ids has no row for a scored docid")
         return {d: to_ext(e) for d, e in got.items()}
 
-    return rank_local(
-        pidx.spark,
-        np.fromiter((r[0] for r in rows), np.int64, len(rows)),
-        np.fromiter((r[1] for r in rows), np.float64, len(rows)),
-        k, ext_ids,
-    )
+    return rank_local(pidx.spark, piv.docid, score(piv), k, ext_ids)
 
 
 def _ext_id_type(pidx: PackedIndex):
@@ -539,44 +513,30 @@ def bm25_range_ub(rb: RangeBounds) -> np.ndarray:
     return tot
 
 
-@dataclass(frozen=True)
-class PivotScore:
-    """A score over a (docid, _tf{i}, doclen) pivot: ``column``, aliased
-    "score", is a template shared by every query of one shape on one index;
-    ``consts`` are this query's constants, which the template reads as
-    columns — ``_c{i}``: child i's df (BM25) or ctf (Indri), ``_w{i}``: its
-    weight share w/W (#WAND, #WSUM)."""
-
-    column: Column
-    consts: dict
+def bm25_idfs(pidx: PackedIndex, dfs: list[int], n_docs: int) -> list[float]:
+    """``bm25_score``'s idf of each df, with the JVM's ``StrictMath.log``."""
+    log = _strict_log(pidx)
+    return [score_mod.bm25_idf(n_docs, df, log) for df in dfs]
 
 
-def bm25_pivot_score(
-    pidx: PackedIndex, dfs: list[int], n_docs: int, avgdl: float, p: BM25Params
-) -> PivotScore:
-    """BM25 #SUM over a (docid, _tf{i}, doclen) pivot, child i scored with
-    df ``dfs[i]``: SumNode's sum in child order (a missing child adds
-    nothing). The template is built once per (params, child count, N,
-    avgdl) on ``pidx``."""
-    n = len(dfs)
+def bm25_scorer(
+    idfs: list[float], avgdl: float, p: BM25Params
+) -> Callable[[_Pivot], np.ndarray]:
+    """BM25 #SUM over a pivot, child i scored with idf ``idfs[i]``
+    (``bm25_idfs``): the exact plan's SumNode sum, 0.0 plus each child's
+    float32 score in child order (a missing child adds 0.0)."""
 
-    def build() -> Column:
-        return reduce(
-            lambda acc, i: acc + F.coalesce(
-                score_mod.bm25_score(
-                    n_docs=n_docs, df=F.col(f"_c{i}"), avgdl=avgdl, p=p,
-                    tf=F.col(f"_tf{i}"), doclen=F.col("doclen"),
-                ),
-                F.lit(0.0),
-            ),
-            range(n),
-            F.lit(0.0),
-        ).alias("score")
+    def score(piv: _Pivot) -> np.ndarray:
+        tot = np.zeros(len(piv.docid))
+        with np.errstate(all="ignore"):  # absent children's lanes are masked
+            for i, idf in enumerate(idfs):
+                s = score_mod.bm25_score_np(
+                    idf=idf, avgdl=avgdl, p=p, tf=piv.tf[i], doclen=piv.doclen
+                )
+                tot = tot + np.where(piv.present[i], s, 0.0)
+        return tot
 
-    return PivotScore(
-        pidx.reads.memo(("bm25", p, n, n_docs, avgdl), build),
-        {f"_c{i}": float(df) for i, df in enumerate(dfs)},
-    )
+    return score
 
 
 def bm25_topk_pruned(
@@ -604,27 +564,11 @@ def bm25_topk_pruned(
             # top-k (the TREC sink then emits its dummy row)
             st.score_mode = "driver"
             return _enumerate_ranks(pidx.spark, [])
-        idf = np.array([_idf(n_docs, trows[t][0]) for t in live])
-        userw = (p.k3 + 1.0) * 1.0 / (p.k3 + 1.0)  # qtf=1 (QryopSlScore:122)
+        idfs = bm25_idfs(pidx, [trows[t][0] for t in live], n_docs)
+        idf = np.array(idfs)
 
         def block_ub(q: _Query) -> np.ndarray:
             return _bm25_block_ub(q.max_tf, q.min_doclen, idf[q.term], avgdl, p)
-
-        def seed_scores(piv: _Pivot) -> np.ndarray:
-            # engine.score.bm25_score's arithmetic: per-term float32
-            # round-trip, summed in double
-            tot = np.zeros(len(piv.docid))
-            dl = piv.doclen.astype(np.float64)
-            for i in range(len(live)):
-                tf = piv.tf[i].astype(np.float64)
-                tfw = tf / (tf + p.k1 * ((1.0 - p.b) + p.b * dl / avgdl))
-                s = (idf[i] * tfw * userw).astype(np.float32).astype(np.float64)
-                tot += np.where(piv.present[i], s, 0.0)
-            return tot
-
-        pivot_score = bm25_pivot_score(
-            pidx, [trows[t][0] for t in live], n_docs, avgdl, p
-        )
 
         def spark_scores(posts: DataFrame) -> DataFrame:
             return (
@@ -639,8 +583,8 @@ def bm25_topk_pruned(
             )
 
         return _pruned_topk(
-            pidx, live, fld, k, st, block_ub, bm25_range_ub, seed_scores,
-            pivot_score, spark_scores,
+            pidx, live, fld, k, st, block_ub, bm25_range_ub,
+            bm25_scorer(idfs, avgdl, p), spark_scores,
         )
     except DRIVER_READ_ERRORS as e:
         st.fallback = f"driver read failed: {type(e).__name__}: {e}"
@@ -666,10 +610,10 @@ def bm25_topk_pruned(
 # valid for every candidate doc in R: a doc is in R only via >=1 overlapping
 # block, so its doclen >= that range's min block doclen, and each child
 # contribution is <= bound_i(R) whether actual or default. The final guard
-# absorbs pow()-ulp differences between numpy and the JVM.
+# absorbs the float32 rounding of the actual scores.
 #
 # Same flow as BM25: a seeded θ, survivors = UB >= θ, final scores from the
-# canonical pivot expressions (ops._indri_pivot_scores' exact arithmetic).
+# numpy twin of the exact pivot plan (ops._indri_pivot_scores' arithmetic).
 # Blocks straddling a pruned range contribute PARTIAL rows for that range's
 # docs — harmless: their computed score is also <= UB(range) < θ (each
 # present child <= its block ub, each missing child's default <= the range
@@ -699,16 +643,45 @@ def _indri_default_ub(min_doclen, mle, p: IndriParams):
     return (1.0 - p.lam) * (p.mu * mle) / (min_doclen + p.mu) + p.lam * mle
 
 
-def _indri_combine(kind: str, weights: list | None, scores: list):
-    """#AND geo-mean / #WAND product of pows / #WSUM weighted mean over
-    per-child scores (floats or numpy arrays), children left to right."""
-    if kind == "wsum":
-        W = sum(weights)
-        return reduce(lambda acc, ws: acc + ws[1] * (ws[0] / W), zip(weights, scores), 0.0)
+def _indri_combine(kind: str, weights: list | None, scores: list) -> np.ndarray:
+    """``ops.indri_combine``'s numpy twin: #AND geo-mean / #WAND product of
+    pows / #WSUM weighted mean over per-child score arrays, children left to
+    right, with ``StrictMath.pow``'s port."""
+    if kind == "and":
+        return strictmath.pow(reduce(lambda a, b: a * b, scores), 1.0 / len(scores))
+    W = float(sum(weights))
     if kind == "wand":
-        W = sum(weights)
-        return reduce(lambda acc, ws: acc * ws[1] ** (ws[0] / W), zip(weights, scores), 1.0)
-    return reduce(lambda a, b: a * b, scores) ** (1.0 / len(scores))
+        return reduce(
+            lambda acc, ws: acc * strictmath.pow(ws[1], ws[0] / W),
+            zip(weights, scores), 1.0,
+        )
+    return reduce(lambda acc, ws: acc + ws[1] * (ws[0] / W), zip(weights, scores), 0.0)
+
+
+def indri_scorer(
+    kind: str, weights: list | None, ctfs: list[int], c_len: int, p: IndriParams
+) -> Callable[[_Pivot], np.ndarray]:
+    """Indri #AND/#WAND/#WSUM over a pivot, child i with ctf ``ctfs[i]``:
+    its float32 actual score where present, its raw-double default
+    otherwise, combined as the exact pivot plan combines them
+    (ops._indri_pivot_scores)."""
+
+    def score(piv: _Pivot) -> np.ndarray:
+        child = [
+            np.where(
+                piv.present[i],
+                score_mod.indri_score_np(
+                    ctf=ctf, c_len=c_len, p=p, tf=piv.tf[i], doclen=piv.doclen
+                ),
+                score_mod.indri_default_score_np(
+                    ctf=ctf, c_len=c_len, p=p, doclen=piv.doclen
+                ),
+            )
+            for i, ctf in enumerate(ctfs)
+        ]
+        return _indri_combine(kind, weights, child)
+
+    return score
 
 
 def indri_range_ub(
@@ -770,27 +743,7 @@ def indri_topk_pruned(
         def range_ub(rb: RangeBounds) -> np.ndarray:
             return indri_range_ub(rb, kind, weights, mle, p)
 
-        def seed_scores(piv: _Pivot) -> np.ndarray:
-            # numpy mirror of the pivot expressions: per-child f32 round-trip
-            # on the actual path, raw-double defaults, combined in child order
-            dl = piv.doclen.astype(np.float64)
-            child = []
-            for i, m in enumerate(mle):
-                tf = piv.tf[i].astype(np.float64)
-                actual = (1.0 - p.lam) * ((tf + p.mu * m) / (dl + p.mu)) + p.lam * m
-                default = (1.0 - p.lam) * (p.mu * m) / (dl + p.mu) + p.lam * m
-                child.append(
-                    np.where(
-                        piv.present[i],
-                        actual.astype(np.float32).astype(np.float64),
-                        default,
-                    )
-                )
-            return _indri_combine(kind, weights, child)
-
-        pivot_score = indri_pivot_score(
-            pidx, kind, weights, [trows[t][1] for t in terms], c_len, p
-        )
+        ctfs = [trows[t][1] for t in terms]
 
         def spark_scores(posts: DataFrame) -> DataFrame:
             aggs = [
@@ -798,53 +751,22 @@ def indri_topk_pruned(
                 for i, t in enumerate(terms)
             ]
             base = posts.groupBy("docid").agg(*aggs, F.max("doclen").alias("doclen"))
-            consts = {c: F.lit(v) for c, v in pivot_score.consts.items()}
-            return base.withColumns(consts).select("docid", pivot_score.column)
+            cols = []
+            for i, ctf in enumerate(ctfs):
+                tf_col = F.col(f"_tf{i}")
+                actual = score_mod.indri_score(
+                    ctf=ctf, c_len=c_len, p=p, tf=tf_col, doclen=F.col("doclen")
+                )
+                default = score_mod.indri_default_score(
+                    ctf=ctf, c_len=c_len, p=p, doclen=F.col("doclen")
+                )
+                cols.append(F.when(tf_col.isNotNull(), actual).otherwise(default))
+            return base.select("docid", indri_combine(kind, weights, cols).alias("score"))
 
         return _pruned_topk(
-            pidx, terms, fld, k, st, block_ub, range_ub, seed_scores,
-            pivot_score, spark_scores,
+            pidx, terms, fld, k, st, block_ub, range_ub,
+            indri_scorer(kind, weights, ctfs, c_len, p), spark_scores,
         )
     except DRIVER_READ_ERRORS as e:
         st.fallback = f"driver read failed: {type(e).__name__}: {e}"
         return None
-
-
-def indri_pivot_score(
-    pidx: PackedIndex, kind: str, weights, ctfs: list[int], c_len: int, p: IndriParams
-) -> PivotScore:
-    """Indri score over a (docid, _tf{i}, doclen) pivot, child i with ctf
-    ``ctfs[i]``: actual f32 score for a present child, raw-double default
-    otherwise; the combines replicate ops.IndriAndNode/WandNode/WsumNode.
-    _combine exactly. The template is built once per (params, kind, child
-    count, C_len) on ``pidx``."""
-    n = len(ctfs)
-
-    def build() -> Column:
-        cols = []
-        for i in range(n):
-            tf_col, ctf = F.col(f"_tf{i}"), F.col(f"_c{i}")
-            actual = score_mod.indri_score(
-                ctf=ctf, c_len=c_len, p=p, tf=tf_col, doclen=F.col("doclen")
-            )
-            default = score_mod.indri_default_score(
-                ctf=ctf, c_len=c_len, p=p, doclen=F.col("doclen")
-            )
-            cols.append(F.when(tf_col.isNotNull(), actual).otherwise(default))
-        if kind == "wsum":
-            score = reduce(
-                lambda acc, i: acc + cols[i] * F.col(f"_w{i}"), range(n), F.lit(0.0)
-            )
-        elif kind == "wand":
-            score = reduce(
-                lambda acc, i: acc * F.pow(cols[i], F.col(f"_w{i}")), range(n), F.lit(1.0)
-            )
-        else:
-            score = F.pow(reduce(lambda a, b: a * b, cols), F.lit(1.0 / n))
-        return score.alias("score")
-
-    consts = {f"_c{i}": float(ctf) for i, ctf in enumerate(ctfs)}
-    if kind in ("wand", "wsum"):
-        W = sum(weights)
-        consts.update({f"_w{i}": w / W for i, w in enumerate(weights)})
-    return PivotScore(pidx.reads.memo(("indri", kind, p, n, c_len), build), consts)

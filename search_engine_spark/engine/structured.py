@@ -18,9 +18,11 @@ stats, no job) this module evaluates the same tree on the driver:
   3. each #SCORE child gets the exact plan's (df, ctf): a term leaf's from
      term_stats, a composite list's as (len, Σtf) — ``IlNode.list_stats``;
      doclen rides on the leaf postings;
-  4. the per-child tf pivot is scored by the same score.py expressions the
-     flat pruned path uses (``pruning.score_local``), so the answers are
-     bitwise the exact plan's.
+  4. the per-child tf pivot is scored in numpy by the scorers the flat
+     pruned path uses (``pruning.bm25_scorer`` / ``indri_scorer``: score.py's
+     numpy twins of the exact plan's expressions, with StrictMath's log and
+     pow) and ranked by ``pruning.score_local``, so the answers are bitwise
+     the exact plan's and no JVM call runs before the answer frame.
 
 Any other shape (Boolean models, nested Sl, several fields, a non-positive
 total weight) or a leaf set over the gate returns None and the exact plan
@@ -221,14 +223,12 @@ def struct_topk(
         )
         corpus = pidx.corpus
         if kind == "sum":
-            score = pruning.bm25_pivot_score(
-                pidx, [df for df, _ in stats], corpus.n_docs, corpus.avgdl(fld),
-                model.bm25,
-            )
+            idfs = pruning.bm25_idfs(pidx, [df for df, _ in stats], corpus.n_docs)
+            score = pruning.bm25_scorer(idfs, corpus.avgdl(fld), model.bm25)
         else:
-            score = pruning.indri_pivot_score(
-                pidx, kind, weights, [ctf for _, ctf in stats],
-                corpus.sum_doclen(fld), model.indri,
+            score = pruning.indri_scorer(
+                kind, weights, [ctf for _, ctf in stats], corpus.sum_doclen(fld),
+                model.indri,
             )
         st.score_mode = "driver"
         return pruning.score_local(pidx, piv, score, k, to_ext)

@@ -34,10 +34,20 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from search_engine_spark.config import TOP_K
 
-_TOPK_SCHEMA = "rank int, docid long, ext_docid string, score double"
+# a StructType, not a DDL string: PySpark parses DDL through the JVM on
+# every createDataFrame call
+_TOPK_SCHEMA = T.StructType(
+    [
+        T.StructField("rank", T.IntegerType()),
+        T.StructField("docid", T.LongType()),
+        T.StructField("ext_docid", T.StringType()),
+        T.StructField("score", T.DoubleType()),
+    ]
+)
 
 # Above this corpus size the doc_ids dimension is no longer broadcast;
 # ext ids resolve through the threshold-candidate scale path instead.

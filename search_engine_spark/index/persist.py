@@ -1820,8 +1820,8 @@ class DriverReads:
     """Driver-side pyarrow reads of one index generation, cached: per-term
     (df, ctf), per-term block metadata, the tombstone set and the pyarrow
     datasets over packed, term_stats, doc_ids and tombstones — plus
-    ``memo``, values the query planners derive once per index (score
-    templates, the ext-id type).
+    ``memo``, values the query planners derive once per index (the ext-id
+    type, ``StrictMath.log`` of each BM25 idf argument).
 
     The index directory is immutable between lifecycle commits (append,
     delete and compact each open a NEW PackedIndex), so nothing here is
@@ -1955,8 +1955,8 @@ class DriverReads:
 
     def memo(self, key, build):
         """The value cached under ``key``, built by ``build()`` on the first
-        call. For values derived from this index generation alone (score
-        templates, the ext-id type): bounded by the distinct keys asked."""
+        call. For values derived from this index generation alone (the
+        ext-id type, idf logs): bounded by the distinct keys asked."""
         with self._lock:
             if key in self._memo:
                 return self._memo[key]

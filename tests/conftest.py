@@ -103,19 +103,28 @@ def py_oracle(code_docs):
 
 
 @pytest.fixture
-def template_spy(monkeypatch):
-    """Every PivotScore the driver planners get from the score template
-    builders (engine/pruning.py), in call order."""
-    from search_engine_spark.engine import pruning
+def jvm_crossings(spark, monkeypatch):
+    """Counts, by method name, of the Python-to-JVM crossings a driver-side
+    answer could make: ``Column`` constructions, ``createDataFrame`` calls
+    and DataFrame collects."""
+    import collections
 
-    made: list = []
-    for name in ("bm25_pivot_score", "indri_pivot_score"):
-        real = getattr(pruning, name)
+    from pyspark.sql.classic.column import Column
+    from pyspark.sql.classic.dataframe import DataFrame
 
-        def spy(*a, _real=real, **kw):
-            score = _real(*a, **kw)
-            made.append(score)
-            return score
+    counts: collections.Counter = collections.Counter()
 
-        monkeypatch.setattr(pruning, name, spy)
-    return made
+    def count(cls, name):
+        real = getattr(cls, name)
+
+        def spy(*a, **kw):
+            counts[name] += 1
+            return real(*a, **kw)
+
+        monkeypatch.setattr(cls, name, spy)
+
+    count(Column, "__init__")
+    count(type(spark), "createDataFrame")
+    for name in ("collect", "toArrow", "toPandas", "toLocalIterator", "take"):
+        count(DataFrame, name)
+    return counts

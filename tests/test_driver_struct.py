@@ -153,27 +153,18 @@ def test_concurrent_structured_queries_match_serial(spark, pidx):
         assert rows == serial[q], f"thread {i}: {q}"
 
 
-# same shape, different constants: the composite child's df, the weights
-TEMPLATE_PAIRS = [
-    (BM25, "#SUM(lambda #NEAR/1(except pass))", "#SUM(self #NEAR/2(try with))"),
-    (
-        INDRI,
-        "#WAND(0.3 self 0.7 #NEAR/1(except pass))",
-        "#WAND(0.6 lock 0.4 #NEAR/2(ring buffer))",
-    ),
-]
-
-
-def test_same_shape_queries_reuse_one_template(spark, pidx, monkeypatch, template_spy):
-    """The second structured query of a shape reuses the first one's score
-    Column with its own constants; both answers are bitwise the exact
-    plan's."""
-    fresh = PackedIndex(spark, pidx.dir)  # empty template cache
-    for model, first, second in TEMPLATE_PAIRS:
-        for text in (first, second):
-            got, st = _answer(fresh, model, text)
-            assert st.score_mode == "driver", text
-            assert got and got == _exact(pidx, model, text, monkeypatch), text
-        a, b = template_spy[-2:]
-        assert b.column is a.column, second
-        assert b.consts["_c1"] != a.consts["_c1"], second  # the composite's df/ctf
+def test_warm_structured_answer_crosses_to_the_jvm_once(
+    spark, pidx, monkeypatch, jvm_crossings
+):
+    """A warm driver-answered query of every structured shape builds no
+    Column, makes one createDataFrame call (the answer frame) and collects
+    nothing while it answers; the answer is bitwise the exact plan's."""
+    for model, text in SHAPES:
+        exact = _exact(pidx, model, text, monkeypatch)
+        _answer(pidx, model, text)  # warm: term stats, idf logs, ext-id type
+        eng = Engine(pidx, ModelConfig(name=model), tokenizer=CODE_TOKENIZER)
+        jvm_crossings.clear()
+        res = eng.search(text, K)
+        assert eng.last_prune_stats.score_mode == "driver", text
+        assert dict(jvm_crossings) == {"createDataFrame": 1}, (text, jvm_crossings)
+        assert [tuple(r) for r in res.collect()] == exact, text
