@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import bisect
 import hashlib
+import itertools
 import math
 import random
 
@@ -272,14 +273,15 @@ def with_docids(
         (r["_pid"], r["cnt"])
         for r in part.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
     )
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off_df = docs.sparkSession.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid int, _off long"
+    # each partition's docid offset, looked up by _pid in a literal array:
+    # a JVM expression (an offsets table from a Python list would be a
+    # Python job that every action over the docs reruns)
+    offsets = itertools.accumulate(
+        (counts.get(pid, 0) for pid in range(max(counts, default=0))), initial=0
     )
-    with_off = part.join(F.broadcast(off_df), "_pid")
+    off = F.element_at(
+        F.array(*(F.lit(o) for o in offsets)).cast("array<bigint>"), F.col("_pid") + 1
+    )
 
     # docid = partition offset + 0-based position within the (sorted)
     # partition + 1, where the position comes from monotonically_increasing_id
@@ -291,8 +293,8 @@ def with_docids(
     # `base` shifts the whole range for incremental appends (index/append.py):
     # an appended batch over a base of N docs gets docids N+1..N+Δ
     local = F.monotonically_increasing_id() % F.lit(1 << 33)
-    out = with_off.select(
-        (F.lit(int(base)) + F.col("_off") + local + 1).cast("long").alias("docid"),
+    out = part.select(
+        (F.lit(int(base)) + off + local + 1).cast("long").alias("docid"),
         F.concat_ws("", F.col("repo"), F.lit(":"), F.col("path"),
                     F.lit("@"), F.col("commit")).alias("ext_docid"),
         "repo", "path", "commit", "lang", "content",

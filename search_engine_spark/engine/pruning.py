@@ -10,11 +10,12 @@ bit-identical to the exact plan's.
 Spark-friendly two-phase block-max/MaxScore variant (the classic cursor-based
 BMW is doc-at-a-time and doesn't distribute), planned on the driver:
 
-  0. The driver reads the query terms' term stats and tiny block METADATA
-     with pyarrow (``PackedIndex.reads``: cached per index, predicate-pushed
-     on term — no Spark job; at 10^12-file scale this is df/block_size rows
-     per term). Per block, an upper bound on any contribution in it, e.g.
-     for BM25
+  0. The driver looks up the query terms' term stats and tiny block
+     METADATA in ``PackedIndex.reads``, which reads the index generation's
+     whole term_stats and every block's plain columns once, with pyarrow,
+     and keeps them resident (no Spark job; df/block_size rows per term,
+     O(blocks) in all). Per block, an upper bound on any contribution in
+     it, e.g. for BM25
          ub = idf(df) · max_tf / (max_tf + k1·((1−b) + b·min_doclen/avgdl))
      valid because tfW is increasing in tf and decreasing in doclen.
   1. Docid space is cut into the ranges induced by all block boundaries
@@ -121,9 +122,11 @@ class PruneStats:
 
 def _strict_log(pidx: PackedIndex) -> Callable[[float], float]:
     """``java.lang.StrictMath.log`` (Spark's ``F.log``): one Py4J call per
-    distinct argument, memoized on the index."""
-    jvm_log = pidx.spark._jvm.java.lang.StrictMath.log
-    return lambda v: pidx.reads.memo(("StrictMath.log", v), lambda: jvm_log(v))
+    distinct argument, memoized on the index. The method is resolved on a
+    memo miss only: each attribute of the lookup is a Py4J round trip."""
+    return lambda v: pidx.reads.memo(
+        ("StrictMath.log", v), lambda: pidx.spark._jvm.java.lang.StrictMath.log(v)
+    )
 
 
 # --------------------------------------------------------------------------

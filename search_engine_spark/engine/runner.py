@@ -136,7 +136,7 @@ class Engine:
             DRIVER_READ_ERRORS, PruneStats, bm25_topk_pruned, indri_topk_pruned,
         )
 
-        # df from the driver's cached pyarrow term stats: no Spark job
+        # df from the driver's resident term stats: no Spark job
         try:
             dfs = self.index.reads.term_stats(terms, fld)
         except DRIVER_READ_ERRORS as e:

@@ -152,8 +152,14 @@ def rank_local(spark, docids, scores, k: int, ext_ids) -> DataFrame:
     """Driver-side twin of ``rank_topk`` for (docid, score) numpy arrays
     already on the driver: cut at the k-th score, resolve ext ids for the
     candidates at or above it with ``ext_ids(docids) -> {docid: ext id}``,
-    then order by score desc, ext id asc and rank. No Spark job runs."""
+    then order by score desc, ext id asc and rank. No Spark job runs.
+
+    The order is one Arrow sort: it ties -0.0 with 0.0 as Spark does, and it
+    orders strings by UTF-8 bytes, which is code-point order (Python's) and
+    Spark's ``UTF8String`` order."""
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     order = np.argsort(-scores, kind="stable")
     docids, scores = docids[order], scores[order]
@@ -162,13 +168,16 @@ def rank_local(spark, docids, scores, k: int, ext_ids) -> DataFrame:
         # ties at the k-th score are exactly the rows whose ext-id order
         # decides membership
         n = int(np.searchsorted(-scores, -scores[k - 1], side="right"))
-    cand = [int(d) for d in docids[:n]]
+    cand = docids[:n].tolist()
     ext = ext_ids(cand)
-    rows = sorted(
-        ((d, ext[d], float(s)) for d, s in zip(cand, scores[:n])),
-        key=lambda r: (-r[2], r[1]),
+    exts = [ext[d] for d in cand]
+    top = pc.sort_indices(
+        pa.table({"s": scores[:n], "e": pa.array(exts)}),
+        sort_keys=[("s", "descending"), ("e", "ascending")],
+    ).to_numpy()[:k]
+    return _enumerate_ranks(
+        spark, [(cand[i], exts[i], float(scores[i])) for i in top.tolist()]
     )
-    return _enumerate_ranks(spark, rows[:k])
 
 
 def trec_lines(qid: str, topk_rows: list, run_id: str = "run-1") -> list[str]:

@@ -106,13 +106,17 @@ def py_oracle(code_docs):
 def jvm_crossings(spark, monkeypatch):
     """Counts, by method name, of the Python-to-JVM crossings a driver-side
     answer could make: ``Column`` constructions, ``createDataFrame`` calls
-    and DataFrame collects."""
+    and DataFrame collects; and, as ``py4j:<command>``, the raw Py4J
+    commands (``c`` call, ``r`` reflection, ``i`` constructor, ...) sent
+    outside ``createDataFrame``. Memory commands (``m``, object releases the
+    Python GC sends at any time) are not counted."""
     import collections
 
     from pyspark.sql.classic.column import Column
     from pyspark.sql.classic.dataframe import DataFrame
 
     counts: collections.Counter = collections.Counter()
+    depth = [0]  # createDataFrame calls in progress
 
     def count(cls, name):
         real = getattr(cls, name)
@@ -124,7 +128,27 @@ def jvm_crossings(spark, monkeypatch):
         monkeypatch.setattr(cls, name, spy)
 
     count(Column, "__init__")
-    count(type(spark), "createDataFrame")
     for name in ("collect", "toArrow", "toPandas", "toLocalIterator", "take"):
         count(DataFrame, name)
+    create = type(spark).createDataFrame
+
+    def create_spy(*a, **kw):
+        counts["createDataFrame"] += 1
+        depth[0] += 1
+        try:
+            return create(*a, **kw)
+        finally:
+            depth[0] -= 1
+
+    monkeypatch.setattr(type(spark), "createDataFrame", create_spy)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+
+    def send_spy(command, *a, **kw):
+        kind = command.split("\n", 1)[0]
+        if not depth[0] and kind != "m":
+            counts[f"py4j:{kind}"] += 1
+        return send(command, *a, **kw)
+
+    monkeypatch.setattr(client, "send_command", send_spy)
     return counts

@@ -1,11 +1,20 @@
-"""The driver's block read (pruning._Query.read: a pyarrow read of only the
-packed files holding the blocks, decoded in one pass) must return exactly
-what decoding each block on its own returns, and report the files it read."""
+"""The driver's reads of a packed index: the block read (pruning._Query.read,
+a pyarrow read of only the packed files holding the blocks, decoded in one
+pass) must return exactly what decoding each block on its own returns and
+report the files it read; the resident metadata (DriverReads.vocab and
+.blocks) must answer term stats and block metadata exactly as per-term reads
+do, load once under concurrent first use and fall back cleanly when a load
+fails."""
 
+import os
 import shutil
+import sys
+import threading
+import time
 
 import numpy as np
 import pyarrow.compute as pc
+import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -16,8 +25,9 @@ from search_engine_spark.engine.runner import Engine
 from search_engine_spark.index.append import append_to_index
 from search_engine_spark.index.codec import decode_block, positions_decode
 from search_engine_spark.index.deletes import delete_docs
+from search_engine_spark.engine.pruning import PruneStats
 from search_engine_spark.index.persist import (
-    BuildConfig, PackedIndex, build_persistent_index,
+    META_COLS, BuildConfig, DriverReads, PackedIndex, build_persistent_index,
 )
 from search_engine_spark.tokenize import CODE_TOKENIZER
 
@@ -187,3 +197,169 @@ def test_prune_stats_count_files_read(spark, appended, monkeypatch, model, text)
     }
     assert st.n_files_read == len(held) > 0
     assert st.n_files_read < len(fresh.reads.dataset("packed").files)
+
+
+# --------------------------------------------------------------------------
+# resident term stats and block metadata (DriverReads.vocab, .blocks)
+# --------------------------------------------------------------------------
+
+
+def _per_term_reference(pidx) -> dict:
+    """(term, field) -> ((df, ctf), the term's block metadata), gathered row
+    by row from term_stats and from each packed file read on its own, in
+    manifest order (rows in file order): independent of the resident
+    load's scan and sort."""
+    ts = pads.dataset(os.path.join(pidx.dir, "term_stats")).to_table(
+        columns=["term", "field", "df", "ctf"]
+    )
+    ref = {
+        (r["term"], r["field"]): ((r["df"], r["ctf"]), [])
+        for r in ts.to_pylist()
+    }
+    for i, path in enumerate(pidx.reads.dataset("packed").files):
+        for r in pq.read_table(path, columns=META_COLS).to_pylist():
+            ref[(r["term"], r["field"])][1].append([r[c] for c in META_COLS[2:]] + [i])
+    return {
+        key: (stats, {
+            c: np.array([b[j] for b in blocks], np.int64)
+            for j, c in enumerate(META_COLS[2:] + ["file"])
+        })
+        for key, (stats, blocks) in ref.items()
+    }
+
+
+@pytest.mark.parametrize("which", ["appended", "deleted"])
+def test_resident_metadata_matches_per_term_reads(spark, request, which):
+    """Every (term, field) of the vocabulary: the resident term stats and
+    block metadata equal a row-by-row read of the files, blocks in the same
+    order."""
+    pidx = PackedIndex(spark, request.getfixturevalue(which).dir)
+    reference = _per_term_reference(pidx)
+    assert len(reference) > 100
+    # every packed block belongs to a term with a term_stats row
+    packed = pidx.reads.dataset("packed").count_rows()
+    assert sum(len(b["n"]) for _, b in reference.values()) == packed
+    assert len(pidx.reads.blocks().cols["n"]) == packed
+    for (term, fld), (stats, blocks) in reference.items():
+        assert pidx.reads.term_stats([term], fld) == {term: stats}, term
+        [got] = pidx.reads.block_meta([term], fld)
+        assert list(got) == list(blocks)
+        for c, want in blocks.items():
+            assert got[c].dtype == want.dtype and np.array_equal(got[c], want), (term, c)
+        assert got["n"].sum() == stats[0], term
+
+
+def test_absent_term_has_no_stats_and_no_blocks(spark, appended):
+    reads = PackedIndex(spark, appended.dir).reads
+    for term, fld in [("zz_absent_term", "body"), ("lock", "no_such_field")]:
+        assert reads.term_stats([term], fld) == {}
+        [got] = reads.block_meta([term], fld)
+        assert list(got) == META_COLS[2:] + ["file"]
+        assert all(len(a) == 0 and a.dtype == np.int64 for a in got.values())
+    # an absent term between present ones keeps its slot
+    got = reads.block_meta(["lock", "zz_absent_term", "self"], "body")
+    assert [len(m["n"]) > 0 for m in got] == [True, False, True]
+    assert reads.term_stats(["lock", "zz_absent_term"], "body").keys() == {"lock"}
+
+
+def test_concurrent_first_queries_load_once(spark, appended, monkeypatch):
+    """Eight threads that first touch a fresh PackedIndex at once trigger
+    one term-stats load and one block-metadata load between them, and get
+    the serial answers."""
+    term_sets = [TERMS[i:] + TERMS[:i] for i in range(len(TERMS))] + [TERMS[:2], ["x"]]
+    serial_reads = PackedIndex(spark, appended.dir).reads
+    serial = [
+        (serial_reads.term_stats(ts, "body"), serial_reads.block_meta(ts, "body"))
+        for ts in term_sets
+    ]
+    loads = []
+
+    def counting(name):
+        real = getattr(DriverReads, name)
+
+        def load(self, *a):
+            loads.append(name)
+            time.sleep(0.2)  # hold the load lock while the other threads arrive
+            return real(self, *a)
+
+        monkeypatch.setattr(DriverReads, name, load)
+
+    counting("_load_vocab")
+    counting("_load_blocks")
+    reads = PackedIndex(spark, appended.dir).reads
+    start = threading.Barrier(len(term_sets))
+    got: dict = {}
+
+    def client(i: int) -> None:
+        start.wait()
+        got[i] = (
+            reads.term_stats(term_sets[i], "body"), reads.block_meta(term_sets[i], "body")
+        )
+
+    threads = [threading.Thread(target=client, args=(i,)) for i in range(len(term_sets))]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert sorted(got) == list(range(len(term_sets)))
+    assert sorted(loads) == ["_load_blocks", "_load_vocab"]
+    for i, (stats, metas) in enumerate(serial):
+        assert got[i][0] == stats
+        for g, want in zip(got[i][1], metas):
+            assert g.keys() == want.keys()
+            assert all(np.array_equal(g[c], want[c]) for c in want)
+
+
+def _fail_once(monkeypatch, reads, name: str) -> None:
+    real = getattr(reads, name)
+    failures = []
+
+    def load(*a):
+        if not failures:
+            failures.append(1)
+            raise OSError(f"forced {name} failure")
+        return real(*a)
+
+    monkeypatch.setattr(reads, name, load)
+
+
+def test_failed_metadata_load_falls_back_to_the_exact_plan(
+    spark, appended, exact_plan, monkeypatch
+):
+    """An OSError while loading the resident metadata makes the pruned
+    planner report the fallback and the engine answer with the exact plan
+    (whose own term-stats read retries the load), bitwise; the failed load
+    cached nothing, so the next query plans on the driver."""
+    monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "1")
+    text = "lock free queue"
+    with exact_plan():
+        eng = Engine(appended, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)
+        exact = [tuple(r) for r in eng.search(text, 10).collect()]
+
+    # term stats: the engine's pruning gate reports the fallback
+    broken = PackedIndex(spark, appended.dir)
+    _fail_once(monkeypatch, broken.reads, "_load_vocab")
+    eng = Engine(broken, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)
+    got = [tuple(r) for r in eng.search(text, 10).collect()]
+    assert eng.last_prune_stats == PruneStats(
+        fallback="driver read failed: OSError: forced _load_vocab failure"
+    )
+    assert got == exact and got
+    assert [tuple(r) for r in eng.search(text, 10).collect()] == exact
+    assert eng.last_prune_stats.score_mode == "driver"
+
+    # block metadata: the pruned planner steps aside with the reason
+    broken = PackedIndex(spark, appended.dir)
+    _fail_once(monkeypatch, broken.reads, "_load_blocks")
+    st = PruneStats()
+    assert pruning_mod.bm25_topk_pruned(broken, text.split(), k=10, stats=st) is None
+    assert st.fallback == "driver read failed: OSError: forced _load_blocks failure"
+    eng = Engine(broken, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)
+    assert [tuple(r) for r in eng.search(text, 10).collect()] == exact
+    assert eng.last_prune_stats.score_mode == "driver"

@@ -157,8 +157,9 @@ def test_warm_structured_answer_crosses_to_the_jvm_once(
     spark, pidx, monkeypatch, jvm_crossings
 ):
     """A warm driver-answered query of every structured shape builds no
-    Column, makes one createDataFrame call (the answer frame) and collects
-    nothing while it answers; the answer is bitwise the exact plan's."""
+    Column, makes one createDataFrame call (the answer frame), collects
+    nothing and sends no other Py4J command (no idf-log method lookup) while
+    it answers; the answer is bitwise the exact plan's."""
     for model, text in SHAPES:
         exact = _exact(pidx, model, text, monkeypatch)
         _answer(pidx, model, text)  # warm: term stats, idf logs, ext-id type

@@ -476,8 +476,9 @@ def _search(index, model, text, k=20):
 
 def test_warm_flat_answer_crosses_to_the_jvm_once(spark, pidx, monkeypatch, jvm_crossings):
     """A warm driver-answered query of every flat serve shape builds no
-    Column, makes one createDataFrame call (the answer frame) and collects
-    nothing while it answers; the answer is bitwise the exact plan's."""
+    Column, makes one createDataFrame call (the answer frame), collects
+    nothing and sends no other Py4J command (no idf-log method lookup) while
+    it answers; the answer is bitwise the exact plan's."""
     monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "1")
     for model, text in FLAT_SHAPES:
         monkeypatch.setenv("SPARK_GRAFT_NO_PRUNE", "1")
@@ -489,3 +490,68 @@ def test_warm_flat_answer_crosses_to_the_jvm_once(spark, pidx, monkeypatch, jvm_
         assert st.score_mode == "driver", text
         assert dict(jvm_crossings) == {"createDataFrame": 1}, (text, jvm_crossings)
         assert [tuple(r) for r in res.collect()] == exact and exact, text
+
+
+# non-ASCII paths whose UTF-8 byte order (Spark's string order, and Python's
+# code-point order) differs from UTF-16 order: U+FF21 sorts before U+1D518
+TIE_PATHS = ["a", "Z", "z", "ß", "ä", "é", "ÿ", "中", "Ａ", "\U0001d518", "e\u0301"]
+
+
+def test_tie_plateau_with_non_ascii_ext_ids(spark, tmp_path, exact_plan, monkeypatch):
+    """Plateaus of tied scores cut by k are ordered by ext id exactly as
+    the exact plan orders them: an idf-clamped term (every doc ties at 0)
+    and a rare term with equal tf and doclen in 33 docs."""
+    from search_engine_spark.config import INDRI
+    from search_engine_spark.corpus import CODE_DOC_SCHEMA, with_docids
+
+    rows = [
+        ("r", f"{p}{j}.py", "c", "py", "rare tie filler" if j < 3 else f"tie x{j} y{j}")
+        for p in TIE_PATHS for j in range(5)
+    ]
+    docs = with_docids(spark.createDataFrame(rows, CODE_DOC_SCHEMA))
+    out = str(tmp_path / "ties")
+    build_persistent_index(spark, docs, BuildConfig(
+        out_dir=out, n_buckets=2, block_size=4, fields={"body": "content"},
+        tokenizer=CODE_TOKENIZER,
+    ), resume=False)
+    index = PackedIndex(spark, out)
+    monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "1")
+    for model, text in [(BM25, "tie"), (BM25, "rare tie"), (INDRI, "#AND(rare tie)")]:
+        for k in (1, 10, 40):
+            with exact_plan():
+                exact = [tuple(r) for r in _search(index, model, text, k)[0].collect()]
+            res, st = _search(index, model, text, k)
+            assert st.score_mode == "driver", text
+            assert [tuple(r) for r in res.collect()] == exact and exact, (text, k)
+
+
+@pytest.mark.parametrize("ext_type", [int, str])
+def test_rank_local_orders_like_sorted_tuples(spark, ext_type):
+    """``rank_local``'s Arrow ordering equals sorting (docid, ext, score)
+    tuples by (-score, ext): plateaus, -0.0 tied with 0.0, negative scores,
+    int ext ids ordered numerically and non-ASCII strings by code point."""
+    import numpy as np
+
+    from search_engine_spark.engine.topk import rank_local
+
+    rng = np.random.default_rng(3)
+    n = 400
+    docids = rng.permutation(n).astype(np.int64) + 1
+    plateaus = rng.choice([0.0, -0.0, 1.5, 2.25, -1.0, 7.0], n)
+    scores = np.where(rng.random(n) < 0.2, plateaus + rng.random(n), plateaus)
+    assert np.signbit(scores[scores == 0.0]).any()
+    # distinct ext ids: a full (score, ext) tie has no defined order
+    ext = {
+        int(d): int(d) * 7919 % 100_003 - 50_000 if ext_type is int
+        else f"{TIE_PATHS[d % len(TIE_PATHS)]}{d * 7919 % n}"
+        for d in docids
+    }
+    for k in (1, 5, 60, n, n + 10):
+        got = rank_local(spark, docids, scores, k, lambda ds: {d: ext[d] for d in ds})
+        want = sorted(
+            ((int(d), ext[int(d)], float(s)) for d, s in zip(docids, scores)),
+            key=lambda r: (-r[2], r[1]),
+        )[:k]
+        assert [tuple(r) for r in got.collect()] == [
+            (i + 1, d, str(e), s) for i, (d, e, s) in enumerate(want)
+        ], k

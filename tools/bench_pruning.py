@@ -13,7 +13,8 @@ For each same-theme query (the realistic shape: a user searches related
 identifiers) it runs the EXACT single-scan plan and the PRUNED two-phase
 plan (engine/pruning.py), asserts bitwise-identical top-k, and reports
 blocks scanned vs total plus median wall times. One JSON line per query +
-one summary line.
+one summary line, which also reports the index generation's resident
+planning metadata (blocks, terms, bytes and load seconds).
 
 Usage:
     python tools/bench_pruning.py [--n-files 100000] [--block-size 128]
@@ -276,6 +277,14 @@ def main() -> None:
             statistics.median([r["pruned_task_sec"] for r in rows]), 3
         ),
     }
+    # the generation's resident planning metadata, loaded by the warm-up
+    vocab, blocks = pidx.reads.vocab(), pidx.reads.blocks()
+    summary.update({
+        "resident_meta_blocks": len(blocks.cols["n"]),
+        "resident_meta_terms": len(vocab.df),
+        "resident_meta_bytes": vocab.nbytes + blocks.nbytes,
+        "resident_meta_load_s": round(vocab.load_s + blocks.load_s, 3),
+    })
     print(json.dumps(summary))
 
 
