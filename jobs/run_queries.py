@@ -3,11 +3,11 @@
 
     spark-submit --py-files search_engine_spark.zip jobs/run_queries.py \
         --index /data/index_v1 --model BM25 \
-        --queries queries.txt --out run.trec [--pruned]
+        --queries queries.txt --out run.trec [--batch]
 
 ``queries.txt``: reference format, one ``qid:querytext`` per line
-(hw5/QryEval/QryEval.java:659-673). ``--pruned`` uses the block-max pruned
-path for flat BM25 BOW queries (identical results, fewer blocks scanned).
+(hw5/QryEval/QryEval.java:659-673). ``Engine.search`` takes the block-max
+pruned and driver-side structured paths by default (identical results).
 """
 
 from __future__ import annotations
@@ -21,12 +21,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from search_engine_spark.config import BM25, ModelConfig  # noqa: E402
-from search_engine_spark.engine.pruning import bm25_topk_pruned  # noqa: E402
 from search_engine_spark.engine.runner import Engine  # noqa: E402
 from search_engine_spark.engine.topk import trec_lines  # noqa: E402
 from search_engine_spark.index.persist import PackedIndex  # noqa: E402
 from search_engine_spark.session import get_spark  # noqa: E402
-from search_engine_spark.tokenize import tokenizer_by_name  # noqa: E402
 
 
 def main() -> None:
@@ -36,12 +34,13 @@ def main() -> None:
     ap.add_argument("--queries", required=True)
     ap.add_argument("--out", required=True)
     ap.add_argument("--k", type=int, default=100)
-    ap.add_argument("--pruned", action="store_true")
     ap.add_argument("--batch", action="store_true",
-                    help="answer the WHOLE query file as one Spark job "
-                         "(flat BM25 BOW, or flat Indri #AND/#WAND/#WSUM "
-                         "under --model Indri): one union postings scan, "
-                         "one shuffle, per-qid top-k — engine/batch.py")
+                    help="answer the query file with batch_topk: queries "
+                         "the driver planners answer run no Spark job, the "
+                         "rest run one batch plan per model (BM25 #SUM, "
+                         "Indri #AND/#WAND/#WSUM or Boolean #AND/#OR over "
+                         "term and one-level #NEAR/#WINDOW/#SYN children) "
+                         "— engine/batch.py")
     ap.add_argument("--fb", action="store_true",
                     help="two-round PRF expansion per query (SURVEY §2.10)")
     ap.add_argument("--fb-docs", type=int, default=10)
@@ -67,7 +66,6 @@ def main() -> None:
 
     spark = get_spark("run_queries", cores=args.cores)
     pidx = PackedIndex(spark, args.index)
-    qtok = tokenizer_by_name(pidx.tokenizer_name or "code")
 
     with open(args.queries) as f:
         pairs = [
@@ -99,7 +97,6 @@ def main() -> None:
 
     def answer(qid: str, text: str) -> tuple[str, list[str], float]:
         tq = time.time()
-        toks = qtok.tokenize(text)
         if args.fb:
             from search_engine_spark.engine.expand import search_expanded
 
@@ -107,16 +104,7 @@ def main() -> None:
             expansions[qid] = exp or ""
             rows = [] if df is None else [r.asDict() for r in df.collect()]
         else:
-            # the pruned planner returns None when the driver cannot read the
-            # index; the engine then runs the exact plan
-            df = (
-                bm25_topk_pruned(pidx, toks, args.k)
-                if args.pruned and args.model == BM25 and "#" not in text
-                else None
-            )
-            if df is None:
-                df = _engine().search(text, args.k)
-            rows = [r.asDict() for r in df.collect()]
+            rows = [r.asDict() for r in _engine().search(text, args.k).collect()]
         return qid, trec_lines(qid, rows), round(time.time() - tq, 3)
 
     t_all = time.time()
@@ -129,8 +117,8 @@ def main() -> None:
         if args.batch:
             from search_engine_spark.engine.batch import batch_topk, split_batchable
 
-            # mixed file: ONE job for the flat majority, per-query fallback
-            # for structured/off-contract shapes (each costs its own job)
+            # mixed file: batch_topk for the shapes its plans cover,
+            # per-query answers for the rest (nested operators)
             bq, rest = split_batchable(_engine(), pairs)
             rows_by_qid: dict[str, list] = {}
             if bq:

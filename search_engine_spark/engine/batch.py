@@ -1,111 +1,75 @@
-"""Batched multi-query execution: a whole query FILE as ONE Spark job.
+"""Batched multi-query execution: a whole query FILE answered as one frame.
 
-The reference's outermost loop answers a query file one query at a time
-(hw5/QryEval/QryEval.java:670-709) — fine for one JVM, but on a cluster each
-query pays a full scan + shuffle + job-scheduling round trip. A TREC run
-(and every offline-eval / training-candidate-generation workload at 100 TB)
-is a BATCH: all queries are known up front, so the engine can amortize one
-postings scan and one shuffle across the entire set.
+The reference answers a query file one query at a time
+(hw5/QryEval/QryEval.java:670-709). ``batch_topk`` keeps that contract —
+each query's rows are bitwise what ``Engine.search`` returns — and routes
+the file in two parts:
 
-Plan shape (flat BM25 ``#SUM`` bag-of-words queries, the north-rule
-headline):
+1. **Driver route.** Every query is first offered to the engine's driver
+   planners (``Engine._driver_topk`` with ``spark=False``): a flat BM25
+   ``#SUM`` or Indri ``#AND``/``#WAND``/``#WSUM`` whose leaf postings fit
+   the driver gate (``pruning._POSTS_PER_TASK``) goes to the block-max
+   pruned planner, a ``#NEAR``/``#WINDOW``/``#SYN`` tree whose leaf postings
+   fit it to ``structured.struct_topk``. Both read the index with pyarrow
+   and score in numpy, so these queries run no Spark job, and their rows
+   become one local relation.
+2. **Batch plans** answer the residual — queries over the gate, with
+   duplicated terms, spanning fields, Boolean models — with one plan per
+   model for the whole residual set:
+   - ``sdm_bm25_batch_scores`` (BM25 ``#SUM``) and ``sdm_batch_scores``
+     (Indri ``#AND``/``#WAND``/``#WSUM``): #SCORE children that are term
+     leaves or one-level ``#NEAR/n``/``#WINDOW/n``/``#SYN`` over term
+     leaves. ONE positions scan and ONE mapInPandas wavefront walk cover
+     every positional child of every query; term children come off ONE
+     union postings scan joined to a broadcast (qid, child, term, field)
+     table; ONE (qid, docid) aggregate combines them — a sum for BM25, a
+     per-child tf map folded by a higher-order ``F.aggregate`` over a
+     broadcast per-qid constants array for Indri (child-order float
+     arithmetic, defaults for missing children, per-field doclens joined
+     after the aggregate).
+   - ``bool_batch_scores`` (Boolean ``#AND``/``#OR`` over term leaves):
+     one scan, one (qid, docid) aggregate of member count and min/max tf.
 
-1. ONE ``postings_for`` scan over the union of every query's (term, field)
-   leaves — term predicates pushed to the packed parquet exactly like the
-   single-query flat path (PLANS.md §1), so the scan cost tracks the union
-   of posting lists, not |queries| x index.
-2. The per-posting BM25 score as the same codegen'd float32-cast expression
-   the single-query path uses (compiler._leaf_score_col — bit-identity is
-   inherited, not re-derived).
-3. A broadcast join against the tiny (qid, term, field, mult) query-leaf
-   table fans each posting row out to the queries that contain its term —
-   map-side, no shuffle; ``mult`` carries duplicate-term multiplicity
-   (#SUM(a a b) scores `a` twice, QryopSlSum.java:55-61).
-4. ``groupBy(qid, docid).sum`` — THE one shuffle, with map-side partial
-   aggregation, keyed by (qid, docid) so hot docids of different queries
-   spread across reducers.
-5. Per-qid top-k in two stages so no single task ever sees one query's
-   full candidate set: a salted partial cut (window over (qid, salt),
-   ``rank() <= k`` — rank(), not row_number(), keeps score ties at the
-   boundary, whose order legitimately depends on ext ids we haven't
-   resolved yet), then ext-id resolution for the <= |Q|*S*(k+ties)
-   survivors only (the SURVIVORS side broadcasts — never the doc_ids
-   dimension, which is 4.4 TB at 10^10 docs), then the final
-   (desc score, asc ext_docid) row_number cut per qid — the W1 tie-break
-   contract (hw5/QryEval/ScoreList.java:65-86).
+   The residual's per-qid top-k runs in two stages so no task sees one
+   query's whole candidate set: a salted ``rank() <= k`` cut (rank keeps
+   the boundary ties whose order needs ext ids), ext ids resolved for the
+   survivors only, then the (desc score, asc ext id) ``row_number`` cut —
+   the tie-break contract of hw5/QryEval/ScoreList.java:65-86.
 
-Indri batch (``indri_batch_scores``) extends the same one-scan/one-shuffle
-shape to the Indri full-outer-with-defaults combines (#AND geo-mean, #WAND,
-#WSUM over term leaves — QryopSlIndriAnd.java:33-82, QryopSlWand.java:55-125,
-QryopSlWsum.java:56-135). The per-query pivot trick of
-ops._indri_pivot_scores can't pivot to fixed columns here (child count
-varies per query), so the aggregate instead builds a per-(qid, docid)
-``map<child_index, tf>`` and the combine runs POST-agg as a higher-order
-``F.aggregate`` over a broadcast per-qid constants array ordered by child
-index — JVM-side, no UDF, and the fold preserves the reference's
-child-order float arithmetic exactly (1.0*x and pow(x, 1.0) are IEEE-exact
-identities, so seeding the fold with 1.0 keeps bit-identity with the
-reduce-over-columns single-query combine).
-
-Per-query results are bitwise-identical to ``Engine.search`` on the same
-index (tests/test_batch.py asserts it query-by-query, both backends).
+Shapes come from ``structured.root_shape``, the classifier both driver
+planners use, under the plans' own limit (composites one level deep), so a
+query gets the same answer and the same error on either route.
 """
 
 from __future__ import annotations
 
 import math
 from collections import Counter
+from functools import reduce
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from search_engine_spark.config import (
     BM25, INDRI, RANKED_BOOLEAN, TOP_K, UNRANKED_BOOLEAN,
 )
 from search_engine_spark.engine.compiler import _leaf_score_col, compile_node
+from search_engine_spark.engine.ops import (
+    AndBoolNode, IlNode, NearNode, OrNode, ScoreNode, SynNode, TermNode,
+)
 from search_engine_spark.engine.runner import Engine
+from search_engine_spark.engine.structured import Shape, root_shape
+from search_engine_spark.engine.topk import _TOPK_SCHEMA
 
 # salt fan-out of the partial top-k stage: bounds the per-task row count of
 # the first window at ~|matching docs| / SALTS for the hottest query
 _SALT_BUCKETS = 32
-
-
-def batch_scores(eng: Engine, queries: list[tuple[str, str]]) -> DataFrame:
-    """[(qid, text)] -> (qid, docid, score) for flat BM25 BOW queries.
-
-    One scan + one shuffle for the whole set; see module docstring.
-    """
-    if eng.model.name != BM25:
-        raise ValueError("batch execution covers flat BM25 #SUM queries")
-    fld = eng.default_field
-    leaves: list[tuple[str, str, str, float]] = []  # qid, term, field, mult
-    for qid, text in queries:
-        if "#" in text:
-            raise ValueError(f"query {qid!r} is structured — batch path is flat BOW")
-        toks = eng.tokenizer.tokenize(text)
-        for t, n in sorted(Counter(toks).items()):
-            leaves.append((qid, t, fld, float(n)))
-    if not leaves:
-        spark = eng.index.doc_ids.sparkSession
-        return spark.createDataFrame([], "qid string, docid long, score double")
-
-    pairs = sorted({(t, f) for _, t, f, _ in leaves})
-    fields = {f for _, f in pairs}
-    scan = eng.ctx.index.postings_for(pairs)
-    scored = scan.select(
-        "term", "field", "docid",
-        _leaf_score_col(eng.ctx, fields).alias("score"),
-    )
-    spark = scan.sparkSession
-    qleaf = spark.createDataFrame(
-        leaves, "qid string, term string, field string, mult double"
-    )
-    return (
-        scored.join(F.broadcast(qleaf), ["term", "field"])
-        .select("qid", "docid", (F.col("score") * F.col("mult")).alias("score"))
-        .groupBy("qid", "docid")
-        .agg(F.sum("score").alias("score"))
-    )
+_BATCH_SCHEMA = T.StructType(
+    [T.StructField("qid", T.StringType()), *_TOPK_SCHEMA.fields]
+)
 
 
 def _field_doclen_map(eng: Engine, flds: list[str], fidx: dict) -> DataFrame:
@@ -134,22 +98,25 @@ def _field_doclen_map(eng: Engine, flds: list[str], fidx: dict) -> DataFrame:
     )
 
 
-def _indri_combine_score(p, *, dl_of, dl_def_of):
+def _indri_combine_score(p):
     """The post-aggregation Indri combine over the broadcast constants array
     `_arr` (rows: ci, ctf, w, cl, fi) against the `_tfmap` column: per-child
-    actual-or-default score via ``dl_of``/``dl_def_of`` (Column factories
-    taking the array element), folded in child order by `_kind` — the exact
-    float arithmetic of the single-query pivot combines (seeding with
+    actual-or-default score, the doclen of the child's field from `_dlmap`
+    (0 for a doc with no tokens there, the ScoreNode quirk the exact
+    multi-field pivot documents), folded in child order by `_kind` — the
+    exact float arithmetic of the single-query pivot combines (seeding with
     1.0/0.0 is IEEE-exact against the reference's unseeded left folds)."""
     from search_engine_spark.engine import score as score_mod
 
     def _s(x):
         tf = F.element_at(F.col("_tfmap"), x["ci"])
+        dl = F.element_at(F.col("_dlmap"), x["fi"])
         actual = score_mod.indri_score(
-            ctf=x["ctf"], c_len=x["cl"], p=p, tf=tf, doclen=dl_of(x)
+            ctf=x["ctf"], c_len=x["cl"], p=p, tf=tf, doclen=dl
         )
         default = score_mod.indri_default_score(
-            ctf=x["ctf"], c_len=x["cl"], p=p, doclen=dl_def_of(x)
+            ctf=x["ctf"], c_len=x["cl"], p=p,
+            doclen=F.coalesce(dl, F.lit(0).cast("long")),
         )
         return F.when(tf.isNotNull(), actual).otherwise(default)
 
@@ -170,269 +137,58 @@ def _indri_combine_score(p, *, dl_of, dl_def_of):
     )
 
 
-def _indri_query_spec(
-    eng: Engine, qid: str, text: str
-) -> tuple[str, list[float] | None, list[tuple[str, str]]]:
-    """Parse + compile one Indri query; return (kind, weights, [(term, field)])
-    for the flat shapes the batch path covers — #AND / #WAND / #WSUM whose
-    children are all #SCORE(term-leaf) — else raise. Going through the real
-    parser/compiler inherits every parsing quirk (model-default wrap,
-    single-child unwrap, stopword weight popping) instead of re-deriving it."""
-    from search_engine_spark.engine.ops import (
-        IlNode, IndriAndNode, ScoreNode, TermNode, WandNode, WsumNode,
-    )
-
+def _query_shape(eng: Engine, qid: str, text: str) -> Shape | None:
+    """Compile one BM25/Indri query and classify its root with
+    ``structured.root_shape``, under the batch plans' limit: each #SCORE
+    child is a term leaf or a #NEAR/#WINDOW/#SYN over term leaves. None for
+    a root whose every term was a stopword (it has no rows); ValueError for
+    any other shape."""
     node = compile_node(eng.parse(text), eng.ctx, eng.default_field)
     if isinstance(node, IlNode):
         node = ScoreNode(node)
-    if isinstance(node, ScoreNode):
-        kind, weights, children = "and", None, [node]
-    elif isinstance(node, IndriAndNode):
-        kind, weights, children = "and", None, node.children
-    elif isinstance(node, WandNode):
-        kind, weights, children = "wand", node.weights, node.children
-    elif isinstance(node, WsumNode):
-        kind, weights, children = "wsum", node.weights, node.children
-    else:
+    shape = root_shape(node, eng.model.name)
+    if shape is None:
+        if getattr(node, "children", None) == []:
+            return None
         raise ValueError(
-            f"query {qid!r} compiles to {type(node).__name__} — Indri batch "
-            "covers flat #AND/#WAND/#WSUM"
+            f"query {qid!r} compiles to {type(node).__name__} with a nested Sl "
+            "child — batch plans cover term and positional children"
         )
-    for c in children:
-        if not (isinstance(c, ScoreNode) and isinstance(c.child, TermNode)):
+    for c in shape.children:
+        if not isinstance(c.child, TermNode) and not all(
+            isinstance(x, TermNode) for x in c.child.children
+        ):
             raise ValueError(
-                f"query {qid!r} has a structured child — Indri batch covers "
-                "flat term-leaf shapes"
+                f"query {qid!r} has a nested composite inside a "
+                f"{type(c.child).__name__} child — batch plans cover term leaves"
             )
-    return kind, weights, [(c.child.term, c.child.field) for c in children]
+    return shape
 
 
-def indri_batch_scores(eng: Engine, queries: list[tuple[str, str]]) -> DataFrame:
-    """[(qid, text)] -> (qid, docid, score) for flat Indri #AND/#WAND/#WSUM.
-
-    One union postings scan + broadcast (qid, ci, term, field) fan-out +
-    ONE (qid, docid) aggregation; the candidate key set per qid is the
-    union of its children's posting lists (a group exists iff >=1 leaf
-    matched), and missing children take their default score post-agg — see
-    module docstring. Mixed-field batches (hw3's multi-field #WSUM shape)
-    additionally join a per-docid field→doclen map AFTER the aggregate
-    (bounded candidate set x filtered doc_stats), with per-child c_len and
-    field index riding the broadcast constants array."""
-    from search_engine_spark.engine import score as score_mod
-
-    if eng.model.name != INDRI:
-        raise ValueError("indri_batch_scores requires the Indri model")
-    spark = eng.index.doc_ids.sparkSession
-    specs = {qid: _indri_query_spec(eng, qid, text) for qid, text in queries}
-    fields = {f for _, _, leaves in specs.values() for _, f in leaves}
-    if not fields:
-        return spark.createDataFrame([], "qid string, docid long, score double")
-    multi_field = len(fields) > 1
-    flds = sorted(fields)
-    fidx = {f: j for j, f in enumerate(flds)}
-    # per-FIELD corpus length: a plan constant on the single-field path; on
-    # the mixed-field path it rides the per-child constants array (like the
-    # single-query mf pivot's per-child c_len, ops._indri_pivot_scores_mf)
-    c_len_of = {f: eng.index.corpus.sum_doclen(f) for f in flds}
-    p = eng.model.indri
-    eng.ctx.prefetch_terms({(t, f) for _, _, lv in specs.values() for t, f in lv})
-
-    # broadcast dimensions: (qid, ci, term, field) leaf fan-out + per-qid
-    # constants array ordered by child index (ctf constant-folds into the
-    # score expression on the single-query path; here it rides the tiny
-    # array, as do the per-child c_len and field index)
-    qleaf, qmeta = [], []
-    for qid, (kind, weights, leaves) in specs.items():
-        if not leaves:  # all children stopword-popped: no candidates, no rows
-            continue
-        W = float(sum(weights)) if weights is not None else 0.0
-        arr = []
-        for ci, (t, f) in enumerate(leaves):
-            qleaf.append((qid, ci, t, f))
-            w = (
-                (weights[ci] / W if W != 0 else math.nan)
-                if weights is not None
-                else 0.0
-            )
-            _, ctf = eng.ctx.term_stat(t, f)
-            arr.append((ci, float(ctf), w, float(c_len_of[f]), fidx[f]))
-        # '#AND' geo-mean exponent, python-derived like the single-query
-        # F.lit(1.0 / len(children)) so Math.pow sees an identical double
-        qmeta.append((qid, kind, 1.0 / len(leaves), arr))
-
-    pairs = sorted({(t, f) for _, _, lv in specs.values() for t, f in lv})
-    scan = eng.ctx.index.postings_for(pairs)
-    qleaf_df = spark.createDataFrame(
-        qleaf, "qid string, ci int, term string, field string"
-    )
-    qmeta_df = spark.createDataFrame(
-        qmeta,
-        "qid string, _kind string, _exp double, "
-        "_arr array<struct<ci:int, ctf:double, w:double, cl:double, fi:int>>",
-    )
-
-    if not multi_field:
-        # single-field fast path: every child's doclen is the doc's length
-        # in THE field, carried by the posting rows themselves — one shuffle
-        grouped = (
-            scan.select("term", "field", "docid", "tf", "doclen")
-            .join(F.broadcast(qleaf_df), ["term", "field"])
-            .groupBy("qid", "docid")
-            .agg(
-                F.collect_list(F.struct("ci", "tf")).alias("_ents"),
-                F.max("doclen").alias("_dl"),
-            )
-            .select(
-                "qid", "docid",
-                F.map_from_entries("_ents").alias("_tfmap"), "_dl",
-            )
-            .join(F.broadcast(qmeta_df), "qid")
-        )
-    else:
-        # mixed-field (hw3's `#WSUM(w a.content w b.path)` shape, batched —
-        # reference hw3/QryEval/mengyuy-HW3-Report.pdf §2): a missing
-        # child's default score needs the doc's length in THAT child's
-        # field, which no posting row of another field carries. The
-        # single-query mf pivot unions per-field doc_stats rows into its
-        # aggregate; HERE that would fan |docs|x|fields| rows out per qid,
-        # so instead the per-docid field→doclen map joins AFTER the
-        # (qid, docid) aggregate — the join's left side is the bounded
-        # candidate set, and doc_stats is filtered to the batch's fields
-        # before its own docid-keyed aggregate. A doc with no tokens in a
-        # child's field has no doc_stats row: doclen 0 in that child's
-        # default, the ScoreNode quirk the mf pivot documents.
-        dstats = _field_doclen_map(eng, flds, fidx)
-        grouped = (
-            scan.select("term", "field", "docid", "tf")
-            .join(F.broadcast(qleaf_df), ["term", "field"])
-            .groupBy("qid", "docid")
-            .agg(F.collect_list(F.struct("ci", "tf")).alias("_ents"))
-            .select("qid", "docid", F.map_from_entries("_ents").alias("_tfmap"))
-            .join(dstats, "docid", "left")
-            .join(F.broadcast(qmeta_df), "qid")
-        )
-
-    if multi_field:
-        score = _indri_combine_score(
-            p,
-            dl_of=lambda x: F.element_at(F.col("_dlmap"), x["fi"]),
-            dl_def_of=lambda x: F.coalesce(
-                F.element_at(F.col("_dlmap"), x["fi"]), F.lit(0).cast("long")
-            ),
-        )
-    else:
-        score = _indri_combine_score(
-            p, dl_of=lambda x: F.col("_dl"), dl_def_of=lambda x: F.col("_dl")
-        )
-    return grouped.select("qid", "docid", score.alias("score"))
+def _child_spec(c: ScoreNode) -> tuple:
+    """A #SCORE child as ("t", term, field), ("syn", [(term, field)...],
+    field) or ("near"|"window", distance, [(term, field)...], field). A
+    1-arg #SYN/#NEAR/#WINDOW IS its leaf's list (QryopIlWindow.java:51-57),
+    so it is a term child."""
+    ch = c.child
+    if isinstance(ch, TermNode):
+        return ("t", ch.term, ch.field)
+    leaves = [(x.term, x.field) for x in ch.children]
+    if len(leaves) == 1:
+        return ("t",) + leaves[0]
+    if isinstance(ch, SynNode):
+        return ("syn", leaves, ch.field)
+    return ("near" if isinstance(ch, NearNode) else "window", ch.distance, leaves, ch.field)
 
 
-def _sdm_query_spec(
-    eng: Engine, qid: str, text: str
-) -> tuple[str, list[float] | None, list[tuple]]:
-    """Parse + compile one structured (SDM-shaped) Indri query: flat
-    #AND/#WAND/#WSUM whose children are term leaves, #SYN unions, OR
-    positional #NEAR/n / #WINDOW/n over term leaves — the reference hw3
-    SDM headline ``#AND(q #NEAR/1(q) #WINDOW/8(q))``
-    (hw3/QryEval/mengyuy-HW3-Report.pdf §3). Returns
-    (kind, weights, children) — see _classify_sdm_children for the child
-    tuple formats. A superset of _indri_query_spec's flat shapes."""
-    from search_engine_spark.engine.ops import (
-        IlNode, IndriAndNode, NearNode, ScoreNode, TermNode, WandNode,
-        WindowNode, WsumNode,
-    )
-
-    node = compile_node(eng.parse(text), eng.ctx, eng.default_field)
-    if isinstance(node, IlNode):
-        node = ScoreNode(node)
-    if isinstance(node, ScoreNode):
-        kind, weights, children = "and", None, [node]
-    elif isinstance(node, IndriAndNode):
-        kind, weights, children = "and", None, node.children
-    elif isinstance(node, WandNode):
-        kind, weights, children = "wand", node.weights, node.children
-    elif isinstance(node, WsumNode):
-        kind, weights, children = "wsum", node.weights, node.children
-    else:
-        raise ValueError(
-            f"query {qid!r} compiles to {type(node).__name__} — SDM batch "
-            "covers flat #AND/#WAND/#WSUM over term/positional children"
-        )
-    return kind, weights, _classify_sdm_children(qid, children)
-
-
-def _classify_sdm_children(qid: str, children: list) -> list[tuple]:
-    """ScoreNode children -> SDM spec tuples (shared by the Indri and BM25
-    SDM specs): ("t", term, field), ("syn", [(term, field)...], field), or
-    ("near"|"window", distance, [(term, field)...], field)."""
-    from search_engine_spark.engine.ops import (
-        NearNode, ScoreNode, SynNode, TermNode, WindowNode,
-    )
-
-    out: list[tuple] = []
-    for c in children:
-        if not isinstance(c, ScoreNode):
-            raise ValueError(
-                f"query {qid!r} has a nested Sl child — SDM batch covers "
-                "term/positional children only"
-            )
-        ch = c.child
-        if isinstance(ch, TermNode):
-            out.append(("t", ch.term, ch.field))
-        elif isinstance(ch, SynNode):
-            if not all(isinstance(leaf, TermNode) for leaf in ch.children):
-                raise ValueError(
-                    f"query {qid!r} has a nested composite inside a #SYN "
-                    "child — SDM batch covers term leaves"
-                )
-            leaves = [(leaf.term, leaf.field) for leaf in ch.children]
-            if len(leaves) == 1:
-                out.append(("t",) + leaves[0])  # 1-arg #SYN IS its leaf list
-            else:
-                out.append(("syn", leaves, ch.field))
-        elif isinstance(ch, (NearNode, WindowNode)):
-            if not all(isinstance(leaf, TermNode) for leaf in ch.children):
-                raise ValueError(
-                    f"query {qid!r} has a nested composite inside a "
-                    "positional child — SDM batch covers term leaves"
-                )
-            leaves = [(leaf.term, leaf.field) for leaf in ch.children]
-            if len(leaves) == 1:
-                # 1-arg passthrough (QryopIlWindow.java:51-57): the result
-                # list IS the leaf's list, so treat as a term child — the
-                # result df/ctf equal the leaf's broadcast stats
-                out.append(("t",) + leaves[0])
-            else:
-                op = "near" if isinstance(ch, NearNode) else "window"
-                out.append((op, ch.distance, leaves, ch.field))
-        else:
-            raise ValueError(
-                f"query {qid!r} has a {type(ch).__name__} child — SDM batch "
-                "covers term and #NEAR/#WINDOW children"
-            )
+def _specs(eng: Engine, queries: list[tuple[str, str]]) -> dict:
+    """{qid: (shape, [child spec])} of the queries that have children."""
+    out = {}
+    for qid, text in queries:
+        shape = _query_shape(eng, qid, text)
+        if shape is not None:
+            out[qid] = (shape, [_child_spec(c) for c in shape.children])
     return out
-
-
-def _sdm_bm25_query_spec(eng: Engine, qid: str, text: str) -> list[tuple]:
-    """BM25 twin of _sdm_query_spec: flat #SUM (the model-default wrap)
-    whose children are term leaves or #NEAR/n / #WINDOW/n over term leaves
-    — the hw2 structured-BM25 shape. Returns the children spec only (#SUM
-    has no weights; duplicate children each contribute once, summed)."""
-    from search_engine_spark.engine.ops import IlNode, ScoreNode, SumNode
-
-    node = compile_node(eng.parse(text), eng.ctx, eng.default_field)
-    if isinstance(node, IlNode):
-        node = ScoreNode(node)
-    if isinstance(node, ScoreNode):
-        children = [node]
-    elif isinstance(node, SumNode):
-        children = node.children
-    else:
-        raise ValueError(
-            f"query {qid!r} compiles to {type(node).__name__} — BM25 SDM "
-            "batch covers #SUM over term/positional children"
-        )
-    return _classify_sdm_children(qid, children)
 
 
 def _sdm_walk_iter(batches):
@@ -575,39 +331,38 @@ def _syn_child_rows(eng: Engine, specs: dict[str, list[tuple]]) -> DataFrame | N
 def sdm_bm25_batch_scores(
     eng: Engine, queries: list[tuple[str, str]]
 ) -> DataFrame:
-    """[(qid, text)] -> (qid, docid, score) for structured BM25 #SUM
-    queries (term + #NEAR/n + #WINDOW/n children — the hw2 structured-BM25
-    shape), batched across qids.
+    """[(qid, text)] -> (qid, docid, score) for BM25 #SUM queries over
+    term, #NEAR/n, #WINDOW/n and #SYN children (flat bag-of-words and the
+    hw2 structured-BM25 shape alike), batched across qids.
 
     Phase 1 is the shared positional walk (_walk_positional_children);
     phase 2 scores term children straight off ONE union postings scan with
-    the same codegen'd expression the flat batch uses (_leaf_score_col —
-    df/avgdl denormalized, no defaults: #SUM sums the scores PRESENT,
+    the exact plan's codegen'd expression (_leaf_score_col — df/avgdl
+    denormalized, no defaults: #SUM sums the scores PRESENT,
     QryopSlSum.java:43-75), scores positional children from the walked
     frame with per-child df riding a broadcast constants table and doclen
-    from the per-docid field map, and runs ONE (qid, docid) sum. Bitwise ≡
-    per-query Engine.search (tests/test_batch.py)."""
+    from the per-docid field map, and runs ONE (qid, docid) sum. A flat
+    #SUM's duplicated term is scored once times its count, as the exact
+    plan's flat path does (compiler.try_flat_scores); any other #SUM sums
+    each child, as SumNode does (#SUM(a a b) scores `a` twice,
+    QryopSlSum.java:55-61). Bitwise ≡ per-query Engine.search
+    (tests/test_batch.py)."""
     from search_engine_spark.engine import score as score_mod
 
     if eng.model.name != BM25:
         raise ValueError("sdm_bm25_batch_scores requires the BM25 model")
     spark = eng.index.doc_ids.sparkSession
-    specs = {qid: _sdm_bm25_query_spec(eng, qid, text) for qid, text in queries}
-
-    child_fields: set[str] = set()
-    term_pairs: set[tuple[str, str]] = set()
-    for children in specs.values():
-        for c in children:
-            child_fields.add(_child_field(c))
-    if not child_fields:
+    specs = _specs(eng, queries)
+    if not specs:
         return spark.createDataFrame([], "qid string, docid long, score double")
-    flds = sorted(child_fields)
+    children_of = {qid: ch for qid, (_, ch) in specs.items()}
+    flds = sorted({_child_field(c) for ch in children_of.values() for c in ch})
     fidx = {f: j for j, f in enumerate(flds)}
     p = eng.model.bm25
     n_docs = eng.index.corpus.n_docs
 
-    pos_posts, pos_stats = _walk_positional_children(eng, specs)
-    syn_rows = _syn_child_rows(eng, specs)
+    pos_posts, pos_stats = _walk_positional_children(eng, children_of)
+    syn_rows = _syn_child_rows(eng, children_of)
     if syn_rows is not None:
         # BM25 needs each #SYN child's df = its union's doc count: one
         # aggregate over the (pre-aggregated) syn frame; checkpoint so the
@@ -627,13 +382,15 @@ def sdm_bm25_batch_scores(
             else syn_rows
         )
 
-    qleaf, pmeta = [], []
-    for qid, children in specs.items():
+    qleaf, pmeta = [], []  # (qid, term, field, mult), positional constants
+    for qid, (shape, children) in specs.items():
+        terms = [(c[1], c[2]) for c in children if c[0] == "t"]
+        if shape.flat:
+            qleaf += [(qid, t, f, float(n)) for (t, f), n in Counter(terms).items()]
+        else:
+            qleaf += [(qid, t, f, 1.0) for t, f in terms]
         for ci, c in enumerate(children):
-            if c[0] == "t":
-                qleaf.append((qid, ci, c[1], c[2]))
-                term_pairs.add((c[1], c[2]))
-            else:
+            if c[0] != "t":
                 fld = _child_field(c)
                 df_val, _ = pos_stats.get((qid, ci), (0, 0))
                 pmeta.append(
@@ -643,10 +400,11 @@ def sdm_bm25_batch_scores(
 
     frames = []
     if qleaf:
+        term_pairs = {(t, f) for _, t, f, _ in qleaf}
         eng.ctx.prefetch_terms(term_pairs)
         scan = eng.ctx.index.postings_for(sorted(term_pairs))
         qleaf_df = spark.createDataFrame(
-            qleaf, "qid string, ci int, term string, field string"
+            qleaf, "qid string, term string, field string, mult double"
         )
         frames.append(
             scan.select(
@@ -656,7 +414,7 @@ def sdm_bm25_batch_scores(
                 ),
             )
             .join(F.broadcast(qleaf_df), ["term", "field"])
-            .select("qid", "docid", "score")
+            .select("qid", "docid", (F.col("score") * F.col("mult")).alias("score"))
         )
     if pos_posts is not None:
         pm_df = spark.createDataFrame(
@@ -672,18 +430,14 @@ def sdm_bm25_batch_scores(
             .join(_field_doclen_map(eng, flds, fidx), "docid")
             .select("qid", "docid", pscore.alias("score"))
         )
-    if not frames:
-        return spark.createDataFrame([], "qid string, docid long, score double")
-    from functools import reduce
-
     rows = reduce(DataFrame.unionByName, frames)
     return rows.groupBy("qid", "docid").agg(F.sum("score").alias("score"))
 
 
 def sdm_batch_scores(eng: Engine, queries: list[tuple[str, str]]) -> DataFrame:
-    """[(qid, text)] -> (qid, docid, score) for structured (SDM-shaped)
-    Indri queries — flat #AND/#WAND/#WSUM over term AND positional
-    (#NEAR/n, #WINDOW/n) children, batched across qids.
+    """[(qid, text)] -> (qid, docid, score) for Indri #AND/#WAND/#WSUM
+    queries over term, #NEAR/n, #WINDOW/n and #SYN children (flat and
+    SDM-shaped alike, mixed fields included), batched across qids.
 
     Two jobs for the whole set instead of ~3 jobs per query:
 
@@ -696,8 +450,8 @@ def sdm_batch_scores(eng: Engine, queries: list[tuple[str, str]]) -> DataFrame:
        (qid, ci, docid, tf) frame is localCheckpointed — it feeds both the
        per-child df/ctf stats aggregate (the composite #SCORE contract,
        ScoreNode._materialized) and the combine, without re-walking.
-    2. The combine job: term-child rows (one scan + broadcast fan-out,
-       exactly indri_batch_scores) unioned with the checkpointed positional
+    2. The combine job: term-child rows (one scan + broadcast
+       (qid, ci, term, field) fan-out) unioned with the checkpointed positional
        rows, ONE (qid, docid) aggregate into a tf-map, per-docid
        field→doclen map joined post-agg, and the same broadcast-constants
        higher-order combine — positional children's ctf rides the constants
@@ -707,24 +461,18 @@ def sdm_batch_scores(eng: Engine, queries: list[tuple[str, str]]) -> DataFrame:
     if eng.model.name != INDRI:
         raise ValueError("sdm_batch_scores requires the Indri model")
     spark = eng.index.doc_ids.sparkSession
-    specs = {qid: _sdm_query_spec(eng, qid, text) for qid, text in queries}
-
-    child_fields: set[str] = set()
-    term_pairs: set[tuple[str, str]] = set()
-    pos_pairs: set[tuple[str, str]] = set()
-    syn_pairs: set[tuple[str, str]] = set()
-    for kind, weights, children in specs.values():
-        for c in children:
-            child_fields.add(_child_field(c))
-            if c[0] == "t":
-                term_pairs.add((c[1], c[2]))
-            elif c[0] == "syn":
-                syn_pairs.update(c[1])
-            else:
-                pos_pairs.update(c[2])
-    if not child_fields:
+    specs = _specs(eng, queries)
+    if not specs:
         return spark.createDataFrame([], "qid string, docid long, score double")
-    flds = sorted(child_fields)
+    children_of = {qid: ch for qid, (_, ch) in specs.items()}
+    term_pairs: set[tuple[str, str]] = set()
+    syn_pairs: set[tuple[str, str]] = set()
+    for c in (c for ch in children_of.values() for c in ch):
+        if c[0] == "t":
+            term_pairs.add((c[1], c[2]))
+        elif c[0] == "syn":
+            syn_pairs.update(c[1])
+    flds = sorted({_child_field(c) for ch in children_of.values() for c in ch})
     fidx = {f: j for j, f in enumerate(flds)}
     c_len_of = {f: eng.index.corpus.sum_doclen(f) for f in flds}
     p = eng.model.indri
@@ -732,15 +480,13 @@ def sdm_batch_scores(eng: Engine, queries: list[tuple[str, str]]) -> DataFrame:
     eng.ctx.prefetch_terms(term_pairs | syn_pairs)
 
     # ---- phase 1: every positional/#SYN child of every query, ONE job ---
-    children_of = {qid: ch for qid, (_k, _w, ch) in specs.items()}
     pos_posts, pos_stats = _walk_positional_children(eng, children_of)
     syn_rows = _syn_child_rows(eng, children_of)
 
-    # ---- phase 2: constants + combine (indri_batch_scores shape) --------
+    # ---- phase 2: constants + combine ------------------------------------
     qleaf, qmeta = [], []
-    for qid, (kind, weights, children) in specs.items():
-        if not children:
-            continue
+    for qid, (shape, children) in specs.items():
+        weights = shape.weights
         W = float(sum(weights)) if weights is not None else 0.0
         arr = []
         for ci, c in enumerate(children):
@@ -766,7 +512,7 @@ def sdm_batch_scores(eng: Engine, queries: list[tuple[str, str]]) -> DataFrame:
                 else 0.0
             )
             arr.append((ci, float(ctf), w, float(c_len_of[fld]), fidx[fld]))
-        qmeta.append((qid, kind, 1.0 / len(children), arr))
+        qmeta.append((qid, shape.kind, 1.0 / len(children), arr))
     qmeta_df = spark.createDataFrame(
         qmeta,
         "qid string, _kind string, _exp double, "
@@ -798,8 +544,6 @@ def sdm_batch_scores(eng: Engine, queries: list[tuple[str, str]]) -> DataFrame:
                 "qid", "ci", "docid", F.col("tf").cast("int").alias("tf")
             )
         )
-    from functools import reduce
-
     rows = reduce(DataFrame.unionByName, frames)
     grouped = (
         rows.groupBy("qid", "docid")
@@ -808,14 +552,7 @@ def sdm_batch_scores(eng: Engine, queries: list[tuple[str, str]]) -> DataFrame:
         .join(_field_doclen_map(eng, flds, fidx), "docid", "left")
         .join(F.broadcast(qmeta_df), "qid")
     )
-    score = _indri_combine_score(
-        p,
-        dl_of=lambda x: F.element_at(F.col("_dlmap"), x["fi"]),
-        dl_def_of=lambda x: F.coalesce(
-            F.element_at(F.col("_dlmap"), x["fi"]), F.lit(0).cast("long")
-        ),
-    )
-    return grouped.select("qid", "docid", score.alias("score"))
+    return grouped.select("qid", "docid", _indri_combine_score(p).alias("score"))
 
 
 def _bool_query_spec(
@@ -823,10 +560,6 @@ def _bool_query_spec(
 ) -> tuple[str, list[tuple[str, str]]]:
     """Parse + compile one Boolean query; ('bor'|'band', [(term, field)])
     for flat #OR / #AND over term leaves, else raise."""
-    from search_engine_spark.engine.ops import (
-        AndBoolNode, IlNode, OrNode, ScoreNode, TermNode,
-    )
-
     node = compile_node(eng.parse(text), eng.ctx, eng.default_field)
     if isinstance(node, IlNode):
         node = ScoreNode(node)
@@ -854,21 +587,14 @@ def split_batchable(
     eng: Engine, queries: list[tuple[str, str]]
 ) -> tuple[list[tuple[str, str]], list[tuple[str, str]]]:
     """Partition a query file into (batchable, residual) for ``batch_topk``
-    under ``eng``'s model. A mixed offline-eval file then runs as ONE job
-    for the flat majority plus per-query evaluation of the structured
-    residual (jobs/run_queries.py --batch), instead of rejecting the whole
-    file — the r03 verdict's batch-coverage gap."""
+    under ``eng``'s model: the shapes ``batch_topk`` covers, and the rest
+    (nested operators) for per-query evaluation (jobs/run_queries.py
+    --batch), instead of rejecting the whole file."""
     good, rest = [], []
     for qid, text in queries:
         try:
-            if eng.model.name == BM25:
-                if "#" in text:
-                    # structured: batchable iff it fits the SDM shape
-                    _sdm_bm25_query_spec(eng, qid, text)
-            elif eng.model.name == INDRI:
-                # SDM spec is a superset of the flat spec: flat, mixed-field
-                # and #NEAR/#WINDOW-structured queries all batch
-                _sdm_query_spec(eng, qid, text)
+            if eng.model.name in (BM25, INDRI):
+                _query_shape(eng, qid, text)
             elif eng.model.name in (UNRANKED_BOOLEAN, RANKED_BOOLEAN):
                 _bool_query_spec(eng, qid, text)
             else:
@@ -936,42 +662,51 @@ def bool_batch_scores(eng: Engine, queries: list[tuple[str, str]]) -> DataFrame:
 
 
 def batch_topk(
-    eng: Engine, queries: list[tuple[str, str]], k: int = TOP_K,
-    salt_buckets: int = _SALT_BUCKETS,
+    eng: Engine, queries: list[tuple[str, str]], k: int = TOP_K
 ) -> DataFrame:
     """[(qid, text)] -> (qid, rank, docid, ext_docid, score), top-k per qid.
 
-    Rank-identical to per-query ``Engine.search`` (same score expression,
-    same desc-score/asc-ext-id tie-break); queries with no matching term
-    simply have no rows (the TREC dummy row is the sink's job,
-    topk.trec_lines). Dispatches on the engine's model: flat BM25 #SUM,
-    flat Indri #AND/#WAND/#WSUM, or flat Boolean #AND/#OR.
-    """
-    if eng.model.name == INDRI:
-        # flat sets take the one-shuffle fast path; any positional child
-        # routes the WHOLE set through the SDM plan (a superset: flat
-        # queries are SDM queries with zero positional children)
-        flat = True
-        try:
-            for qid, text in queries:
-                _indri_query_spec(eng, qid, text)
-        except ValueError:
-            flat = False
-        scores = (
-            indri_batch_scores(eng, queries)
-            if flat
-            else sdm_batch_scores(eng, queries)
-        )
-    elif eng.model.name in (UNRANKED_BOOLEAN, RANKED_BOOLEAN):
-        scores = bool_batch_scores(eng, queries)
-    elif any("#" in text for _, text in queries):
-        # structured BM25 (#SUM over positional children): the SDM plan
-        scores = sdm_bm25_batch_scores(eng, queries)
-    else:
-        scores = batch_scores(eng, queries)
+    Rank-identical to per-query ``Engine.search`` (same scores, same
+    desc-score/asc-ext-id tie-break); queries with no matching term simply
+    have no rows (the TREC dummy row is the sink's job, topk.trec_lines).
+    Every query is checked against its model's batch shapes first, so a
+    file raises the same errors whichever route its queries take. BM25 and
+    Indri queries the driver planners answer with no Spark job come back as
+    local rows; the rest run through the model's batch plan (module
+    docstring)."""
+    model = eng.model.name
+    if model in (UNRANKED_BOOLEAN, RANKED_BOOLEAN):
+        return _rank_residual(eng, bool_batch_scores(eng, queries), k, len(queries))
+    plan = {BM25: sdm_bm25_batch_scores, INDRI: sdm_batch_scores}.get(model)
+    if plan is None:
+        raise ValueError(f"batch execution does not cover the {model} model")
+    _specs(eng, queries)
+    local, rest = [], []
+    for qid, text in queries:
+        res = eng._driver_topk(text, k, spark=False)
+        if res is None:
+            rest.append((qid, text))
+        else:  # a local relation: collecting it runs no Spark job
+            local += [(qid, *r) for r in res.collect()]
+    # one Arrow-built local relation for every driver answer
+    cols = list(zip(*local)) or [()] * len(_BATCH_SCHEMA)
+    answer = eng.index.spark.createDataFrame(
+        pa.table(
+            dict(zip(_BATCH_SCHEMA.names, map(list, cols))),
+            schema=to_arrow_schema(_BATCH_SCHEMA),
+        ),
+        _BATCH_SCHEMA,
+    )
+    if rest:
+        answer = _rank_residual(eng, plan(eng, rest), k, len(rest)).unionByName(answer)
+    return answer
+
+
+def _rank_residual(eng: Engine, scores: DataFrame, k: int, n_queries: int) -> DataFrame:
+    """A batch plan's (qid, docid, score) -> the per-qid top-k frame."""
     # stage 1 — salted partial cut: rank() keeps boundary ties (their final
     # order needs ext ids), every (qid, salt) group cuts to <= k + ties
-    salt = F.pmod(F.xxhash64(F.col("docid")), F.lit(salt_buckets))
+    salt = F.pmod(F.xxhash64(F.col("docid")), F.lit(_SALT_BUCKETS))
     w_part = Window.partitionBy("qid", "salt").orderBy(F.desc("score"))
     survivors = (
         scores.withColumn("salt", salt)
@@ -1003,7 +738,7 @@ def batch_topk(
         # survivor rows instead of re-running exactly the large-index case
         # the gate exists for.
         survivors = survivors.localCheckpoint(eager=True)
-        cap = max(10 * k * max(1, len(queries)), _topk._TIE_FALLBACK)
+        cap = max(10 * k * max(1, n_queries), _topk._TIE_FALLBACK)
         ids = [
             r["docid"]
             for r in survivors.select("docid").distinct().limit(cap + 1).collect()
@@ -1021,5 +756,8 @@ def batch_topk(
     return (
         with_ext.withColumn("rank", F.row_number().over(w_final))
         .where(F.col("rank") <= k)
-        .select("qid", "rank", "docid", "ext_docid", "score")
+        .select(
+            "qid", "rank", "docid",
+            F.col("ext_docid").cast("string").alias("ext_docid"), "score",
+        )
     )

@@ -498,6 +498,27 @@ def _tombstones_fit(pidx: PackedIndex, st: PruneStats) -> bool:
     return False
 
 
+def _leaves_fit(pidx: PackedIndex, terms: list[str], fld: str, st: PruneStats):
+    """The leaf terms' stats when the driver can answer from their whole
+    posting lists: the tombstones and the leaves' postings (Σ df, recorded
+    in ``st.n_postings_scored``) within the driver gates, ext ids of a type
+    it can order. Otherwise None, with the reason in ``st.fallback``."""
+    if not _tombstones_fit(pidx, st):
+        return None
+    if _ext_id_type(pidx) is None:
+        st.fallback = "ext ids of a type the driver cannot order"
+        return None
+    trows = pidx.reads.term_stats(terms, fld)
+    st.n_postings_scored = sum(df for df, _ in trows.values())
+    if st.n_postings_scored > _POSTS_PER_TASK:
+        st.fallback = (
+            f"{st.n_postings_scored} leaf postings exceed the driver gate "
+            f"({_POSTS_PER_TASK})"
+        )
+        return None
+    return trows
+
+
 # --------------------------------------------------------------------------
 # BM25 #SUM
 # --------------------------------------------------------------------------

@@ -75,12 +75,16 @@ class Engine:
     # queries) after each search whose shape they cover
     last_prune_stats = None
 
-    def _driver_topk(self, query: str, k: int) -> DataFrame | None:
+    def _driver_topk(self, query: str, k: int, spark: bool = True) -> DataFrame | None:
         """The driver-side answer of a BM25/Indri query, or
         None when the exact plan runs. One classifier
         (``structured.root_shape``) routes the root: flat shapes to the
         block-max pruned path, trees with #NEAR/#WINDOW/#SYN children to the
-        structured evaluator (engine/structured.py).
+        structured evaluator (engine/structured.py). A planner that declines
+        with a reason leaves it in ``last_prune_stats.fallback``.
+        ``spark=False`` (``batch.batch_topk``) answers only what runs no Spark
+        job: a flat query whose leaf postings exceed the driver gate returns
+        None instead of running the pruned planner's survivor scan.
         ``SPARK_GRAFT_NO_PRUNE=1`` forces the exact plan."""
         import os
 
@@ -99,30 +103,27 @@ class Engine:
         shape = root_shape(node, self.model.name)
         if shape is None:
             return None
-        if shape.flat:
-            return self._pruned_topk(shape, k)
         st = PruneStats()
-        res = struct_topk(self.index, shape, self.model, k, st)
-        if st != PruneStats():  # answered or declined with a reason
+        if shape.flat:
+            res = self._pruned_topk(shape, k, st, spark)
+        else:
+            res = struct_topk(self.index, shape, self.model, k, st)
+        if res is not None or st.fallback:
             self.last_prune_stats = st
         return res
 
-    def _pruned_topk(self, shape, k: int) -> DataFrame | None:
+    def _pruned_topk(self, shape, k: int, st, spark: bool) -> DataFrame | None:
         """Default block-max pruned path for flat BM25 #SUM and Indri
         #AND/#WAND/#WSUM over a packed index (SURVEY.md §4.2;
         engine/pruning.py — bit-identical to the exact plan,
         identity-tested; a small surviving set is scored on the driver and
-        runs no Spark job). Applies only when the shape matches
-        (single field, distinct terms — duplicate query terms carry a
-        multiplicity weight the pruned scorer doesn't model; an Indri root
-        that is a bare #SCORE runs the exact plan) AND the index is big
-        enough for pruning to pay: below ``min_blocks`` total blocks the
-        exact single-scan plan is cheaper than the metadata round-trip (the
-        gate that matters at 100 TB is automatic — df/block_size rows per
-        term). ``SPARK_GRAFT_PRUNE_MIN_BLOCKS`` overrides the gate."""
-        import os
-
+        runs no Spark job). Applies only when the shape matches: single
+        field, distinct terms (duplicate query terms carry a multiplicity
+        weight the pruned scorer doesn't model), and an Indri root that is
+        not a bare #SCORE. Without ``spark`` the leaf postings must fit the
+        driver gate, so the survivors are scored on the driver."""
         from search_engine_spark.config import BM25
+        from search_engine_spark.engine import pruning
 
         if shape.bare and self.model.name != BM25:
             return None
@@ -131,38 +132,21 @@ class Engine:
         if len(fields) != 1 or len(set(terms)) != len(terms):
             return None
         fld = next(iter(fields))
-
-        from search_engine_spark.engine.pruning import (
-            DRIVER_READ_ERRORS, PruneStats, bm25_topk_pruned, indri_topk_pruned,
-        )
-
-        # df from the driver's resident term stats: no Spark job
-        try:
-            dfs = self.index.reads.term_stats(terms, fld)
-        except DRIVER_READ_ERRORS as e:
-            self.last_prune_stats = PruneStats(
-                fallback=f"driver read failed: {type(e).__name__}: {e}"
-            )
-            return None
-        block_size = self.index.block_size
-        est_blocks = sum(-(-df // block_size) for df, _ in dfs.values())
-        if est_blocks < int(os.environ.get("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "64")):
-            return None
-
-        st = PruneStats()
+        if not spark:
+            try:
+                if pruning._leaves_fit(self.index, terms, fld, st) is None:
+                    return None
+            except pruning.DRIVER_READ_ERRORS as e:
+                st.fallback = f"driver read failed: {type(e).__name__}: {e}"
+                return None
         if self.model.name == BM25:
-            res = bm25_topk_pruned(
+            return pruning.bm25_topk_pruned(
                 self.index, terms, k=k, fld=fld, p=self.model.bm25, stats=st
             )
-        else:
-            res = indri_topk_pruned(
-                self.index, shape.kind, terms, shape.weights, k=k, fld=fld,
-                p=self.model.indri, stats=st,
-            )
-        if res is None:  # outside the pruned contract: exact plan
-            return None
-        self.last_prune_stats = st
-        return res
+        return pruning.indri_topk_pruned(
+            self.index, shape.kind, terms, shape.weights, k=k, fld=fld,
+            p=self.model.indri, stats=st,
+        )
 
     def search(self, query: str, k: int = TOP_K) -> DataFrame:
         """query text -> top-k (rank, docid, ext_docid, score)."""

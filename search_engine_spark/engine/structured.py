@@ -177,24 +177,14 @@ def struct_topk(
     fld = fields.pop()
     terms = list(dict.fromkeys(x.term for x in shape.leaves))
     try:
-        if not pruning._tombstones_fit(pidx, st):
-            return None
-        to_ext = pruning._ext_id_type(pidx)
-        if to_ext is None:
-            st.fallback = "ext ids of a type the driver cannot order"
-            return None
-        trows = pidx.reads.term_stats(terms, fld)
-        posts = sum(trows[t][0] for t in terms if t in trows)
-        gate = pruning._POSTS_PER_TASK
-        if posts > gate:
-            st.fallback = f"{posts} leaf postings exceed the driver gate ({gate})"
+        trows = pruning._leaves_fit(pidx, terms, fld, st)
+        if trows is None:
             return None
         metas = pidx.reads.block_meta(terms, fld)
         q = pruning._Query(pidx, terms, fld, metas, positions=True)
         got = q.read(np.arange(len(q.n)))
         st.n_blocks_total = st.n_blocks_scanned = len(q.n)
         st.n_files_read = len(q.files_read)
-        st.n_postings_scored = posts
         # docid-ascending per term (a term's postings are distinct docs)
         by = np.lexsort((got.docid, got.term))
         srt = _List(got.docid, got.tf, got.doclen, got.pos).take(by)
@@ -231,7 +221,7 @@ def struct_topk(
                 model.indri,
             )
         st.score_mode = "driver"
-        return pruning.score_local(pidx, piv, score, k, to_ext)
+        return pruning.score_local(pidx, piv, score, k, pruning._ext_id_type(pidx))
     except pruning.DRIVER_READ_ERRORS as e:
         st.fallback = f"driver read failed: {type(e).__name__}: {e}"
         return None

@@ -2121,8 +2121,6 @@ class PackedIndex:
             st = json.load(f)
         man = Manifest(os.path.join(out_dir, "manifest.json"))
         self.n_buckets = int(man.data["lineage"]["n_buckets"])
-        # block size drives the query-side pruning gate (runner._pruned_topk)
-        self.block_size = int(man.data["lineage"].get("block_size", BLOCK_SIZE))
         packed = read_packed(spark, out_dir)
         # live-docs tombstones (index/deletes.py): corpus.n_docs is the LIVE
         # count (Lucene numDocs semantics — QryopSlScore.java:118); per-field

@@ -1,11 +1,16 @@
-"""Batched multi-query execution (engine/batch.py): the whole query set in
-one job must be bitwise-identical, query by query, to per-query
-``Engine.search`` — same scores (float32-cast per-term, double sum), same
-desc-score/asc-ext-id tie-break, same top-k cut."""
+"""Batched multi-query execution (engine/batch.py): a query file answered
+by the driver route plus one batch plan must be bitwise-identical, query by
+query, to per-query ``Engine.search`` — same scores (float32-cast per-term,
+double sum), same desc-score/asc-ext-id tie-break, same top-k cut.
+
+Tests named after a batch plan close the driver gate
+(``pruning._POSTS_PER_TASK = 0``) so every query with postings runs the
+plan they name."""
 
 import pytest
 
 from search_engine_spark.config import BM25, INDRI, ModelConfig
+from search_engine_spark.engine import batch, pruning
 from search_engine_spark.engine.batch import batch_topk
 from search_engine_spark.engine.runner import Engine
 from search_engine_spark.tokenize import CODE_TOKENIZER
@@ -37,7 +42,13 @@ def _by_qid(df):
     return out
 
 
-def test_batch_matches_per_query(code_index):
+@pytest.fixture
+def no_driver(monkeypatch):
+    """Close the driver gate: only queries without postings stay local."""
+    monkeypatch.setattr(pruning, "_POSTS_PER_TASK", 0)
+
+
+def test_batch_matches_per_query(code_index, no_driver):
     eng = _eng(code_index)
     got = _by_qid(batch_topk(eng, BATCH, K))
     assert "q6" not in got  # no-match query contributes no rows
@@ -49,7 +60,7 @@ def test_batch_matches_per_query(code_index):
         assert got.get(qid, []) == want, f"{qid} diverges from Engine.search"
 
 
-def test_batch_scale_path_identity(code_index, monkeypatch):
+def test_batch_scale_path_identity(code_index, monkeypatch, no_driver):
     """Force the past-the-gate ext-id resolution (IN-list pushdown branch)
     and assert the result is unchanged."""
     monkeypatch.setenv("SPARK_GRAFT_DOCIDS_BROADCAST_MAX", "1")
@@ -60,12 +71,14 @@ def test_batch_scale_path_identity(code_index, monkeypatch):
     assert got == want
 
 
-def test_batch_salt_invariance(code_index):
+def test_batch_salt_invariance(code_index, monkeypatch, no_driver):
     """The salted partial cut is an implementation detail: any fan-out gives
     the same result (boundary ties survive stage 1 via rank())."""
     eng = _eng(code_index)
-    a = _by_qid(batch_topk(eng, BATCH[:4], K, salt_buckets=1))
-    b = _by_qid(batch_topk(eng, BATCH[:4], K, salt_buckets=64))
+    monkeypatch.setattr(batch, "_SALT_BUCKETS", 1)
+    a = _by_qid(batch_topk(eng, BATCH[:4], K))
+    monkeypatch.setattr(batch, "_SALT_BUCKETS", 64)
+    b = _by_qid(batch_topk(eng, BATCH[:4], K))
     assert a == b
 
 
@@ -100,7 +113,7 @@ def _ind(code_index):
     return Engine(code_index, ModelConfig(name=INDRI), tokenizer=CODE_TOKENIZER)
 
 
-def test_indri_batch_matches_per_query(code_index):
+def test_indri_batch_matches_per_query(code_index, no_driver):
     eng = _ind(code_index)
     got = _by_qid(batch_topk(eng, INDRI_BATCH, K))
     assert "i7" not in got
@@ -112,10 +125,12 @@ def test_indri_batch_matches_per_query(code_index):
         assert got.get(qid, []) == want, f"{qid} diverges from Engine.search"
 
 
-def test_indri_batch_salt_invariance(code_index):
+def test_indri_batch_salt_invariance(code_index, monkeypatch, no_driver):
     eng = _ind(code_index)
-    a = _by_qid(batch_topk(eng, INDRI_BATCH[:4], K, salt_buckets=1))
-    b = _by_qid(batch_topk(eng, INDRI_BATCH[:4], K, salt_buckets=64))
+    monkeypatch.setattr(batch, "_SALT_BUCKETS", 1)
+    a = _by_qid(batch_topk(eng, INDRI_BATCH[:4], K))
+    monkeypatch.setattr(batch, "_SALT_BUCKETS", 64)
+    b = _by_qid(batch_topk(eng, INDRI_BATCH[:4], K))
     assert a == b
 
 
@@ -131,7 +146,7 @@ INDRI_MF_BATCH = [
 ]
 
 
-def test_indri_batch_mixed_fields_matches_per_query(code_index):
+def test_indri_batch_mixed_fields_matches_per_query(code_index, no_driver):
     """Mixed-field batches (hw3's multi-field #WSUM headline shape) run
     through the batched one-scan plan and stay bitwise-identical to
     per-query Engine.search — including absent-in-field ctf=0 defaults and
@@ -163,7 +178,7 @@ SDM_BATCH = [
 ]
 
 
-def test_sdm_batch_matches_per_query(code_index):
+def test_sdm_batch_matches_per_query(code_index, no_driver):
     """Structured (SDM-shaped) batches — positional children walked once
     for the whole set — stay bitwise-identical to per-query Engine.search,
     including empty positional children (ctf=0 default) and mixed fields."""
@@ -188,7 +203,7 @@ SDM_BM25_BATCH = [
 ]
 
 
-def test_sdm_bm25_batch_matches_per_query(code_index):
+def test_sdm_bm25_batch_matches_per_query(code_index, no_driver):
     """Structured BM25 #SUM batches (the hw2 structured-BM25 shape) stay
     bitwise-identical to per-query Engine.search — positional children
     score the walked lists with df from the composite stats contract."""
@@ -202,7 +217,7 @@ def test_sdm_bm25_batch_matches_per_query(code_index):
         assert got.get(qid, []) == want, f"{qid} diverges from Engine.search"
 
 
-def test_sdm_batch_matches_oracle(code_index, py_oracle):
+def test_sdm_batch_matches_oracle(code_index, py_oracle, no_driver):
     """The batched SDM kernel's numpy wavefront walks give the pure-Python
     oracle's answers (its own scalar #NEAR/#WINDOW walks): ranks, docids
     and ext ids exact, scores to 1e-9."""
@@ -280,3 +295,100 @@ def test_split_batchable(code_index):
     good, rest = split_batchable(rb, mixed)
     assert [q for q, _ in good] == ["q1", "q3"]
     assert [q for q, _ in rest] == ["q2"]
+
+
+# -- the driver route ---------------------------------------------------------
+
+
+def _plan_spy(monkeypatch, name):
+    """Record the qids the named batch plan receives."""
+    seen, real = [], getattr(batch, name)
+
+    def spy(eng, queries):
+        seen.extend(q for q, _ in queries)
+        return real(eng, queries)
+
+    monkeypatch.setattr(batch, name, spy)
+    return seen
+
+
+MIXED = {
+    BM25: ("sdm_bm25_batch_scores", [
+        ("a1", "lock free queue"),                  # driver: pruned planner
+        ("a2", "#SUM(queue #NEAR/1(lock free))"),   # driver: structured
+        ("a3", "lock lock queue"),                  # residual: duplicate term
+        ("a4", "lock.path queue"),                  # residual: two fields
+        ("a5", "zzz_not_in_vocab_zzz"),             # driver: no rows
+    ], ["a3", "a4"]),
+    INDRI: ("sdm_batch_scores", [
+        ("b1", "#WAND(0.7 lock 0.2 queue 0.1 slot)"),     # driver: pruned
+        ("b2", "#AND(ring buffer #NEAR/2(ring buffer))"),  # driver: structured
+        ("b3", "token_next"),                              # residual: bare #SCORE
+        ("b4", "zzz_not_in_vocab_zzz lock"),               # residual: absent term
+        ("b5", "#AND(lock.body python.lang)"),             # residual: two fields
+    ], ["b3", "b4", "b5"]),
+}
+
+
+@pytest.mark.parametrize("model", [BM25, INDRI])
+def test_mixed_file_matches_per_query(code_index, monkeypatch, model):
+    """A file answered partly on the driver and partly by the model's batch
+    plan is bitwise per-query Engine.search; the plan sees the residual
+    only."""
+    plan, queries, residual = MIXED[model]
+    seen = _plan_spy(monkeypatch, plan)
+    eng = Engine(code_index, ModelConfig(name=model), tokenizer=CODE_TOKENIZER)
+    got = _by_qid(batch_topk(eng, queries, K))
+    assert seen == residual
+    for qid, text in queries:
+        want = [
+            (r["rank"], r["docid"], r["ext_docid"], r["score"])
+            for r in eng.search(text, K).collect()
+        ]
+        assert got.get(qid, []) == want, f"{qid} diverges from Engine.search"
+
+
+def test_driver_answerable_file_runs_no_spark_job(spark, code_index):
+    """When the driver planners answer every query, neither batch_topk nor
+    collecting its frame runs a Spark job."""
+    from search_engine_spark.index.persist import PackedIndex
+
+    sc = spark.sparkContext
+    cold = PackedIndex(spark, code_index.dir)
+    files = {
+        BM25: [q for q in MIXED[BM25][1] if q[0] not in MIXED[BM25][2]],
+        INDRI: [q for q in MIXED[INDRI][1] if q[0] not in MIXED[INDRI][2]],
+    }
+    try:
+        for model, queries in files.items():
+            eng = Engine(cold, ModelConfig(name=model), tokenizer=CODE_TOKENIZER)
+            group = f"batch-zero-job-{model}"
+            sc.setJobGroup(group, model)
+            rows = batch_topk(eng, queries, K).collect()
+            assert rows and {r["qid"] for r in rows} <= {q for q, _ in queries}
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], model
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_residual_bm25_duplicates_match_exact_plan(
+    code_index, exact_plan, monkeypatch, no_driver
+):
+    """The BM25 plan scores a flat #SUM's duplicated term once times its
+    count and sums a structured #SUM's duplicated children one by one, as
+    the exact plan does — bitwise."""
+    queries = [
+        ("d1", "lock lock lock queue"),
+        ("d2", "#SUM(lock lock #NEAR/1(lock free))"),
+    ]
+    seen = _plan_spy(monkeypatch, "sdm_bm25_batch_scores")
+    eng = _eng(code_index)
+    got = _by_qid(batch_topk(eng, queries, K))
+    assert seen == ["d1", "d2"]
+    for qid, text in queries:
+        with exact_plan():
+            want = [
+                (r["rank"], r["docid"], r["ext_docid"], r["score"])
+                for r in eng.search(text, K).collect()
+            ]
+        assert got.get(qid, []) == want and want, qid

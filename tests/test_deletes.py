@@ -124,7 +124,6 @@ def test_search_excludes_deleted_uses_live_n(spark, pristine, copy_dir, monkeypa
     from search_engine_spark.engine import pruning
 
     monkeypatch.setenv("SPARK_GRAFT_NO_PRUNE", "0")
-    monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "0")
     for gate, mode in ((pruning._POSTS_PER_TASK, "driver"), (0, "spark")):
         monkeypatch.setattr(pruning, "_POSTS_PER_TASK", gate)
         eng = Engine(idx, ModelConfig(name=BM25))

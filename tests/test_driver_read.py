@@ -182,7 +182,6 @@ class _Recording(pruning_mod._Query):
 def test_prune_stats_count_files_read(spark, appended, monkeypatch, model, text):
     """``PruneStats.n_files_read`` is the number of distinct packed files
     holding the blocks the driver read, and less than the whole dataset."""
-    monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "1")
     monkeypatch.setattr(pruning_mod, "_Query", _Recording)
     _Recording.asked = set()
     fresh = PackedIndex(spark, appended.dir)
@@ -336,13 +335,12 @@ def test_failed_metadata_load_falls_back_to_the_exact_plan(
     planner report the fallback and the engine answer with the exact plan
     (whose own term-stats read retries the load), bitwise; the failed load
     cached nothing, so the next query plans on the driver."""
-    monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "1")
     text = "lock free queue"
     with exact_plan():
         eng = Engine(appended, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)
         exact = [tuple(r) for r in eng.search(text, 10).collect()]
 
-    # term stats: the engine's pruning gate reports the fallback
+    # term stats: the pruned planner's read fails, the engine reports why
     broken = PackedIndex(spark, appended.dir)
     _fail_once(monkeypatch, broken.reads, "_load_vocab")
     eng = Engine(broken, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)

@@ -239,12 +239,10 @@ QUERIES = [
 
 
 @pytest.mark.parametrize("model,q", QUERIES)
-def test_packed_matches_inmemory_english(eng_packed, exact_plan, monkeypatch, model, q):
-    """The packed index's driver-side answer (pruning gate forced open, so
-    flat shapes take the block-max pruned path) is bitwise the exact Spark
-    plan's."""
+def test_packed_matches_inmemory_english(eng_packed, exact_plan, model, q):
+    """The packed index's driver-side answer (flat shapes take the
+    block-max pruned path) is bitwise the exact Spark plan's."""
     eng = Engine(eng_packed, ModelConfig(name=model), tokenizer=ENGLISH_TOKENIZER)
-    monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "0")
     a = [(r["rank"], r["docid"], r["score"]) for r in eng.search(q, 20).collect()]
     with exact_plan():
         b = [(r["rank"], r["docid"], r["score"]) for r in eng.search(q, 20).collect()]

@@ -54,14 +54,13 @@ def test_driver_read_failure_runs_exact_plan(
         return real(name)
 
     monkeypatch.setattr(broken.reads, "dataset", fail_packed)
-    monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "0")
     k = 20
     stats = PruneStats()
     assert bm25_topk_pruned(broken, terms, k=k, stats=stats) is None
     assert "forced read failure" in stats.fallback
     eng = Engine(broken, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)
     got = [tuple(r) for r in eng.search(" ".join(terms), k).collect()]
-    assert eng.last_prune_stats is None
+    assert "forced read failure" in eng.last_prune_stats.fallback
     exact_eng = Engine(code_index, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)
     with exact_plan():
         exact = [tuple(r) for r in exact_eng.search(" ".join(terms), k).collect()]
@@ -71,9 +70,9 @@ def test_driver_read_failure_runs_exact_plan(
 def test_gate_term_stats_failure_reports_fallback(
     spark, pidx, code_index, exact_plan, monkeypatch
 ):
-    """A failed term-stats read in the engine's pruning gate answers with
-    the exact plan, bitwise, and reports that fallback — not the stats of
-    the query before it."""
+    """A failed term-stats read in the pruned planner answers with the
+    exact plan, bitwise, and the engine reports that fallback — not the
+    stats of the query before it."""
     import sys
 
     broken = PackedIndex(spark, pidx.dir)
@@ -81,13 +80,12 @@ def test_gate_term_stats_failure_reports_fallback(
     armed = []
 
     def term_stats(terms, fld):
-        # only the gate's read fails: the exact plan reads term stats too
-        if armed and sys._getframe(1).f_code.co_name == "_pruned_topk":
+        # only the planner's read fails: the exact plan reads term stats too
+        if armed and sys._getframe(1).f_code.co_name == "bm25_topk_pruned":
             raise OSError("forced term-stats read failure")
         return real(terms, fld)
 
     monkeypatch.setattr(broken.reads, "term_stats", term_stats)
-    monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "0")
     k = 20
     eng = Engine(broken, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)
     eng.search(" ".join(QUERIES[0]), k).collect()
@@ -219,10 +217,9 @@ def test_indri_pruned_fallback_contract(spark, pidx):
     assert indri_topk_pruned(pidx, "wsum", ["lock", "queue"], [0.0, 0.0], k=5) is None
 
 
-def test_indri_engine_dispatch(spark, pidx, code_index, exact_plan, monkeypatch):
-    """Engine.search routes flat Indri shapes through the pruned plan past
-    the block gate, bitwise-identical to the exact pivot plan."""
-    monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "1")
+def test_indri_engine_dispatch(spark, pidx, code_index, exact_plan):
+    """Engine.search routes flat Indri shapes through the pruned plan,
+    bitwise-identical to the exact pivot plan."""
     eng = Engine(pidx, ModelConfig(name=INDRI), tokenizer=CODE_TOKENIZER)
     got = [tuple(r) for r in eng.search("#WAND(0.7 lock 0.2 queue 0.1 slot)", 15).collect()]
     assert eng.last_prune_stats is not None
@@ -313,10 +310,9 @@ FLAT_SHAPES = [
 ]
 
 
-def test_flat_queries_run_no_spark_job(spark, pidx, monkeypatch):
-    """Every flat shape past the pruning gate answers, collect included,
+def test_flat_queries_run_no_spark_job(spark, pidx):
+    """Every flat shape answers, collect included,
     without a single Spark job under its job group."""
-    monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "1")
     sc = spark.sparkContext
     fresh = PackedIndex(spark, pidx.dir)  # cold driver caches
     engines = {
@@ -380,7 +376,6 @@ def test_adversarial_spreads_bitwise(
     ) + ")"
     k = 30
     for model, text in ((BM25, " ".join(terms)), (INDRI, wand)):
-        monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "0")
         eng = Engine(pidx, ModelConfig(name=model), tokenizer=CODE_TOKENIZER)
         pruned = [tuple(r) for r in eng.search(text, k).collect()]
         assert eng.last_prune_stats is not None, text
@@ -426,12 +421,11 @@ def test_bm25_scorer_sees_one_ulp_of_idf(spark, pidx):
     assert platform != want
 
 
-def test_concurrent_flat_queries_match_serial(spark, pidx, monkeypatch):
+def test_concurrent_flat_queries_match_serial(spark, pidx):
     """Eight serving threads share one cold PackedIndex (and so its driver
     read cache); every answer equals the serial answer."""
     import threading
 
-    monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "1")
     mixed = FLAT_SHAPES + [(BM25, " ".join(q)) for q in QUERIES]
 
     def answer(index, model, text):
@@ -479,7 +473,6 @@ def test_warm_flat_answer_crosses_to_the_jvm_once(spark, pidx, monkeypatch, jvm_
     Column, makes one createDataFrame call (the answer frame), collects
     nothing and sends no other Py4J command (no idf-log method lookup) while
     it answers; the answer is bitwise the exact plan's."""
-    monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "1")
     for model, text in FLAT_SHAPES:
         monkeypatch.setenv("SPARK_GRAFT_NO_PRUNE", "1")
         exact = [tuple(r) for r in _search(pidx, model, text)[0].collect()]
@@ -497,7 +490,7 @@ def test_warm_flat_answer_crosses_to_the_jvm_once(spark, pidx, monkeypatch, jvm_
 TIE_PATHS = ["a", "Z", "z", "ß", "ä", "é", "ÿ", "中", "Ａ", "\U0001d518", "e\u0301"]
 
 
-def test_tie_plateau_with_non_ascii_ext_ids(spark, tmp_path, exact_plan, monkeypatch):
+def test_tie_plateau_with_non_ascii_ext_ids(spark, tmp_path, exact_plan):
     """Plateaus of tied scores cut by k are ordered by ext id exactly as
     the exact plan orders them: an idf-clamped term (every doc ties at 0)
     and a rare term with equal tf and doclen in 33 docs."""
@@ -515,7 +508,6 @@ def test_tie_plateau_with_non_ascii_ext_ids(spark, tmp_path, exact_plan, monkeyp
         tokenizer=CODE_TOKENIZER,
     ), resume=False)
     index = PackedIndex(spark, out)
-    monkeypatch.setenv("SPARK_GRAFT_PRUNE_MIN_BLOCKS", "1")
     for model, text in [(BM25, "tie"), (BM25, "rare tie"), (INDRI, "#AND(rare tie)")]:
         for k in (1, 10, 40):
             with exact_plan():
