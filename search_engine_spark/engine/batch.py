@@ -6,13 +6,14 @@ each query's rows are bitwise what ``Engine.search`` returns — and routes
 the file in two parts:
 
 1. **Driver route.** Every query is first offered to the engine's driver
-   planners (``Engine._driver_topk`` with ``spark=False``): a flat BM25
+   planners (``Engine._shape_topk`` with ``spark=False``): a flat BM25
    ``#SUM`` or Indri ``#AND``/``#WAND``/``#WSUM`` whose leaf postings fit
    the driver gate (``pruning._POSTS_PER_TASK``) goes to the block-max
    pruned planner, a ``#NEAR``/``#WINDOW``/``#SYN`` tree whose leaf postings
    fit it to ``structured.struct_topk``. Both read the index with pyarrow
    and score in numpy, so these queries run no Spark job, and their rows
-   become one local relation.
+   become one local relation. An all-stopword query has no rows on either
+   route and goes nowhere.
 2. **Batch plans** answer the residual — queries over the gate, with
    duplicated terms, spanning fields, Boolean models — with one plan per
    model for the whole residual set:
@@ -347,12 +348,16 @@ def sdm_bm25_batch_scores(
     each child, as SumNode does (#SUM(a a b) scores `a` twice,
     QryopSlSum.java:55-61). Bitwise ≡ per-query Engine.search
     (tests/test_batch.py)."""
-    from search_engine_spark.engine import score as score_mod
-
     if eng.model.name != BM25:
         raise ValueError("sdm_bm25_batch_scores requires the BM25 model")
+    return _sdm_bm25_scores(eng, _specs(eng, queries))
+
+
+def _sdm_bm25_scores(eng: Engine, specs: dict) -> DataFrame:
+    """``sdm_bm25_batch_scores`` over already classified ``_specs``."""
+    from search_engine_spark.engine import score as score_mod
+
     spark = eng.index.doc_ids.sparkSession
-    specs = _specs(eng, queries)
     if not specs:
         return spark.createDataFrame([], "qid string, docid long, score double")
     children_of = {qid: ch for qid, (_, ch) in specs.items()}
@@ -460,8 +465,12 @@ def sdm_batch_scores(eng: Engine, queries: list[tuple[str, str]]) -> DataFrame:
        (tests/test_batch.py::test_sdm_batch_matches_per_query)."""
     if eng.model.name != INDRI:
         raise ValueError("sdm_batch_scores requires the Indri model")
+    return _sdm_scores(eng, _specs(eng, queries))
+
+
+def _sdm_scores(eng: Engine, specs: dict) -> DataFrame:
+    """``sdm_batch_scores`` over already classified ``_specs``."""
     spark = eng.index.doc_ids.sparkSession
-    specs = _specs(eng, queries)
     if not specs:
         return spark.createDataFrame([], "qid string, docid long, score double")
     children_of = {qid: ch for qid, (_, ch) in specs.items()}
@@ -677,15 +686,17 @@ def batch_topk(
     model = eng.model.name
     if model in (UNRANKED_BOOLEAN, RANKED_BOOLEAN):
         return _rank_residual(eng, bool_batch_scores(eng, queries), k, len(queries))
-    plan = {BM25: sdm_bm25_batch_scores, INDRI: sdm_batch_scores}.get(model)
+    plan = {BM25: _sdm_bm25_scores, INDRI: _sdm_scores}.get(model)
     if plan is None:
         raise ValueError(f"batch execution does not cover the {model} model")
-    _specs(eng, queries)
-    local, rest = [], []
-    for qid, text in queries:
-        res = eng._driver_topk(text, k, spark=False)
+    shapes = [(qid, _query_shape(eng, qid, text)) for qid, text in queries]
+    local, rest = [], {}
+    for qid, shape in shapes:
+        if shape is None:  # every term a stopword: no rows on either route
+            continue
+        res = eng._shape_topk(shape, k, spark=False)
         if res is None:
-            rest.append((qid, text))
+            rest[qid] = (shape, [_child_spec(c) for c in shape.children])
         else:  # a local relation: collecting it runs no Spark job
             local += [(qid, *r) for r in res.collect()]
     # one Arrow-built local relation for every driver answer

@@ -506,6 +506,8 @@ def _indri_pivot_scores(ctx: EvalContext, children: list, combine) -> DataFrame 
         return None
     if not all(isinstance(c, ScoreNode) for c in children):
         return None
+    if not children:  # every term a stopword: no candidates (_union_scores)
+        return _empty_scores(ctx)
     fields = {c.child.field for c in children}
     if len(fields) != 1:
         return _indri_pivot_scores_mf(ctx, children, combine)

@@ -7,6 +7,7 @@ top-100 TREC output. `Engine.search` is that loop for one query.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import DataFrame
@@ -18,6 +19,11 @@ from search_engine_spark.engine.parser import QOp, QTerm, parse_query
 from search_engine_spark.engine.topk import rank_topk, trec_lines
 from search_engine_spark.index.persist import PackedIndex
 from search_engine_spark.tokenize import Tokenizer, WHITESPACE_TOKENIZER
+
+
+def _exact_forced() -> bool:
+    """``SPARK_GRAFT_NO_PRUNE=1``: every query runs the exact Spark plan."""
+    return os.environ.get("SPARK_GRAFT_NO_PRUNE") == "1"
 
 
 def _collect_terms(ast) -> set[str]:
@@ -75,33 +81,36 @@ class Engine:
     # queries) after each search whose shape they cover
     last_prune_stats = None
 
-    def _driver_topk(self, query: str, k: int, spark: bool = True) -> DataFrame | None:
-        """The driver-side answer of a BM25/Indri query, or
-        None when the exact plan runs. One classifier
-        (``structured.root_shape``) routes the root: flat shapes to the
-        block-max pruned path, trees with #NEAR/#WINDOW/#SYN children to the
-        structured evaluator (engine/structured.py). A planner that declines
-        with a reason leaves it in ``last_prune_stats.fallback``.
-        ``spark=False`` (``batch.batch_topk``) answers only what runs no Spark
-        job: a flat query whose leaf postings exceed the driver gate returns
-        None instead of running the pruned planner's survivor scan.
+    def _driver_topk(self, query: str, k: int) -> DataFrame | None:
+        """The driver-side answer of a BM25/Indri query, or None when the
+        exact plan runs: the compiled root, classified by
+        ``structured.root_shape``, goes to ``_shape_topk``.
         ``SPARK_GRAFT_NO_PRUNE=1`` forces the exact plan."""
-        import os
-
         from search_engine_spark.config import BM25, INDRI
         from search_engine_spark.engine.ops import IlNode, ScoreNode
-        from search_engine_spark.engine.pruning import PruneStats
-        from search_engine_spark.engine.structured import root_shape, struct_topk
+        from search_engine_spark.engine.structured import root_shape
 
-        if os.environ.get("SPARK_GRAFT_NO_PRUNE") == "1":
-            return None
-        if self.model.name not in (BM25, INDRI):
+        if _exact_forced() or self.model.name not in (BM25, INDRI):
             return None
         node = compile_node(self.parse(query), self.ctx, self.default_field)
         if isinstance(node, IlNode):
             node = ScoreNode(node)
         shape = root_shape(node, self.model.name)
-        if shape is None:
+        return None if shape is None else self._shape_topk(shape, k)
+
+    def _shape_topk(self, shape, k: int, spark: bool = True) -> DataFrame | None:
+        """The driver-side answer of a classified root (a
+        ``structured.Shape``), or None: flat shapes go to the block-max
+        pruned path, trees with #NEAR/#WINDOW/#SYN children to the
+        structured evaluator (engine/structured.py). A planner that declines
+        with a reason leaves it in ``last_prune_stats.fallback``.
+        ``spark=False`` (``batch.batch_topk``) answers only what runs no Spark
+        job: a flat query whose leaf postings exceed the driver gate returns
+        None instead of running the pruned planner's survivor scan."""
+        from search_engine_spark.engine.pruning import PruneStats
+        from search_engine_spark.engine.structured import struct_topk
+
+        if _exact_forced():
             return None
         st = PruneStats()
         if shape.flat:

@@ -75,8 +75,8 @@ def pidx(spark, code_docs, tmp_path_factory):
 def exact_plan(monkeypatch):
     """``with exact_plan():`` routes Engine.search to the exact Spark plan
     (SPARK_GRAFT_NO_PRUNE=1) inside the block. On a packed index the engine
-    otherwise answers structured shapes, and flat shapes past the pruning
-    gate, on the driver — tests whose reference is the Spark plan use this."""
+    otherwise answers flat and structured shapes with its driver planners —
+    tests whose reference is the Spark plan use this."""
 
     @contextlib.contextmanager
     def forced():

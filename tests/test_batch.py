@@ -301,31 +301,33 @@ def test_split_batchable(code_index):
 
 
 def _plan_spy(monkeypatch, name):
-    """Record the qids the named batch plan receives."""
+    """Record the qids ``batch_topk`` hands the named batch plan."""
     seen, real = [], getattr(batch, name)
 
-    def spy(eng, queries):
-        seen.extend(q for q, _ in queries)
-        return real(eng, queries)
+    def spy(eng, specs):
+        seen.extend(specs)
+        return real(eng, specs)
 
     monkeypatch.setattr(batch, name, spy)
     return seen
 
 
 MIXED = {
-    BM25: ("sdm_bm25_batch_scores", [
+    BM25: ("_sdm_bm25_scores", [
         ("a1", "lock free queue"),                  # driver: pruned planner
         ("a2", "#SUM(queue #NEAR/1(lock free))"),   # driver: structured
         ("a3", "lock lock queue"),                  # residual: duplicate term
         ("a4", "lock.path queue"),                  # residual: two fields
         ("a5", "zzz_not_in_vocab_zzz"),             # driver: no rows
+        ("a6", "def return"),                       # all stopwords: no rows
     ], ["a3", "a4"]),
-    INDRI: ("sdm_batch_scores", [
+    INDRI: ("_sdm_scores", [
         ("b1", "#WAND(0.7 lock 0.2 queue 0.1 slot)"),     # driver: pruned
         ("b2", "#AND(ring buffer #NEAR/2(ring buffer))"),  # driver: structured
         ("b3", "token_next"),                              # residual: bare #SCORE
         ("b4", "zzz_not_in_vocab_zzz lock"),               # residual: absent term
         ("b5", "#AND(lock.body python.lang)"),             # residual: two fields
+        ("b6", "#AND(def return)"),                        # all stopwords: no rows
     ], ["b3", "b4", "b5"]),
 }
 
@@ -349,8 +351,9 @@ def test_mixed_file_matches_per_query(code_index, monkeypatch, model):
 
 
 def test_driver_answerable_file_runs_no_spark_job(spark, code_index):
-    """When the driver planners answer every query, neither batch_topk nor
-    collecting its frame runs a Spark job."""
+    """When the driver planners answer every query (all-stopword queries,
+    which have no rows, included), neither batch_topk nor collecting its
+    frame runs a Spark job."""
     from search_engine_spark.index.persist import PackedIndex
 
     sc = spark.sparkContext
@@ -381,7 +384,7 @@ def test_residual_bm25_duplicates_match_exact_plan(
         ("d1", "lock lock lock queue"),
         ("d2", "#SUM(lock lock #NEAR/1(lock free))"),
     ]
-    seen = _plan_spy(monkeypatch, "sdm_bm25_batch_scores")
+    seen = _plan_spy(monkeypatch, "_sdm_bm25_scores")
     eng = _eng(code_index)
     got = _by_qid(batch_topk(eng, queries, K))
     assert seen == ["d1", "d2"]

@@ -182,9 +182,10 @@ def _assert_matches_oracle(got, want):
         assert g[3] == pytest.approx(w[3], rel=1e-9, abs=1e-12)
 
 
-def test_packed_matches_inmemory(spark, built, py_oracle):
+def test_packed_matches_inmemory(spark, built, py_oracle, exact_plan):
     """The salted body-only build ranks like the pure-Python oracle's dict
-    index (the reference semantics, computed independently)."""
+    index (the reference semantics, computed independently), on the driver
+    planners' route and on the exact plan's salted scan alike."""
     out, _, _ = built
     pidx = PackedIndex(spark, out)
     for model, q in [
@@ -193,8 +194,11 @@ def test_packed_matches_inmemory(spark, built, py_oracle):
         (INDRI, "#WAND(0.7 lock 0.2 free 0.1 queue)"),
     ]:
         pak = Engine(pidx, ModelConfig(name=model), tokenizer=CODE_TOKENIZER)
-        got = [tuple(r) for r in pak.search(q, 30).collect()]
-        _assert_matches_oracle(got, py_oracle.search(q, ModelConfig(name=model), 30))
+        want = py_oracle.search(q, ModelConfig(name=model), 30)
+        _assert_matches_oracle([tuple(r) for r in pak.search(q, 30).collect()], want)
+        with exact_plan():
+            got = [tuple(r) for r in pak.search(q, 30).collect()]
+        _assert_matches_oracle(got, want)
 
 
 def test_heavy_terms_are_salted(spark, built):

@@ -156,10 +156,11 @@ def test_stream_config_drift_refused(spark, tmp_path_factory):
     assert lineage["n_docs"] == docs.count()
 
 
-def test_documents_queryable_after_each_batch(spark, tmp_path_factory):
+def test_documents_queryable_after_each_batch(spark, tmp_path_factory, exact_plan):
     """Every micro-batch commits: after each one, a query over the index
     ranks exactly the documents ingested so far, as the pure-Python oracle
-    does over those documents."""
+    does over those documents — on the driver planners' route and on the
+    exact plan alike."""
     from tests.oracle import PyOracle
 
     root = tmp_path_factory.mktemp("queryable")
@@ -178,11 +179,13 @@ def test_documents_queryable_after_each_batch(spark, tmp_path_factory):
         idx = PackedIndex(spark, cfg.out_dir)
         assert idx.corpus.n_docs == len(rows)
         for model, q in RANKING_QUERIES:
-            got = _ranked(idx, model, q)
             want = oracle.search(q, ModelConfig(name=model), 30)
-            assert [g[:2] for g in got] == [(w[0], w[2]) for w in want], (i, q)
-            for g, w in zip(got, want):
-                assert g[2] == pytest.approx(w[3], rel=1e-9, abs=1e-12)
+            with exact_plan():
+                exact = _ranked(idx, model, q)
+            for got in (_ranked(idx, model, q), exact):
+                assert [g[:2] for g in got] == [(w[0], w[2]) for w in want], (i, q)
+                for g, w in zip(got, want):
+                    assert g[2] == pytest.approx(w[3], rel=1e-9, abs=1e-12)
 
 
 def test_batch_replay_is_idempotent(spark, tmp_path_factory):

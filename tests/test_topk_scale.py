@@ -30,6 +30,14 @@ QUERIES = [
 ]
 
 
+@pytest.fixture(autouse=True)
+def _exact_plan(exact_plan):
+    # the scale path belongs to rank_topk, the exact plan's top-k; the
+    # driver planners rank with topk.rank_local and never reach it
+    with exact_plan():
+        yield
+
+
 def _engine(code_index, model_name):
     return Engine(
         code_index, ModelConfig(name=model_name), tokenizer=CODE_TOKENIZER
