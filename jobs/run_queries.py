@@ -36,7 +36,7 @@ def main() -> None:
     ap.add_argument("--k", type=int, default=100)
     ap.add_argument("--batch", action="store_true",
                     help="answer the query file with batch_topk: queries "
-                         "the driver planners answer run no Spark job, the "
+                         "the driver evaluator answers run no Spark job, the "
                          "rest run one batch plan per model (BM25 #SUM, "
                          "Indri #AND/#WAND/#WSUM or Boolean #AND/#OR over "
                          "term and one-level #NEAR/#WINDOW/#SYN children) "

@@ -5,18 +5,17 @@ The reference answers a query file one query at a time
 each query's rows are bitwise what ``Engine.search`` returns — and routes
 the file in two parts:
 
-1. **Driver route.** Every query is first offered to the engine's driver
-   planners (``Engine._shape_topk`` with ``spark=False``): a flat BM25
-   ``#SUM`` or Indri ``#AND``/``#WAND``/``#WSUM`` whose leaf postings fit
-   the driver gate (``pruning._POSTS_PER_TASK``) goes to the block-max
-   pruned planner, a ``#NEAR``/``#WINDOW``/``#SYN`` tree whose leaf postings
-   fit it to ``structured.struct_topk``. Both read the index with pyarrow
-   and score in numpy, so these queries run no Spark job, and their rows
+1. **Driver route.** Every BM25 ``#SUM`` or Indri ``#AND``/``#WAND``/
+   ``#WSUM`` query is first offered to the driver evaluator
+   (``structured.struct_topk``), which answers every single-field shape,
+   flat or structured, whose leaf postings fit the driver gate
+   (``pruning._POSTS_PER_TASK``). It reads the index with pyarrow and
+   scores in numpy, so these queries run no Spark job, and their rows
    become one local relation. An all-stopword query has no rows on either
    route and goes nowhere.
-2. **Batch plans** answer the residual — queries over the gate, with
-   duplicated terms, spanning fields, Boolean models — with one plan per
-   model for the whole residual set:
+2. **Batch plans** answer the residual — queries over the gate, leaves
+   spanning fields, Boolean models — with one plan per model for the whole
+   residual set:
    - ``sdm_bm25_batch_scores`` (BM25 ``#SUM``) and ``sdm_batch_scores``
      (Indri ``#AND``/``#WAND``/``#WSUM``): #SCORE children that are term
      leaves or one-level ``#NEAR/n``/``#WINDOW/n``/``#SYN`` over term
@@ -37,8 +36,8 @@ the file in two parts:
    survivors only, then the (desc score, asc ext id) ``row_number`` cut —
    the tie-break contract of hw5/QryEval/ScoreList.java:65-86.
 
-Shapes come from ``structured.root_shape``, the classifier both driver
-planners use, under the plans' own limit (composites one level deep), so a
+Shapes come from ``structured.root_shape``, the classifier the driver
+evaluator uses, under the plans' own limit (composites one level deep), so a
 query gets the same answer and the same error on either route.
 """
 
@@ -61,8 +60,9 @@ from search_engine_spark.engine.compiler import _leaf_score_col, compile_node
 from search_engine_spark.engine.ops import (
     AndBoolNode, IlNode, NearNode, OrNode, ScoreNode, SynNode, TermNode,
 )
-from search_engine_spark.engine.runner import Engine
-from search_engine_spark.engine.structured import Shape, root_shape
+from search_engine_spark.engine.pruning import PruneStats
+from search_engine_spark.engine.runner import Engine, _exact_forced
+from search_engine_spark.engine.structured import Shape, root_shape, struct_topk
 from search_engine_spark.engine.topk import _TOPK_SCHEMA
 
 # salt fan-out of the partial top-k stage: bounds the per-task row count of
@@ -680,8 +680,8 @@ def batch_topk(
     have no rows (the TREC dummy row is the sink's job, topk.trec_lines).
     Every query is checked against its model's batch shapes first, so a
     file raises the same errors whichever route its queries take. BM25 and
-    Indri queries the driver planners answer with no Spark job come back as
-    local rows; the rest run through the model's batch plan (module
+    Indri queries the driver evaluator answers with no Spark job come back
+    as local rows; the rest run through the model's batch plan (module
     docstring)."""
     model = eng.model.name
     if model in (UNRANKED_BOOLEAN, RANKED_BOOLEAN):
@@ -694,7 +694,9 @@ def batch_topk(
     for qid, shape in shapes:
         if shape is None:  # every term a stopword: no rows on either route
             continue
-        res = eng._shape_topk(shape, k, spark=False)
+        res = None if _exact_forced() else struct_topk(
+            eng.index, shape, eng.model, k, PruneStats()
+        )
         if res is None:
             rest[qid] = (shape, [_child_spec(c) for c in shape.children])
         else:  # a local relation: collecting it runs no Spark job

@@ -1,11 +1,16 @@
 """Block-max pruned top-k over the packed index (SURVEY.md §4.2): BM25 #SUM
-and Indri #AND / #WAND / #WSUM over plain terms.
+and Indri #AND / #WAND / #WSUM over plain terms, and the driver-side pieces
+(block reads, pivot, numpy scorers, the driver gate) that the driver
+evaluator (engine/structured.py) shares.
 
 The reference has NO query-time pruning (its `#WAND` is Indri's weighted-AND,
 not Broder's algorithm; the top-100 cut happens at output —
 hw5/QryEval/QryEval.java:1272). Block-max pruning is OUR scale-path
 optimization, with an exact fallback and identity tests: the pruned result is
-bit-identical to the exact plan's.
+bit-identical to the exact plan's. ``Engine`` runs it only past the driver
+gate: a query whose leaf postings fit ``_POSTS_PER_TASK`` is answered on the
+driver either way, and reading its whole posting lists costs less than
+bounding, seeding and skipping them (``structured.struct_topk``).
 
 Spark-friendly two-phase block-max/MaxScore variant (the classic cursor-based
 BMW is doc-at-a-time and doesn't distribute), planned on the driver:
@@ -54,9 +59,9 @@ BMW is doc-at-a-time and doesn't distribute), planned on the driver:
      the JDK's ``StrictMath.pow`` that Spark's ``F.pow`` calls.
 
 Fallback: when the driver cannot read the index (an unreadable file, or a
-tombstone set past ``SPARK_GRAFT_PRUNE_DRIVER_TOMBSTONE_MAX``) or an Indri
-shape is outside the pruned contract, the planners return None, record the
-reason in ``PruneStats.fallback``, and the caller runs the exact plan.
+tombstone set past ``_DRIVER_TOMBSTONE_MAX``) or an Indri shape is outside
+the pruned contract, the planners return None, record the reason in
+``PruneStats.fallback``, and the caller runs the exact plan.
 
 float32 guard: exact per-term scores are float32-rounded (QryopSlScore
 contract). float32 rounding can exceed the double upper bound by ≤ 1 ulp;
@@ -66,7 +71,6 @@ ub is inflated by (1 + 2⁻²⁰) to stay a true upper bound.
 from __future__ import annotations
 
 import math
-import os
 from collections.abc import Callable
 from dataclasses import dataclass
 from functools import reduce
@@ -90,11 +94,11 @@ _THETA_SLACK = 1.0 - 2.0**-30
 # past this many tombstones the driver stops pinning the delete set in its
 # own memory and the query runs the exact plan (which applies the same
 # anti-join the Spark scans use)
-_DRIVER_TOMBSTONE_MAX = int(
-    os.environ.get("SPARK_GRAFT_PRUNE_DRIVER_TOMBSTONE_MAX", 5_000_000)
-)
-# one scan task's worth of postings: sizes the surviving-block scan's task
-# count, and a survivor set at most this big is scored on the driver
+_DRIVER_TOMBSTONE_MAX = 5_000_000
+# one scan task's worth of postings, the driver gate: a query whose leaf
+# postings fit it is answered by the driver evaluator (engine/structured.py);
+# past it, it sizes the surviving-block scan's task count, and a survivor
+# set at most this big is scored on the driver
 _POSTS_PER_TASK = 250_000
 # past this many surviving blocks an IN-list predicate stops being a
 # predicate — the keys ship as a broadcast-joined table instead
@@ -505,9 +509,6 @@ def _leaves_fit(pidx: PackedIndex, terms: list[str], fld: str, st: PruneStats):
     it can order. Otherwise None, with the reason in ``st.fallback``."""
     if not _tombstones_fit(pidx, st):
         return None
-    if _ext_id_type(pidx) is None:
-        st.fallback = "ext ids of a type the driver cannot order"
-        return None
     trows = pidx.reads.term_stats(terms, fld)
     st.n_postings_scored = sum(df for df, _ in trows.values())
     if st.n_postings_scored > _POSTS_PER_TASK:
@@ -515,6 +516,9 @@ def _leaves_fit(pidx: PackedIndex, terms: list[str], fld: str, st: PruneStats):
             f"{st.n_postings_scored} leaf postings exceed the driver gate "
             f"({_POSTS_PER_TASK})"
         )
+        return None
+    if _ext_id_type(pidx) is None:
+        st.fallback = "ext ids of a type the driver cannot order"
         return None
     return trows
 

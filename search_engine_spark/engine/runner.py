@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame
 from search_engine_spark.config import TOP_K, ModelConfig
 from search_engine_spark.engine.compiler import DEFAULT_FIELD, compile_node, evaluate
 from search_engine_spark.engine.ops import EvalContext
-from search_engine_spark.engine.parser import QOp, QTerm, parse_query
+from search_engine_spark.engine.parser import QOp, parse_query
 from search_engine_spark.engine.topk import rank_topk, trec_lines
 from search_engine_spark.index.persist import PackedIndex
 from search_engine_spark.tokenize import Tokenizer, WHITESPACE_TOKENIZER
@@ -24,15 +24,6 @@ from search_engine_spark.tokenize import Tokenizer, WHITESPACE_TOKENIZER
 def _exact_forced() -> bool:
     """``SPARK_GRAFT_NO_PRUNE=1``: every query runs the exact Spark plan."""
     return os.environ.get("SPARK_GRAFT_NO_PRUNE") == "1"
-
-
-def _collect_terms(ast) -> set[str]:
-    if isinstance(ast, QTerm):
-        return {ast.text}
-    out: set[str] = set()
-    for c in ast.children:
-        out |= _collect_terms(c)
-    return out
 
 
 @dataclass
@@ -77,8 +68,9 @@ class Engine:
         ast = self.parse(query)
         return evaluate(ast, self.ctx, self.default_field)
 
-    # populated by the driver-side paths (pruned flat queries, structured
-    # queries) after each search whose shape they cover
+    # populated by the driver-side paths (the driver evaluator and the
+    # past-gate block-max planner) after each search whose shape they
+    # answer or decline with a reason
     last_prune_stats = None
 
     def _driver_topk(self, query: str, k: int) -> DataFrame | None:
@@ -98,56 +90,45 @@ class Engine:
         shape = root_shape(node, self.model.name)
         return None if shape is None else self._shape_topk(shape, k)
 
-    def _shape_topk(self, shape, k: int, spark: bool = True) -> DataFrame | None:
+    def _shape_topk(self, shape, k: int) -> DataFrame | None:
         """The driver-side answer of a classified root (a
-        ``structured.Shape``), or None: flat shapes go to the block-max
-        pruned path, trees with #NEAR/#WINDOW/#SYN children to the
-        structured evaluator (engine/structured.py). A planner that declines
-        with a reason leaves it in ``last_prune_stats.fallback``.
-        ``spark=False`` (``batch.batch_topk``) answers only what runs no Spark
-        job: a flat query whose leaf postings exceed the driver gate returns
-        None instead of running the pruned planner's survivor scan."""
-        from search_engine_spark.engine.pruning import PruneStats
+        ``structured.Shape``), or None: under the driver gate the evaluator
+        ``structured.struct_topk`` answers; past it the block-max planner
+        (``_pruned_topk``) answers the flat shapes it covers; anything else
+        runs the exact plan, the reason in ``last_prune_stats.fallback``."""
+        from search_engine_spark.engine import pruning
         from search_engine_spark.engine.structured import struct_topk
 
         if _exact_forced():
             return None
-        st = PruneStats()
-        if shape.flat:
-            res = self._pruned_topk(shape, k, st, spark)
-        else:
-            res = struct_topk(self.index, shape, self.model, k, st)
+        st = pruning.PruneStats()
+        res = struct_topk(self.index, shape, self.model, k, st)
+        if res is None and st.n_postings_scored > pruning._POSTS_PER_TASK:
+            res = self._pruned_topk(shape, k, st)
         if res is not None or st.fallback:
             self.last_prune_stats = st
         return res
 
-    def _pruned_topk(self, shape, k: int, st, spark: bool) -> DataFrame | None:
-        """Default block-max pruned path for flat BM25 #SUM and Indri
-        #AND/#WAND/#WSUM over a packed index (SURVEY.md §4.2;
-        engine/pruning.py — bit-identical to the exact plan,
-        identity-tested; a small surviving set is scored on the driver and
-        runs no Spark job). Applies only when the shape matches: single
-        field, distinct terms (duplicate query terms carry a multiplicity
-        weight the pruned scorer doesn't model), and an Indri root that is
-        not a bare #SCORE. Without ``spark`` the leaf postings must fit the
-        driver gate, so the survivors are scored on the driver."""
+    def _pruned_topk(self, shape, k: int, st) -> DataFrame | None:
+        """Past the gate: block-max pruned top-k of a flat BM25 #SUM or
+        Indri #AND/#WAND/#WSUM (engine/pruning.py, bitwise the exact plan).
+        A shape it does not cover adds why to ``st``'s gate decline and
+        returns None; its term-keyed pivot cannot carry duplicated terms."""
         from search_engine_spark.config import BM25
         from search_engine_spark.engine import pruning
 
-        if shape.bare and self.model.name != BM25:
-            return None
         terms = [l.term for l in shape.leaves]
-        fields = {l.field for l in shape.leaves}
-        if len(fields) != 1 or len(set(terms)) != len(terms):
+        why = (
+            "#NEAR/#WINDOW/#SYN children" if not shape.flat
+            else "duplicated terms" if len(set(terms)) != len(terms)
+            else "a bare Indri #SCORE" if shape.bare and self.model.name != BM25
+            else ""
+        )
+        if why:
+            st.fallback += f"; the block-max planner does not cover {why}"
             return None
-        fld = next(iter(fields))
-        if not spark:
-            try:
-                if pruning._leaves_fit(self.index, terms, fld, st) is None:
-                    return None
-            except pruning.DRIVER_READ_ERRORS as e:
-                st.fallback = f"driver read failed: {type(e).__name__}: {e}"
-                return None
+        st.fallback = ""
+        fld = shape.leaves[0].field
         if self.model.name == BM25:
             return pruning.bm25_topk_pruned(
                 self.index, terms, k=k, fld=fld, p=self.model.bm25, stats=st

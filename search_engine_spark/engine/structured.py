@@ -1,33 +1,37 @@
-"""Driver-side evaluation of small structured queries: #NEAR/n, #WINDOW/n and
-#SYN trees under BM25 #SUM and Indri #AND/#WAND/#WSUM, with no Spark job.
+"""The driver evaluator: every BM25 #SUM and Indri #AND/#WAND/#WSUM root (or
+bare #SCORE) whose leaves lie in one field and whose leaf postings fit the
+driver gate is answered here, flat or structured, with no Spark job.
 
 The exact plan answers ``#SUM(t #NEAR/1(a b))`` with a positional join, a
 mapInPandas walk, a cached list, a stats job and a scoring job — about ten
 Spark jobs for a few thousand postings. When the query's leaf terms hold at
 most ``pruning._POSTS_PER_TASK`` postings (Σ df from the driver's term
-stats, no job) this module evaluates the same tree on the driver:
+stats, no job) this module evaluates the same tree on the driver, reading
+every leaf posting (whole columnar lists, no block skipping):
 
-  1. every leaf term's blocks are read and decoded with positions
-     (``pruning._Query.read``: pyarrow reads of the files holding them, one
-     decode pass, tombstoned postings dropped) into a docid-sorted list
-     whose positions are one flat array;
+  1. every leaf term's blocks are read and decoded (``pruning._Query.read``:
+     pyarrow reads of the files holding them, one decode pass, tombstoned
+     postings dropped) into a docid-sorted list. Positions are read, as one
+     flat array, only when a child holds a #NEAR/#WINDOW/#SYN;
   2. the Il tree is walked bottom-up: #SYN is a union that concatenates and
      sorts positions per doc, #NEAR/#WINDOW intersect their args' docids
      and run the numpy wavefront walks (``poswalk.near_flat`` /
      ``window_flat``) on the flat positions;
   3. each #SCORE child gets the exact plan's (df, ctf): a term leaf's from
-     term_stats, a composite list's as (len, Σtf) — ``IlNode.list_stats``;
-     doclen rides on the leaf postings;
-  4. the per-child tf pivot is scored in numpy by the scorers the flat
-     pruned path uses (``pruning.bm25_scorer`` / ``indri_scorer``: score.py's
-     numpy twins of the exact plan's expressions, with StrictMath's log and
-     pow) and ranked by ``pruning.score_local``, so the answers are bitwise
-     the exact plan's and no JVM call runs before the answer frame.
+     term_stats (an absent term's is (0, 0)), a composite list's as
+     (len, Σtf) — ``IlNode.list_stats``; doclen rides on the leaf postings;
+  4. one pivot holds a row per child, so a duplicated term is scored once
+     per child, and it is scored in numpy by ``pruning.bm25_scorer`` /
+     ``indri_scorer`` (score.py's numpy twins of the exact plan's
+     expressions, with StrictMath's log and pow) and ranked by
+     ``pruning.score_local``, so the answers are bitwise the exact plan's
+     and no JVM call runs before the answer frame.
 
 Any other shape (Boolean models, nested Sl, several fields, a non-positive
-total weight) or a leaf set over the gate returns None and the exact plan
-runs; a failed driver read does too, with the reason in
-``PruneStats.fallback``.
+total weight), a leaf set over the gate, or a failed driver read returns
+None with the reason in ``PruneStats.fallback``. Past the gate
+``Engine._shape_topk`` offers a flat query to the block-max planner
+(engine/pruning.py); anything else runs the exact plan.
 """
 
 from __future__ import annotations
@@ -50,17 +54,17 @@ from search_engine_spark.index.persist import PackedIndex, _gather_runs
 
 @dataclass
 class _List:
-    """A docid-ascending inverted list: per doc its tf, doclen and positions
-    (doc i's are the i-th run of tf[i] values of ``pos``)."""
+    """A docid-ascending inverted list: per doc its tf, doclen and, when
+    read, positions (doc i's are the i-th run of tf[i] values of ``pos``)."""
 
     docid: np.ndarray
     tf: np.ndarray
     doclen: np.ndarray
-    pos: np.ndarray
+    pos: np.ndarray | None
 
     def take(self, ix: np.ndarray) -> "_List":
         """The docs at ``ix``, in that order."""
-        pos = _gather_runs(self.pos, self.tf, ix)
+        pos = None if self.pos is None else _gather_runs(self.pos, self.tf, ix)
         return _List(self.docid[ix], self.tf[ix], self.doclen[ix], pos)
 
 
@@ -69,8 +73,9 @@ def _concat(lists: list) -> _List:
     if not lists:
         z = np.zeros(0, np.int64)
         return _List(z, z, z, z)
-    cols = zip(*((x.docid, x.tf, x.doclen, x.pos) for x in lists))
-    return _List(*(np.concatenate(c) for c in cols))
+    cols = [np.concatenate(c) for c in zip(*((x.docid, x.tf, x.doclen) for x in lists))]
+    pos = None if lists[0].pos is None else np.concatenate([x.pos for x in lists])
+    return _List(*cols, pos)
 
 
 def _syn(kids: list) -> _List:
@@ -118,7 +123,7 @@ def _leaf_terms(node, out: list) -> bool:
 
 @dataclass
 class Shape:
-    """A query root the driver planners cover: its combine ``kind`` ("sum"
+    """A query root the driver evaluator covers: its combine ``kind`` ("sum"
     for BM25, "and"/"wand"/"wsum" for Indri), ``weights``, and #SCORE
     ``children``, each over a tree of Term/Syn/Near/Window nodes whose
     TermNodes, in order, are ``leaves``. ``bare``: the root is one #SCORE."""
@@ -131,14 +136,16 @@ class Shape:
 
     @property
     def flat(self) -> bool:
-        """Every child scores a plain term: the block-max pruned planner's
-        shapes. The others hold a #NEAR/#WINDOW/#SYN: ``struct_topk``'s."""
+        """Every child scores a plain term: no child needs positions. Past
+        the driver gate only flat shapes can take the block-max planner, and
+        the BM25 batch plan scores a flat #SUM's duplicated term once times
+        its count."""
         return all(isinstance(c.child, TermNode) for c in self.children)
 
 
 def root_shape(node, model: str) -> Shape | None:
-    """The one classifier of a compiled root for both driver planners, or
-    None (the exact plan runs). A bare #SCORE root is a one-child #SUM
+    """The one classifier of a compiled root for the driver evaluator and
+    the past-gate planner, or None (the exact plan runs). A bare #SCORE root is a one-child #SUM
     (BM25) or #AND (Indri): 0.0 + s and pow(s, 1.0) are both exactly s."""
     weights = None
     if isinstance(node, ScoreNode):
@@ -163,9 +170,11 @@ def root_shape(node, model: str) -> Shape | None:
 def struct_topk(
     pidx: PackedIndex, shape: Shape, model: ModelConfig, k: int, st: pruning.PruneStats
 ) -> DataFrame | None:
-    """Top-k of a BM25/Indri query of a non-flat ``shape`` (at least one
-    composite #SCORE child), evaluated on the driver; None when the gate
-    says the exact plan runs (the reason in ``st.fallback``)."""
+    """Top-k of a BM25/Indri query of any ``shape``, evaluated on the driver
+    from its leaves' whole posting lists; None when the exact plan or, past
+    the gate, the block-max planner answers instead (the reason in
+    ``st.fallback``; ``st.n_postings_scored`` holds the leaves' Σ df once the
+    gate has been checked)."""
     kind, weights, children = shape.kind, shape.weights, shape.children
     fields = {x.field for x in shape.leaves}
     if len(fields) != 1:
@@ -181,7 +190,7 @@ def struct_topk(
         if trows is None:
             return None
         metas = pidx.reads.block_meta(terms, fld)
-        q = pruning._Query(pidx, terms, fld, metas, positions=True)
+        q = pruning._Query(pidx, terms, fld, metas, positions=not shape.flat)
         got = q.read(np.arange(len(q.n)))
         st.n_blocks_total = st.n_blocks_scanned = len(q.n)
         st.n_files_read = len(q.files_read)
@@ -193,7 +202,8 @@ def struct_topk(
         leaf_lists = {
             t: _List(
                 srt.docid[cut[i]:cut[i + 1]], srt.tf[cut[i]:cut[i + 1]],
-                srt.doclen[cut[i]:cut[i + 1]], srt.pos[pcut[i]:pcut[i + 1]],
+                srt.doclen[cut[i]:cut[i + 1]],
+                None if srt.pos is None else srt.pos[pcut[i]:pcut[i + 1]],
             )
             for i, t in enumerate(terms)
         }

@@ -75,7 +75,7 @@ def pidx(spark, code_docs, tmp_path_factory):
 def exact_plan(monkeypatch):
     """``with exact_plan():`` routes Engine.search to the exact Spark plan
     (SPARK_GRAFT_NO_PRUNE=1) inside the block. On a packed index the engine
-    otherwise answers flat and structured shapes with its driver planners —
+    otherwise answers flat and structured shapes with its driver evaluator —
     tests whose reference is the Spark plan use this."""
 
     @contextlib.contextmanager

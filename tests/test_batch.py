@@ -314,21 +314,21 @@ def _plan_spy(monkeypatch, name):
 
 MIXED = {
     BM25: ("_sdm_bm25_scores", [
-        ("a1", "lock free queue"),                  # driver: pruned planner
+        ("a1", "lock free queue"),                  # driver: flat
         ("a2", "#SUM(queue #NEAR/1(lock free))"),   # driver: structured
-        ("a3", "lock lock queue"),                  # residual: duplicate term
+        ("a3", "lock lock queue"),                  # driver: duplicate term
         ("a4", "lock.path queue"),                  # residual: two fields
         ("a5", "zzz_not_in_vocab_zzz"),             # driver: no rows
         ("a6", "def return"),                       # all stopwords: no rows
-    ], ["a3", "a4"]),
+    ], ["a4"]),
     INDRI: ("_sdm_scores", [
-        ("b1", "#WAND(0.7 lock 0.2 queue 0.1 slot)"),     # driver: pruned
+        ("b1", "#WAND(0.7 lock 0.2 queue 0.1 slot)"),     # driver: flat
         ("b2", "#AND(ring buffer #NEAR/2(ring buffer))"),  # driver: structured
-        ("b3", "token_next"),                              # residual: bare #SCORE
-        ("b4", "zzz_not_in_vocab_zzz lock"),               # residual: absent term
+        ("b3", "token_next"),                              # driver: bare #SCORE
+        ("b4", "zzz_not_in_vocab_zzz lock"),               # driver: absent term
         ("b5", "#AND(lock.body python.lang)"),             # residual: two fields
         ("b6", "#AND(def return)"),                        # all stopwords: no rows
-    ], ["b3", "b4", "b5"]),
+    ], ["b5"]),
 }
 
 
@@ -351,7 +351,7 @@ def test_mixed_file_matches_per_query(code_index, monkeypatch, model):
 
 
 def test_driver_answerable_file_runs_no_spark_job(spark, code_index):
-    """When the driver planners answer every query (all-stopword queries,
+    """When the driver evaluator answers every query (all-stopword queries,
     which have no rows, included), neither batch_topk nor collecting its
     frame runs a Spark job."""
     from search_engine_spark.index.persist import PackedIndex

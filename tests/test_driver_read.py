@@ -340,7 +340,7 @@ def test_failed_metadata_load_falls_back_to_the_exact_plan(
         eng = Engine(appended, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)
         exact = [tuple(r) for r in eng.search(text, 10).collect()]
 
-    # term stats: the pruned planner's read fails, the engine reports why
+    # term stats: the driver evaluator's read fails, the engine reports why
     broken = PackedIndex(spark, appended.dir)
     _fail_once(monkeypatch, broken.reads, "_load_vocab")
     eng = Engine(broken, ModelConfig(name=BM25), tokenizer=CODE_TOKENIZER)

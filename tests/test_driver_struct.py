@@ -1,7 +1,8 @@
-"""Structured queries (#NEAR/#WINDOW/#SYN children under BM25 #SUM and Indri
-#AND/#WAND/#WSUM) answered on the driver (engine/structured.py) must be
-bitwise the exact Spark plan's answers, match the pure-Python oracle, and
-run no Spark job."""
+"""Queries the driver evaluator answers (engine/structured.py) — flat and
+structured (#NEAR/#WINDOW/#SYN children) BM25 #SUM and Indri
+#AND/#WAND/#WSUM, duplicated terms, bare #SCORE and absent terms included —
+must be bitwise the exact Spark plan's answers, match the pure-Python
+oracle, run no Spark job and never reach the block-max planner."""
 
 import shutil
 import threading
@@ -35,11 +36,30 @@ SHAPES = [
     (INDRI, "#AND(queue #SYN(ring buffer) #NEAR/2(ring buffer))"),
     (INDRI, "#NEAR/2(try with)"),  # bare positional query
     (INDRI, "#AND(lock #NEAR/1(free lock))"),  # a #NEAR matching nothing
+    # flat shapes (the serve mix's Indri ones), duplicated terms, bare #SCORE
+    (INDRI, "#AND(lock free queue)"),
+    (INDRI, "#WAND(0.7 lock 0.3 queue)"),
+    (INDRI, "#WSUM(0.6 ring 0.4 buffer)"),
+    (INDRI, "token_next"),  # bare #SCORE
+    (INDRI, "#AND(lock lock queue)"),
+    (BM25, "except pass lambda"),
+    (BM25, "lambda lambda pass"),
+    (BM25, "try self try with try"),
+    (BM25, "#SUM(try try #NEAR/2(try with))"),
 ]
 EDGE = [
     (BM25, "#SUM(lambda #NEAR/1(zzz_not_in_vocab_zzz pass))"),  # absent leaf
     (INDRI, "#AND(queue #NEAR/2(zzz_not_in_vocab_zzz lock))"),
     (BM25, "#NEAR/1(zzz_not_in_vocab_zzz qqq_not_in_vocab_qqq)"),  # no leaf at all
+    (INDRI, "zzz_not_in_vocab_zzz lock"),  # absent flat term: every score 0
+    # idf-clamped terms (df > N/2): every BM25 score is 0
+    (BM25, "lock free"),
+    (BM25, "ring buffer slot"),
+    (BM25, "lock free queue"),
+    (BM25, "lock lock queue"),
+    (BM25, "lock lock lock queue"),
+    (BM25, "queue lock lock free lock"),
+    (BM25, "#SUM(lock lock #NEAR/1(lock free))"),
 ]
 NO_MATCH = "#AND(lock #NEAR/1(free lock))"
 
@@ -64,12 +84,35 @@ def _assert_matches_oracle(got, want):
         assert g[3] == pytest.approx(w[3], rel=1e-9, abs=1e-12)
 
 
+def _needs_positions(text):
+    return any(op in text for op in ("#NEAR", "#WINDOW", "#SYN"))
+
+
 @pytest.mark.parametrize("model,text", SHAPES + EDGE, ids=[t for _, t in SHAPES + EDGE])
 def test_driver_matches_exact_plan_and_oracle(
     spark, pidx, py_oracle, monkeypatch, model, text
 ):
-    got, st = _answer(pidx, model, text)
+    """Under the gate the evaluator answers: the block-max planners are
+    never called, and positions are read only for a positional child."""
+
+    def planner(*a, **kw):
+        raise AssertionError(f"block-max planner called under the gate: {text}")
+
+    read_cols = []
+    real_read = pidx.reads.packed_table
+
+    def packed_table(files, columns, filter):
+        read_cols.append(columns)
+        return real_read(files, columns, filter)
+
+    with monkeypatch.context() as m:
+        m.setattr(pruning_mod, "bm25_topk_pruned", planner)
+        m.setattr(pruning_mod, "indri_topk_pruned", planner)
+        m.setattr(pidx.reads, "packed_table", packed_table)
+        got, st = _answer(pidx, model, text)
     assert st is not None and st.score_mode == "driver", (text, st)
+    if not _needs_positions(text):
+        assert read_cols and not any("positions" in c for c in read_cols), read_cols
     assert got == _exact(pidx, model, text, monkeypatch)
     _assert_matches_oracle(got, py_oracle.search(text, ModelConfig(name=model), K))
 

@@ -70,7 +70,7 @@ def test_driver_read_failure_runs_exact_plan(
 def test_gate_term_stats_failure_reports_fallback(
     spark, pidx, code_index, exact_plan, monkeypatch
 ):
-    """A failed term-stats read in the pruned planner answers with the
+    """A failed term-stats read in the driver evaluator answers with the
     exact plan, bitwise, and the engine reports that fallback — not the
     stats of the query before it."""
     import sys
@@ -80,8 +80,9 @@ def test_gate_term_stats_failure_reports_fallback(
     armed = []
 
     def term_stats(terms, fld):
-        # only the planner's read fails: the exact plan reads term stats too
-        if armed and sys._getframe(1).f_code.co_name == "bm25_topk_pruned":
+        # only the evaluator's gate read fails: the exact plan reads term
+        # stats too
+        if armed and sys._getframe(1).f_code.co_name == "_leaves_fit":
             raise OSError("forced term-stats read failure")
         return real(terms, fld)
 
@@ -299,6 +300,61 @@ def test_indri_pruned_spark_side_identical_to_exact(
         ]
     assert pruned == exact and pruned
     assert stats.score_mode == "spark"
+
+
+@pytest.mark.parametrize(
+    "model,text,why",
+    [
+        (BM25, "lock lock queue", "does not cover duplicated terms"),
+        (INDRI, "token_next", "does not cover a bare Indri #SCORE"),
+        (BM25, "#SUM(queue #NEAR/1(lock free))", "does not cover #NEAR/#WINDOW/#SYN"),
+        (BM25, "lock.path queue", "leaves span several fields"),
+    ],
+)
+def test_past_gate_declines_say_why(spark, code_index, monkeypatch, model, text, why):
+    """Past the driver gate a shape the block-max planner does not cover
+    runs the exact plan, and ``last_prune_stats.fallback`` says why."""
+    monkeypatch.setattr(pruning_mod, "_POSTS_PER_TASK", 0)
+    eng = Engine(code_index, ModelConfig(name=model), tokenizer=CODE_TOKENIZER)
+    assert eng.search(text, 10).collect()
+    st = eng.last_prune_stats
+    assert st.score_mode == "" and why in st.fallback, st
+    if "several fields" not in why:
+        assert "exceed the driver gate" in st.fallback, st
+
+
+@pytest.mark.parametrize("model", [BM25, INDRI])
+def test_block_filter_scan_identical_to_exact(
+    spark, pidx, code_index, exact_plan, monkeypatch, model
+):
+    """Past ``_KEYS_PRED_MAX`` surviving blocks the planner's Spark scan
+    takes its blocks as a broadcast-joined ``block_filter`` table instead of
+    an IN-list predicate; its answers are bitwise the exact plan's."""
+    monkeypatch.setattr(pruning_mod, "_POSTS_PER_TASK", 0)
+    monkeypatch.setattr(pruning_mod, "_KEYS_PRED_MAX", 0)
+    seen = []
+    real = PackedIndex.postings_for
+
+    def postings_for(self, pairs, **kw):
+        seen.append(kw)
+        return real(self, pairs, **kw)
+
+    monkeypatch.setattr(PackedIndex, "postings_for", postings_for)
+    st = PruneStats()
+    if model == BM25:
+        res = bm25_topk_pruned(pidx, QUERIES[1], k=20, stats=st)
+        text = " ".join(QUERIES[1])
+    else:
+        kind, weights, terms = INDRI_QUERIES[2]
+        res = indri_topk_pruned(pidx, kind, terms, weights, k=20, stats=st)
+        text = _indri_query_text(kind, weights, terms)
+    pruned = [tuple(r) for r in res.collect()]
+    assert st.score_mode == "spark"
+    assert [kw.get("block_filter") is not None for kw in seen] == [True]
+    eng = Engine(code_index, ModelConfig(name=model), tokenizer=CODE_TOKENIZER)
+    with exact_plan():
+        exact = [tuple(r) for r in eng.search(text, 20).collect()]
+    assert pruned == exact and pruned
 
 
 FLAT_SHAPES = [

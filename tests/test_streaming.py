@@ -159,7 +159,7 @@ def test_stream_config_drift_refused(spark, tmp_path_factory):
 def test_documents_queryable_after_each_batch(spark, tmp_path_factory, exact_plan):
     """Every micro-batch commits: after each one, a query over the index
     ranks exactly the documents ingested so far, as the pure-Python oracle
-    does over those documents — on the driver planners' route and on the
+    does over those documents — on the driver evaluator's route and on the
     exact plan alike."""
     from tests.oracle import PyOracle
 

@@ -33,7 +33,7 @@ QUERIES = [
 @pytest.fixture(autouse=True)
 def _exact_plan(exact_plan):
     # the scale path belongs to rank_topk, the exact plan's top-k; the
-    # driver planners rank with topk.rank_local and never reach it
+    # driver answers rank with topk.rank_local and never reach it
     with exact_plan():
         yield
 
