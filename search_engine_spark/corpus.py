@@ -44,7 +44,6 @@ KEYWORDS_BY_LANG = {
     "go": "func return package import var type struct range if else for defer go chan map".split(),
     "js": "function return const let var class import export if else for while new this async".split(),
 }
-ALL_KEYWORDS = sorted({k for v in KEYWORDS_BY_LANG.values() for k in v})
 
 PHRASES = [
     ["open", "file", "handle"],

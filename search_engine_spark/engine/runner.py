@@ -103,7 +103,9 @@ class Engine:
             return None
         st = pruning.PruneStats()
         res = struct_topk(self.index, shape, self.model, k, st)
-        if res is None and st.n_postings_scored > pruning._POSTS_PER_TASK:
+        if res is None and st.past_gate:
+            # the planner's stats start fresh; the gate decline stays
+            st = pruning.PruneStats(fallback=st.fallback, past_gate=True)
             res = self._pruned_topk(shape, k, st)
         if res is not None or st.fallback:
             self.last_prune_stats = st

@@ -145,8 +145,9 @@ class Shape:
 
 def root_shape(node, model: str) -> Shape | None:
     """The one classifier of a compiled root for the driver evaluator and
-    the past-gate planner, or None (the exact plan runs). A bare #SCORE root is a one-child #SUM
-    (BM25) or #AND (Indri): 0.0 + s and pow(s, 1.0) are both exactly s."""
+    the past-gate planner, or None (the exact plan runs). A bare #SCORE root
+    is a one-child #SUM (BM25) or #AND (Indri): 0.0 + s and pow(s, 1.0) are
+    both exactly s."""
     weights = None
     if isinstance(node, ScoreNode):
         kind, children = ("sum" if model == BM25 else "and"), [node]
@@ -173,8 +174,8 @@ def struct_topk(
     """Top-k of a BM25/Indri query of any ``shape``, evaluated on the driver
     from its leaves' whole posting lists; None when the exact plan or, past
     the gate, the block-max planner answers instead (the reason in
-    ``st.fallback``; ``st.n_postings_scored`` holds the leaves' Σ df once the
-    gate has been checked)."""
+    ``st.fallback``; ``st.past_gate`` set when the leaves' Σ df exceeds the
+    gate)."""
     kind, weights, children = shape.kind, shape.weights, shape.children
     fields = {x.field for x in shape.leaves}
     if len(fields) != 1:
@@ -198,19 +199,11 @@ def struct_topk(
         by = np.lexsort((got.docid, got.term))
         srt = _List(got.docid, got.tf, got.doclen, got.pos).take(by)
         cut = np.searchsorted(got.term[by], np.arange(len(terms) + 1))
-        pcut = np.concatenate(([0], np.cumsum(srt.tf)))[cut]
-        leaf_lists = {
-            t: _List(
-                srt.docid[cut[i]:cut[i + 1]], srt.tf[cut[i]:cut[i + 1]],
-                srt.doclen[cut[i]:cut[i + 1]],
-                None if srt.pos is None else srt.pos[pcut[i]:pcut[i + 1]],
-            )
-            for i, t in enumerate(terms)
-        }
+        by_term = {t: srt.take(np.arange(*cut[i:i + 2])) for i, t in enumerate(terms)}
 
         lists, stats = [], []
         for c in children:
-            lst = _eval_il(c.child, leaf_lists)
+            lst = _eval_il(c.child, by_term)
             lists.append(lst)
             if isinstance(c.child, TermNode):
                 stats.append(trows.get(c.child.term, (0, 0)))
@@ -228,7 +221,7 @@ def struct_topk(
         else:
             score = pruning.indri_scorer(
                 kind, weights, [ctf for _, ctf in stats], corpus.sum_doclen(fld),
-                model.indri,
+                model.indri, k,
             )
         st.score_mode = "driver"
         return pruning.score_local(pidx, piv, score, k, pruning._ext_id_type(pidx))

@@ -161,18 +161,18 @@ def rank_local(spark, docids, scores, k: int, ext_ids) -> DataFrame:
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    order = np.argsort(-scores, kind="stable")
-    docids, scores = docids[order], scores[order]
-    n = len(scores)
-    if k < n:
-        # ties at the k-th score are exactly the rows whose ext-id order
-        # decides membership
-        n = int(np.searchsorted(-scores, -scores[k - 1], side="right"))
-    cand = docids[:n].tolist()
+    if k < len(scores):
+        # the rows at or above the k-th score, found by one partition, not a
+        # sort of every scored doc: ties at it are exactly the rows whose
+        # ext-id order decides membership
+        kth = np.partition(-scores, k - 1)[k - 1]
+        keep = np.flatnonzero(-scores <= kth)
+        docids, scores = docids[keep], scores[keep]
+    cand = docids.tolist()
     ext = ext_ids(cand)
     exts = [ext[d] for d in cand]
     top = pc.sort_indices(
-        pa.table({"s": scores[:n], "e": pa.array(exts)}),
+        pa.table({"s": scores, "e": pa.array(exts)}),
         sort_keys=[("s", "descending"), ("e", "ascending")],
     ).to_numpy()[:k]
     return _enumerate_ranks(

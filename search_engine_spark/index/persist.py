@@ -421,14 +421,6 @@ def _arrow_kernel_gen(cfg: BuildConfig):
     return gen
 
 
-def segment_rows(docs: DataFrame, cfg: BuildConfig) -> DataFrame:
-    """Kernel dispatch (BuildConfig.kernel): arrow fast path vs python
-    reference kernel — identical final index, asserted in tests."""
-    if cfg.kernel == "arrow":
-        return _segment_rows_arrow(docs, cfg)
-    return _segment_rows(docs, cfg)
-
-
 # --------------------------------------------------------------------------
 # python-side parquet writes with manifest-listed commit (Iceberg-style)
 # --------------------------------------------------------------------------

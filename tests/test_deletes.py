@@ -118,19 +118,25 @@ def test_search_excludes_deleted_uses_live_n(spark, pristine, copy_dir, monkeypa
     assert overlap
     assert all(dict((r[1], r[3]) for r in exact)[d] != pre[d] for d in overlap)
 
-    # block-max pruned plan stays bit-identical on a deleted index, whether
-    # the driver drops the tombstoned postings (small survivor set) or the
-    # Spark scan's anti-join does (size gate forced to 0)
+    # the driver-side answers stay bit-identical on a deleted index: the
+    # driver evaluator (under the gate) and the block-max planner's driver
+    # scoring drop the tombstoned postings on the driver, the planner's
+    # Spark scan (gate forced to 0) by its anti-join
     from search_engine_spark.engine import pruning
 
     monkeypatch.setenv("SPARK_GRAFT_NO_PRUNE", "0")
     for gate, mode in ((pruning._POSTS_PER_TASK, "driver"), (0, "spark")):
         monkeypatch.setattr(pruning, "_POSTS_PER_TASK", gate)
         eng = Engine(idx, ModelConfig(name=BM25))
-        pruned = [tuple(r) for r in eng.search(query, 30).collect()]
-        assert eng.last_prune_stats is not None, "pruned path did not engage"
+        got = [tuple(r) for r in eng.search(query, 30).collect()]
+        assert eng.last_prune_stats is not None, "no driver-side route answered"
         assert eng.last_prune_stats.score_mode == mode
-        assert pruned == exact
+        assert got == exact
+    monkeypatch.undo()
+    st = pruning.PruneStats()
+    pruned = pruning.bm25_topk_pruned(idx, terms, k=30, stats=st)
+    assert st.score_mode == "driver"
+    assert [tuple(r) for r in pruned.collect()] == exact
 
 
 def test_delete_by_ext_docid_and_generations(spark, pristine, copy_dir):

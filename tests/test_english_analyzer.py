@@ -240,8 +240,8 @@ QUERIES = [
 
 @pytest.mark.parametrize("model,q", QUERIES)
 def test_packed_matches_inmemory_english(eng_packed, exact_plan, model, q):
-    """The packed index's driver-side answer (flat shapes take the
-    block-max pruned path) is bitwise the exact Spark plan's."""
+    """The packed index's driver-side answer (the driver evaluator) is
+    bitwise the exact Spark plan's."""
     eng = Engine(eng_packed, ModelConfig(name=model), tokenizer=ENGLISH_TOKENIZER)
     a = [(r["rank"], r["docid"], r["score"]) for r in eng.search(q, 20).collect()]
     with exact_plan():

@@ -206,6 +206,32 @@ def test_indri_pruned_identical_to_exact(
     assert stats.n_blocks_total > 0
 
 
+@pytest.mark.parametrize("kind,weights", [("and", None), ("wand", [0.7, 0.2, 0.1])])
+def test_indri_scorer_exact_where_it_ranks(kind, weights):
+    """The scorer's libm-pow estimate changes no top-k score: every doc at
+    or above the k-th exact score (a tie plateau straddles it) gets the
+    StrictMath port's score, bitwise; the rest score below it."""
+    import numpy as np
+
+    from search_engine_spark.config import IndriParams
+
+    rng = np.random.default_rng(7)
+    n, k = 4000, 100
+    tf = rng.integers(0, 3, (3, n))
+    doclen = tf.sum(axis=0) + rng.choice([5, 9, 30], n)  # few distinct scores
+    term, docid = np.nonzero(tf)
+    piv = pruning_mod._Pivot(term, docid, tf[term, docid], doclen[docid], 3)
+    args = (kind, weights, [900, 4000, 12000], 10**6, IndriParams())
+    exact = pruning_mod.indri_scorer(*args, k=n)(piv)
+    got = pruning_mod.indri_scorer(*args, k=k)(piv)
+    kth = np.sort(exact)[-k]
+    top = exact >= kth
+    assert top.sum() > k  # the k-th score is a tie plateau
+    assert np.array_equal((got >= kth), top)
+    assert np.array_equal(got[top].view(np.int64), exact[top].view(np.int64))
+    assert (got[~top] != exact[~top]).any()  # the estimate ran and differs
+
+
 def test_indri_pruned_fallback_contract(spark, pidx):
     from search_engine_spark.corpus import ABSENT_TERM
 
@@ -219,8 +245,8 @@ def test_indri_pruned_fallback_contract(spark, pidx):
 
 
 def test_indri_engine_dispatch(spark, pidx, code_index, exact_plan):
-    """Engine.search routes flat Indri shapes through the pruned plan,
-    bitwise-identical to the exact pivot plan."""
+    """Engine.search answers a flat Indri shape on the driver (the driver
+    evaluator, under the gate), bitwise-identical to the exact pivot plan."""
     eng = Engine(pidx, ModelConfig(name=INDRI), tokenizer=CODE_TOKENIZER)
     got = [tuple(r) for r in eng.search("#WAND(0.7 lock 0.2 queue 0.1 slot)", 15).collect()]
     assert eng.last_prune_stats is not None
@@ -258,8 +284,8 @@ def test_indri_bursty_pruning_skips_and_is_identical(spark, bursty_pidx, monkeyp
 
 
 # --------------------------------------------------------------------------
-# driver-local scoring: both sides of the size gate, zero Spark jobs,
-# adversarial score spreads
+# driver-local scoring and the planner's Spark scan (gate at 0), zero
+# Spark jobs, adversarial score spreads
 # --------------------------------------------------------------------------
 
 from search_engine_spark.engine import pruning as pruning_mod  # noqa: E402
@@ -320,7 +346,7 @@ def test_past_gate_declines_say_why(spark, code_index, monkeypatch, model, text,
     st = eng.last_prune_stats
     assert st.score_mode == "" and why in st.fallback, st
     if "several fields" not in why:
-        assert "exceed the driver gate" in st.fallback, st
+        assert st.past_gate and "exceed the driver gate" in st.fallback, st
 
 
 @pytest.mark.parametrize("model", [BM25, INDRI])
@@ -422,25 +448,33 @@ def test_adversarial_spreads_bitwise(
     spark, pidx, code_index, py_oracle, exact_plan, monkeypatch, gate
 ):
     """A BM25 bag mixing df=1 and idf-clamped terms, and an Indri #WAND with
-    weights from 1e-3 to 1: bitwise the exact plan's on both sides of the
-    driver-scoring gate, and within tolerance of the pure-Python oracle."""
+    weights from 1e-3 to 1: bitwise the exact plan's and within tolerance of
+    the pure-Python oracle, whether scored on the driver (the evaluator
+    through Engine, and the block-max planner called directly) or, with the
+    gate at 0, by the planner's Spark scan."""
     if gate == "spark":
         monkeypatch.setattr(pruning_mod, "_POSTS_PER_TASK", 0)
     terms = _adversarial_bm25_terms(code_index)
-    wand = "#WAND(" + " ".join(
-        f"{w} {t}" for w, t in zip([1e-3, 0.01, 0.1, 0.5, 1.0], terms[1:6])
-    ) + ")"
+    ws = [1e-3, 0.01, 0.1, 0.5, 1.0]
+    wand = "#WAND(" + " ".join(f"{w} {t}" for w, t in zip(ws, terms[1:6])) + ")"
     k = 30
+    planners = {
+        BM25: lambda st: bm25_topk_pruned(pidx, terms, k=k, stats=st),
+        INDRI: lambda st: indri_topk_pruned(pidx, "wand", terms[1:6], ws, k=k, stats=st),
+    }
     for model, text in ((BM25, " ".join(terms)), (INDRI, wand)):
         eng = Engine(pidx, ModelConfig(name=model), tokenizer=CODE_TOKENIZER)
-        pruned = [tuple(r) for r in eng.search(text, k).collect()]
+        got = [tuple(r) for r in eng.search(text, k).collect()]
         assert eng.last_prune_stats is not None, text
         assert eng.last_prune_stats.score_mode == gate, text
         exact_eng = Engine(code_index, ModelConfig(name=model), tokenizer=CODE_TOKENIZER)
         with exact_plan():
             exact = [tuple(r) for r in exact_eng.search(text, k).collect()]
-        assert pruned == exact and pruned, text
-        _assert_matches_oracle(pruned, py_oracle.search(text, ModelConfig(name=model), k))
+        assert got == exact and got, text
+        _assert_matches_oracle(got, py_oracle.search(text, ModelConfig(name=model), k))
+        st = PruneStats()
+        assert [tuple(r) for r in planners[model](st).collect()] == exact, text
+        assert st.score_mode == gate, text
 
 
 def test_bm25_scorer_sees_one_ulp_of_idf(spark, pidx):
@@ -479,7 +513,8 @@ def test_bm25_scorer_sees_one_ulp_of_idf(spark, pidx):
 
 def test_concurrent_flat_queries_match_serial(spark, pidx):
     """Eight serving threads share one cold PackedIndex (and so its driver
-    read cache); every answer equals the serial answer."""
+    read cache); every answer, each from the driver evaluator, equals the
+    serial answer."""
     import threading
 
     mixed = FLAT_SHAPES + [(BM25, " ".join(q)) for q in QUERIES]
@@ -564,13 +599,26 @@ def test_tie_plateau_with_non_ascii_ext_ids(spark, tmp_path, exact_plan):
         tokenizer=CODE_TOKENIZER,
     ), resume=False)
     index = PackedIndex(spark, out)
+    planners = {
+        "tie": lambda k, st: bm25_topk_pruned(index, ["tie"], k=k, stats=st),
+        "rare tie": lambda k, st: bm25_topk_pruned(index, ["rare", "tie"], k=k, stats=st),
+        "#AND(rare tie)": lambda k, st: indri_topk_pruned(
+            index, "and", ["rare", "tie"], k=k, stats=st
+        ),
+    }
     for model, text in [(BM25, "tie"), (BM25, "rare tie"), (INDRI, "#AND(rare tie)")]:
         for k in (1, 10, 40):
             with exact_plan():
                 exact = [tuple(r) for r in _search(index, model, text, k)[0].collect()]
+            # the driver evaluator (Engine) and the block-max planner's
+            # driver scoring share rank_local's plateau order
             res, st = _search(index, model, text, k)
             assert st.score_mode == "driver", text
             assert [tuple(r) for r in res.collect()] == exact and exact, (text, k)
+            st = PruneStats()
+            res = planners[text](k, st)
+            assert st.score_mode == "driver", text
+            assert [tuple(r) for r in res.collect()] == exact, (text, k)
 
 
 @pytest.mark.parametrize("ext_type", [int, str])

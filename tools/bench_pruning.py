@@ -10,8 +10,10 @@ block's (max_tf, min_doclen) bound looks alike and provably nothing can
 skip (the r03 13/13 finding).
 
 For each same-theme query (the realistic shape: a user searches related
-identifiers) it runs the EXACT single-scan plan and the PRUNED two-phase
-plan (engine/pruning.py), asserts bitwise-identical top-k, and reports
+identifiers) it runs the EXACT single-scan plan, the PRUNED two-phase
+plan (engine/pruning.py, called directly) and ``Engine.search``'s own
+route (``engine_route``: the driver evaluator under the driver gate, the
+pruned planner past it), asserts bitwise-identical top-k, and reports
 blocks scanned vs total plus median wall times. One JSON line per query +
 one summary line, which also reports the index generation's resident
 planning metadata (blocks, terms, bytes and load seconds).
@@ -199,15 +201,17 @@ def main() -> None:
             assert res is not None, "pruned path refused an in-contract query"
             return [tuple(r) for r in res.collect()]
 
-        # interleave reps (alternating order) so host-load drift during the
-        # theme hits both plans symmetrically instead of biasing whichever
-        # runs second
-        ew, et, pw, pt = [], [], [], []
-        exact_rows = pruned_rows = None
+        def run_engine():
+            return [tuple(r) for r in eng.search(text, args.k).collect()]
+
+        # interleave reps (rotating order) so host-load drift during the
+        # theme hits every plan symmetrically instead of biasing whichever
+        # runs last
+        ew, et, pw, pt, gw = [], [], [], [], []
+        exact_rows = pruned_rows = engine_rows = None
         for rep in range(args.reps):
-            runs = [("e", run_exact), ("p", run_pruned)]
-            if rep % 2:
-                runs.reverse()
+            runs = [("e", run_exact), ("p", run_pruned), ("g", run_engine)]
+            runs = runs[rep % 3:] + runs[:rep % 3]
             for tag, fn in runs:
                 t_before = executor_run_ms(spark)
                 t0 = time.time()
@@ -222,6 +226,9 @@ def main() -> None:
                     exact_rows = res
                     ew.append(wall)
                     et.append(task)
+                elif tag == "g":
+                    engine_rows = res
+                    gw.append(wall)
                 else:
                     pruned_rows = res
                     pw.append(wall)
@@ -230,6 +237,7 @@ def main() -> None:
         pruned_sec, pruned_task = statistics.median(pw), statistics.median(pt)
 
         identical = exact_rows == pruned_rows
+        engine_identical = exact_rows == engine_rows
         row = {
             "theme": th,
             "terms": q,
@@ -245,10 +253,15 @@ def main() -> None:
             "pruned_sec": round(pruned_sec, 3),
             "exact_task_sec": round(exact_task, 3),
             "pruned_task_sec": round(pruned_task, 3),
+            "engine_route": (
+                "planner" if eng.last_prune_stats.past_gate else "evaluator"
+            ),
+            "engine_identical": engine_identical,
+            "engine_sec": round(statistics.median(gw), 3),
         }
         rows.append(row)
         print(json.dumps(row))
-        if not identical:
+        if not (identical and engine_identical):
             print(f"IDENTITY FAILURE theme {th}", file=sys.stderr)
             sys.exit(1)
 
@@ -270,6 +283,7 @@ def main() -> None:
         ),
         "exact_sec_median": round(statistics.median([r["exact_sec"] for r in rows]), 3),
         "pruned_sec_median": round(statistics.median([r["pruned_sec"] for r in rows]), 3),
+        "engine_sec_median": round(statistics.median([r["engine_sec"] for r in rows]), 3),
         "exact_task_sec_median": round(
             statistics.median([r["exact_task_sec"] for r in rows]), 3
         ),
