@@ -35,12 +35,11 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--k", type=int, default=100)
     ap.add_argument("--batch", action="store_true",
-                    help="answer the query file with batch_topk: queries "
-                         "the driver evaluator answers run no Spark job, the "
-                         "rest run one batch plan per model (BM25 #SUM, "
-                         "Indri #AND/#WAND/#WSUM or Boolean #AND/#OR over "
-                         "term and one-level #NEAR/#WINDOW/#SYN children) "
-                         "— engine/batch.py")
+                    help="answer the query file with batch_topk: each "
+                         "query takes Engine.search's route and the rows "
+                         "come back as one relation; queries the driver "
+                         "evaluator answers run no Spark job — "
+                         "engine/batch.py")
     ap.add_argument("--fb", action="store_true",
                     help="two-round PRF expansion per query (SURVEY §2.10)")
     ap.add_argument("--fb-docs", type=int, default=10)
@@ -117,8 +116,8 @@ def main() -> None:
         if args.batch:
             from search_engine_spark.engine.batch import batch_topk, split_batchable
 
-            # mixed file: batch_topk for the shapes its plans cover,
-            # per-query answers for the rest (nested operators)
+            # batch_topk for the queries that compile; the rest are
+            # answered one by one, which reports each one's error
             bq, rest = split_batchable(_engine(), pairs)
             rows_by_qid: dict[str, list] = {}
             if bq:

@@ -35,6 +35,7 @@ from search_engine_spark.config import (
     IndriParams,
     ModelConfig,
 )
+from search_engine_spark.engine.batch import batch_topk
 from search_engine_spark.engine.runner import Engine
 from search_engine_spark.index.persist import (
     BuildConfig, PackedIndex, build_persistent_index,
@@ -397,27 +398,10 @@ _register(
 
 
 # -- batched multi-query execution (engine/batch.py) --------------------------
-# the whole query set in one plan: one union postings scan, one broadcast
-# query-leaf join, one (qid, docid) shuffle, salted two-stage per-qid top-k.
-# The reference answers a query file one query at a time
-# (hw5/QryEval/QryEval.java:670-709); batching is the cluster-scale analog.
-# batch_topk answers small queries on the driver first; these entries check
-# the batch plans, so they close that route.
-
-
-def _batch_plan_topk(eng: Engine, queries: list, k: int) -> DataFrame:
-    """``batch_topk`` with the driver gate closed for the call, so every
-    query with postings runs the batch plan its entry checks."""
-    from search_engine_spark.engine import pruning
-    from search_engine_spark.engine.batch import batch_topk
-
-    gate = pruning._POSTS_PER_TASK
-    pruning._POSTS_PER_TASK = 0
-    try:
-        return batch_topk(eng, queries, k)
-    finally:
-        pruning._POSTS_PER_TASK = gate
-
+# a whole query file in one local relation, each query answered by
+# Engine.search's own route — at this scale the driver evaluator, with no
+# Spark job. The reference answers a query file one query at a time
+# (hw5/QryEval/QryEval.java:670-709).
 
 BATCH_QUERY_SET = [
     ("q1", " ".join(FLAGSHIP_TERMS)),
@@ -429,7 +413,7 @@ BATCH_QUERY_SET = [
 
 def _q_bm25_batch_topk(spark, sf_dir):
     eng = _engine(spark, sf_dir, BM25)
-    return _batch_plan_topk(eng, BATCH_QUERY_SET, 100).select(
+    return batch_topk(eng, BATCH_QUERY_SET, 100).select(
         "qid", "rank", F.col("docid").cast("long").alias("docid"), "score"
     )
 
@@ -868,12 +852,10 @@ def _wsum_sql(spec, k: int) -> str:
 _register("indri_wsum_topk", _q_indri_wsum_topk, _wsum_sql(_WSUM_SPEC, 100))
 
 
-# -- batched Indri execution (engine/batch.py, VERDICT r03 item 7) ------------
-# the Indri full-outer-with-defaults combines as ONE job for a whole query
-# file: one union postings scan, broadcast (qid, ci, term) fan-out, ONE
-# (qid, docid) aggregation into a tf-map, per-qid combine via higher-order
-# F.aggregate over a broadcast constants array. Bitwise ≡ per-query
-# Engine.search (tests/test_batch.py::test_indri_batch_matches_per_query).
+# -- batched Indri execution (engine/batch.py) --------------------------------
+# the Indri full-outer-with-defaults combines over a whole query file; each
+# query is bitwise per-query Engine.search
+# (tests/test_batch.py::test_mixed_file_matches_per_query).
 
 INDRI_BATCH_QUERY_SET = [
     ("i1", "spark query table", ("and", None, ["spark", "query", "table"])),
@@ -888,7 +870,7 @@ INDRI_BATCH_QUERY_SET = [
 def _q_indri_batch_topk(spark, sf_dir):
     eng = _engine(spark, sf_dir, INDRI)
     qs = [(qid, text) for qid, text, _ in INDRI_BATCH_QUERY_SET]
-    return _batch_plan_topk(eng, qs, 100).select(
+    return batch_topk(eng, qs, 100).select(
         "qid", "rank", F.col("docid").cast("long").alias("docid"),
         # pow-based scores: f32-round the REPORTED value on both sides
         # (JVM Math.pow vs DuckDB libm pow differ by 1 ulp; ranking is exact)
@@ -947,8 +929,6 @@ BOOL_BATCH_QUERY_SET = [
 
 
 def _q_bool_batch_topk(spark, sf_dir):
-    from search_engine_spark.engine.batch import batch_topk
-
     eng = _engine(spark, sf_dir, RANKED_BOOLEAN)
     qs = [(qid, text) for qid, text, _ in BOOL_BATCH_QUERY_SET]
     return batch_topk(eng, qs, 100).select(
@@ -1083,12 +1063,11 @@ def _wsum_mf_sql(spec, k: int) -> str:
 _register("indri_wsum_mf_topk", _q_indri_wsum_mf_topk, _wsum_mf_sql(_MF_WSUM_SPEC, 100))
 
 
-# -- batched MIXED-FIELD Indri execution (engine/batch.py, VERDICT r04 item 3) -
-# hw3's multi-field #WSUM headline shape as ONE job for a whole query file:
-# the single-field batch plan plus a per-docid field→doclen map joined AFTER
-# the (qid, docid) aggregate; per-child c_len / ctf / field index ride the
-# broadcast constants array. Bitwise ≡ per-query Engine.search
-# (tests/test_batch.py::test_indri_batch_mixed_fields_matches_per_query).
+# -- batched MIXED-FIELD Indri execution (engine/batch.py) --------------------
+# hw3's multi-field #WSUM headline shape for a whole query file: the driver
+# evaluator scores each child with its own field's c_len and the doc's length
+# in that field (0 for a doc with no tokens there). Bitwise ≡ per-query
+# Engine.search (tests/test_batch.py::test_mixed_file_matches_per_query).
 
 INDRI_MF_BATCH_QUERY_SET = [
     ("m1", "#WSUM(0.5 spark.body 0.3 de.lang 0.2 src7.source)",
@@ -1106,8 +1085,6 @@ INDRI_MF_BATCH_QUERY_SET = [
 
 
 def _q_indri_batch_mf_topk(spark, sf_dir):
-    from search_engine_spark.engine.batch import batch_topk
-
     eng = _engine(spark, sf_dir, INDRI)
     qs = [(qid, text) for qid, text, _ in INDRI_MF_BATCH_QUERY_SET]
     return batch_topk(eng, qs, 100).select(
@@ -1159,14 +1136,11 @@ _register("indri_batch_mf_topk", _q_indri_batch_mf_topk, _indri_batch_mf_sql(100
 
 # -- batched STRUCTURED (SDM) Indri execution (engine/batch.py) ---------------
 # the reference hw3 SDM headline shape (#AND over term + #NEAR + #WINDOW
-# children, hw3/QryEval/mengyuy-HW3-Report.pdf §3) as TWO jobs for a whole
-# query file: one job walks every positional child of every query (union
-# positions scan + one (qid, ci, docid) aggregate + one mapInPandas
-# wavefront), one job runs the combine. Bitwise ≡ per-query Engine.search
-# (tests/test_batch.py::test_sdm_batch_matches_per_query). Oracle: per-child
-# recursive-CTE walks (the near2/window3 cursor machines) feeding the
-# full-outer Indri combine, with the positional child's ctf as sum(tf) over
-# its walked list — the composite-#SCORE stats contract
+# children, hw3/QryEval/mengyuy-HW3-Report.pdf §3) for a whole query file,
+# each query answered by the driver evaluator's positional walks. Oracle:
+# per-child recursive-CTE walks (the near2/window3 cursor machines) feeding
+# the full-outer Indri combine, with the positional child's ctf as sum(tf)
+# over its walked list — the composite-#SCORE stats contract
 # (ScoreNode._materialized, QryopSlScore.java:118-130).
 
 SDM_BATCH_QUERY_SET = [
@@ -1188,7 +1162,7 @@ SDM_BATCH_QUERY_SET = [
 def _q_sdm_batch_topk(spark, sf_dir):
     eng = _engine(spark, sf_dir, INDRI)
     qs = [(qid, text) for qid, text, _ in SDM_BATCH_QUERY_SET]
-    return _batch_plan_topk(eng, qs, 100).select(
+    return batch_topk(eng, qs, 100).select(
         "qid", "rank", F.col("docid").cast("long").alias("docid"),
         # pow-based scores: f32-round the REPORTED value on both sides
         F.col("score").cast("float").cast("double").alias("score"),
@@ -1307,7 +1281,7 @@ SELECT qid, rank, docid, score FROM ranked WHERE rank <= {k}"""
 _register("sdm_batch_topk", _q_sdm_batch_topk, _sdm_batch_sql(100))
 
 
-# -- batched STRUCTURED BM25 #SUM (engine/batch.py sdm_bm25_batch_scores) -----
+# -- batched STRUCTURED BM25 #SUM (engine/batch.py) ---------------------------
 # the hw2 structured-BM25 shape: #SUM over term + positional children, each
 # positional child scored as a BM25 "term" whose df/tf come from its walked
 # inverted list (ScoreNode._materialized over a composite,
@@ -1332,7 +1306,7 @@ SDM_BM25_BATCH_QUERY_SET = [
 def _q_sdm_bm25_batch_topk(spark, sf_dir):
     eng = _engine(spark, sf_dir, BM25)
     qs = [(qid, text) for qid, text, _ in SDM_BM25_BATCH_QUERY_SET]
-    return _batch_plan_topk(eng, qs, 100).select(
+    return batch_topk(eng, qs, 100).select(
         "qid", "rank", F.col("docid").cast("long").alias("docid"), "score"
     )
 

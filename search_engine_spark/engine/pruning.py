@@ -327,7 +327,9 @@ class _Query:
 
 
 class _Pivot:
-    """Per doc: docid, tf per term (``present`` marks the terms it has), doclen."""
+    """Per doc: docid, tf per term (``present`` marks the terms it has), doclen.
+    ``doclen`` is one row every term shares, or, when the terms lie in
+    several fields, one row per term (its field's length; ``doclen_of``)."""
 
     def __init__(self, term, docid, tf, doclen, n_terms: int):
         self.docid = np.unique(docid)
@@ -338,6 +340,9 @@ class _Pivot:
         self.present[term, ix] = True
         self.doclen = np.zeros(len(self.docid), dtype=np.int64)
         self.doclen[ix] = doclen
+
+    def doclen_of(self, i: int) -> np.ndarray:
+        return self.doclen if self.doclen.ndim == 1 else self.doclen[i]
 
 
 def _seed_theta(
@@ -505,14 +510,19 @@ def _tombstones_fit(pidx: PackedIndex, st: PruneStats) -> bool:
     return False
 
 
-def _leaves_fit(pidx: PackedIndex, terms: list[str], fld: str, st: PruneStats):
-    """The leaf terms' stats when the driver can answer from their whole
-    posting lists: the tombstones and the leaves' postings (Σ df, recorded
-    in ``st.n_postings_scored``) within the driver gates, ext ids of a type
-    it can order. Otherwise None, with the reason in ``st.fallback``."""
+def _leaves_fit(pidx: PackedIndex, by_field: dict[str, list[str]], st: PruneStats):
+    """{(term, field): (df, ctf)} of the leaves present, given each field's
+    leaf terms, when the driver can answer from their whole posting lists:
+    the tombstones and the leaves' postings (Σ df over every (term, field)
+    leaf, recorded in ``st.n_postings_scored``) within the driver gates, ext
+    ids of a type it can order. Otherwise None, with the reason in
+    ``st.fallback``."""
     if not _tombstones_fit(pidx, st):
         return None
-    trows = pidx.reads.term_stats(terms, fld)
+    trows = {}
+    for f, terms in by_field.items():
+        for t, s in pidx.reads.term_stats(terms, f).items():
+            trows[t, f] = s
     st.n_postings_scored = sum(df for df, _ in trows.values())
     if st.n_postings_scored > _POSTS_PER_TASK:
         st.past_gate = True
@@ -552,18 +562,21 @@ def bm25_idfs(pidx: PackedIndex, dfs: list[int], n_docs: int) -> list[float]:
 
 
 def bm25_scorer(
-    idfs: list[float], avgdl: float, p: BM25Params
+    idfs: list[float], avgdl: float | list[float], p: BM25Params
 ) -> Callable[[_Pivot], np.ndarray]:
     """BM25 #SUM over a pivot, child i scored with idf ``idfs[i]``
-    (``bm25_idfs``): the exact plan's SumNode sum, 0.0 plus each child's
-    float32 score in child order (a missing child adds 0.0)."""
+    (``bm25_idfs``) and its field's avgdl (one for all, or one per child):
+    the exact plan's SumNode sum, 0.0 plus each child's float32 score in
+    child order (a missing child adds 0.0)."""
+    avgdls = np.broadcast_to(np.asarray(avgdl, dtype=np.float64), len(idfs))
 
     def score(piv: _Pivot) -> np.ndarray:
         tot = np.zeros(len(piv.docid))
         with np.errstate(all="ignore"):  # absent children's lanes are masked
             for i, idf in enumerate(idfs):
                 s = score_mod.bm25_score_np(
-                    idf=idf, avgdl=avgdl, p=p, tf=piv.tf[i], doclen=piv.doclen
+                    idf=idf, avgdl=float(avgdls[i]), p=p, tf=piv.tf[i],
+                    doclen=piv.doclen_of(i),
                 )
                 tot = tot + np.where(piv.present[i], s, 0.0)
         return tot
@@ -692,26 +705,30 @@ def _indri_combine(
 
 
 def indri_scorer(
-    kind: str, weights: list | None, ctfs: list[int], c_len: int, p: IndriParams,
-    k: int,
+    kind: str, weights: list | None, ctfs: list[int], c_len: int | list[int],
+    p: IndriParams, k: int,
 ) -> Callable[[_Pivot], np.ndarray]:
-    """Indri #AND/#WAND/#WSUM over a pivot, child i with ctf ``ctfs[i]``:
-    its float32 actual score where present, its raw-double default
-    otherwise, combined as the exact pivot plan combines them
-    (ops._indri_pivot_scores). #AND/#WAND combine with libm's ``np.power``
-    (a few ulps off) first and rerun the pow port (~0.4 µs a value) only
-    where that estimate is within 2⁻³⁰ of the k-th best: every doc that can
-    reach the top k, ties included, scores exactly; the rest score below it."""
+    """Indri #AND/#WAND/#WSUM over a pivot, child i with ctf ``ctfs[i]`` and
+    its field's collection length (one for all, or one per child): its
+    float32 actual score where present, its raw-double default otherwise,
+    combined as the exact pivot plans combine them
+    (ops._indri_pivot_scores, _indri_pivot_scores_mf). #AND/#WAND combine
+    with libm's ``np.power`` (a few ulps off) first and rerun the pow port
+    (~0.4 µs a value) only where that estimate is within 2⁻³⁰ of the k-th
+    best: every doc that can reach the top k, ties included, scores exactly;
+    the rest score below it."""
+    c_lens = np.broadcast_to(np.asarray(c_len, dtype=np.int64), len(ctfs))
 
     def score(piv: _Pivot) -> np.ndarray:
         child = [
             np.where(
                 piv.present[i],
                 score_mod.indri_score_np(
-                    ctf=ctf, c_len=c_len, p=p, tf=piv.tf[i], doclen=piv.doclen
+                    ctf=ctf, c_len=int(c_lens[i]), p=p, tf=piv.tf[i],
+                    doclen=piv.doclen_of(i),
                 ),
                 score_mod.indri_default_score_np(
-                    ctf=ctf, c_len=c_len, p=p, doclen=piv.doclen
+                    ctf=ctf, c_len=int(c_lens[i]), p=p, doclen=piv.doclen_of(i)
                 ),
             )
             for i, ctf in enumerate(ctfs)

@@ -74,15 +74,14 @@ class Engine:
     last_prune_stats = None
 
     def _driver_topk(self, query: str, k: int) -> DataFrame | None:
-        """The driver-side answer of a BM25/Indri query, or None when the
-        exact plan runs: the compiled root, classified by
-        ``structured.root_shape``, goes to ``_shape_topk``.
-        ``SPARK_GRAFT_NO_PRUNE=1`` forces the exact plan."""
-        from search_engine_spark.config import BM25, INDRI
+        """The driver-side answer of a query, or None when the exact plan
+        runs: the compiled root, classified by ``structured.root_shape``
+        (BM25, Indri and Boolean roots over Il children), goes to
+        ``_shape_topk``. ``SPARK_GRAFT_NO_PRUNE=1`` forces the exact plan."""
         from search_engine_spark.engine.ops import IlNode, ScoreNode
         from search_engine_spark.engine.structured import root_shape
 
-        if _exact_forced() or self.model.name not in (BM25, INDRI):
+        if _exact_forced():
             return None
         node = compile_node(self.parse(query), self.ctx, self.default_field)
         if isinstance(node, IlNode):
@@ -93,8 +92,9 @@ class Engine:
     def _shape_topk(self, shape, k: int) -> DataFrame | None:
         """The driver-side answer of a classified root (a
         ``structured.Shape``), or None: under the driver gate the evaluator
-        ``structured.struct_topk`` answers; past it the block-max planner
-        (``_pruned_topk``) answers the flat shapes it covers; anything else
+        ``structured.struct_topk`` answers every shape, in one field or
+        several; past it the block-max planner (``_pruned_topk``) answers
+        the flat single-field BM25/Indri shapes it covers; anything else
         runs the exact plan, the reason in ``last_prune_stats.fallback``."""
         from search_engine_spark.engine import pruning
         from search_engine_spark.engine.structured import struct_topk
@@ -112,16 +112,20 @@ class Engine:
         return res
 
     def _pruned_topk(self, shape, k: int, st) -> DataFrame | None:
-        """Past the gate: block-max pruned top-k of a flat BM25 #SUM or
-        Indri #AND/#WAND/#WSUM (engine/pruning.py, bitwise the exact plan).
-        A shape it does not cover adds why to ``st``'s gate decline and
-        returns None; its term-keyed pivot cannot carry duplicated terms."""
-        from search_engine_spark.config import BM25
+        """Past the gate: block-max pruned top-k of a flat single-field
+        BM25 #SUM or Indri #AND/#WAND/#WSUM (engine/pruning.py, bitwise the
+        exact plan). A shape it does not cover adds why to ``st``'s gate
+        decline and returns None; its term-keyed pivot cannot carry
+        duplicated terms."""
+        from search_engine_spark.config import BM25, INDRI
         from search_engine_spark.engine import pruning
 
         terms = [l.term for l in shape.leaves]
         why = (
-            "#NEAR/#WINDOW/#SYN children" if not shape.flat
+            "Boolean models" if self.model.name not in (BM25, INDRI)
+            else "leaves in several fields"
+            if len({l.field for l in shape.leaves}) > 1
+            else "#NEAR/#WINDOW/#SYN children" if not shape.flat
             else "duplicated terms" if len(set(terms)) != len(terms)
             else "a bare Indri #SCORE" if shape.bare and self.model.name != BM25
             else ""

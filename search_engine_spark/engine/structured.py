@@ -1,18 +1,21 @@
-"""The driver evaluator: every BM25 #SUM and Indri #AND/#WAND/#WSUM root (or
-bare #SCORE) whose leaves lie in one field and whose leaf postings fit the
-driver gate is answered here, flat or structured, with no Spark job.
+"""The driver evaluator: every query root ``root_shape`` classifies — BM25
+#SUM, Indri #AND/#WAND/#WSUM, Boolean #AND/#OR, or a bare #SCORE — whose
+leaf postings fit the driver gate is answered here, flat or structured, in
+one field or several, with no Spark job.
 
 The exact plan answers ``#SUM(t #NEAR/1(a b))`` with a positional join, a
 mapInPandas walk, a cached list, a stats job and a scoring job — about ten
-Spark jobs for a few thousand postings. When the query's leaf terms hold at
-most ``pruning._POSTS_PER_TASK`` postings (Σ df from the driver's term
-stats, no job) this module evaluates the same tree on the driver, reading
-every leaf posting (whole columnar lists, no block skipping):
+Spark jobs for a few thousand postings. When the query's (term, field)
+leaves hold at most ``pruning._POSTS_PER_TASK`` postings (Σ df from the
+driver's term stats, no job) this module evaluates the same tree on the
+driver, reading every leaf posting (whole columnar lists, no block
+skipping):
 
-  1. every leaf term's blocks are read and decoded (``pruning._Query.read``:
-     pyarrow reads of the files holding them, one decode pass, tombstoned
-     postings dropped) into a docid-sorted list. Positions are read, as one
-     flat array, only when a child holds a #NEAR/#WINDOW/#SYN;
+  1. every leaf term's blocks are read and decoded, field by field
+     (``pruning._Query.read``: pyarrow reads of the files holding them, one
+     decode pass, tombstoned postings dropped) into docid-sorted lists.
+     Positions are read, as one flat array, only for a field that a
+     #NEAR/#WINDOW/#SYN child reads;
   2. the Il tree is walked bottom-up: #SYN is a union that concatenates and
      sorts positions per doc, #NEAR/#WINDOW intersect their args' docids
      and run the numpy wavefront walks (``poswalk.near_flat`` /
@@ -21,17 +24,25 @@ every leaf posting (whole columnar lists, no block skipping):
      term_stats (an absent term's is (0, 0)), a composite list's as
      (len, Σtf) — ``IlNode.list_stats``; doclen rides on the leaf postings;
   4. one pivot holds a row per child, so a duplicated term is scored once
-     per child, and it is scored in numpy by ``pruning.bm25_scorer`` /
-     ``indri_scorer`` (score.py's numpy twins of the exact plan's
-     expressions, with StrictMath's log and pow) and ranked by
-     ``pruning.score_local``, so the answers are bitwise the exact plan's
-     and no JVM call runs before the answer frame.
+     per child. Each child is scored with its own field's avgdl or
+     collection length and the doc's length in that field. An Indri child
+     a doc lacks takes its default at the doc's length in the child's
+     field: from another child's postings in that field, else a pyarrow
+     read of doc_stats, 0 for a doc with no row there (the quirk
+     ``ops._indri_pivot_scores_mf`` documents). BM25 and Indri score in
+     numpy with ``pruning.bm25_scorer`` / ``indri_scorer`` (score.py's
+     numpy twins of the exact plan's expressions, with StrictMath's log and
+     pow). A Boolean child scores f32(tf) when ranked, 1.0 when not; #OR
+     keeps every doc of any child at the max, #AND the docs every child
+     holds at the min (QryopSlOr.java:34-66, QryopSlAnd.java:91-122).
+     ``pruning.score_local`` ranks them, so the answers are bitwise the
+     exact plan's and no JVM call runs before the answer frame.
 
-Any other shape (Boolean models, nested Sl, several fields, a non-positive
-total weight), a leaf set over the gate, or a failed driver read returns
-None with the reason in ``PruneStats.fallback``. Past the gate
-``Engine._shape_topk`` offers a flat query to the block-max planner
-(engine/pruning.py); anything else runs the exact plan.
+Any other shape (nested Sl, a non-positive total weight), a leaf set over
+the gate, or a failed driver read returns None with the reason in
+``PruneStats.fallback``. Past the gate ``Engine._shape_topk`` offers a flat
+single-field BM25/Indri query to the block-max planner (engine/pruning.py);
+anything else runs the exact plan.
 """
 
 from __future__ import annotations
@@ -42,13 +53,16 @@ from functools import reduce
 import numpy as np
 from pyspark.sql import DataFrame
 
-from search_engine_spark.config import BM25, ModelConfig
-from search_engine_spark.engine import pruning
+from search_engine_spark.config import (
+    BM25, INDRI, RANKED_BOOLEAN, UNRANKED_BOOLEAN, ModelConfig,
+)
+from search_engine_spark.engine import pruning, score as score_mod
 from search_engine_spark.engine.ops import (
-    IndriAndNode, NearNode, ScoreNode, SumNode, SynNode, TermNode, WandNode,
-    WindowNode, WsumNode,
+    AndBoolNode, IndriAndNode, NearNode, OrNode, ScoreNode, SumNode, SynNode,
+    TermNode, WandNode, WindowNode, WsumNode,
 )
 from search_engine_spark.engine.poswalk import near_flat, window_flat
+from search_engine_spark.engine.topk import _enumerate_ranks
 from search_engine_spark.index.persist import PackedIndex, _gather_runs
 
 
@@ -69,12 +83,16 @@ class _List:
 
 
 def _concat(lists: list) -> _List:
-    """The docs of ``lists`` one after another (a docid may repeat)."""
+    """The docs of ``lists`` one after another (a docid may repeat); their
+    positions when every list carries them."""
     if not lists:
         z = np.zeros(0, np.int64)
         return _List(z, z, z, z)
     cols = [np.concatenate(c) for c in zip(*((x.docid, x.tf, x.doclen) for x in lists))]
-    pos = None if lists[0].pos is None else np.concatenate([x.pos for x in lists])
+    pos = (
+        None if any(x.pos is None for x in lists)
+        else np.concatenate([x.pos for x in lists])
+    )
     return _List(*cols, pos)
 
 
@@ -102,7 +120,7 @@ def _walk(kids: list, distance: int, walk) -> _List:
 
 def _eval_il(node, leaves: dict) -> _List:
     if isinstance(node, TermNode):
-        return leaves[node.term]
+        return leaves[node.term, node.field]
     kids = [_eval_il(c, leaves) for c in node.children]
     if isinstance(node, SynNode):
         return _syn(kids)
@@ -124,9 +142,11 @@ def _leaf_terms(node, out: list) -> bool:
 @dataclass
 class Shape:
     """A query root the driver evaluator covers: its combine ``kind`` ("sum"
-    for BM25, "and"/"wand"/"wsum" for Indri), ``weights``, and #SCORE
-    ``children``, each over a tree of Term/Syn/Near/Window nodes whose
-    TermNodes, in order, are ``leaves``. ``bare``: the root is one #SCORE."""
+    for BM25, "and"/"wand"/"wsum" for Indri, "and"/"or" for the Boolean
+    models), ``weights``, and #SCORE ``children``, each over a tree of
+    Term/Syn/Near/Window nodes whose TermNodes, in order, are ``leaves``
+    (none when every query term was a stopword). ``bare``: the root is one
+    #SCORE."""
 
     kind: str
     weights: list | None
@@ -137,91 +157,149 @@ class Shape:
     @property
     def flat(self) -> bool:
         """Every child scores a plain term: no child needs positions. Past
-        the driver gate only flat shapes can take the block-max planner, and
-        the BM25 batch plan scores a flat #SUM's duplicated term once times
-        its count."""
+        the driver gate only flat shapes can take the block-max planner."""
         return all(isinstance(c.child, TermNode) for c in self.children)
 
 
 def root_shape(node, model: str) -> Shape | None:
     """The one classifier of a compiled root for the driver evaluator and
     the past-gate planner, or None (the exact plan runs). A bare #SCORE root
-    is a one-child #SUM (BM25) or #AND (Indri): 0.0 + s and pow(s, 1.0) are
-    both exactly s."""
+    is a one-child #SUM (BM25), #AND (Indri) or #OR (Boolean): 0.0 + s,
+    pow(s, 1.0) and the max of one are all exactly s."""
     weights = None
     if isinstance(node, ScoreNode):
-        kind, children = ("sum" if model == BM25 else "and"), [node]
+        kind, children = {BM25: "sum", INDRI: "and"}.get(model, "or"), [node]
     elif model == BM25 and isinstance(node, SumNode):
         kind, children = "sum", node.children
-    elif model != BM25 and isinstance(node, IndriAndNode):
+    elif model == INDRI and isinstance(node, IndriAndNode):
         kind, children = "and", node.children
-    elif model != BM25 and isinstance(node, (WandNode, WsumNode)):
+    elif model == INDRI and isinstance(node, (WandNode, WsumNode)):
         kind = "wand" if isinstance(node, WandNode) else "wsum"
         weights, children = node.weights, node.children
+    elif isinstance(node, (AndBoolNode, OrNode)):
+        kind = "and" if isinstance(node, AndBoolNode) else "or"
+        children = node.children
     else:
         return None
     leaves: list = []
-    if not children or not all(
+    if not all(
         isinstance(c, ScoreNode) and _leaf_terms(c.child, leaves) for c in children
     ):
         return None  # nested Sl
     return Shape(kind, weights, children, leaves, isinstance(node, ScoreNode))
 
 
+def _bool_scorer(kind: str, ranked: bool):
+    """Boolean #OR (the max) or #AND (the min; the pivot holds only the docs
+    every child holds) over a pivot: a child scores f32(tf) when ranked,
+    1.0 when not (QryopSlScore.java:85-89)."""
+
+    def score(piv: pruning._Pivot) -> np.ndarray:
+        if not ranked:
+            return np.ones(len(piv.docid))
+        s = score_mod._f32_np(piv.tf.astype(np.float64))
+        if kind == "or":
+            return np.where(piv.present, s, -np.inf).max(axis=0)
+        return s.min(axis=0)
+
+    return score
+
+
+def _field_doclens(
+    pidx: PackedIndex, piv: pruning._Pivot, lists: list, flds: list[str],
+    defaults: bool,
+) -> np.ndarray:
+    """One doclen row per child, over the pivot's docs: the doc's length in
+    the child's field, from the postings of that field's children; with
+    ``defaults`` (Indri scores a doc a child lacks), a doc no child of that
+    field holds reads it from doc_stats (``DriverReads.doclens``)."""
+    rows = {}
+    for f in dict.fromkeys(flds):
+        row = np.zeros(len(piv.docid), dtype=np.int64)
+        have = np.zeros(len(piv.docid), dtype=bool)
+        for lst in (x for x, g in zip(lists, flds) if g == f):
+            ix = np.searchsorted(piv.docid, lst.docid)
+            row[ix], have[ix] = lst.doclen, True
+        if defaults and not have.all():
+            row[~have] = pidx.reads.doclens(piv.docid[~have], f)
+        rows[f] = row
+    return np.stack([rows[f] for f in flds])
+
+
 def struct_topk(
     pidx: PackedIndex, shape: Shape, model: ModelConfig, k: int, st: pruning.PruneStats
 ) -> DataFrame | None:
-    """Top-k of a BM25/Indri query of any ``shape``, evaluated on the driver
-    from its leaves' whole posting lists; None when the exact plan or, past
-    the gate, the block-max planner answers instead (the reason in
-    ``st.fallback``; ``st.past_gate`` set when the leaves' Σ df exceeds the
-    gate)."""
+    """Top-k of a query of any ``shape``, evaluated on the driver from its
+    leaves' whole posting lists; None when the exact plan or, past the gate,
+    the block-max planner answers instead (the reason in ``st.fallback``;
+    ``st.past_gate`` set when the leaves' Σ df exceeds the gate)."""
     kind, weights, children = shape.kind, shape.weights, shape.children
-    fields = {x.field for x in shape.leaves}
-    if len(fields) != 1:
-        st.fallback = "leaves span several fields"
-        return None
+    if not children:  # every term a stopword: the exact plan's empty answer
+        st.score_mode = "driver"
+        return _enumerate_ranks(pidx.spark, [])
     if weights is not None and sum(weights) <= 0:
         st.fallback = "non-positive total weight"
         return None
-    fld = fields.pop()
-    terms = list(dict.fromkeys(x.term for x in shape.leaves))
+    by_field: dict[str, list[str]] = {}  # each field's distinct leaf terms
+    for f, t in dict.fromkeys((x.field, x.term) for x in shape.leaves):
+        by_field.setdefault(f, []).append(t)
+    positional: list = []  # leaves under a #NEAR/#WINDOW/#SYN child
+    for c in children:
+        if not isinstance(c.child, TermNode):
+            _leaf_terms(c.child, positional)
     try:
-        trows = pruning._leaves_fit(pidx, terms, fld, st)
+        trows = pruning._leaves_fit(pidx, by_field, st)
         if trows is None:
             return None
-        metas = pidx.reads.block_meta(terms, fld)
-        q = pruning._Query(pidx, terms, fld, metas, positions=not shape.flat)
-        got = q.read(np.arange(len(q.n)))
-        st.n_blocks_total = st.n_blocks_scanned = len(q.n)
-        st.n_files_read = len(q.files_read)
-        # docid-ascending per term (a term's postings are distinct docs)
-        by = np.lexsort((got.docid, got.term))
-        srt = _List(got.docid, got.tf, got.doclen, got.pos).take(by)
-        cut = np.searchsorted(got.term[by], np.arange(len(terms) + 1))
-        by_term = {t: srt.take(np.arange(*cut[i:i + 2])) for i, t in enumerate(terms)}
+        leaves, files = {}, set()
+        st.n_blocks_total = 0
+        for fld, terms in by_field.items():
+            metas = pidx.reads.block_meta(terms, fld)
+            q = pruning._Query(
+                pidx, terms, fld, metas,
+                positions=any(x.field == fld for x in positional),
+            )
+            got = q.read(np.arange(len(q.n)))
+            st.n_blocks_total += len(q.n)
+            files |= q.files_read
+            # docid-ascending per term (a term's postings are distinct docs)
+            by = np.lexsort((got.docid, got.term))
+            srt = _List(got.docid, got.tf, got.doclen, got.pos).take(by)
+            cut = np.searchsorted(got.term[by], np.arange(len(terms) + 1))
+            for i, t in enumerate(terms):
+                leaves[t, fld] = srt.take(np.arange(*cut[i:i + 2]))
+        st.n_blocks_scanned = st.n_blocks_total
+        st.n_files_read = len(files)
 
-        lists, stats = [], []
-        for c in children:
-            lst = _eval_il(c.child, by_term)
-            lists.append(lst)
-            if isinstance(c.child, TermNode):
-                stats.append(trows.get(c.child.term, (0, 0)))
-            else:  # IlNode.list_stats of the evaluated list
-                stats.append((len(lst.docid), int(lst.tf.sum())))
+        lists = [_eval_il(c.child, leaves) for c in children]
+        boolean = model.name in (UNRANKED_BOOLEAN, RANKED_BOOLEAN)
+        if boolean and kind == "and":  # the docs every child holds
+            docs = reduce(np.intersect1d, [x.docid for x in lists])
+            lists = [x.take(np.searchsorted(x.docid, docs)) for x in lists]
         u = _concat(lists)
         piv = pruning._Pivot(
             np.repeat(np.arange(len(lists)), [len(x.docid) for x in lists]),
             u.docid, u.tf, u.doclen, len(lists),
         )
+        flds = [c.child.field for c in children]
+        if len(set(flds)) > 1:
+            piv.doclen = _field_doclens(pidx, piv, lists, flds, model.name == INDRI)
         corpus = pidx.corpus
-        if kind == "sum":
+        stats = [
+            trows.get((c.child.term, c.child.field), (0, 0))
+            if isinstance(c.child, TermNode)
+            else (len(x.docid), int(x.tf.sum()))  # IlNode.list_stats
+            for c, x in zip(children, lists)
+        ]
+        if boolean:  # scores that read no stats
+            score = _bool_scorer(kind, model.name == RANKED_BOOLEAN)
+        elif kind == "sum":
             idfs = pruning.bm25_idfs(pidx, [df for df, _ in stats], corpus.n_docs)
-            score = pruning.bm25_scorer(idfs, corpus.avgdl(fld), model.bm25)
+            score = pruning.bm25_scorer(idfs, [corpus.avgdl(f) for f in flds], model.bm25)
         else:
             score = pruning.indri_scorer(
-                kind, weights, [ctf for _, ctf in stats], corpus.sum_doclen(fld),
-                model.indri, k,
+                kind, weights, [ctf for _, ctf in stats],
+                [corpus.sum_doclen(f) for f in flds], model.indri, k,
             )
         st.score_mode = "driver"
         return pruning.score_local(pidx, piv, score, k, pruning._ext_id_type(pidx))

@@ -2057,6 +2057,20 @@ class DriverReads:
         )
         return dict(zip(tbl["docid"].to_pylist(), tbl["ext_docid"].to_pylist()))
 
+    def doclens(self, docids: np.ndarray, fld: str) -> np.ndarray:
+        """Each of the ascending ``docids``' length in ``fld``, 0 for a doc
+        with no doc_stats row there (no token in the field): a docid IN
+        read of doc_stats. Not cached."""
+        import pyarrow.compute as pc
+
+        tbl = self.dataset("doc_stats").to_table(
+            columns=["docid", "doclen"],
+            filter=(pc.field("field") == fld) & pc.field("docid").isin(docids.tolist()),
+        )
+        out = np.zeros(len(docids), dtype=np.int64)
+        out[np.searchsorted(docids, tbl["docid"].to_numpy())] = tbl["doclen"].to_numpy()
+        return out
+
     def tombstones(self) -> np.ndarray | None:
         """Sorted tombstoned docids, or None when the index has none."""
         if not self.n_deleted:

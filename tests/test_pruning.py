@@ -3,7 +3,7 @@
 
 import pytest
 
-from search_engine_spark.config import BM25, ModelConfig
+from search_engine_spark.config import BM25, RANKED_BOOLEAN, ModelConfig
 from search_engine_spark.engine.pruning import PruneStats, bm25_topk_pruned
 from search_engine_spark.engine.runner import Engine
 from search_engine_spark.index.persist import BuildConfig, PackedIndex, build_persistent_index
@@ -16,6 +16,7 @@ QUERIES = [
     ["rare_alpha", "lock"],          # df=1 term dominates idf
     ["open", "file", "handle", "ring", "buffer"],
     ["self", "lock"],                # heavy salted term + selective term
+    ["except", "pass", "lambda"],    # mid-df terms: live idfs, no clamp
 ]
 
 
@@ -334,19 +335,20 @@ def test_indri_pruned_spark_side_identical_to_exact(
         (BM25, "lock lock queue", "does not cover duplicated terms"),
         (INDRI, "token_next", "does not cover a bare Indri #SCORE"),
         (BM25, "#SUM(queue #NEAR/1(lock free))", "does not cover #NEAR/#WINDOW/#SYN"),
-        (BM25, "lock.path queue", "leaves span several fields"),
+        (BM25, "lock.path queue", "does not cover leaves in several fields"),
+        (RANKED_BOOLEAN, "#AND(lock queue)", "does not cover Boolean models"),
     ],
 )
 def test_past_gate_declines_say_why(spark, code_index, monkeypatch, model, text, why):
     """Past the driver gate a shape the block-max planner does not cover
-    runs the exact plan, and ``last_prune_stats.fallback`` says why."""
+    runs the exact plan, and ``last_prune_stats.fallback`` says why, after
+    the gate's decline."""
     monkeypatch.setattr(pruning_mod, "_POSTS_PER_TASK", 0)
     eng = Engine(code_index, ModelConfig(name=model), tokenizer=CODE_TOKENIZER)
     assert eng.search(text, 10).collect()
     st = eng.last_prune_stats
     assert st.score_mode == "" and why in st.fallback, st
-    if "several fields" not in why:
-        assert st.past_gate and "exceed the driver gate" in st.fallback, st
+    assert st.past_gate and "exceed the driver gate" in st.fallback, st
 
 
 @pytest.mark.parametrize("model", [BM25, INDRI])
@@ -384,8 +386,12 @@ def test_block_filter_scan_identical_to_exact(
 
 
 FLAT_SHAPES = [
+    # idf-clamped terms (df > N/2): every score 0.0, a tie plateau
     (BM25, "lock free"),
     (BM25, "ring buffer slot"),
+    # mid-df terms: live idfs, distinct scores
+    (BM25, "except pass lambda"),
+    (BM25, "lambda lambda pass"),
     (INDRI, "#AND(lock free queue)"),
     (INDRI, "#WAND(0.7 lock 0.3 queue)"),
     (INDRI, "#WSUM(0.6 ring 0.4 buffer)"),
@@ -517,7 +523,8 @@ def test_concurrent_flat_queries_match_serial(spark, pidx):
     serial answer."""
     import threading
 
-    mixed = FLAT_SHAPES + [(BM25, " ".join(q)) for q in QUERIES]
+    # one entry per distinct query: "except pass lambda" is in both lists
+    mixed = list(dict.fromkeys(FLAT_SHAPES + [(BM25, " ".join(q)) for q in QUERIES]))
 
     def answer(index, model, text):
         eng = Engine(index, ModelConfig(name=model), tokenizer=CODE_TOKENIZER)
